@@ -120,14 +120,6 @@ def _acquire_artifact_lock():
     return fh
 
 
-def _jobs_so_far(spark) -> int:
-    """Total Spark jobs submitted this session (AppStatusStore) — the
-    delta across a query-builder call counts its EAGER actions, which
-    is what separates real cluster work from driver py4j plan chatter
-    in the ``builds`` numbers (VERDICT r10 #7)."""
-    return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
-
-
 def _dedup_stage_split(spark, sf_dir: str) -> dict[str, dict[str, float]]:
     """Stage timing for the two bench heavyweights (VERDICT r01 asked
     for this split: the pair 46% of total bench time needs attribution).
@@ -439,7 +431,7 @@ def _bucketed_join_stage(spark, sf_dir: str) -> dict[str, float]:
 
 def main() -> None:
     from poormans_kube_etl_spark.queries import all_queries
-    from poormans_kube_etl_spark.session import get_spark
+    from poormans_kube_etl_spark.session import get_spark, jobs_submitted
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     _lock = _acquire_artifact_lock()  # noqa: F841 — held for process life
@@ -516,11 +508,11 @@ def main() -> None:
             # get_or_build construction, permanently excluding them
             # from jobs==0 round-over-round build comparisons even
             # though the recorded build_best was pure plan time.
-            j0 = _jobs_so_far(spark)
+            j0 = jobs_submitted(spark)
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             t1 = time.perf_counter()
-            jobs_this_pass = _jobs_so_far(spark) - j0
+            jobs_this_pass = jobs_submitted(spark) - j0
             _execute(df)
             took = time.perf_counter() - t0
             best = min(best, took)

@@ -1,7 +1,6 @@
-"""Persisted exact-dedup fingerprint index — the FIFTH index family,
-and the proof of the r10 unification claim (operators/index_artifact.py
-module docstring): with the artifact plumbing shared, a new family is
-a page of adapter code.
+"""Persisted exact-dedup fingerprint index — the cheapest member of
+the index-artifact family (operators/index_artifact.py): its
+``IndexFamily`` spec below is the whole adapter.
 
 The most common production incremental screen is also the simplest:
 "has this exact document (modulo whitespace/case) been ingested
@@ -23,22 +22,23 @@ cost join fan-out until compaction (the family invariant).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.operators.index_artifact import (
-    corpus_fingerprint,
-    load_table_properties,
-    stamp_table_properties,
+    IndexFamily,
+    IndexTable,
+    read_index,
+    write_index,
 )
 from poormans_kube_etl_spark.operators.text import fingerprint_md5
 
 INDEX_FORMAT_VERSION = "1"
 
 _PROP_PREFIX = "pke.exactfp."
-_CONSTANT_KEYS = ("id_col", "text_col", "fingerprint", "format_version")
 
 
 @dataclass(frozen=True)
@@ -62,6 +62,26 @@ def corpus_fps(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+@contextmanager
+def _derive(docs: DataFrame, c: dict[str, str]):
+    yield {"_fps": corpus_fps(docs, c["id_col"], c["text_col"])}, {}
+
+
+EXACT_FAMILY = IndexFamily(
+    name="exact",
+    label="exact-dedup fingerprint index",
+    builder="write_corpus_fp_index",
+    prefix=_PROP_PREFIX,
+    format_version=INDEX_FORMAT_VERSION,
+    constant_keys=("id_col", "text_col"),
+    tables=(IndexTable("_fps", ("fp",)),),
+    catalog_suffix="_fp",
+    derive=_derive,
+    handle=CorpusFpIndex,
+    merge_entry="merge_delta_into_fp_index",
+)
+
+
 def write_corpus_fp_index(
     corpus_docs: DataFrame,
     name: str,
@@ -75,55 +95,20 @@ def write_corpus_fp_index(
 ) -> None:
     """Hash the corpus ONCE and land the keeper-resolved fingerprint
     set, bucketed by fp."""
-    spark = corpus_docs.sparkSession
-    w = corpus_fps(corpus_docs, id_col, text_col).write.mode(mode).bucketBy(
-        n_buckets, "fp"
+    write_index(
+        EXACT_FAMILY,
+        corpus_docs,
+        name,
+        {"id_col": id_col, "text_col": text_col},
+        n_buckets=n_buckets,
+        path=path,
+        mode=mode,
+        source_fingerprint=source_fingerprint,
     )
-    if path is not None:
-        w = w.option("path", f"{path}/fps")
-    w.saveAsTable(f"{name}_fps")
-    stamp_table_properties(
-        spark,
-        f"{name}_fps",
-        _PROP_PREFIX,
-        {
-            "id_col": id_col,
-            "text_col": text_col,
-            "fingerprint": corpus_fingerprint(corpus_docs, id_col),
-            "format_version": INDEX_FORMAT_VERSION,
-            **(
-                {"source_fingerprint": source_fingerprint}
-                if source_fingerprint is not None
-                else {}
-            ),
-        },
-    )
-    if path is not None:
-        from poormans_kube_etl_spark.operators.index_artifact import (
-            write_artifact_manifest,
-        )
-
-        write_artifact_manifest(spark, path, (f"{name}_fps",))
 
 
 def read_corpus_fp_index(spark: SparkSession, name: str) -> CorpusFpIndex:
-    try:
-        fps = spark.table(f"{name}_fps")
-    except Exception as e:
-        raise ValueError(
-            f"{name}: fingerprint table not found ({e.__class__.__name__}) — "
-            "not an exact-dedup index; build with write_corpus_fp_index"
-        ) from e
-    constants = load_table_properties(
-        spark,
-        f"{name}_fps",
-        _PROP_PREFIX,
-        _CONSTANT_KEYS,
-        family="exact-dedup fingerprint index",
-        format_version=INDEX_FORMAT_VERSION,
-        builder="write_corpus_fp_index",
-    )
-    return CorpusFpIndex(fps=fps, constants=constants)
+    return read_index(EXACT_FAMILY, spark, name)
 
 
 def exact_duplicates_indexed(

@@ -79,7 +79,15 @@ def where_materialized(df: DataFrame, cond: Column) -> DataFrame:
     Trade, documented not hidden: like any non-deterministic node it
     also blocks LATER filters from pushing below this point — use it on
     verify thresholds whose input is already a bounded candidate join,
-    not as a default ``where``."""
+    not as a default ``where``.
+
+    A caller column already named ``_pushdown_barrier`` is rejected:
+    the barrier would overwrite it and then drop it."""
+    if "_pushdown_barrier" in df.columns:
+        raise ValueError(
+            "where_materialized: input already has a '_pushdown_barrier' "
+            "column — rename it (the barrier would overwrite and drop it)"
+        )
     barrier = df.withColumn("_pushdown_barrier", F.spark_partition_id())
     return barrier.where(
         cond | (F.col("_pushdown_barrier") < F.lit(0))

@@ -1,14 +1,15 @@
 """Shared catalog-artifact plumbing for the persisted index families.
 
-Four index families persist an ingest-time corpus artifact as bucketed
+Five index families persist an ingest-time corpus artifact as bucketed
 catalog tables with their build constants in table properties — MinHash
 bands (operators/minhash_index.py), SRP planes
 (operators/similarity_index.py), k-gram membership
-(operators/substring.py), and BM25 postings
-(operators/retrieval_index.py). By round 9 each carried a near-copy of
-the same write/validate/read plumbing (r9 VERDICT #8); this module is
-the single implementation, so the fifth family is a page of adapter
-code, not a module.
+(operators/substring.py), exact fingerprints (operators/exact_index.py)
+and BM25 postings (operators/retrieval_index.py). Each family is one
+frozen ``IndexFamily`` spec (tables, constants, property prefix and a
+``derive`` function); ``write_index``/``read_index`` here and
+``index_maintenance.merge_delta`` are the only write/read/merge code,
+and ``index_maintenance.INDEX_FAMILIES`` is the registry.
 
 What the shared layer owns:
 
@@ -60,6 +61,8 @@ from __future__ import annotations
 import hashlib
 import os
 import re
+from contextlib import AbstractContextManager
+from dataclasses import dataclass, field
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -485,6 +488,146 @@ def attach_artifact(spark: SparkSession, path: str) -> bool:
             # keys are stored fully prefixed (pke.<family>.<k>)
             stamp_table_properties(spark, name, "", t["properties"])
     return True
+
+
+# ---------------------------------------------------------------------------
+# One spec per family: the write/read path every family shares.
+# ---------------------------------------------------------------------------
+
+# ``derive(frame, constants)`` → context manager yielding
+# ``({table suffix: frame}, {derived constant: value})``. The frames are
+# valid inside the ``with`` only (a family may persist a shared pass and
+# unpersist it on exit). Write and merge both call it — write with the
+# caller's build parameters, merge with the artifact's recorded
+# constants — so the two cannot drift.
+Derive = Callable[
+    [DataFrame, dict[str, str]],
+    AbstractContextManager[tuple[dict[str, DataFrame], dict[str, str]]],
+]
+
+
+@dataclass(frozen=True)
+class IndexTable:
+    """One bucketed catalog table ``<name><suffix>``; its handle
+    attribute is the suffix without the underscore. A ``bucket_by``
+    entry naming a recorded constant (``id_col``) resolves to that
+    constant's value."""
+
+    suffix: str
+    bucket_by: tuple[str, ...]
+
+    def bucket_cols(self, constants: dict[str, str]) -> tuple[str, ...]:
+        return tuple(constants.get(c, c) for c in self.bucket_by)
+
+
+@dataclass(frozen=True)
+class IndexFamily:
+    """Everything that differs between the persisted index families.
+
+    ``constant_keys`` are the family's build constants;
+    ``recorded_keys`` adds the fingerprint and format version every
+    artifact records. ``tables[0]`` carries the properties (constants, fingerprints,
+    fragment count). ``policy`` is ``"append"`` (merge appends the
+    delta's derived rows) or ``"rebuild"`` (global facts on every row:
+    each commit rewrites from the full corpus). ``source`` is the
+    committed corpus the orchestrator feeds it (``"docs"`` or
+    ``"vectors"``); ``config`` maps recorded constant keys to
+    ``DedupIndexMaintenance`` fields, and ``defaults`` fills build
+    parameters that config does not carry. ``merge_entry`` names the
+    public merge function in ``index_maintenance``."""
+
+    name: str
+    label: str
+    builder: str
+    prefix: str
+    format_version: str
+    constant_keys: tuple[str, ...]
+    tables: tuple[IndexTable, ...]
+    catalog_suffix: str
+    derive: Derive
+    handle: type
+    policy: str = "append"
+    source: str = "docs"
+    config: tuple[tuple[str, str], ...] = (
+        ("id_col", "id_col"),
+        ("text_col", "text_col"),
+    )
+    defaults: dict[str, Any] = field(default_factory=dict)
+    merge_entry: str | None = None
+    legacy_tables: tuple[str, ...] = ()
+
+    @property
+    def recorded_keys(self) -> tuple[str, ...]:
+        return self.constant_keys + (FINGERPRINT_KEY, "format_version")
+
+    def configured(self, cfg: Any) -> dict[str, Any]:
+        """The recorded constants a maintenance config pins."""
+        return {key: getattr(cfg, attr) for key, attr in self.config}
+
+
+def write_index(
+    spec: IndexFamily,
+    frame: DataFrame,
+    name: str,
+    params: dict[str, Any],
+    *,
+    n_buckets: int,
+    path: str | None,
+    mode: str,
+    source_fingerprint: str | None,
+) -> None:
+    """Derive the family's tables from ``frame`` with the build
+    ``params`` (None = let ``derive`` plan it), land them bucketed,
+    stamp constants + fingerprints in ONE property write, and persist
+    the attach manifest when ``path`` roots external tables
+    (``<path>/<suffix>``)."""
+    spark = frame.sparkSession
+    constants = {k: str(v) for k, v in params.items() if v is not None}
+    with spec.derive(frame, constants) as (frames, derived):
+        constants.update(derived)
+        if mode == "overwrite":
+            # earlier layouts' tables: leaving them behind on rebuild
+            # would feed old readers an ever-staler corpus
+            for legacy in spec.legacy_tables:
+                spark.sql(f"DROP TABLE IF EXISTS {validate_identifier(name + legacy)}")
+        for t in spec.tables:
+            w = frames[t.suffix].write.mode(mode).bucketBy(
+                n_buckets, *t.bucket_cols(constants)
+            )
+            if path is not None:
+                w = w.option("path", f"{path}/{t.suffix[1:]}")
+            w.saveAsTable(name + t.suffix)
+    constants[FINGERPRINT_KEY] = corpus_fingerprint(frame, constants["id_col"])
+    constants["format_version"] = spec.format_version
+    props = {k: constants[k] for k in spec.recorded_keys}
+    if source_fingerprint is not None:
+        props[SOURCE_FINGERPRINT_KEY] = source_fingerprint
+    stamp_table_properties(spark, name + spec.tables[0].suffix, spec.prefix, props)
+    if path is not None:
+        write_artifact_manifest(spark, path, tuple(name + t.suffix for t in spec.tables))
+
+
+def read_index(spec: IndexFamily, spark: SparkSession, name: str) -> Any:
+    """Open a persisted artifact as the family's handle, restoring its
+    constants — ValueError (the get_or_build rebuild class) for missing
+    tables, foreign properties and format-version skew."""
+    try:
+        frames = {t.suffix[1:]: spark.table(name + t.suffix) for t in spec.tables}
+    except Exception as e:  # missing table: say what to do, not just AnalysisException
+        raise ValueError(
+            f"{name}: index tables not found ({e.__class__.__name__}) — "
+            f"not a {spec.label}, or an older layout; build with {spec.builder}"
+        ) from e
+    constants = load_table_properties(
+        spark,
+        name + spec.tables[0].suffix,
+        spec.prefix,
+        spec.recorded_keys,
+        family=spec.label,
+        format_version=spec.format_version,
+        builder=spec.builder,
+    )
+    return spec.handle(**frames, constants=constants)
 
 
 def sf_dir_tag(sf_dir: str) -> str:

@@ -4,23 +4,28 @@ corpus index artifacts so the NEXT ingest's dedup screen probes an
 index that already contains this one — without any caller code
 re-shingling the corpus.
 
-Merge strategy per family — the policy the artifact properties record:
+``INDEX_FAMILIES`` is the registry of the five families' specs
+(``index_artifact.IndexFamily``), keyed by the names
+``DedupIndexMaintenance.families`` takes. Each spec's ``policy`` is
+the merge strategy the artifact properties record:
 
-- **MinHash / SRP / k-gram: APPEND fragments.** The delta's bucket (or
-  gram) rows are computed with the ARTIFACT's own constants and
-  appended to the bucketed table. A key that now appears in several
-  fragment rows is harmless for the delta-vs-corpus probe: the
-  candidate join matches every fragment row of a colliding bucket, so
-  cross-ingest pairs are still found — what is lost is only the single
-  pre-aggregated array per key, i.e. some join fan-out. The
-  ``fragments`` property counts appends; past ``max_fragments`` the
-  caller should rebuild (the maintainer reports ``needs_compaction``
-  rather than silently degrading — a rebuild needs the full corpus
-  frame, which only the caller has).
-- **BM25: REBUILD, never append.** Document frequency, document count
-  and average document length are GLOBAL corpus facts denormalized
-  onto every posting row — a delta changes existing rows, so there is
-  no append-shaped merge. ``rebuild_corpus_bm25_index`` is the policy.
+- **``append``** (minhash, srp, gram, exact): ``merge_delta`` derives
+  the delta's rows with the ARTIFACT's own constants — the same
+  ``derive`` the writer runs — and appends them to the bucketed
+  tables. A key that now appears in several fragment rows is harmless
+  for the delta-vs-corpus probe: the candidate join matches every
+  fragment row of a colliding bucket (an EXISTS semi-join for grams, a
+  MIN over keeper candidates for fingerprints), so cross-ingest matches
+  are still found — what is lost is only the single pre-aggregated row
+  per key, i.e. some join fan-out. The ``fragments`` property counts
+  appends; past ``max_fragments`` the caller should rebuild (the
+  maintainer reports ``needs_compaction`` rather than silently
+  degrading — a rebuild needs the full corpus frame, which only the
+  caller has).
+- **``rebuild``** (bm25): document frequency, document count and
+  average document length are GLOBAL corpus facts denormalized onto
+  every posting row — a delta changes existing rows, so there is no
+  append-shaped merge. ``rebuild_corpus_bm25_index`` is the policy.
 
 Idempotence: appends are NOT naturally idempotent under relaunch
 (X5 preemption re-runs finalize). The orchestrator layer guards each
@@ -44,14 +49,31 @@ fresh across merges too.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from poormans_kube_etl_spark.operators.exact_index import EXACT_FAMILY
 from poormans_kube_etl_spark.operators.index_artifact import (
+    FINGERPRINT_KEY,
+    SOURCE_FINGERPRINT_KEY,
+    IndexFamily,
     composed_fingerprint,
+    read_index,
     refresh_artifact_manifest,
     stamp_table_properties,
     validate_identifier,
 )
+from poormans_kube_etl_spark.operators.minhash_index import MINHASH_FAMILY
+from poormans_kube_etl_spark.operators.retrieval_index import (
+    BM25_FAMILY,
+    write_corpus_bm25_index,
+)
+from poormans_kube_etl_spark.operators.similarity_index import SRP_FAMILY
+from poormans_kube_etl_spark.operators.substring import GRAM_FAMILY
+
+# registry order is maintenance order
+INDEX_FAMILIES: dict[str, IndexFamily] = {
+    f.name: f
+    for f in (MINHASH_FAMILY, GRAM_FAMILY, EXACT_FAMILY, BM25_FAMILY, SRP_FAMILY)
+}
 
 # appended fragments per bucketed table before the maintainer starts
 # reporting needs_compaction=True
@@ -79,29 +101,44 @@ def read_fragments(spark: SparkSession, table: str, prefix: str) -> int:
     return int(props.get(prefix + "fragments", "0"))
 
 
-def _bump_fragments(spark: SparkSession, table: str, prefix: str) -> int:
-    fragments = read_fragments(spark, table, prefix) + 1
-    stamp_table_properties(spark, table, prefix, {"fragments": str(fragments)})
-    return fragments
-
-
-def _restamp_freshness(
-    spark: SparkSession,
-    table: str,
-    prefix: str,
-    old_fingerprint: str,
+def merge_delta(
+    spec: IndexFamily,
     delta: DataFrame,
-    id_col: str,
-    source_fingerprint: str | None,
-) -> None:
-    """Shared post-merge freshness refresh: the deep count+max stamp
-    composes with the delta (O(delta), basis unchanged), and the
-    probe-path source-listing stamp is replaced when the caller knows
-    the merged source listing."""
-    props = {"fingerprint": composed_fingerprint(old_fingerprint, delta, id_col)}
+    name: str,
+    *,
+    max_fragments: int = DEFAULT_MAX_FRAGMENTS,
+    source_fingerprint: str | None = None,
+) -> dict:
+    """Append a committed delta to an ``append``-policy artifact: derive
+    its rows with the artifact's recorded constants, append them on the
+    catalog's bucket layout, then restamp in ONE property write — the
+    composed count+max fingerprint, the source-listing stamp (when the
+    caller knows it) and the bumped fragment count. Returns
+    ``{"fragments": n, "needs_compaction": bool}``."""
+    if spec.policy != "append":
+        raise ValueError(
+            f"{spec.label}: merge policy is {spec.policy!r} — rebuild it "
+            "from the full corpus, there is no append-shaped merge"
+        )
+    spark = delta.sparkSession
+    c = read_index(spec, spark, name).constants
+    with spec.derive(delta, c) as (frames, _):
+        for t in spec.tables:
+            table = name + t.suffix
+            frames[t.suffix].write.mode("append").bucketBy(
+                _table_num_buckets(spark, table), *t.bucket_cols(c)
+            ).saveAsTable(table)
+    props_table = name + spec.tables[0].suffix
+    fragments = read_fragments(spark, props_table, spec.prefix) + 1
+    props = {
+        FINGERPRINT_KEY: composed_fingerprint(c[FINGERPRINT_KEY], delta, c["id_col"]),
+        "fragments": str(fragments),
+    }
     if source_fingerprint is not None:
-        props["source_fingerprint"] = source_fingerprint
-    stamp_table_properties(spark, table, prefix, props)
+        props[SOURCE_FINGERPRINT_KEY] = source_fingerprint
+    stamp_table_properties(spark, props_table, spec.prefix, props)
+    refresh_artifact_manifest(spark, props_table)
+    return {"fragments": fragments, "needs_compaction": fragments > max_fragments}
 
 
 def merge_delta_into_minhash_index(
@@ -112,53 +149,11 @@ def merge_delta_into_minhash_index(
     source_fingerprint: str | None = None,
 ) -> dict:
     """Append a committed delta's band buckets + shingle sets to a
-    persisted MinHash index (operators/minhash_index.py), using the
-    ARTIFACT's recorded constants — both sides of every later
-    incremental join agree by construction. Returns
-    ``{"fragments": n, "needs_compaction": bool}``."""
-    from poormans_kube_etl_spark.operators.minhash import (
-        _banded,
-        bounded_buckets,
-        signed_for,
+    persisted MinHash index (operators/minhash_index.py)."""
+    return merge_delta(
+        MINHASH_FAMILY, delta_docs, name,
+        max_fragments=max_fragments, source_fingerprint=source_fingerprint,
     )
-    from poormans_kube_etl_spark.operators.minhash_index import (
-        _PROP_PREFIX,
-        read_corpus_minhash_index,
-    )
-
-    spark = delta_docs.sparkSession
-    idx = read_corpus_minhash_index(spark, name)
-    c = idx.constants
-    signed = signed_for(
-        delta_docs,
-        c["id_col"],
-        c["text_col"],
-        int(c["shingle_len"]),
-        int(c["num_hashes"]),
-        c["hash_family"],
-    ).persist()
-    try:
-        banded = _banded(
-            signed, c["id_col"], int(c["bands"]),
-            int(c["num_hashes"]) // int(c["bands"]),
-        )
-        buckets = bounded_buckets(banded, int(c["max_bucket"]))
-        nb = _table_num_buckets(spark, f"{name}_buckets")
-        buckets.write.mode("append").bucketBy(nb, "band_id", "band_hash").saveAsTable(
-            f"{name}_buckets"
-        )
-        sh = signed.select(F.col(c["id_col"]).alias("doc"), "shingles")
-        nb_sh = _table_num_buckets(spark, f"{name}_shingles")
-        sh.write.mode("append").bucketBy(nb_sh, "doc").saveAsTable(f"{name}_shingles")
-    finally:
-        signed.unpersist()
-    _restamp_freshness(
-        spark, f"{name}_buckets", _PROP_PREFIX,
-        c["fingerprint"], delta_docs, c["id_col"], source_fingerprint,
-    )
-    fragments = _bump_fragments(spark, f"{name}_buckets", _PROP_PREFIX)
-    refresh_artifact_manifest(spark, f"{name}_buckets")
-    return {"fragments": fragments, "needs_compaction": fragments > max_fragments}
 
 
 def merge_delta_into_srp_index(
@@ -173,41 +168,10 @@ def merge_delta_into_srp_index(
     Hyperplanes are deterministic in (bands·planes_per_band, dim), so
     delta banding with the artifact's constants collides correctly
     with the stored corpus buckets."""
-    from poormans_kube_etl_spark.operators.minhash import bounded_buckets
-    from poormans_kube_etl_spark.operators.similarity import srp_band_signatures
-    from poormans_kube_etl_spark.operators.similarity_index import (
-        _PROP_PREFIX,
-        read_corpus_srp_index,
+    return merge_delta(
+        SRP_FAMILY, delta_embeddings, name,
+        max_fragments=max_fragments, source_fingerprint=source_fingerprint,
     )
-
-    spark = delta_embeddings.sparkSession
-    idx = read_corpus_srp_index(spark, name)
-    c = idx.constants
-    banded = srp_band_signatures(
-        delta_embeddings,
-        int(c["bands"]),
-        int(c["planes_per_band"]),
-        c["id_col"],
-        c["vec_col"],
-        int(c["dim"]),
-    ).select(F.col("vid").alias("doc"), "band_id", F.col("bucket").alias("band_hash"))
-    buckets = bounded_buckets(banded, int(c["max_bucket"]))
-    nb = _table_num_buckets(spark, f"{name}_buckets")
-    buckets.write.mode("append").bucketBy(nb, "band_id", "band_hash").saveAsTable(
-        f"{name}_buckets"
-    )
-    vecs = delta_embeddings.select(c["id_col"], c["vec_col"])
-    nb_v = _table_num_buckets(spark, f"{name}_vectors")
-    vecs.write.mode("append").bucketBy(nb_v, c["id_col"]).saveAsTable(
-        f"{name}_vectors"
-    )
-    _restamp_freshness(
-        spark, f"{name}_buckets", _PROP_PREFIX,
-        c["fingerprint"], delta_embeddings, c["id_col"], source_fingerprint,
-    )
-    fragments = _bump_fragments(spark, f"{name}_buckets", _PROP_PREFIX)
-    refresh_artifact_manifest(spark, f"{name}_buckets")
-    return {"fragments": fragments, "needs_compaction": fragments > max_fragments}
 
 
 def merge_delta_into_gram_index(
@@ -218,50 +182,11 @@ def merge_delta_into_gram_index(
     source_fingerprint: str | None = None,
 ) -> dict:
     """Append a committed delta's distinct k-grams to a persisted gram
-    index (operators/substring.py). Cross-fragment duplicate grams are
-    harmless — the probe is an EXISTS semi-join — they only cost
-    storage until compaction."""
-    from poormans_kube_etl_spark.operators.substring import (
-        _PROP_PREFIX,
-        positional_kgrams,
-        read_corpus_gram_index,
+    index (operators/substring.py)."""
+    return merge_delta(
+        GRAM_FAMILY, delta_docs, name,
+        max_fragments=max_fragments, source_fingerprint=source_fingerprint,
     )
-
-    spark = delta_docs.sparkSession
-    idx = read_corpus_gram_index(spark, name)
-    c = idx.constants
-    grams = (
-        positional_kgrams(delta_docs, int(c["k"]), c["id_col"], c["text_col"])
-        .select("g")
-        .distinct()
-    )
-    nb = _table_num_buckets(spark, f"{name}_grams")
-    grams.write.mode("append").bucketBy(nb, "g").saveAsTable(f"{name}_grams")
-    # the gram table has no per-doc rows, but the stamp COMPOSES from
-    # the delta alone — no corpus view needed (pre-r11 this family's
-    # fingerprint went stale on every merge)
-    _restamp_freshness(
-        spark, f"{name}_grams", _PROP_PREFIX,
-        c["fingerprint"], delta_docs, c["id_col"], source_fingerprint,
-    )
-    fragments = _bump_fragments(spark, f"{name}_grams", _PROP_PREFIX)
-    refresh_artifact_manifest(spark, f"{name}_grams")
-    return {"fragments": fragments, "needs_compaction": fragments > max_fragments}
-
-
-def rebuild_corpus_bm25_index(corpus_docs: DataFrame, name: str, **write_kwargs) -> dict:
-    """The BM25 merge policy IS a rebuild (module docstring): df /
-    n_docs / avgdl are global facts denormalized onto every posting
-    row, so a delta invalidates existing rows. One full tokenize of the
-    corpus — the cost every search engine pays for segment-merge, paid
-    here at the configured maintenance cadence rather than per query."""
-    from poormans_kube_etl_spark.operators.retrieval_index import (
-        write_corpus_bm25_index,
-    )
-
-    write_kwargs.setdefault("mode", "overwrite")
-    write_corpus_bm25_index(corpus_docs, name, **write_kwargs)
-    return {"fragments": 0, "needs_compaction": False}
 
 
 def merge_delta_into_fp_index(
@@ -272,28 +197,18 @@ def merge_delta_into_fp_index(
     source_fingerprint: str | None = None,
 ) -> dict:
     """Append a committed delta's (fp, keeper) rows to a persisted
-    exact-dedup fingerprint index (operators/exact_index.py). A
-    fingerprint now in several fragments yields several keeper
-    candidates; the probe's own MIN resolves them, so the append is
-    correctness-invariant (the family rule)."""
-    from poormans_kube_etl_spark.operators.exact_index import (
-        _PROP_PREFIX,
-        corpus_fps,
-        read_corpus_fp_index,
+    exact-dedup fingerprint index (operators/exact_index.py)."""
+    return merge_delta(
+        EXACT_FAMILY, delta_docs, name,
+        max_fragments=max_fragments, source_fingerprint=source_fingerprint,
     )
 
-    spark = delta_docs.sparkSession
-    idx = read_corpus_fp_index(spark, name)
-    c = idx.constants
-    fps = corpus_fps(delta_docs, c["id_col"], c["text_col"])
-    nb = _table_num_buckets(spark, f"{name}_fps")
-    fps.write.mode("append").bucketBy(nb, "fp").saveAsTable(f"{name}_fps")
-    # the fp table is keeper-collapsed (no per-doc rows), but the stamp
-    # COMPOSES from the delta alone — no corpus frame needed
-    _restamp_freshness(
-        spark, f"{name}_fps", _PROP_PREFIX,
-        c["fingerprint"], delta_docs, c["id_col"], source_fingerprint,
-    )
-    fragments = _bump_fragments(spark, f"{name}_fps", _PROP_PREFIX)
-    refresh_artifact_manifest(spark, f"{name}_fps")
-    return {"fragments": fragments, "needs_compaction": fragments > max_fragments}
+
+def rebuild_corpus_bm25_index(corpus_docs: DataFrame, name: str, **write_kwargs) -> dict:
+    """The BM25 merge policy IS a rebuild (module docstring): one full
+    tokenize of the corpus — the cost every search engine pays for
+    segment-merge, paid here at the configured maintenance cadence
+    rather than per query."""
+    write_kwargs.setdefault("mode", "overwrite")
+    write_corpus_bm25_index(corpus_docs, name, **write_kwargs)
+    return {"fragments": 0, "needs_compaction": False}

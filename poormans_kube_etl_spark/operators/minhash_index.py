@@ -30,15 +30,17 @@ is the Spark-native upgrade of that shape.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.operators.index_artifact import (
-    corpus_fingerprint,
-    load_table_properties,
-    stamp_table_properties,
+    IndexFamily,
+    IndexTable,
+    read_index,
+    write_index,
 )
 from poormans_kube_etl_spark.operators.minhash import (
     _banded,
@@ -56,17 +58,6 @@ from poormans_kube_etl_spark.operators.minhash import (
 INDEX_FORMAT_VERSION = "3"
 
 _PROP_PREFIX = "pke.minhash."
-_CONSTANT_KEYS = (
-    "id_col",
-    "text_col",
-    "shingle_len",
-    "num_hashes",
-    "bands",
-    "hash_family",
-    "max_bucket",
-    "fingerprint",
-    "format_version",
-)
 
 
 @dataclass(frozen=True)
@@ -81,6 +72,67 @@ class CorpusMinhashIndex:
     @property
     def id_col(self) -> str:
         return self.constants["id_col"]
+
+
+@contextmanager
+def _derive(docs: DataFrame, c: dict[str, str]):
+    """One signature pass, persisted, feeds BOTH tables (unpersisted on
+    exit — the writes are the cache's only consumers)."""
+    num_hashes, bands = int(c["num_hashes"]), int(c["bands"])
+    if num_hashes % bands != 0:
+        raise ValueError(f"num_hashes={num_hashes} must be divisible by bands={bands}")
+    signed = signed_for(
+        docs,
+        c["id_col"],
+        c["text_col"],
+        int(c["shingle_len"]),
+        num_hashes,
+        c["hash_family"],
+    ).persist()
+    try:
+        banded = _banded(signed, c["id_col"], bands, num_hashes // bands)
+        yield {
+            "_buckets": bounded_buckets(banded, int(c["max_bucket"])),
+            "_shingles": signed.select(F.col(c["id_col"]).alias("doc"), "shingles"),
+        }, {}
+    finally:
+        signed.unpersist()
+
+
+MINHASH_FAMILY = IndexFamily(
+    name="minhash",
+    label="corpus minhash index",
+    builder="write_corpus_minhash_index",
+    prefix=_PROP_PREFIX,
+    format_version=INDEX_FORMAT_VERSION,
+    constant_keys=(
+        "id_col",
+        "text_col",
+        "shingle_len",
+        "num_hashes",
+        "bands",
+        "hash_family",
+        "max_bucket",
+    ),
+    tables=(
+        IndexTable("_buckets", ("band_id", "band_hash")),
+        IndexTable("_shingles", ("doc",)),
+    ),
+    catalog_suffix="",
+    derive=_derive,
+    handle=CorpusMinhashIndex,
+    config=(
+        ("id_col", "id_col"),
+        ("text_col", "text_col"),
+        ("shingle_len", "shingle_len"),
+        ("num_hashes", "num_hashes"),
+        ("bands", "bands"),
+        ("hash_family", "hash_family"),
+    ),
+    defaults={"max_bucket": 256},
+    merge_entry="merge_delta_into_minhash_index",
+    legacy_tables=("_bands",),  # v1 raw band rows
+)
 
 
 def write_corpus_minhash_index(
@@ -100,88 +152,35 @@ def write_corpus_minhash_index(
     source_fingerprint: str | None = None,
 ) -> None:
     """Compute corpus signatures ONCE and land them as the two bucketed
-    tables described in the module docstring. One signature pass feeds
-    both writes via a persist (unpersisted before returning — writes
-    are actions, so the cache's useful life ends here). ``path`` roots
-    EXTERNAL tables at ``<path>/buckets|shingles`` (else the session
-    warehouse); ``n_buckets`` sizes the on-disk hash distribution —
-    pick ~corpus-partition count at scale."""
-    if num_hashes % bands != 0:
-        raise ValueError(f"num_hashes={num_hashes} must be divisible by bands={bands}")
-    spark = corpus_docs.sparkSession
-    if mode == "overwrite":
-        # a v1 artifact stored raw band rows under <name>_bands; leaving
-        # it behind on rebuild would feed old readers an ever-staler
-        # corpus and leak its files
-        spark.sql(f"DROP TABLE IF EXISTS {name}_bands")
-    signed = signed_for(
-        corpus_docs, id_col, text_col, shingle_len, num_hashes, hash_family
-    ).persist()
-    try:
-        banded = _banded(signed, id_col, bands, num_hashes // bands)
-        buckets = bounded_buckets(banded, max_bucket)
-        w = buckets.write.mode(mode).bucketBy(n_buckets, "band_id", "band_hash")
-        if path is not None:
-            w = w.option("path", f"{path}/buckets")
-        w.saveAsTable(f"{name}_buckets")
-
-        sh = (
-            signed.select(F.col(id_col).alias("doc"), "shingles")
-            .write.mode(mode)
-            .bucketBy(n_buckets, "doc")
-        )
-        if path is not None:
-            sh = sh.option("path", f"{path}/shingles")
-        sh.saveAsTable(f"{name}_shingles")
-    finally:
-        signed.unpersist()
-    props = {
-        "id_col": id_col,
-        "text_col": text_col,
-        "shingle_len": str(shingle_len),
-        "num_hashes": str(num_hashes),
-        "bands": str(bands),
-        "hash_family": hash_family,
-        "max_bucket": str(max_bucket),
-        "fingerprint": corpus_fingerprint(corpus_docs, id_col),
-        "format_version": INDEX_FORMAT_VERSION,
-    }
-    if source_fingerprint is not None:
-        props["source_fingerprint"] = source_fingerprint
-    stamp_table_properties(spark, f"{name}_buckets", _PROP_PREFIX, props)
-    if path is not None:
-        from poormans_kube_etl_spark.operators.index_artifact import (
-            write_artifact_manifest,
-        )
-
-        write_artifact_manifest(
-            spark, path, (f"{name}_buckets", f"{name}_shingles")
-        )
+    tables described in the module docstring. ``path`` roots EXTERNAL
+    tables at ``<path>/buckets|shingles`` (else the session warehouse);
+    ``n_buckets`` sizes the on-disk hash distribution — pick
+    ~corpus-partition count at scale."""
+    write_index(
+        MINHASH_FAMILY,
+        corpus_docs,
+        name,
+        {
+            "id_col": id_col,
+            "text_col": text_col,
+            "shingle_len": shingle_len,
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "hash_family": hash_family,
+            "max_bucket": max_bucket,
+        },
+        n_buckets=n_buckets,
+        path=path,
+        mode=mode,
+        source_fingerprint=source_fingerprint,
+    )
 
 
 def read_corpus_minhash_index(spark: SparkSession, name: str) -> CorpusMinhashIndex:
     """Open a persisted index and restore its banding constants from
     the buckets table's properties — loudly rejecting artifacts written
     by an incompatible layout version."""
-    try:
-        buckets = spark.table(f"{name}_buckets")
-        shingles = spark.table(f"{name}_shingles")
-    except Exception as e:  # missing table: say what to do, not just AnalysisException
-        raise ValueError(
-            f"{name}: index tables not found ({e.__class__.__name__}) — "
-            "not a corpus minhash index, or a pre-v2 layout; rebuild "
-            "with write_corpus_minhash_index"
-        ) from e
-    constants = load_table_properties(
-        spark,
-        f"{name}_buckets",
-        _PROP_PREFIX,
-        _CONSTANT_KEYS,
-        family="corpus minhash index",
-        format_version=INDEX_FORMAT_VERSION,
-        builder="write_corpus_minhash_index",
-    )
-    return CorpusMinhashIndex(buckets=buckets, shingles=shingles, constants=constants)
+    return read_index(MINHASH_FAMILY, spark, name)
 
 
 def minhash_incremental_near_duplicates_indexed(

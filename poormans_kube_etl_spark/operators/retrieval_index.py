@@ -23,15 +23,17 @@ constants: the same index serves any scoring calibration.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.operators.index_artifact import (
-    corpus_fingerprint,
-    load_table_properties,
-    stamp_table_properties,
+    IndexFamily,
+    IndexTable,
+    read_index,
+    write_index,
 )
 from poormans_kube_etl_spark.operators.text import normalize_text, tokens
 
@@ -42,14 +44,6 @@ from poormans_kube_etl_spark.operators.text import normalize_text, tokens
 INDEX_FORMAT_VERSION = "2"
 
 _PROP_PREFIX = "pke.bm25."
-_CONSTANT_KEYS = (
-    "id_col",
-    "text_col",
-    "n_docs",
-    "avgdl",
-    "fingerprint",
-    "format_version",
-)
 
 
 @dataclass(frozen=True)
@@ -81,20 +75,58 @@ def bm25_score_expr(k1: float, b: float, n_docs: Column, avgdl: Column) -> Colum
     return idf * tfn
 
 
-def corpus_postings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(tok, doc_id, tf, dl, df) — the denormalized inverted index as a
-    lazy frame (three hash aggregations + two token/doc-keyed joins,
-    all linear in corpus tokens)."""
+@contextmanager
+def _derive(docs: DataFrame, c: dict[str, str]):
+    """The postings plus the corpus scalars (n_docs, avgdl): one
+    plan-time 1-row action over the persisted dl aggregate — the
+    documented once-per-build class."""
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(normalize_text(text_col))).alias("tok"),
+        F.col(c["id_col"]).alias("doc_id"),
+        F.explode(tokens(normalize_text(c["text_col"]))).alias("tok"),
     )
-    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    return tf.join(dl, "doc_id").join(df, "tok").select("tok", "doc_id", "tf", "dl", "df")
+    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")).persist()
+    try:
+        stats = dl.agg(
+            F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
+        ).collect()[0]
+        tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
+        df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+        postings = tf.join(dl, "doc_id").join(df, "tok").select(
+            "tok", "doc_id", "tf", "dl", "df"
+        )
+        yield {"_postings": postings}, {
+            # repr round-trips the double bit-exactly; int(n) is exact anyway.
+            # n_docs is NOT the fingerprint's twin: it counts docs with
+            # ≥1 token (the scoring fact), the fingerprint counts raw
+            # corpus rows (the freshness fact) — an all-empty
+            # regeneration changes only the latter
+            "n_docs": str(int(stats["n"])),
+            "avgdl": repr(float(stats["avgdl"])) if stats["avgdl"] is not None else "0.0",
+        }
+    finally:
+        dl.unpersist()
+
+
+BM25_FAMILY = IndexFamily(
+    name="bm25",
+    label="BM25 index",
+    builder="write_corpus_bm25_index",
+    prefix=_PROP_PREFIX,
+    format_version=INDEX_FORMAT_VERSION,
+    constant_keys=(
+        "id_col",
+        "text_col",
+        "n_docs",
+        "avgdl",
+    ),
+    tables=(IndexTable("_postings", ("tok",)),),
+    catalog_suffix="_bm25",
+    derive=_derive,
+    handle=CorpusBM25Index,
+    # df / n_docs / avgdl are global facts on every posting row: a
+    # delta changes existing rows, so there is no append-shaped merge
+    policy="rebuild",
+)
 
 
 def write_corpus_bm25_index(
@@ -109,77 +141,26 @@ def write_corpus_bm25_index(
     source_fingerprint: str | None = None,
 ) -> None:
     """Tokenize the corpus ONCE and land the postings table described
-    in the module docstring. The corpus scalars (n_docs, avgdl) are one
-    plan-time 1-row action over the dl aggregate — the documented
-    once-per-build class. ``path`` roots an EXTERNAL table at
+    in the module docstring. ``path`` roots an EXTERNAL table at
     ``<path>/postings`` (else the session warehouse); ``n_buckets``
     sizes the on-disk token-hash distribution — pick ~corpus partition
     count at scale."""
-    spark = corpus_docs.sparkSession
-    toks = corpus_docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(normalize_text(text_col))).alias("tok"),
+    write_index(
+        BM25_FAMILY,
+        corpus_docs,
+        name,
+        {"id_col": id_col, "text_col": text_col},
+        n_buckets=n_buckets,
+        path=path,
+        mode=mode,
+        source_fingerprint=source_fingerprint,
     )
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")).persist()
-    try:
-        stats = dl.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-        ).collect()[0]
-        tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-        df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-        postings = tf.join(dl, "doc_id").join(df, "tok").select(
-            "tok", "doc_id", "tf", "dl", "df"
-        )
-        w = postings.write.mode(mode).bucketBy(n_buckets, "tok")
-        if path is not None:
-            w = w.option("path", f"{path}/postings")
-        w.saveAsTable(f"{name}_postings")
-    finally:
-        dl.unpersist()
-    props = {
-        "id_col": id_col,
-        "text_col": text_col,
-        # repr round-trips the double bit-exactly; int(n) is exact anyway
-        "n_docs": str(int(stats["n"])),
-        "avgdl": repr(float(stats["avgdl"])) if stats["avgdl"] is not None else "0.0",
-        # NOT n_docs's twin: n_docs counts docs with ≥1 token (the
-        # scoring fact), the fingerprint counts raw corpus rows (the
-        # freshness fact) — an all-empty regeneration changes only the
-        # latter
-        "fingerprint": corpus_fingerprint(corpus_docs, id_col),
-        "format_version": INDEX_FORMAT_VERSION,
-    }
-    if source_fingerprint is not None:
-        props["source_fingerprint"] = source_fingerprint
-    stamp_table_properties(spark, f"{name}_postings", _PROP_PREFIX, props)
-    if path is not None:
-        from poormans_kube_etl_spark.operators.index_artifact import (
-            write_artifact_manifest,
-        )
-
-        write_artifact_manifest(spark, path, (f"{name}_postings",))
 
 
 def read_corpus_bm25_index(spark: SparkSession, name: str) -> CorpusBM25Index:
     """Open a persisted index and restore its corpus scalars — loudly
     rejecting artifacts written by an incompatible layout version."""
-    try:
-        postings = spark.table(f"{name}_postings")
-    except Exception as e:
-        raise ValueError(
-            f"{name}: postings table not found ({e.__class__.__name__}) — "
-            "not a BM25 index; build with write_corpus_bm25_index"
-        ) from e
-    constants = load_table_properties(
-        spark,
-        f"{name}_postings",
-        _PROP_PREFIX,
-        _CONSTANT_KEYS,
-        family="BM25 index",
-        format_version=INDEX_FORMAT_VERSION,
-        builder="write_corpus_bm25_index",
-    )
-    return CorpusBM25Index(postings=postings, constants=constants)
+    return read_index(BM25_FAMILY, spark, name)
 
 
 def bm25_topk_indexed(

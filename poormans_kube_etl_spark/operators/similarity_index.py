@@ -24,15 +24,19 @@ delta banded with the same constants always lands in the same buckets.
 
 from __future__ import annotations
 
+import math
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.operators.index_artifact import (
-    corpus_fingerprint,
-    load_table_properties,
-    stamp_table_properties,
+    FINGERPRINT_KEY,
+    IndexFamily,
+    IndexTable,
+    read_index,
+    write_index,
 )
 from poormans_kube_etl_spark.operators.minhash import (
     bounded_buckets,
@@ -52,17 +56,6 @@ from poormans_kube_etl_spark.operators.similarity import (
 INDEX_FORMAT_VERSION = "3"
 
 _PROP_PREFIX = "pke.srp."
-_CONSTANT_KEYS = (
-    "id_col",
-    "vec_col",
-    "dim",
-    "bands",
-    "planes_per_band",
-    "planned_threshold",
-    "max_bucket",
-    "fingerprint",
-    "format_version",
-)
 
 
 @dataclass(frozen=True)
@@ -73,6 +66,86 @@ class CorpusSrpIndex:
     buckets: DataFrame
     vectors: DataFrame
     constants: dict[str, str]
+
+
+@contextmanager
+def _derive(vecs: DataFrame, c: dict[str, str]):
+    """Band with the recorded constants, or — at build time without an
+    explicit pair — plan (bands, planes_per_band) jointly from the
+    corpus size at ``planned_threshold`` (one count, the standard ANN
+    build-time action; same rule as embedding_near_pairs_lsh)."""
+    if ("bands" in c) != ("planes_per_band" in c):
+        raise ValueError(
+            "pass BOTH bands and planes_per_band or NEITHER; the pair "
+            "is planned jointly from the threshold (srp_banding)"
+        )
+    id_col, vec_col = c["id_col"], c["vec_col"]
+    threshold = float(c["planned_threshold"])
+    dim = resolve_dim(vecs, vec_col, int(c["dim"]) if "dim" in c else None)
+    if "bands" not in c:
+        planes_per_band, bands = srp_banding(
+            threshold, n_vectors=vecs.count(), max_planes=1024
+        )
+    else:
+        bands, planes_per_band = int(c["bands"]), int(c["planes_per_band"])
+        if FINGERPRINT_KEY not in c:
+            # a caller-chosen pair at build time (recorded constants
+            # were checked when their artifact was built): the artifact
+            # records planned_threshold as a PROMISE to the reader's
+            # guard (r9 review), so check it against the banding
+            # geometry — recall(t) = 1 − (1 − p^r)^b with
+            # p = 1 − arccos(t)/π.
+            p = 1.0 - math.acos(min(1.0, max(-1.0, threshold))) / math.pi
+            predicted = 1.0 - (1.0 - p**planes_per_band) ** bands
+            if predicted < 0.5:
+                raise ValueError(
+                    f"bands={bands} x planes_per_band={planes_per_band} gives "
+                    f"predicted recall {predicted:.3f} at threshold {threshold} "
+                    "— this banding was not sized for that threshold; pass the "
+                    "threshold the pair was actually planned for (it is "
+                    "recorded as the artifact's planned_threshold)"
+                )
+    banded = srp_band_signatures(
+        vecs, bands, planes_per_band, id_col, vec_col, dim
+    ).select(F.col("vid").alias("doc"), "band_id", F.col("bucket").alias("band_hash"))
+    yield {
+        "_buckets": bounded_buckets(banded, int(c["max_bucket"])),
+        "_vectors": vecs.select(id_col, vec_col),
+    }, {"dim": str(dim), "bands": str(bands), "planes_per_band": str(planes_per_band)}
+
+
+SRP_FAMILY = IndexFamily(
+    name="srp",
+    label="corpus SRP index",
+    builder="write_corpus_srp_index",
+    prefix=_PROP_PREFIX,
+    format_version=INDEX_FORMAT_VERSION,
+    constant_keys=(
+        "id_col",
+        "vec_col",
+        "dim",
+        "bands",
+        "planes_per_band",
+        "planned_threshold",
+        "max_bucket",
+    ),
+    tables=(
+        IndexTable("_buckets", ("band_id", "band_hash")),
+        IndexTable("_vectors", ("id_col",)),
+    ),
+    catalog_suffix="_srp",
+    derive=_derive,
+    handle=CorpusSrpIndex,
+    source="vectors",
+    config=(
+        ("id_col", "vec_id_col"),
+        ("vec_col", "vec_col"),
+        ("planned_threshold", "srp_threshold"),
+    ),
+    defaults={"max_bucket": 256},
+    merge_entry="merge_delta_into_srp_index",
+    legacy_tables=("_bands",),  # short-lived v1 layout
+)
 
 
 def write_corpus_srp_index(
@@ -92,79 +165,26 @@ def write_corpus_srp_index(
     source_fingerprint: str | None = None,
 ) -> None:
     """Band the corpus ONCE (auto-planned from the corpus size at
-    ``threshold`` unless the pair is given explicitly — same joint-
-    planning rule as embedding_near_pairs_lsh) and land the bands +
-    vectors tables. The banding plan runs one count — the standard
-    ANN build-time action, paid once per ingest."""
-    if (bands is None) != (planes_per_band is None):
-        raise ValueError(
-            "pass BOTH bands and planes_per_band or NEITHER; the pair "
-            "is planned jointly from the threshold (srp_banding)"
-        )
-    dim = resolve_dim(corpus_embeddings, vec_col, dim)
-    if bands is None:
-        planes_per_band, bands = srp_banding(
-            threshold, n_vectors=corpus_embeddings.count(), max_planes=1024
-        )
-    else:
-        # the artifact records planned_threshold as a PROMISE to the
-        # reader's guard (r9 review): an explicit pair sized for some
-        # other regime would otherwise make the guard give false
-        # assurance. Check the promise against the banding geometry —
-        # recall(t) = 1 − (1 − p^r)^b with p = 1 − arccos(t)/π.
-        import math
-
-        p = 1.0 - math.acos(min(1.0, max(-1.0, threshold))) / math.pi
-        predicted = 1.0 - (1.0 - p**planes_per_band) ** bands
-        if predicted < 0.5:
-            raise ValueError(
-                f"bands={bands} x planes_per_band={planes_per_band} gives "
-                f"predicted recall {predicted:.3f} at threshold {threshold} "
-                "— this banding was not sized for that threshold; pass the "
-                "threshold the pair was actually planned for (it is "
-                "recorded as the artifact's planned_threshold)"
-            )
-    spark = corpus_embeddings.sparkSession
-    if mode == "overwrite":
-        spark.sql(f"DROP TABLE IF EXISTS {name}_bands")  # short-lived v1 layout
-    banded = srp_band_signatures(
-        corpus_embeddings, bands, planes_per_band, id_col, vec_col, dim
-    ).select(F.col("vid").alias("doc"), "band_id", F.col("bucket").alias("band_hash"))
-    buckets = bounded_buckets(banded, max_bucket)
-    w = buckets.write.mode(mode).bucketBy(n_buckets, "band_id", "band_hash")
-    if path is not None:
-        w = w.option("path", f"{path}/buckets")
-    w.saveAsTable(f"{name}_buckets")
-
-    vecs = corpus_embeddings.select(id_col, vec_col).write.mode(mode).bucketBy(
-        n_buckets, id_col
+    ``threshold`` unless the pair is given explicitly — see ``_derive``)
+    and land the bands + vectors tables."""
+    write_index(
+        SRP_FAMILY,
+        corpus_embeddings,
+        name,
+        {
+            "id_col": id_col,
+            "vec_col": vec_col,
+            "dim": dim,
+            "bands": bands,
+            "planes_per_band": planes_per_band,
+            "planned_threshold": threshold,
+            "max_bucket": max_bucket,
+        },
+        n_buckets=n_buckets,
+        path=path,
+        mode=mode,
+        source_fingerprint=source_fingerprint,
     )
-    if path is not None:
-        vecs = vecs.option("path", f"{path}/vectors")
-    vecs.saveAsTable(f"{name}_vectors")
-
-    props = {
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "dim": str(dim),
-        "bands": str(bands),
-        "planes_per_band": str(planes_per_band),
-        "planned_threshold": str(threshold),
-        "max_bucket": str(max_bucket),
-        "fingerprint": corpus_fingerprint(corpus_embeddings, id_col),
-        "format_version": INDEX_FORMAT_VERSION,
-    }
-    if source_fingerprint is not None:
-        props["source_fingerprint"] = source_fingerprint
-    stamp_table_properties(spark, f"{name}_buckets", _PROP_PREFIX, props)
-    if path is not None:
-        from poormans_kube_etl_spark.operators.index_artifact import (
-            write_artifact_manifest,
-        )
-
-        write_artifact_manifest(
-            spark, path, (f"{name}_buckets", f"{name}_vectors")
-        )
 
 
 def read_corpus_srp_index(spark: SparkSession, name: str) -> CorpusSrpIndex:
@@ -172,25 +192,7 @@ def read_corpus_srp_index(spark: SparkSession, name: str) -> CorpusSrpIndex:
     constants (same discipline as minhash_index: constants come FROM
     the artifact, so two-engine banding disagreement is
     unrepresentable)."""
-    try:
-        buckets = spark.table(f"{name}_buckets")
-        vectors = spark.table(f"{name}_vectors")
-    except Exception as e:
-        raise ValueError(
-            f"{name}: index tables not found ({e.__class__.__name__}) — "
-            "not a corpus SRP index, or a pre-v2 layout; rebuild with "
-            "write_corpus_srp_index"
-        ) from e
-    constants = load_table_properties(
-        spark,
-        f"{name}_buckets",
-        _PROP_PREFIX,
-        _CONSTANT_KEYS,
-        family="corpus SRP index",
-        format_version=INDEX_FORMAT_VERSION,
-        builder="write_corpus_srp_index",
-    )
-    return CorpusSrpIndex(buckets=buckets, vectors=vectors, constants=constants)
+    return read_index(SRP_FAMILY, spark, name)
 
 
 def embedding_incremental_near_pairs_indexed(

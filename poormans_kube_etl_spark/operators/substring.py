@@ -27,15 +27,17 @@ Spark-native upgrade of that shape.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.operators.index_artifact import (
-    corpus_fingerprint,
-    load_table_properties,
-    stamp_table_properties,
+    IndexFamily,
+    IndexTable,
+    read_index,
+    write_index,
 )
 from poormans_kube_etl_spark.operators.text import normalize_text, tokens
 
@@ -46,7 +48,6 @@ from poormans_kube_etl_spark.operators.text import normalize_text, tokens
 INDEX_FORMAT_VERSION = "2"
 
 _PROP_PREFIX = "pke.substring."
-_CONSTANT_KEYS = ("id_col", "text_col", "k", "fingerprint", "format_version")
 
 
 def kgrams_from_tokens(
@@ -208,6 +209,31 @@ class CorpusGramIndex:
         return self.constants["id_col"]
 
 
+@contextmanager
+def _derive(docs: DataFrame, c: dict[str, str]):
+    yield {
+        "_grams": positional_kgrams(docs, int(c["k"]), c["id_col"], c["text_col"])
+        .select("g")
+        .distinct()
+    }, {}
+
+
+GRAM_FAMILY = IndexFamily(
+    name="gram",
+    label="corpus gram index",
+    builder="write_corpus_gram_index",
+    prefix=_PROP_PREFIX,
+    format_version=INDEX_FORMAT_VERSION,
+    constant_keys=("id_col", "text_col", "k"),
+    tables=(IndexTable("_grams", ("g",)),),
+    catalog_suffix="_gram",
+    derive=_derive,
+    handle=CorpusGramIndex,
+    config=(("id_col", "id_col"), ("text_col", "text_col"), ("k", "gram_k")),
+    merge_entry="merge_delta_into_gram_index",
+)
+
+
 def write_corpus_gram_index(
     corpus_docs: DataFrame,
     name: str,
@@ -226,51 +252,23 @@ def write_corpus_gram_index(
     ``path`` roots an EXTERNAL table at ``<path>/grams`` (else the
     session warehouse); ``n_buckets`` sizes the on-disk hash
     distribution — pick ~corpus-partition count at scale."""
-    spark = corpus_docs.sparkSession
-    grams = positional_kgrams(corpus_docs, k, id_col, text_col).select("g").distinct()
-    w = grams.write.mode(mode).bucketBy(n_buckets, "g")
-    if path is not None:
-        w = w.option("path", f"{path}/grams")
-    w.saveAsTable(f"{name}_grams")
-    props = {
-        "id_col": id_col,
-        "text_col": text_col,
-        "k": str(k),
-        "fingerprint": corpus_fingerprint(corpus_docs, id_col),
-        "format_version": INDEX_FORMAT_VERSION,
-    }
-    if source_fingerprint is not None:
-        props["source_fingerprint"] = source_fingerprint
-    stamp_table_properties(spark, f"{name}_grams", _PROP_PREFIX, props)
-    if path is not None:
-        from poormans_kube_etl_spark.operators.index_artifact import (
-            write_artifact_manifest,
-        )
-
-        write_artifact_manifest(spark, path, (f"{name}_grams",))
+    write_index(
+        GRAM_FAMILY,
+        corpus_docs,
+        name,
+        {"id_col": id_col, "text_col": text_col, "k": k},
+        n_buckets=n_buckets,
+        path=path,
+        mode=mode,
+        source_fingerprint=source_fingerprint,
+    )
 
 
 def read_corpus_gram_index(spark: SparkSession, name: str) -> CorpusGramIndex:
     """Open a persisted gram index and restore its constants from the
     table properties — loudly rejecting non-index tables and artifacts
     written by an incompatible layout version."""
-    try:
-        grams = spark.table(f"{name}_grams")
-    except Exception as e:
-        raise ValueError(
-            f"{name}: gram table not found ({e.__class__.__name__}) — "
-            "not a corpus gram index; build with write_corpus_gram_index"
-        ) from e
-    constants = load_table_properties(
-        spark,
-        f"{name}_grams",
-        _PROP_PREFIX,
-        _CONSTANT_KEYS,
-        family="corpus gram index",
-        format_version=INDEX_FORMAT_VERSION,
-        builder="write_corpus_gram_index",
-    )
-    return CorpusGramIndex(grams=grams, constants=constants)
+    return read_index(GRAM_FAMILY, spark, name)
 
 
 def substring_spans_indexed(new_docs: DataFrame, index: CorpusGramIndex) -> DataFrame:
@@ -283,7 +281,9 @@ def substring_spans_indexed(new_docs: DataFrame, index: CorpusGramIndex) -> Data
     c = index.constants
     k = int(c["k"])
     delta = positional_kgrams(new_docs, k, c["id_col"], c["text_col"])
-    hits = delta.join(index.grams, "g").select(
+    # a semi-join: a gram appended by several merge fragments must
+    # still count as ONE hit, or n_dup_grams inflates per fragment
+    hits = delta.join(index.grams, "g", "left_semi").select(
         c["id_col"], "s", (F.col("s") + k).alias("e")
     )
     return merge_islands(hits, c["id_col"])

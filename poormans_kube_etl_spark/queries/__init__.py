@@ -26,6 +26,8 @@ from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession
 
+from poormans_kube_etl_spark.session import jobs_submitted
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -90,16 +92,6 @@ def _sf_version(sf_dir: str) -> tuple | None:
     return tuple(out)
 
 
-def _jobs_count(spark: SparkSession) -> int:
-    """Total jobs submitted this session (AppStatusStore), -1 when
-    unobservable (Connect, exotic sessions) — which disables the memo
-    rather than mis-classifying an eager builder as pure-plan."""
-    try:
-        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
-    except Exception:
-        return -1
-
-
 def _memoized(name: str, fn: QueryFn) -> QueryFn:
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,9 +104,9 @@ def _memoized(name: str, fn: QueryFn) -> QueryFn:
         hit = _PLAN_MEMO.get(key)
         if hit is not None and hit[0] is spark and hit[2] == ver:
             return hit[1]
-        j0 = _jobs_count(spark)
+        j0 = jobs_submitted(spark)
         df = fn(spark, sf_dir)
-        if j0 >= 0 and _jobs_count(spark) == j0:
+        if j0 >= 0 and jobs_submitted(spark) == j0:
             if len(_PLAN_MEMO) > 512:  # bound: many sessions/sf_dirs
                 _PLAN_MEMO.clear()
             _PLAN_MEMO[key] = (spark, df, ver)

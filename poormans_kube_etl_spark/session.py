@@ -40,6 +40,20 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def jobs_submitted(spark: SparkSession) -> int:
+    """Spark jobs submitted so far on this session's context: the
+    DAGScheduler's next job id, which rises synchronously with every
+    submission and never saturates. The status store's
+    ``jobsList(...).size()`` is not a counter — it stops growing at
+    ``spark.ui.retainedJobs`` (1000 by default), after which an eager
+    builder reads as zero-job. -1 when unobservable (Connect, exotic
+    sessions)."""
+    try:
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+    except Exception:
+        return -1
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply SET-able confs to an existing session (driver-owned or ours).
 

@@ -5,7 +5,7 @@ The folder-claim lease (``Orchestrator.claim_folder``) makes replicas
 disjoint per INGEST, but index maintenance from two replicas finalizing
 DIFFERENT ingests lands in the SAME family tables: concurrent
 append-merges, property restamps (the composed-fingerprint
-read-modify-write in ``operators/index_maintenance._restamp_freshness``)
+read-modify-write in ``operators/index_maintenance.merge_delta``)
 and manifest tmp+rename refreshes had no mutual exclusion — a lost
 property update silently corrupts the composed deep fingerprint, and
 interleaved manifest refreshes can persist a stale snapshot. The

@@ -3,6 +3,7 @@ the reference's test strategy (SURVEY.md §5) applied to our operators."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -2116,3 +2117,16 @@ def test_kwic_snippets_window_edges(spark):
     assert got[0] == ("spark", "spark b c")
     assert got[4] == ("merge", "c d merge f g")
     assert got[7] == ("stream", "f g stream")
+
+
+def test_where_materialized_rejects_barrier_name_collision(spark):
+    # the barrier column would overwrite the caller's column and then
+    # drop it from the result
+    from poormans_kube_etl_spark.operators.exprcache import where_materialized
+
+    df = spark.range(4).withColumn("_pushdown_barrier", F.col("id") * 2)
+    with pytest.raises(ValueError, match="_pushdown_barrier"):
+        where_materialized(df, F.col("id") > 1)
+    kept = where_materialized(spark.range(4), F.col("id") > 1)
+    assert kept.columns == ["id"]
+    assert sorted(r["id"] for r in kept.collect()) == [2, 3]

@@ -220,11 +220,16 @@ def test_topk_scores_each_candidate_pair_once(q):
     # dot must appear exactly once per top-k plan (in the projection).
     from poormans_kube_etl_spark.plans.inspect import formatted_plan
 
-    for name in ("sim_topk_bruteforce", "sim_ivf_topk"):
+    # (query, query-vector site, pair-dot term): q_vec[j] * nn_vec[j]
+    # terms, any expr id (ivf's probe-selection dot is q_vec · centroid
+    # and deliberately not matched); the LSH face names its decoded
+    # vectors _qv / _nv
+    for name, q_site, pair_dot in (
+        ("sim_topk_bruteforce", "(q_vec", "* nn_vec"),
+        ("sim_ivf_topk", "(q_vec", "* nn_vec"),
+        ("sim_lsh_topk", "(_qv", "* _nv"),
+    ):
         plan = formatted_plan(q(name))
-        # q_vec[j] * nn_vec[j] terms, any expr id (ivf's probe-selection
-        # dot is q_vec · centroid and deliberately not matched)
-        pair_dot = "* nn_vec"
         for line in plan.splitlines():
             if "Join condition" in line:
                 assert pair_dot not in line, (
@@ -234,7 +239,7 @@ def test_topk_scores_each_candidate_pair_once(q):
         # one evaluation per candidate row: dim terms appear in exactly
         # one projection (norms are per-side SQRT sites, not pair dots)
         n_sites = sum(
-            1 for line in plan.splitlines() if "(q_vec" in line and pair_dot in line
+            1 for line in plan.splitlines() if q_site in line and pair_dot in line
         )
         assert n_sites == 1, f"{name}: {n_sites} pair-dot sites"
 
