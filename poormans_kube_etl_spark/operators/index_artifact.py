@@ -380,19 +380,17 @@ def write_artifact_manifest(
     stamps."""
     import json
 
+    from poormans_kube_etl_spark.sources.ingest import write_small_text
+
     manifest = {
         "format": _MANIFEST_FORMAT,
         "tables": [_describe_table(spark, t) for t in tables],
     }
     fs, root = _fs_for(spark, path)
     jvm = spark.sparkContext._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(path, MANIFEST_NAME + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(manifest, indent=1).encode()))
-    finally:
-        out.close()
-    final = jvm.org.apache.hadoop.fs.Path(path, MANIFEST_NAME)
+    tmp = jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME + ".tmp")
+    write_small_text(spark, tmp.toString(), json.dumps(manifest, indent=1))
+    final = jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME)
     fs.delete(final, False)
     if not fs.rename(tmp, final):
         raise OSError(f"manifest rename failed under {path}")
@@ -407,6 +405,11 @@ def refresh_artifact_manifest(spark: SparkSession, table: str) -> None:
     import json
     import posixpath
 
+    from poormans_kube_etl_spark.sources.ingest import (
+        read_small_text,
+        write_small_text,
+    )
+
     info = _describe_table(spark, table)
     root = posixpath.dirname(info["location"].rstrip("/"))
     fs, _ = _fs_for(spark, root)
@@ -414,20 +417,12 @@ def refresh_artifact_manifest(spark: SparkSession, table: str) -> None:
     mpath = jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME)
     if not fs.exists(mpath):
         return
-    stream = fs.open(mpath)
-    try:
-        manifest = json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
+    manifest = json.loads(read_small_text(spark, mpath.toString()))
     manifest["tables"] = [
         info if t["name"] == table else t for t in manifest["tables"]
     ]
     tmp = jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME + ".tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(manifest, indent=1).encode()))
-    finally:
-        out.close()
+    write_small_text(spark, tmp.toString(), json.dumps(manifest, indent=1))
     fs.delete(mpath, False)
     if not fs.rename(tmp, mpath):
         raise OSError(f"manifest rename failed under {root}")

@@ -19,9 +19,13 @@ Maps SURVEY.md §2a sources onto Spark readers:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+_URI_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
 
 
 def _resolve_relative(path: str) -> str:
@@ -31,9 +35,12 @@ def _resolve_relative(path: str) -> str:
     which is frozen at JVM launch — a user passing ``--landing
     landing_dir`` after a chdir (or from a different cwd than the JVM's)
     would silently target the wrong directory (advice r4: list_prefix
-    returned [] for relative bases). URIs with a scheme pass through.
+    returned [] for relative bases). URIs with a scheme pass through —
+    including the single-slash ``file:/abs`` form a catalog reports as
+    a table location (Hadoop reads a colon before the first slash as a
+    scheme, too).
     """
-    if "://" not in path and not os.path.isabs(path):
+    if not _URI_SCHEME.match(path) and not os.path.isabs(path):
         return os.path.abspath(path)
     return path
 
@@ -150,6 +157,18 @@ def read_small_text(spark: SparkSession, path: str) -> str:
         )
     finally:
         stream.close()
+
+
+def write_small_text(spark: SparkSession, path: str, text: str) -> None:
+    """Create (or overwrite) a small control-plane file holding ``text``
+    — the write twin of ``read_small_text``, used for claim/lease
+    markers, halt and index markers and manifest tmp files."""
+    fs, jpath = hadoop_fs(spark, path)
+    out = fs.create(jpath, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
 
 
 def read_manifest(spark: SparkSession, folder: str) -> DataFrame:

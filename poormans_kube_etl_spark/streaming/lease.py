@@ -1,39 +1,57 @@
-"""Filesystem mutual-exclusion lease for shared maintenance work
-(r12, VERDICT r11 #1).
+"""Filesystem mutual-exclusion lease: one marker file on any
+Hadoop-visible filesystem, the single coordination primitive between
+replicas (the reference runs ``replicas: 3`` with no coordination at
+all, reference README.md:73). Two users:
 
-The folder-claim lease (``Orchestrator.claim_folder``) makes replicas
-disjoint per INGEST, but index maintenance from two replicas finalizing
-DIFFERENT ingests lands in the SAME family tables: concurrent
-append-merges, property restamps (the composed-fingerprint
-read-modify-write in ``operators/index_maintenance.merge_delta``)
-and manifest tmp+rename refreshes had no mutual exclusion — a lost
-property update silently corrupts the composed deep fingerprint, and
-interleaved manifest refreshes can persist a stale snapshot. The
-reference runs 3 replicas with no coordination at all
-(/root/reference/README.md:73); this engine's persisted artifacts make
-coordination mandatory.
+- the folder claim (``Orchestrator.claim_folder``, r8): one lease per
+  pending folder, ``pending/<ts>/_CLAIMED``, so concurrent pollers
+  ingest disjoint folders;
+- the maintenance lease (r12, VERDICT r11 #1): one per index root,
+  ``dedup_index/_MAINT_LEASE``. Replicas finalizing DIFFERENT ingests
+  land in the SAME family tables — concurrent append-merges, property
+  restamps (the composed-fingerprint read-modify-write in
+  ``operators/index_maintenance.merge_delta``) and manifest tmp+rename
+  refreshes need mutual exclusion, or a lost property update silently
+  corrupts the composed deep fingerprint and interleaved manifest
+  refreshes persist a stale snapshot.
 
-``FsLease`` reuses the claim-marker mechanics exactly (write a
-per-owner tmp file, RENAME onto the lease path, then read the content
-BACK — rename replaces on POSIX so success does not prove ownership;
-the marker content is the single source of truth, and a settle pause
-plus second read shrinks the near-simultaneous-rename window — see
-``Orchestrator.claim_folder`` for the full argument, r8). Staleness is
-filesystem mtime vs ``ttl_s``; renewal re-arbitrates (reads the marker
-back and refuses to write when a peer owns it — r13) and then replaces
-the marker via the same tmp+rename, falling back to an in-place
-overwrite on stores whose rename refuses an existing destination
-(HDFS) — that fallback is delete+create underneath, a brief no-file
-window a probing peer can read as stale; the content readback after
-every write arbitrates whoever lands last, exactly as in acquisition.
+Acquisition writes a per-owner tmp file (``<lease>.<owner>.tmp``),
+RENAMES it onto the lease path, then READS the content BACK (twice,
+with a ``settle_s`` pause between). POSIX rename REPLACES an existing
+destination (HDFS's no-overwrite rename is the exception, not the
+rule), so rename success does not prove ownership — the marker CONTENT
+is the single source of truth. The read-back arbitration is
+probabilistic, not exact (ADVICE r08): if A renames and reads its own
+id back before B's replacing rename lands, both see themselves as
+owner in the first probe. The settle pause plus the second probe
+shrinks that window to near-simultaneous renames; what remains is
+self-healed by the next renewal, where the loser reads the winner's id
+and yields before its protected work. On s3a, rename is copy+delete —
+the read-back closes most of that window too.
 
-The residual arbitration window on stores without atomic rename (s3a)
-is the same one the folder claim runs with; inside it the protected
+Staleness is the FILESYSTEM mtime vs ``ttl_s``, not the marker body:
+no clock parsing, and an S3 PUT's server-side timestamp is within TTL
+granularity of the driver clock. A stale lease (its holder crashed) is
+deleted by the breaker and the rename+readback arbitrates among
+breakers. Renewal re-arbitrates (r13): it reads the marker back and
+refuses to write when a peer owns it, so a holder that stalled past
+``ttl_s`` LOSES instead of stamping its id over the new owner's; then
+it replaces the marker via the same tmp+rename, falling back to an
+in-place overwrite on stores whose rename refuses an existing
+destination (HDFS) — delete+create underneath, a brief no-file window
+a probing peer can read as stale; the content readback after every
+write arbitrates whoever lands last, exactly as in acquisition. Any
+filesystem error reads as lease-lost, never as ownership.
+
+The residual window (near-simultaneous renames, or s3a's non-atomic
+rename) is bounded per user: a double-claimed folder runs idempotent
+overwrite sinks, and a loser that dies mid-run is absorbed by the
+vanished-folder transient path; inside the maintenance lease the
 merges are append-shaped (duplicate fragments cost join fan-out until
 compaction, never correctness) and the property stamps are the one
-true casualty — which is why the lease exists: it reduces the
-probability of concurrent stamping from "every concurrent finalize"
-to "near-simultaneous rename during an expired-TTL break".
+true casualty — the lease reduces the probability of concurrent
+stamping from "every concurrent finalize" to "near-simultaneous rename
+during an expired-TTL break".
 """
 
 from __future__ import annotations
@@ -82,10 +100,10 @@ class FsLease:
         except Exception:
             return False  # vanished/unreadable mid-probe: not ours
 
-    def _is_stale(self) -> bool:
+    def is_stale(self) -> bool:
         """No live lease: none at all, or mtime older than ttl_s (the
-        holder crashed mid-maintenance — release deletes the file, so a
-        long-lived marker means an orphan)."""
+        holder crashed mid-section — release, or finalize for a folder
+        claim, deletes the file, so a long-lived marker is an orphan)."""
         fs, jp = ingest_sources.hadoop_fs(self.spark, self.path)
         if not fs.exists(jp):
             return True
@@ -93,6 +111,13 @@ class FsLease:
         return age_ms > self.ttl_s * 1000
 
     # ---- lifecycle ----
+
+    def _write_tmp(self):
+        """Write the owner's id to its per-owner tmp file; returns the
+        tmp's Hadoop Path, ready to rename onto the lease path."""
+        key = f"{self.path}.{self.owner_id}.tmp"
+        ingest_sources.write_small_text(self.spark, key, self.owner_id)
+        return ingest_sources.hadoop_fs(self.spark, key)[1]
 
     def try_acquire(self) -> bool:
         """One acquisition attempt; True means this owner holds the
@@ -102,17 +127,10 @@ class FsLease:
             if fs.exists(dst):
                 if self.owns():
                     return self.renew()  # re-entry refreshes the mtime
-                if not self._is_stale():
+                if not self.is_stale():
                     return False
                 fs.delete(dst, False)  # break the orphan; readback arbitrates
-            _, tmp = ingest_sources.hadoop_fs(
-                self.spark, f"{self.path}.{self.owner_id}.tmp"
-            )
-            out = fs.create(tmp, True)
-            try:
-                out.write(bytearray(self.owner_id.encode("utf-8")))
-            finally:
-                out.close()
+            tmp = self._write_tmp()
             if not bool(fs.rename(tmp, dst)):
                 fs.delete(tmp, False)  # lost outright: clean up our tmp
                 return False
@@ -170,24 +188,13 @@ class FsLease:
             if not self.owns():
                 return False  # broken by a peer: lose, don't steal back
             fs, dst = ingest_sources.hadoop_fs(self.spark, self.path)
-            _, tmp = ingest_sources.hadoop_fs(
-                self.spark, f"{self.path}.{self.owner_id}.tmp"
-            )
-            out = fs.create(tmp, True)
-            try:
-                out.write(bytearray(self.owner_id.encode("utf-8")))
-            finally:
-                out.close()
+            tmp = self._write_tmp()
             if not bool(fs.rename(tmp, dst)):
                 # HDFS-class store: rename won't replace. Overwrite in
                 # place (brief delete window, see docstring) and drop
                 # the tmp either way.
                 fs.delete(tmp, False)
-                out = fs.create(dst, True)
-                try:
-                    out.write(bytearray(self.owner_id.encode("utf-8")))
-                finally:
-                    out.close()
+                ingest_sources.write_small_text(self.spark, self.path, self.owner_id)
             return self.owns()  # readback arbitrates the write race
         except Exception as e:
             print(f"lease: renew of {self.path} failed ({e})")

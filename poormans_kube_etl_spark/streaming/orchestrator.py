@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from poormans_kube_etl_spark.functions import duration_hmm
 from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import ingest as ingest_sources
+from poormans_kube_etl_spark.streaming.lease import FsLease
 
 MARKER_FILES = ("bulk.txt", "incremental.txt")
 PENDING_PREFIX = "pending"
@@ -58,8 +59,9 @@ PENDING_PREFIX = "pending"
 # folder by the replica that owns its ingest, so the reference's
 # ``replicas: 3`` Deployment (README.md:73) is safe to run — concurrent
 # pollers process disjoint folders instead of double-ingesting the same
-# oldest one. Control metadata like the markers: outside the manifest
-# and the *.gz verify glob.
+# oldest one. Control metadata like the markers (as is the lease's
+# transient ``_CLAIMED.<replica>.tmp``): outside the manifest and the
+# *.gz verify glob.
 CLAIM_FILE = "_CLAIMED"
 
 # index-family corpus source → (sink dir under the output dir, entity
@@ -330,114 +332,54 @@ class Orchestrator:
             self.spark, self.landing_dir, prefix, max_segments
         )
 
-    # ---- folder-claim lease (r8: multi-replica watch, VERDICT r7 #2) ----
+    def _folder_path(self, folder: str) -> str:
+        return f"{self.landing_dir}/{PENDING_PREFIX}/{folder}"
 
-    def _claim_path(self, folder: str) -> str:
-        return f"{self.landing_dir}/{PENDING_PREFIX}/{folder}/{CLAIM_FILE}"
+    # ---- leases (streaming/lease.py): folder claims + index maintenance ----
 
-    def _claim_is_stale(self, folder: str) -> bool:
-        """True when the folder carries NO live claim: none at all, or
-        one older than ``claim_ttl_s`` (the claimer crashed between
-        claim and finalize — finalize deletes the whole folder, claim
-        included, so a long-lived marker means an orphan). Staleness
-        reads the FILESYSTEM mtime, not the marker body: no clock
-        parsing, and an S3 PUT's server-side timestamp is within TTL
-        granularity of the driver clock."""
-        fs, jpath = ingest_sources.hadoop_fs(self.spark, self._claim_path(folder))
-        if not fs.exists(jpath):
-            return True
-        age_ms = time.time() * 1000 - fs.getFileStatus(jpath).getModificationTime()
-        return age_ms > self.claim_ttl_s * 1000
+    def _lease(self, path: str) -> FsLease:
+        """This replica's lease on ``path``: claims and the maintenance
+        lease share the identity, ``claim_ttl_s`` and ``claim_settle_s``."""
+        return FsLease(
+            self.spark,
+            path,
+            self.replica_id,
+            ttl_s=self.claim_ttl_s,
+            settle_s=self.claim_settle_s,
+        )
+
+    def _claim_lease(self, folder: str) -> FsLease:
+        return self._lease(f"{self._folder_path(folder)}/{CLAIM_FILE}")
+
+    def _maint_lease(self) -> FsLease:
+        return self._lease(f"{self.output_dir}/dedup_index/_MAINT_LEASE")
 
     def claim_folder(self, folder: str) -> bool:
-        """Atomically claim ``pending/<folder>`` for this replica; True
-        means this replica owns the ingest.
+        """Claim ``pending/<folder>`` for this replica: True means this
+        replica owns the ingest. The claim is an ``FsLease`` on
+        ``_CLAIMED`` (arbitration, TTL expiry and re-arbitrated renewal
+        are argued in streaming/lease.py); claiming our own live claim
+        again renews it. Two rules are the claim's own:
 
-        Claim = write ``_claim.<replica>.tmp``, RENAME to ``_CLAIMED``,
-        then READ BACK (twice, with a short settle pause): POSIX rename
-        REPLACES an existing destination (HDFS's no-overwrite rename is
-        the exception, not the rule), so rename success does not prove
-        ownership — the marker CONTENT is the single source of truth.
-        The read-back arbitration is PROBABILISTIC, not exact (ADVICE
-        r08): if replica A renames and reads its own id back before
-        replica B's replacing rename lands, both observe themselves as
-        owner in their first probe. The ``claim_settle_s`` pause plus a
-        second ``_owns_claim`` probe shrinks that window to
-        near-simultaneous renames; what remains is self-healed by the
-        post-verify renewal (the loser's renewal reads the winner's id
-        and yields before any store writes). Re-claiming our OWN
-        live claim (clear_halt retry, checkpoint redelivery, the
-        post-verify lease renewal) refreshes the marker mtime IN PLACE
-        via setTimes — no delete window for a peer to race into
-        (r8 review: the delete+recreate renewal let a peer grab the
-        folder mid-renewal). A stale claim (see ``_claim_is_stale``) is
-        deleted first and the rename+readback arbitrates among the
-        breakers. On s3a, rename is copy+delete — the read-back closes
-        most of the window; the residual double-ingest exposure is the
-        one the reference's ``replicas: 3`` Deployment ran with NO
-        coordination at all, both store sinks are idempotent
-        overwrites, and a loser dying mid-run is absorbed by the
-        vanished-folder transient path. Any FS error reads as
-        claim-lost (transient-scan class, re-polled), never as
-        ownership."""
+        - the folder must still exist (r8 review): Hadoop create()
+          makes parent dirs implicitly, so claiming a folder a peer just
+          FINALIZED would resurrect it as an empty shell whose verify
+          then fails — a benign race turned into an X7 halt plus a
+          stray pending/ entry;
+        - a claim is never released: finalize deletes the folder, claim
+          included, and on X7 the shared ``<output>/_HALT`` stops every
+          replica anyway — a released claim would only invite a peer to
+          re-run the same deterministic failure.
+
+        Any FS error reads as claim-lost (transient-scan class,
+        re-polled), never as ownership."""
         try:
-            fs, dst = ingest_sources.hadoop_fs(self.spark, self._claim_path(folder))
-            # the folder must still exist (r8 review): Hadoop create()
-            # makes parent dirs implicitly, so claiming a folder a peer
-            # just FINALIZED would resurrect it as an empty shell whose
-            # verify then fails — a benign race turned into an X7 halt
-            # plus a stray pending/ entry. Vanished folder = claim lost.
-            if not fs.exists(dst.getParent()):
+            if not ingest_sources.path_exists(self.spark, self._folder_path(folder)):
                 return False
-            if fs.exists(dst):
-                if self._owns_claim(folder):
-                    # renew by overwriting IN PLACE: one atomic replace
-                    # (a plain PUT on S3), refreshing mtime on every FS
-                    # — setTimes is a silent no-op on s3a, and a
-                    # delete+recreate renewal opens a window a peer can
-                    # race into (r8 review, twice)
-                    out = fs.create(dst, True)
-                    try:
-                        out.write(bytearray(self.replica_id.encode("utf-8")))
-                    finally:
-                        out.close()
-                    return True
-                if not self._claim_is_stale(folder):
-                    return False
-                fs.delete(dst, False)  # break the orphan; readback arbitrates
-            tmp_key = (
-                f"{self.landing_dir}/{PENDING_PREFIX}/{folder}/"
-                f"_claim.{self.replica_id}.tmp"
-            )
-            _, tmp = ingest_sources.hadoop_fs(self.spark, tmp_key)
-            out = fs.create(tmp, True)
-            try:
-                out.write(bytearray(self.replica_id.encode("utf-8")))
-            finally:
-                out.close()
-            if not bool(fs.rename(tmp, dst)):
-                fs.delete(tmp, False)  # lost outright: clean up our tmp
-                return False
-            if not self._owns_claim(folder):  # content arbitrates racers
-                return False
-            # settle re-read (ADVICE r08): give an in-flight replacing
-            # rename from a racer time to land before declaring victory
-            if self.claim_settle_s > 0:
-                time.sleep(self.claim_settle_s)
-                return self._owns_claim(folder)
-            return True
         except Exception as e:
             print(f"orchestrator: claim on {folder} failed ({e}); treating as lost")
             return False
-
-    def _owns_claim(self, folder: str) -> bool:
-        try:
-            return (
-                ingest_sources.read_small_text(self.spark, self._claim_path(folder))
-                == self.replica_id
-            )
-        except Exception:
-            return False  # vanished/unreadable mid-probe: not ours
+        return self._claim_lease(folder).try_acquire()
 
     def _actively_claimed(self, keys: list[str]) -> set[str]:
         """Folders in ``keys`` carrying a LIVE (non-stale) claim from
@@ -454,7 +396,7 @@ class Orchestrator:
         return {
             f
             for f in claimed
-            if not self._claim_is_stale(f) and not self._owns_claim(f)
+            if not (lease := self._claim_lease(f)).is_stale() and not lease.owns()
         }
 
     # ---- selection (P1/P2/F1/F3/O1 as DataFrame ops) ----
@@ -507,7 +449,7 @@ class Orchestrator:
         """EP2 gate: the folder's manifest.json exists."""
         return ingest_sources.path_exists(
             self.spark,
-            f"{self.landing_dir}/{PENDING_PREFIX}/{params.ingest_name}/manifest.json",
+            f"{self._folder_path(params.ingest_name)}/manifest.json",
         )
 
     def ingest_files(self, params: IngestParams) -> list[str]:
@@ -532,7 +474,7 @@ class Orchestrator:
         Runs on executors via the binaryFile source — the driver never
         touches payload bytes.
         """
-        folder = f"{self.landing_dir}/{PENDING_PREFIX}/{params.ingest_name}"
+        folder = self._folder_path(params.ingest_name)
         manifest = ingest_sources.read_manifest(self.spark, folder)
         # glob "*.gz" covers BOTH payload families (csv.gz and jsonl.gz,
         # r6); control files (markers, manifest, schema sidecars) stay
@@ -577,7 +519,7 @@ class Orchestrator:
           halt class as a failed pipeline, because silently inferring a
           schema is exactly what the reader's contract forbids.
         """
-        folder = f"{self.landing_dir}/{PENDING_PREFIX}/{params.ingest_name}"
+        folder = self._folder_path(params.ingest_name)
         # the VERIFIED listing, not a fresh one (r7 review): re-listing
         # here let files uploaded AFTER manifest verification flow into
         # the stores sha-unchecked, and the graph and index pipelines —
@@ -652,7 +594,7 @@ class Orchestrator:
         a prior ingest failed un-finalized must not pair the stale
         folder's keys with this params' schema sidecars, so a name
         mismatch falls back to a fresh listing."""
-        folder = f"{self.landing_dir}/{PENDING_PREFIX}/{params.ingest_name}"
+        folder = self._folder_path(params.ingest_name)
         if self.timer.ingest_files_name == params.ingest_name:
             files = self.timer.ingest_files
         else:
@@ -842,7 +784,7 @@ class Orchestrator:
         the reference writes metrics only after source cleanup succeeds
         (src/ingestor.js:312-342)."""
         if not ingest_sources.delete_path(  # K2 delete-after-commit
-            self.spark, f"{self.landing_dir}/{PENDING_PREFIX}/{params.ingest_name}"
+            self.spark, self._folder_path(params.ingest_name)
         ):
             raise RuntimeError(f"failed to delete ingest folder {params.ingest_name}")
         t = self.timer
@@ -1165,17 +1107,10 @@ class Orchestrator:
         raises ValueError naming the drifted keys; pass
         ``allow_param_change=True`` to re-plan deliberately."""
         from poormans_kube_etl_spark.operators.index_artifact import read_index
-        from poormans_kube_etl_spark.streaming.lease import FsLease
 
         cfg = self.dedup_index
         root = f"{self.output_dir}/dedup_index"
-        lease = FsLease(
-            self.spark,
-            f"{root}/_MAINT_LEASE",
-            self.replica_id,
-            ttl_s=self.claim_ttl_s,
-            settle_s=self.claim_settle_s,
-        )
+        lease = self._maint_lease()
         lease.acquire(timeout_s=cfg.lease_timeout_s)
         compacted: dict[str, bool] = {}
         try:
@@ -1279,8 +1214,8 @@ class Orchestrator:
         Concurrency (r12, VERDICT r11 #1): replicas finalizing
         DIFFERENT ingests share the family tables, so everything from
         the first family read to the last manifest refresh runs under a
-        per-index-root ``FsLease`` (streaming/lease.py — the
-        claim-marker mechanics reused as a maintenance mutex), renewed
+        per-index-root ``FsLease`` (streaming/lease.py — the same
+        primitive as the folder claim), renewed
         after every family so ttl_s bounds ONE family's merge, not the
         whole pass. Lease timeout is the X7 halt class: the ingest is
         already committed, and the markers below let a relaunch resume.
@@ -1298,7 +1233,6 @@ class Orchestrator:
         covered ingest's marker, so a peer waiting on the lease never
         re-appends what the build already covered."""
         from poormans_kube_etl_spark.operators import index_maintenance
-        from poormans_kube_etl_spark.streaming.lease import FsLease
 
         cfg = self.dedup_index
         merged = self._merged_families(params.ingest_name)
@@ -1327,13 +1261,7 @@ class Orchestrator:
         if all(f.name in merged for f in families):
             return
         root = f"{self.output_dir}/dedup_index"
-        lease = FsLease(
-            self.spark,
-            f"{root}/_MAINT_LEASE",
-            self.replica_id,
-            ttl_s=self.claim_ttl_s,
-            settle_s=self.claim_settle_s,
-        )
+        lease = self._maint_lease()
         lease.acquire(timeout_s=cfg.lease_timeout_s)
         try:
             # settled sets + freshness stamps computed UNDER the lease,
@@ -1409,12 +1337,7 @@ class Orchestrator:
             )
 
     def _write_dedup_index_marker(self, marker: str) -> None:
-        fs, jpath = ingest_sources.hadoop_fs(self.spark, marker)
-        out = fs.create(jpath, True)
-        try:
-            out.write(bytearray(b"merged"))
-        finally:
-            out.close()
+        ingest_sources.write_small_text(self.spark, marker, "merged")
 
     def _folder_vanished(self, params: IngestParams) -> bool:
         """True when the ingest folder no longer exists — the signature
@@ -1424,8 +1347,7 @@ class Orchestrator:
         failure behind an unreachable store)."""
         try:
             return not ingest_sources.path_exists(
-                self.spark,
-                f"{self.landing_dir}/{PENDING_PREFIX}/{params.ingest_name}",
+                self.spark, self._folder_path(params.ingest_name)
             )
         except Exception:
             return False
@@ -1450,25 +1372,29 @@ class Orchestrator:
     def _halt_marker_path(self) -> str:
         return f"{self.output_dir}/_HALT"
 
-    def _write_halt_marker(self, reason: str) -> None:
-        """Durably record the X7 error state (r7 review): under a K8s
-        Deployment the pod restarts with ``restartPolicy: Always`` and
-        a fresh Orchestrator has forgotten ``self.errored`` — without a
-        durable marker, a DETERMINISTIC pipeline failure becomes an
-        infinite crash-loop that re-runs verification and both store
-        pipelines against the same oldest folder forever. The marker
+    def _halt(self, params: IngestParams, e: Exception) -> None:
+        """Enter the X7 error state for ``params``' failure ``e``, in
+        process and durably in ``<output>/_HALT``. The claim is
+        deliberately NOT released (see ``claim_folder``).
+
+        Durable (r7 review): under a K8s Deployment the pod restarts
+        with ``restartPolicy: Always`` and a fresh Orchestrator has
+        forgotten ``self.errored`` — without a durable marker, a
+        DETERMINISTIC pipeline failure becomes an infinite crash-loop
+        that re-runs verification and both store pipelines against the
+        same oldest folder forever. The marker
         turns that into the reference's halt-for-intervention contract
         (src/ingestor.js:289-292): restarts see the marker, refuse to
         process, and exit fast; the operator fixes the data and removes
-        ``<output>/_HALT`` to resume."""
+        ``<output>/_HALT`` to resume. Stream mode gets the same
+        contract: the failed micro-batch stays uncommitted, so a
+        checkpoint restart would replay it the same way."""
+        self.errored = str(e)
         try:
-            fs, path = ingest_sources.hadoop_fs(self.spark, self._halt_marker_path())
-            out = fs.create(path, True)
-            try:
-                out.write(bytearray(reason.encode("utf-8")))
-            finally:
-                out.close()
-        except Exception as e:  # the halt still holds in-process
+            ingest_sources.write_small_text(
+                self.spark, self._halt_marker_path(), f"{params.ingest_name}: {e}"
+            )
+        except Exception as write_err:  # the halt still holds in-process
             # best-effort by necessity: when the OUTPUT store itself is
             # the failure, the marker write fails too. The restart-side
             # check fails CLOSED (skip the cycle when the marker cannot
@@ -1476,7 +1402,7 @@ class Orchestrator:
             # processing just because the marker is unreadable; the
             # residual gap is a transient write failure followed by
             # full recovery before the restart.
-            print(f"orchestrator: could not persist halt marker: {e}")
+            print(f"orchestrator: could not persist halt marker: {write_err}")
 
     def _halted_by_marker(self) -> bool:
         """True when the durable halt marker exists. Raises when the
@@ -1504,8 +1430,7 @@ class Orchestrator:
         The terminal X7 halt is reserved for pipeline/verification
         failures (src/ingestor.js:289-292 enters the error state from
         job failure, never from a scan error) — and is durable across
-        process restarts via ``<output>/_HALT`` (see
-        ``_write_halt_marker``)."""
+        process restarts via ``<output>/_HALT`` (see ``_halt``)."""
         if self.errored:
             return None
         try:
@@ -1547,56 +1472,59 @@ class Orchestrator:
         # Claim BEFORE the expensive verify/run stages (r8): losing the
         # race to a peer replica is a normal outcome — re-poll; the
         # peer's claim makes the folder invisible to the next discover.
-        # On X7 failure below, the claim is deliberately NOT released:
-        # the shared <output>/_HALT stops every replica anyway, and a
-        # released claim would only invite a peer to re-run the same
-        # deterministic failure before it notices the halt.
         if not self.claim_folder(params.ingest_name):
             return None
+        return params if self._ingest_claimed(params, files) == "done" else None
+
+    def _ingest_claimed(self, params: IngestParams, files: list[str]) -> str:
+        """The lifecycle after the first claim, shared by poll mode
+        (``run_once``) and stream mode (``_sweep_folders``): verify →
+        renew the claim → run the store pipelines → finalize, over the
+        verified listing ``files``. Returns ``"done"`` (finalized),
+        ``"lost"`` (a peer broke our claim during the verify) or
+        ``"vanished"`` (a peer finalized the folder mid-run). A verify,
+        pipeline or finalize failure is X7: ``_halt`` and re-raise."""
+        self.timer.ingest_files = files
+        self.timer.ingest_files_name = params.ingest_name
         try:
-            self.timer.ingest_files = files
-            self.timer.ingest_files_name = params.ingest_name
             self._verify_or_raise(params)
-            # renew the lease after the verify (r8 review): sha-hashing
+            # renew the claim after the verify (r8 review): sha-hashing
             # a large folder can outlast claim_ttl_s, and an expired
-            # claim invites a peer to double-ingest mid-run. Renewal
-            # refreshes the marker mtime; losing it here (a peer broke
-            # an expired claim during OUR slow verify) aborts the cycle
-            # BEFORE the store pipelines run, not after.
+            # claim invites a peer to double-ingest mid-run. Losing it
+            # here (a peer broke an expired claim during OUR slow
+            # verify) aborts the cycle BEFORE the store pipelines run.
             if not self.claim_folder(params.ingest_name):
                 print(
                     f"orchestrator: lost claim on {params.ingest_name} "
                     "during verify (lease expired?); yielding to peer"
                 )
                 self.timer.reset()
-                return None
+                return "lost"
             self.run_ingest(params)
         except Exception as e:
             if self._folder_vanished(params):
                 # a peer replica won a claim race this cycle (possible
                 # on stores without atomic rename) and already
                 # finalized the folder — a lost cycle, not a pipeline
-                # failure: re-poll instead of halting the fleet. Only
-                # the PRE-finalize stages get this escape: finalize
-                # deletes the folder itself, so a vanished check there
-                # would demote OUR OWN post-delete failures (the
-                # metrics write) to "a peer did it" and lose the row.
+                # failure: never halt the fleet for it. Only the
+                # PRE-finalize stages get this escape: finalize deletes
+                # the folder itself, so a vanished check there would
+                # demote OUR OWN post-delete failures (the metrics
+                # write) to "a peer did it" and lose the row.
                 print(
                     f"orchestrator: {params.ingest_name} vanished "
-                    f"mid-cycle ({e}); a peer finalized it — re-polling"
+                    f"mid-cycle ({e}); a peer finalized it"
                 )
                 self.timer.reset()
-                return None
-            self.errored = str(e)  # X7: halt, require intervention
-            self._write_halt_marker(f"{params.ingest_name}: {e}")
+                return "vanished"
+            self._halt(params, e)
             raise
         try:
             self.finalize(params)
-            return params
         except Exception as e:  # X7, no vanished escape (see above)
-            self.errored = str(e)
-            self._write_halt_marker(f"{params.ingest_name}: {e}")
+            self._halt(params, e)
             raise
+        return "done"
 
     def run_forever(self) -> None:
         """X1 polling loop (the reference's 60 s setTimeout tail-recursion).
@@ -1613,19 +1541,26 @@ class Orchestrator:
     def _deferred_dir(self) -> str:
         return f"{self.output_dir}/_deferred"
 
-    def _defer_folder(self, folder: str) -> None:
-        """Durably record a manifest-arrived-but-marker-missing folder:
-        the file source never re-emits a committed manifest, so without
+    def _defer_folder(self, folder: str, deferred: set[str]) -> None:
+        """Durably record a folder the sweep could not ingest yet
+        (manifest arrived but marker missing, or claimed by a peer): the
+        file source never re-emits a committed manifest, so without
         this record the folder would be dropped FOREVER once its batch
         commits. One empty dir per folder — driver metadata, any
         Hadoop FS."""
-        fs, path = ingest_sources.hadoop_fs(
-            self.spark, f"{self._deferred_dir()}/{folder}"
-        )
-        fs.mkdirs(path)
+        if folder not in deferred:
+            deferred.add(folder)
+            fs, path = ingest_sources.hadoop_fs(
+                self.spark, f"{self._deferred_dir()}/{folder}"
+            )
+            fs.mkdirs(path)
 
-    def _undefer_folder(self, folder: str) -> None:
-        ingest_sources.delete_path(self.spark, f"{self._deferred_dir()}/{folder}")
+    def _undefer_folder(self, folder: str, deferred: set[str]) -> None:
+        if folder in deferred:
+            deferred.discard(folder)
+            ingest_sources.delete_path(
+                self.spark, f"{self._deferred_dir()}/{folder}"
+            )
 
     def _sweep_folders(self, folders: set[str], deferred: set[str]) -> None:
         """Run the ready-folder lifecycle over ``folders`` oldest-first
@@ -1638,8 +1573,7 @@ class Orchestrator:
             if not keys and folder in deferred:
                 # deferred folder vanished (operator cleanup) — drop
                 # the bookmark
-                deferred.discard(folder)
-                self._undefer_folder(folder)
+                self._undefer_folder(folder, deferred)
                 continue
             marker = next(
                 (k.split("/")[2] for k in keys if k.split("/")[2:3] and k.split("/")[2] in MARKER_FILES),
@@ -1648,68 +1582,27 @@ class Orchestrator:
             if marker is None:
                 # F3: no marker yet -> not ready. Bookmark durably and
                 # retry on every later batch / stream restart.
-                if folder not in deferred:
-                    deferred.add(folder)
-                    self._defer_folder(folder)
+                self._defer_folder(folder, deferred)
                 continue
             params = IngestParams(folder, marker.replace(".txt", ""))
             # r8: same claim lease as poll mode — a poll-mode replica
             # and this stream (or a second stream on its own checkpoint)
-            # must not double-ingest. Claim-lost behaves like not-ready:
-            # bookmark durably, because the file source never re-emits
-            # this manifest — if the claimer dies, a later sweep finds
-            # the bookmark and the claim expired.
-            if not self.claim_folder(folder):
-                if folder not in deferred:
-                    deferred.add(folder)
-                    self._defer_folder(folder)
-                continue
-            self.timer.ingest_files = self.ingest_files(params)
-            self.timer.ingest_files_name = params.ingest_name
-            try:
-                self._verify_or_raise(params)
-                # lease renewal after the slow verify, same as run_once.
-                # Renewal-lost needs the SAME durable bookmark as the
-                # initial claim-lost path (ADVICE r08): the file source
-                # never re-emits this manifest, so if the thief that
-                # stole the claim mid-verify then crashes, only the
-                # bookmark lets a later sweep recover the folder.
-                if not self.claim_folder(folder):
-                    if folder not in deferred:
-                        deferred.add(folder)
-                        self._defer_folder(folder)
-                    self.timer.reset()
-                    continue
-                self.run_ingest(params)
-            except Exception as e:
-                if self._folder_vanished(params):
-                    # a peer finalized this folder mid-sweep: a lost
-                    # cycle, not a pipeline failure (see run_once —
-                    # and like there, only pre-finalize stages get
-                    # this escape)
-                    print(
-                        f"orchestrator: {folder} vanished mid-sweep "
-                        f"({e}); a peer finalized it — skipping"
-                    )
-                    self.timer.reset()
-                    continue
-                # X7 in stream mode: the failed micro-batch is UNcommitted,
-                # so a checkpoint restart would replay it — a deterministic
-                # pipeline failure crash-loops re-running the pipelines
-                # exactly like the poll path's Deployment restart. Same
-                # durable marker, same intervention contract.
-                self.errored = str(e)
-                self._write_halt_marker(f"{params.ingest_name}: {e}")
-                raise
-            try:
-                self.finalize(params)
-            except Exception as e:  # X7, no vanished escape
-                self.errored = str(e)
-                self._write_halt_marker(f"{params.ingest_name}: {e}")
-                raise
-            if folder in deferred:
-                deferred.discard(folder)
-                self._undefer_folder(folder)
+            # must not double-ingest. Claim-lost, at the first claim or
+            # at the post-verify renewal (ADVICE r08), behaves like
+            # not-ready: bookmark durably, because the file source never
+            # re-emits this manifest — if the claimer dies, a later
+            # sweep finds the bookmark and the claim expired.
+            outcome = (
+                self._ingest_claimed(params, self.ingest_files(params))
+                if self.claim_folder(folder)
+                else "lost"
+            )
+            if outcome == "lost":
+                self._defer_folder(folder, deferred)
+            elif outcome == "done":
+                self._undefer_folder(folder, deferred)
+            # "vanished": a peer finalized it; the next sweep drops any
+            # bookmark (empty listing above)
 
     def _load_deferred(self) -> set[str]:
         fs, path = ingest_sources.hadoop_fs(self.spark, self._deferred_dir())

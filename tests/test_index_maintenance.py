@@ -383,7 +383,7 @@ def test_relaunch_attaches_instead_of_rebuilding(spark, orch, monkeypatch):
     """The r11 fast path: with the persisted manifests intact, a
     relaunch re-ATTACHES the catalog entries (O(metadata)) and the next
     ingest merges as a delta — no corpus rebuild. Forbidding the
-    writers proves it."""
+    full-corpus writer for every append family proves it."""
     make_doc_folder(orch.landing_dir, "1538055240", DOCS_A)
     assert orch.run_once() is not None
     make_doc_folder(orch.landing_dir, "1538055999", DOCS_B)
@@ -399,15 +399,19 @@ def test_relaunch_attaches_instead_of_rebuilding(spark, orch, monkeypatch):
     ):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
-    import poormans_kube_etl_spark.operators.minhash_index as mhi
-    import poormans_kube_etl_spark.operators.substring as sub
+    import poormans_kube_etl_spark.operators.index_artifact as index_artifact
 
-    def forbidden(*a, **k):
-        raise AssertionError("corpus rebuild ran despite attachable manifests")
+    real_write = index_artifact.write_index
 
-    monkeypatch.setattr(mhi, "write_corpus_minhash_index", forbidden)
-    monkeypatch.setattr(sub, "write_corpus_gram_index", forbidden)
-    # (bm25 rebuilds every commit by policy; exact/gram/minhash attach)
+    def forbidden_for_append(spec, *a, **k):
+        if spec.policy == "append":
+            raise AssertionError(
+                f"{spec.name} corpus rebuild ran despite attachable manifests"
+            )
+        return real_write(spec, *a, **k)
+
+    # bm25 rebuilds every commit by policy; exact/gram/minhash attach
+    monkeypatch.setattr(index_artifact, "write_index", forbidden_for_append)
 
     docs_c = [(301, "attach era document about manifest metadata")]
     make_doc_folder(orch.landing_dir, "1538056999", docs_c)

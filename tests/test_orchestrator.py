@@ -914,6 +914,11 @@ def test_stale_claim_expires_and_is_broken(orch):
     # and claim_folder succeeds by breaking the stale marker
     assert other.discover().ingest_name == "1538055240"
     assert other.claim_folder("1538055240") is True
+    # the stalled holder's renewal LOSES: it must not stamp its id back
+    # over the live claim of the replica that broke its stale one
+    assert orch.claim_folder("1538055240") is False
+    claim = os.path.join(orch.landing_dir, "pending", "1538055240", "_CLAIMED")
+    assert open(claim).read() == other.replica_id
 
 
 def test_concurrent_replicas_process_disjoint_folders(orch):
@@ -1004,13 +1009,27 @@ def test_claim_on_vanished_folder_does_not_resurrect_it(orch):
     )
 
 
-def test_folder_vanishing_mid_cycle_is_transient_not_halt(orch, monkeypatch):
+def _drain(orch, mode: str, ckpt: str) -> IngestParams | None:
+    """One lifecycle pass: a ``run_once`` poll cycle (its result), or an
+    availableNow ``run_stream`` over ``ckpt`` run to completion (None)."""
+    if mode == "run_once":
+        return orch.run_once()
+    orch.run_stream(ckpt, available_now=True).awaitTermination(180)
+    return None
+
+
+@pytest.mark.parametrize("mode", ["run_once", "run_stream"])
+def test_folder_vanishing_mid_cycle_is_transient_not_halt(
+    orch, monkeypatch, tmp_path, mode
+):
     """r8 review: on stores without atomic rename two replicas can both
     believe they own a folder; the loser's pipeline then dies mid-read
     when the winner finalizes (deletes) it. That is a lost cycle, not a
-    pipeline failure — re-poll, never the X7 halt."""
+    pipeline failure — re-poll (or skip, in stream mode), never the X7
+    halt. Both modes share one lifecycle, so both take the escape."""
     import shutil
 
+    ckpt = str(tmp_path / "ckpt")
     make_ingest_folder(orch.landing_dir, "1538055240", "bulk.txt")
     real = type(orch).run_ingest
 
@@ -1019,10 +1038,61 @@ def test_folder_vanishing_mid_cycle_is_transient_not_halt(orch, monkeypatch):
         raise RuntimeError("FileNotFoundException: payload gone mid-scan")
 
     monkeypatch.setattr(type(orch), "run_ingest", peer_finalizes_then_we_die)
-    assert orch.run_once() is None  # transient, swallowed
+    assert _drain(orch, mode, ckpt) is None  # transient, swallowed
     assert orch.errored is None
     assert not os.path.exists(os.path.join(orch.output_dir, "_HALT"))
+    assert not os.path.exists(os.path.join(orch.output_dir, "_deferred", "1538055240"))
     # and the loop is healthy: restore the pipeline, re-land a folder
     monkeypatch.setattr(type(orch), "run_ingest", real)
     make_ingest_folder(orch.landing_dir, "1538055300", "bulk.txt")
-    assert orch.run_once() == IngestParams("1538055300", "bulk")
+    if mode == "run_once":
+        assert orch.run_once() == IngestParams("1538055300", "bulk")
+    else:
+        _drain(orch, mode, ckpt)
+    assert [r.ingest for r in orch.metrics().collect()] == ["1538055300"]
+
+
+@pytest.mark.parametrize("mode", ["run_once", "run_stream"])
+def test_claim_lost_at_renewal_yields_without_halt(
+    orch, monkeypatch, tmp_path, mode
+):
+    """A peer that breaks our claim during the slow verify wins the
+    folder: the post-verify renewal reads the peer's id and the cycle
+    yields BEFORE the store pipelines — no _HALT, no metrics row, the
+    folder untouched. Stream mode bookmarks the folder durably (the
+    file source never re-emits its manifest), so a later sweep ingests
+    it once the peer's claim is gone (here: the peer crashed and its
+    claim aged past claim_ttl_s)."""
+    ckpt = str(tmp_path / "ckpt")
+    make_ingest_folder(orch.landing_dir, "1538055240", "bulk.txt")
+    folder = os.path.join(orch.landing_dir, "pending", "1538055240")
+    claim = os.path.join(folder, "_CLAIMED")
+    real_verify = type(orch)._verify_or_raise
+
+    def verify_then_peer_steals(self, params):
+        real_verify(self, params)
+        with open(claim, "w") as f:
+            f.write("peer-replica")
+
+    monkeypatch.setattr(type(orch), "_verify_or_raise", verify_then_peer_steals)
+    assert _drain(orch, mode, ckpt) is None
+    assert orch.errored is None
+    assert not os.path.exists(os.path.join(orch.output_dir, "_HALT"))
+    assert not os.path.exists(os.path.join(orch.output_dir, "ingest_metrics"))
+    assert open(claim).read() == "peer-replica"  # never stamped back over
+    assert os.path.exists(os.path.join(folder, "person", "person_sample.csv.gz"))
+    deferred = os.path.join(orch.output_dir, "_deferred", "1538055240")
+    assert os.path.exists(deferred) == (mode == "run_stream")
+
+    monkeypatch.setattr(type(orch), "_verify_or_raise", real_verify)
+    assert _drain(orch, mode, ckpt) is None  # the peer's claim is still live
+    assert not os.path.exists(os.path.join(orch.output_dir, "ingest_metrics"))
+    aged = os.path.getmtime(claim) - 2 * orch.claim_ttl_s
+    os.utime(claim, (aged, aged))  # the peer crashed: its claim expires
+    if mode == "run_once":
+        assert orch.run_once() == IngestParams("1538055240", "bulk")
+    else:
+        _drain(orch, mode, ckpt)
+    assert [r.ingest for r in orch.metrics().collect()] == ["1538055240"]
+    assert not os.path.exists(folder)
+    assert not os.path.exists(deferred)
