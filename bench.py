@@ -224,20 +224,20 @@ def _attach_open_stage(spark, sf_dir: str) -> dict:
     the bench's artifact flock like everything else."""
     from poormans_kube_etl_spark.operators.index_artifact import (
         attach_artifact,
-        sf_dir_tag,
+        face_artifact,
     )
     from poormans_kube_etl_spark.operators.minhash_index import (
+        MINHASH_FAMILY,
         read_corpus_minhash_index,
     )
+    from poormans_kube_etl_spark.queries.dedup import MINHASH_INDEX_STEM
 
-    tag = sf_dir_tag(sf_dir)
-    name = f"pke_mhidx_v1_{tag}"
-    path = f"/tmp/pke_mhidx_v1/{tag}"
+    name, path = face_artifact(MINHASH_INDEX_STEM, sf_dir)
     best, worst = float("inf"), 0.0
     attached = True
     for _ in range(3):
-        for t in (f"{name}_buckets", f"{name}_shingles"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        for t in MINHASH_FAMILY.tables:
+            spark.sql(f"DROP TABLE IF EXISTS {name}{t.suffix}")
         # ValueError is the attach/read contract's deliberate rejection
         # class (missing/old-format manifest, foreign properties). The
         # stage dropped the catalog tables above, so letting it escape

@@ -200,25 +200,19 @@ def main(argv: list[str] | None = None) -> int:
         # operator observability for the persisted index families: what
         # is on disk, which constants it was built with, how many merge
         # fragments it carries — all O(metadata), no table scan
-        import json as _json
-
         from poormans_kube_etl_spark.operators.index_artifact import (
             MANIFEST_NAME,
             _fs_for,
             attach_artifact,
+            read_artifact_manifest,
         )
 
-        fs, _root = _fs_for(spark, args.path)
-        jvm = spark.sparkContext._jvm
-        mpath = jvm.org.apache.hadoop.fs.Path(args.path, MANIFEST_NAME)
-        if not fs.exists(mpath):
+        manifest = read_artifact_manifest(spark, args.path)
+        if manifest is None:
             print(f"no {MANIFEST_NAME} under {args.path}", file=sys.stderr)
             return 1
-        stream = fs.open(mpath)
-        try:
-            manifest = _json.loads(bytes(stream.readAllBytes()).decode())
-        finally:
-            stream.close()
+        fs, _ = _fs_for(spark, args.path)
+        jvm = spark.sparkContext._jvm
         if args.attach:
             attach_artifact(spark, args.path)
         for t in manifest["tables"]:

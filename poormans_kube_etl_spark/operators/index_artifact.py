@@ -39,13 +39,19 @@ What the shared layer owns:
     on the probe path it is now an OPT-IN deep check
     (``PKE_INDEX_DEEP_VERIFY=1``) for out-of-band regeneration modes
     a listing cannot see (e.g. a byte-identical-layout rewrite).
-- **The get-or-build lifecycle** shared by all query faces: read the
-  artifact; on the loaders' DELIBERATE rejections (missing table,
+- **One open rule.** ``read_or_attach`` is the read → attach →
+  re-read step: on the loaders' DELIBERATE rejections (missing table,
   missing/foreign properties, version skew, half-written build — all
-  raised as ValueError) rebuild with ``mode=overwrite`` and read
-  again; on fingerprint mismatch, same. Unexpected read failures
-  (metastore hiccups, permission errors) propagate instead of
-  triggering a silent expensive rebuild (r10 ADVICE).
+  raised as ValueError) it re-attaches the artifact from its manifest
+  and reads again. The orchestrator's maintenance pass and
+  ``get_or_build`` both use it; ``get_or_build`` then rebuilds with
+  ``mode=overwrite`` when the artifact is still unreadable or its
+  fingerprint is stale. Unexpected read failures (metastore hiccups,
+  permission errors) propagate instead of triggering a silent
+  expensive rebuild (r10 ADVICE).
+- **One face-side open.** ``open_index(spec, corpus, …)`` is the
+  whole lifecycle of a query face: artifact naming
+  (``face_artifact``), source-listing freshness, attach-or-rebuild.
 - **Stable identity tags** for per-(session, SF) artifact names:
   basename + md5 of the full normalized path (basename alone let
   ``/a/sf1`` and ``/b/sf1`` — or ``sf0.1`` and ``sf0_1``, which
@@ -271,8 +277,7 @@ def deep_verify_enabled() -> bool:
 # by PKE_INDEX_DEEP_VERIFY=1). The writers that legitimately change a
 # corpus mid-session — the orchestrator's commit path, test fixtures —
 # either stamp their own version token (orchestrator, r12) or call
-# invalidate_source_fingerprints. PKE_SRC_FP_CACHE=0 disables the memo
-# entirely.
+# invalidate_source_fingerprints.
 # ---------------------------------------------------------------------------
 
 _SRC_FP_CACHE: dict[tuple[str, ...], str] = {}
@@ -290,8 +295,6 @@ def cached_source_files_fingerprint(spark: SparkSession, *paths: str) -> str:
     directories. Writers and anything that mutates the listed paths
     must use ``source_files_fingerprint`` directly (always fresh) or
     invalidate first."""
-    if os.environ.get("PKE_SRC_FP_CACHE", "") == "0":
-        return source_files_fingerprint(spark, *paths)
     key = _cache_key(tuple(paths))
     hit = _SRC_FP_CACHE.get(key)
     if hit is not None:
@@ -396,6 +399,20 @@ def write_artifact_manifest(
         raise OSError(f"manifest rename failed under {path}")
 
 
+def read_artifact_manifest(spark: SparkSession, path: str) -> dict | None:
+    """The manifest under artifact root ``path``, or None when there is
+    none. A torn manifest raises ValueError (JSONDecodeError)."""
+    import json
+
+    from poormans_kube_etl_spark.sources.ingest import read_small_text
+
+    fs, root = _fs_for(spark, path)
+    mpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME)
+    if not fs.exists(mpath):
+        return None
+    return json.loads(read_small_text(spark, mpath.toString()))
+
+
 def refresh_artifact_manifest(spark: SparkSession, table: str) -> None:
     """Re-snapshot a family's manifest after a merge restamped its
     properties. The artifact root is the parent of the table's
@@ -405,19 +422,16 @@ def refresh_artifact_manifest(spark: SparkSession, table: str) -> None:
     import json
     import posixpath
 
-    from poormans_kube_etl_spark.sources.ingest import (
-        read_small_text,
-        write_small_text,
-    )
+    from poormans_kube_etl_spark.sources.ingest import write_small_text
 
     info = _describe_table(spark, table)
     root = posixpath.dirname(info["location"].rstrip("/"))
+    manifest = read_artifact_manifest(spark, root)
+    if manifest is None:
+        return
     fs, _ = _fs_for(spark, root)
     jvm = spark.sparkContext._jvm
     mpath = jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME)
-    if not fs.exists(mpath):
-        return
-    manifest = json.loads(read_small_text(spark, mpath.toString()))
     manifest["tables"] = [
         info if t["name"] == table else t for t in manifest["tables"]
     ]
@@ -436,20 +450,9 @@ def attach_artifact(spark: SparkSession, path: str) -> bool:
     schema is rebuilt from (name, simpleString) pairs — a tampered
     manifest cannot smuggle SQL through DDL. Tables already in the
     catalog are left untouched (attach is idempotent)."""
-    import json
-
-    fs, _ = _fs_for(spark, path)
-    jvm = spark.sparkContext._jvm
-    mpath = jvm.org.apache.hadoop.fs.Path(path, MANIFEST_NAME)
-    if not fs.exists(mpath):
-        return False
-    stream = fs.open(mpath)
-    try:
-        manifest = json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
-    if manifest.get("format") != _MANIFEST_FORMAT:
-        return False  # unknown layout: let the caller rebuild
+    manifest = read_artifact_manifest(spark, path)
+    if manifest is None or manifest.get("format") != _MANIFEST_FORMAT:
+        return False  # no manifest, or an unknown layout: let the caller rebuild
     type_re = re.compile(r"^[a-z0-9_<>,(): ]+$")  # simpleString grammar;
     # no quotes/semicolons, so a tampered manifest cannot break out of
     # the column list
@@ -637,6 +640,74 @@ def sf_dir_tag(sf_dir: str) -> str:
     )
 
 
+def read_or_attach(read: Callable[[], Any], attach: Callable[[], bool]) -> Any:
+    """``read()``; on its ValueError, ``attach()`` and, if that attached,
+    ``read()`` again. When the artifact is still unreadable (attach
+    returned False or raised ValueError, or the re-read raised
+    ValueError) the FIRST read's error is re-raised. Any other
+    exception propagates: a transient fault must surface, not pass for
+    a missing artifact."""
+    try:
+        return read()
+    except ValueError as e:
+        read_err = e
+    try:
+        if attach():
+            return read()
+    except ValueError:
+        pass
+    raise read_err
+
+
+def face_artifact(stem: str, sf_dir: str) -> tuple[str, str]:
+    """A query face's artifact for a data directory: (catalog name,
+    external root path). External, because a managed table whose files
+    outlive the in-memory catalog makes the next process's saveAsTable
+    refuse with LOCATION_ALREADY_EXISTS; an external overwrite replaces
+    the location instead."""
+    tag = sf_dir_tag(sf_dir)
+    return f"{stem}_{tag}", f"/tmp/{stem}/{tag}"
+
+
+def open_index(
+    spec: IndexFamily,
+    corpus: DataFrame,
+    *,
+    sf_dir: str,
+    table: str,
+    stem: str,
+    params: dict[str, Any],
+    n_buckets: int,
+) -> Any:
+    """Open a query face's persisted index over ``corpus`` — read it,
+    re-attach it from its manifest, or build it (``params`` over
+    ``spec.defaults``) — and return the family's handle. Freshness is
+    the memoized source listing of ``table`` under ``sf_dir`` (a warm
+    open pays no FS listing); the count+max deep check is opt-in."""
+    from poormans_kube_etl_spark.sources.tables import table_path
+
+    spark = corpus.sparkSession
+    name, path = face_artifact(stem, sf_dir)
+    src_fp = cached_source_files_fingerprint(spark, table_path(sf_dir, table))
+    return get_or_build(
+        lambda: read_index(spec, spark, name),
+        lambda: write_index(
+            spec,
+            corpus,
+            name,
+            {**spec.defaults, **params},
+            n_buckets=n_buckets,
+            path=path,
+            mode="overwrite",
+            source_fingerprint=src_fp,
+        ),
+        live_fingerprint=src_fp,
+        fingerprint_key=SOURCE_FINGERPRINT_KEY,
+        deep_fingerprint=lambda: corpus_fingerprint(corpus, params["id_col"]),
+        attach=lambda: attach_artifact(spark, path),
+    )
+
+
 def get_or_build(
     read: Callable[[], Any],
     build: Callable[[], None],
@@ -646,7 +717,7 @@ def get_or_build(
     deep_fingerprint: Callable[[], str] | None = None,
     attach: Callable[[], bool] | None = None,
 ) -> Any:
-    """The artifact lifecycle every query face shares.
+    """The artifact lifecycle behind ``open_index``.
 
     ``read`` must raise ValueError on any incomplete/foreign/version-
     skewed artifact (the loaders above reject with exactly that);
@@ -679,21 +750,13 @@ def get_or_build(
     falls through to build; unexpected faults propagate.
     """
     try:
-        idx = read()
+        idx = read_or_attach(read, attach or (lambda: False))
     except ValueError as read_err:
-        idx = None
-        if attach is not None:
-            try:
-                if attach():
-                    idx = read()
-            except ValueError:
-                idx = None
-        if idx is None:
-            try:
-                build()
-            except Exception as build_err:
-                raise build_err from read_err
-            return read()
+        try:
+            build()
+        except Exception as build_err:
+            raise build_err from read_err
+        return read()
 
     def _stale(key: str, live: str) -> bool:
         return getattr(idx, "constants", {}).get(key) != live

@@ -35,7 +35,7 @@ from poormans_kube_etl_spark.operators.text import (
 from poormans_kube_etl_spark.queries import register
 from poormans_kube_etl_spark.queries._fragments import shingle5_cte
 from poormans_kube_etl_spark.session import apply_runtime_confs
-from poormans_kube_etl_spark.sources import load_table, spread_small_scan, table_path
+from poormans_kube_etl_spark.sources import load_table, spread_small_scan
 
 # Caps keep the O(pairs) oracle affordable at sf0.1; Spark side uses the
 # same caps so both engines see identical inputs. The uncapped scale
@@ -535,6 +535,11 @@ def dedup_minhash_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     ).orderBy("a", "b")
 
 
+# artifact stem of dedup_minhash_index_delta_pairs (bench.py's attach
+# stage times this artifact)
+MINHASH_INDEX_STEM = "pke_mhidx_v1"
+
+
 @register(
     "dedup_minhash_index_delta_pairs",
     oracle=f"""
@@ -550,57 +555,33 @@ def dedup_minhash_index_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     joins the artifact — the corpus is never re-shingled on the delta
     path (plan-gated by test_indexed_incremental_reuses_persisted_bands).
     Same oracle as dedup_minhash_incremental_pairs: the artifact path
-    is a pure optimization, so the pair set must be identical.
-
-    Lifecycle plumbing (tag identity, attach-or-rebuild, freshness
-    stamps) is the shared operators/index_artifact layer — every open
-    compares the O(metadata) source-file listing (r11; the count+max
-    deep check is opt-in via PKE_INDEX_DEEP_VERIFY), so regenerated
-    parquet at the same path rebuilds instead of silently probing
-    stale bands, a fresh session re-attaches the artifact from its
-    persisted manifest instead of rebuilding, and no corpus aggregate
-    runs on the probe path (plan-gated)."""
-    from poormans_kube_etl_spark.operators.index_artifact import (
-        SOURCE_FINGERPRINT_KEY,
-        attach_artifact,
-        corpus_fingerprint,
-        get_or_build,
-        sf_dir_tag,
-        cached_source_files_fingerprint,
-    )
+    is a pure optimization, so the pair set must be identical. Opening
+    the artifact is index_artifact.open_index."""
+    from poormans_kube_etl_spark.operators.index_artifact import open_index
     from poormans_kube_etl_spark.operators.minhash_index import (
+        MINHASH_FAMILY,
         minhash_incremental_near_duplicates_indexed,
-        read_corpus_minhash_index,
-        write_corpus_minhash_index,
     )
 
     apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     new = docs.where(F.col("doc_id") % 10 == 0)
     corpus = docs.where(F.col("doc_id") % 10 != 0)
-    tag = sf_dir_tag(sf_dir)
-    name = f"pke_mhidx_v1_{tag}"
-    # memoized per process (r12, VERDICT r11 #2): a warm face open
-    # pays ZERO FS listings — the first open of this path set stamped it
-    src_fp = cached_source_files_fingerprint(spark, table_path(sf_dir, "documents"))
-    idx = get_or_build(
-        lambda: read_corpus_minhash_index(spark, name),
-        lambda: write_corpus_minhash_index(
-            corpus,
-            name,
-            shingle_len=3,
-            num_hashes=32,
-            bands=8,
-            hash_family="md5",
-            n_buckets=8,
-            path=f"/tmp/pke_mhidx_v1/{tag}",
-            mode="overwrite",
-            source_fingerprint=src_fp,
-        ),
-        live_fingerprint=src_fp,
-        fingerprint_key=SOURCE_FINGERPRINT_KEY,
-        deep_fingerprint=lambda: corpus_fingerprint(corpus, "doc_id"),
-        attach=lambda: attach_artifact(spark, f"/tmp/pke_mhidx_v1/{tag}"),
+    idx = open_index(
+        MINHASH_FAMILY,
+        corpus,
+        sf_dir=sf_dir,
+        table="documents",
+        stem=MINHASH_INDEX_STEM,
+        params={
+            "id_col": "doc_id",
+            "text_col": "text",
+            "shingle_len": 3,
+            "num_hashes": 32,
+            "bands": 8,
+            "hash_family": "md5",
+        },
+        n_buckets=8,
     )
     return minhash_incremental_near_duplicates_indexed(new, idx, threshold=0.5).orderBy(
         "a", "b"
@@ -642,46 +623,25 @@ def dedup_embedding_index_delta_pairs(spark: SparkSession, sf_dir: str) -> DataF
     bucket-distributed joins. The DuckDB twin reconstructs the delta
     bit-exactly and emits each planted pair with its exact left-fold
     cosine — the same certificate shape as dedup_embedding_lsh_pairs,
-    with (a=new id, b=corpus id) orientation. Lifecycle plumbing
-    (tag identity, attach-or-rebuild, O(metadata) source-listing
-    freshness — r11) is the shared operators/index_artifact layer."""
-    from poormans_kube_etl_spark.operators.index_artifact import (
-        SOURCE_FINGERPRINT_KEY,
-        attach_artifact,
-        corpus_fingerprint,
-        get_or_build,
-        sf_dir_tag,
-        cached_source_files_fingerprint,
-    )
+    with (a=new id, b=corpus id) orientation. Opening the artifact is
+    index_artifact.open_index."""
+    from poormans_kube_etl_spark.operators.index_artifact import open_index
     from poormans_kube_etl_spark.operators.similarity_index import (
+        SRP_FAMILY,
         embedding_incremental_near_pairs_indexed,
-        read_corpus_srp_index,
-        write_corpus_srp_index,
     )
 
     apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     delta = _planted_twins(emb).select("vec_id", "embedding")
-    tag = sf_dir_tag(sf_dir)
-    name = f"pke_srpidx_v1_{tag}"
-    # memoized per process (r12, VERDICT r11 #2): a warm face open
-    # pays ZERO FS listings — the first open of this path set stamped it
-    src_fp = cached_source_files_fingerprint(spark, table_path(sf_dir, "embeddings"))
-    idx = get_or_build(
-        lambda: read_corpus_srp_index(spark, name),
-        lambda: write_corpus_srp_index(
-            emb,
-            name,
-            threshold=0.9,
-            n_buckets=8,
-            path=f"/tmp/pke_srpidx_v1/{tag}",
-            mode="overwrite",
-            source_fingerprint=src_fp,
-        ),
-        live_fingerprint=src_fp,
-        fingerprint_key=SOURCE_FINGERPRINT_KEY,
-        deep_fingerprint=lambda: corpus_fingerprint(emb, "vec_id"),
-        attach=lambda: attach_artifact(spark, f"/tmp/pke_srpidx_v1/{tag}"),
+    idx = open_index(
+        SRP_FAMILY,
+        emb,
+        sf_dir=sf_dir,
+        table="embeddings",
+        stem="pke_srpidx_v1",
+        params={"id_col": "vec_id", "vec_col": "embedding", "planned_threshold": 0.9},
+        n_buckets=8,
     )
     return embedding_incremental_near_pairs_indexed(delta, idx).orderBy("a", "b")
 
@@ -1290,10 +1250,7 @@ def dedup_exact_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution — the corpus text is never re-read (plan-gated by
     test_exact_indexed_probe_never_scans_corpus_text).
 
-    Lifecycle plumbing (tag identity, attach-or-rebuild, O(metadata)
-    source-listing freshness — r11) is the shared
-    operators/index_artifact layer — the unification's claim that a
-    new family is a page, demonstrated.
+    Opening the artifact is index_artifact.open_index.
 
     The delta carries BOTH planted matches and non-matching controls:
     the synthetic corpus has zero natural exact duplicates, so every
@@ -1302,18 +1259,10 @@ def dedup_exact_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted-twins convention) under doc_id+1e6, while the %10==0 docs
     prove non-duplicates pass the gate silently."""
     from poormans_kube_etl_spark.operators.exact_index import (
+        EXACT_FAMILY,
         exact_duplicates_indexed,
-        read_corpus_fp_index,
-        write_corpus_fp_index,
     )
-    from poormans_kube_etl_spark.operators.index_artifact import (
-        SOURCE_FINGERPRINT_KEY,
-        attach_artifact,
-        corpus_fingerprint,
-        get_or_build,
-        sf_dir_tag,
-        cached_source_files_fingerprint,
-    )
+    from poormans_kube_etl_spark.operators.index_artifact import open_index
 
     apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
@@ -1324,24 +1273,13 @@ def dedup_exact_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("  "), F.upper("text")).alias("text"),
         )
     )
-    tag = sf_dir_tag(sf_dir)
-    name = f"pke_fpidx_v1_{tag}"
-    # memoized per process (r12, VERDICT r11 #2): a warm face open
-    # pays ZERO FS listings — the first open of this path set stamped it
-    src_fp = cached_source_files_fingerprint(spark, table_path(sf_dir, "documents"))
-    idx = get_or_build(
-        lambda: read_corpus_fp_index(spark, name),
-        lambda: write_corpus_fp_index(
-            corpus,
-            name,
-            n_buckets=8,
-            path=f"/tmp/pke_fpidx_v1/{tag}",
-            mode="overwrite",
-            source_fingerprint=src_fp,
-        ),
-        live_fingerprint=src_fp,
-        fingerprint_key=SOURCE_FINGERPRINT_KEY,
-        deep_fingerprint=lambda: corpus_fingerprint(corpus, "doc_id"),
-        attach=lambda: attach_artifact(spark, f"/tmp/pke_fpidx_v1/{tag}"),
+    idx = open_index(
+        EXACT_FAMILY,
+        corpus,
+        sf_dir=sf_dir,
+        table="documents",
+        stem="pke_fpidx_v1",
+        params={"id_col": "doc_id", "text_col": "text"},
+        n_buckets=8,
     )
     return exact_duplicates_indexed(new, idx).orderBy("doc")

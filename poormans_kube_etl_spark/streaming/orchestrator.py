@@ -1164,36 +1164,6 @@ class Orchestrator:
         finally:
             lease.release()
 
-    def _attachable(self, spec, root: str) -> bool:
-        """Whether ``spec``'s artifact can take an append: readable from
-        the catalog, or — after an X5 relaunch, whose fresh session's
-        in-memory catalog forgot the tables though every artifact byte
-        survived — re-ATTACHED from its persisted manifest
-        (O(metadata), r11). ValueError is the loaders' DELIBERATE
-        rejection class (missing table / foreign properties / version
-        skew — index_artifact contract). Anything else is a real fault
-        (metastore hiccup, permission error) and must surface as an
-        orchestrator error, not silently fund a full corpus rebuild
-        (ADVICE r11 — the taxonomy get_or_build adopted in r10)."""
-        from poormans_kube_etl_spark.operators.index_artifact import (
-            attach_artifact,
-            read_index,
-        )
-
-        def readable() -> bool:
-            try:
-                read_index(spec, self.spark, self._index_name(spec))
-                return True
-            except ValueError:
-                return False
-
-        if readable():
-            return True
-        try:
-            return attach_artifact(self.spark, f"{root}/{spec.name}") and readable()
-        except ValueError:
-            return False
-
     def _maintain_dedup_index(self, params: IngestParams) -> None:
         """Fold the committed ingest's documents into the configured
         persisted index families (see DedupIndexMaintenance). The delta
@@ -1233,6 +1203,11 @@ class Orchestrator:
         covered ingest's marker, so a peer waiting on the lease never
         re-appends what the build already covered."""
         from poormans_kube_etl_spark.operators import index_maintenance
+        from poormans_kube_etl_spark.operators.index_artifact import (
+            attach_artifact,
+            read_index,
+            read_or_attach,
+        )
 
         cfg = self.dedup_index
         merged = self._merged_families(params.ingest_name)
@@ -1277,9 +1252,20 @@ class Orchestrator:
                 ):
                     continue  # merged already, or a peer's full build covered us
                 settled, token = corpus(spec.source)
-                full_build = spec.policy == "rebuild" or not self._attachable(
-                    spec, root
-                )
+                # an append needs the artifact readable — from the
+                # catalog, or re-attached from its manifest after a
+                # relaunch forgot the tables (O(metadata), r11); a
+                # deliberate rejection (ValueError) means a full build,
+                # any other fault surfaces (ADVICE r11)
+                full_build = spec.policy == "rebuild"
+                if not full_build:
+                    try:
+                        read_or_attach(
+                            lambda: read_index(spec, self.spark, self._index_name(spec)),
+                            lambda: attach_artifact(self.spark, f"{root}/{spec.name}"),
+                        )
+                    except ValueError:
+                        full_build = True
                 if not full_build:
                     # looked up at call time, so wrappers installed on
                     # the module (tracing, fault injection) see it

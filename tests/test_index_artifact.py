@@ -13,6 +13,7 @@ from poormans_kube_etl_spark.operators.index_artifact import (
     corpus_fingerprint,
     get_or_build,
     load_table_properties,
+    read_or_attach,
     sf_dir_tag,
     stamp_table_properties,
     validate_identifier,
@@ -167,8 +168,8 @@ def test_source_files_fingerprint_is_metadata_only_and_sensitive(spark, tmp_path
 
 def test_cached_source_fingerprint_memoizes_and_invalidates(spark, tmp_path):
     """r12 (VERDICT r11 #2): the probe-path listing is memoized per
-    process — a warm call pays zero FS work; invalidation and the
-    PKE_SRC_FP_CACHE=0 kill switch restore fresh listings."""
+    process — a warm call pays zero FS work; invalidation restores
+    fresh listings."""
     import poormans_kube_etl_spark.operators.index_artifact as ia
 
     p = str(tmp_path / "corpus.parquet")
@@ -181,15 +182,6 @@ def test_cached_source_fingerprint_memoizes_and_invalidates(spark, tmp_path):
     ia.invalidate_source_fingerprints(p)
     fp2 = ia.cached_source_files_fingerprint(spark, p)
     assert fp2 != fp1
-    # kill switch bypasses the memo entirely
-    spark.range(10).write.mode("overwrite").parquet(p)
-    import os as _os
-
-    _os.environ["PKE_SRC_FP_CACHE"] = "0"
-    try:
-        assert ia.cached_source_files_fingerprint(spark, p) != fp2
-    finally:
-        del _os.environ["PKE_SRC_FP_CACHE"]
     ia.invalidate_source_fingerprints()
 
 
@@ -214,7 +206,6 @@ def test_index_face_warm_open_pays_no_fs_listing(spark, sf_dir, monkeypatch):
         raise AssertionError("an FS listing ran on a warm face open")
 
     monkeypatch.delenv("PKE_INDEX_DEEP_VERIFY", raising=False)
-    monkeypatch.delenv("PKE_SRC_FP_CACHE", raising=False)
     monkeypatch.setattr(ia, "source_files_fingerprint", boom)
     monkeypatch.setattr(
         ia, "corpus_fingerprint",
@@ -317,6 +308,55 @@ def test_get_or_build_chains_read_cause_into_build_failure():
     with pytest.raises(RuntimeError, match="disk full") as exc:
         get_or_build(read, build)
     assert isinstance(exc.value.__cause__, ValueError)
+
+
+@pytest.mark.parametrize(
+    "attach_outcome", ["declined", "rejected", "attached_still_unreadable"]
+)
+def test_read_or_attach_reraises_the_first_read_error(attach_outcome):
+    """Whatever makes the artifact stay unreadable, the caller sees the
+    FIRST read's rejection; a successful attach + re-read returns the
+    handle; any non-ValueError fault propagates untouched."""
+    reads = []
+    first = ValueError("missing table")
+
+    def read():
+        reads.append(1)
+        raise first if len(reads) == 1 else ValueError("still foreign")
+
+    def attach():
+        if attach_outcome == "rejected":
+            raise ValueError("torn manifest")
+        return attach_outcome == "attached_still_unreadable"
+
+    with pytest.raises(ValueError) as exc:
+        read_or_attach(read, attach)
+    assert exc.value is first
+    assert len(reads) == (2 if attach_outcome == "attached_still_unreadable" else 1)
+
+
+def test_read_or_attach_rereads_after_attach_and_propagates_faults():
+    state = {"attached": False}
+
+    def read():
+        if not state["attached"]:
+            raise ValueError("missing table")
+        return "idx"
+
+    def attach():
+        state["attached"] = True
+        return True
+
+    assert read_or_attach(read, attach) == "idx"
+    assert read_or_attach(read, lambda: pytest.fail("attach on a readable artifact")) == "idx"
+
+    def hiccup():
+        raise RuntimeError("metastore hiccup")
+
+    with pytest.raises(RuntimeError, match="metastore hiccup"):
+        read_or_attach(lambda: (_ for _ in ()).throw(ValueError("x")), hiccup)
+    with pytest.raises(RuntimeError, match="metastore hiccup"):
+        read_or_attach(hiccup, lambda: pytest.fail("attach after a fault"))
 
 
 def test_index_face_open_pays_no_corpus_aggregate(spark, sf_dir, monkeypatch):

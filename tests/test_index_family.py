@@ -268,3 +268,66 @@ def test_relaunch_reattaches_every_append_family(spark, tmp_path, monkeypatch):
     finally:
         for spec in specs:
             _drop(spark, spec, o._index_name(spec))
+
+
+# the query face that opens each family's artifact, and its artifact stem
+INDEX_FACES = {
+    "minhash": ("dedup_minhash_index_delta_pairs", "pke_mhidx_v1"),
+    "srp": ("dedup_embedding_index_delta_pairs", "pke_srpidx_v1"),
+    "gram": ("dedup_substring_index_delta_spans", "pke_ssidx_v1"),
+    "exact": ("dedup_exact_index_delta", "pke_fpidx_v1"),
+    "bm25": ("text_bm25_index_topk", "pke_bm25idx_v1"),
+}
+
+
+@pytest.mark.parametrize("family", sorted(INDEX_FAMILIES))
+def test_face_reattaches_a_dropped_catalog_without_rebuilding(
+    spark, sf_dir, monkeypatch, family
+):
+    """A fresh session (catalog forgot the tables, artifact bytes and
+    manifest intact) opens each face's artifact by attach: the same
+    rows come back and no family writer runs."""
+    from poormans_kube_etl_spark.queries import QUERIES, load_all
+
+    # a plan-memo hit never re-enters the face's open path
+    monkeypatch.setenv("PKE_PLAN_MEMO", "0")
+    load_all()
+    face_name, stem = INDEX_FACES[family]
+    face = QUERIES[face_name]
+    want = sorted(tuple(r) for r in face(spark, sf_dir).collect())
+    assert want, f"{face_name} must return rows to compare"
+    spec = INDEX_FAMILIES[family]
+    name, _ = index_artifact.face_artifact(stem, sf_dir)
+    _drop(spark, spec, name)
+
+    def no_build(*a, **k):
+        raise AssertionError(f"{face_name} rebuilt instead of attaching")
+
+    monkeypatch.setattr(index_artifact, "write_index", no_build)
+    assert sorted(tuple(r) for r in face(spark, sf_dir).collect()) == want
+    assert spark.catalog.tableExists(name + spec.tables[0].suffix)
+
+
+def test_query_modules_open_indexes_only_through_open_index():
+    """The artifact lifecycle lives in index_artifact.open_index: no
+    query module names the pieces it is built from."""
+    import ast
+    import pathlib
+
+    import poormans_kube_etl_spark.queries as queries_pkg
+
+    banned = {"get_or_build", "attach_artifact", "sf_dir_tag"}
+    found = []
+    for path in sorted(pathlib.Path(queries_pkg.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                ident = node.id
+            elif isinstance(node, ast.Attribute):
+                ident = node.attr
+            elif isinstance(node, ast.alias):
+                ident = node.name
+            else:
+                continue
+            if ident in banned:
+                found.append(f"{path.name}:{node.lineno} {ident}")
+    assert not found, found
