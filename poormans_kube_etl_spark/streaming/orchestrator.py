@@ -38,6 +38,7 @@ scans, never the driver.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import hashlib
 import re
@@ -83,6 +84,17 @@ METRICS_COLUMNS = (
     "total_job_duration",
     "neo_rows",
     "elastic_rows",
+)
+# the three local properties SparkContext.setJobGroup sets
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+# finalize's one raw row, from which it derives METRICS_COLUMNS
+_METRICS_ROW_DDL = (
+    "ingest string, type string, end double, neo_s double, elastic_s double, "
+    "total_s double, neo_rows bigint, elastic_rows bigint"
 )
 
 
@@ -661,15 +673,32 @@ class Orchestrator:
         else:
             df.write.mode("overwrite").parquet(path)
 
+    @contextlib.contextmanager
+    def _job_group(self, group: str, description: str):
+        """Tag the block's Spark jobs with ``group`` and ``description``,
+        then restore what the calling thread had. ``setJobGroup`` sets
+        the group id, the description and interruptOnCancel, and all
+        three are restored: on the delta path the pipelines run on the
+        caller's thread, so a leftover description would label the next
+        cycle's discover, verify, finalize and merge jobs."""
+        sc = self.spark.sparkContext
+        saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+        sc.setJobGroup(group, description)
+        try:
+            yield
+        finally:
+            for k, v in zip(_JOB_GROUP_PROPS, saved):
+                sc.setLocalProperty(k, v)
+
     def _graph_pipeline(self, params: IngestParams) -> None:
         """neo4j stand-in: nodes + foreign-key edges, parquet sinks
         (bucketed on the stable keys when ``bucket_buckets`` > 0).
 
         Overwrite by ingest folder = idempotent re-run (X5 preemption
         becomes safe relaunch)."""
-        sc = self.spark.sparkContext
-        sc.setJobGroup(f"neo4j-{params.job_type}-{params.ingest_name}", "graph load")
-        try:
+        with self._job_group(
+            f"neo4j-{params.job_type}-{params.ingest_name}", "graph load"
+        ):
             for entity, df in self._read_entities(params).items():
                 id_cols = [c for c in df.columns if c == f"{entity}_id" or c == "id"]
                 nodes = df.withColumn("_entity", F.lit(entity)).withColumn(
@@ -695,15 +724,13 @@ class Orchestrator:
                         *[F.col(c) for c in fk_cols],
                     )
                     self._write_graph_sink(edges, "edges", params, entity, "src")
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
 
     def _index_pipeline(self, params: IngestParams) -> None:
         """elasticsearch stand-in: flattened all-string documents with a
         concatenated search body, parquet sink."""
-        sc = self.spark.sparkContext
-        sc.setJobGroup(f"elastic-{params.job_type}-{params.ingest_name}", "index load")
-        try:
+        with self._job_group(
+            f"elastic-{params.job_type}-{params.ingest_name}", "index load"
+        ):
             for entity, df in self._read_entities(params).items():
                 docs = df.select(
                     *[F.col(c).cast("string").alias(c) for c in df.columns],
@@ -720,8 +747,6 @@ class Orchestrator:
                     f"{self.output_dir}/index/{params.ingest_name}/{entity}"
                 )
                 self.timer.elastic_rows += int(obs.get["n"])
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
 
     def preempt_stale(self, params: IngestParams) -> None:
         """X5: cancel any running same-kind job groups before relaunch."""
@@ -793,25 +818,37 @@ class Orchestrator:
         # callback) — r7 review: max(pipeline ends) excluded the
         # source-cleanup window from load_date and total_job_duration
         end = time.time()
-        metrics = self.spark.range(1).select(
-            F.lit(params.ingest_name).alias("ingest"),
-            F.lit(params.ingest_type).alias("type"),
-            F.timestamp_seconds(F.lit(end)).alias("load_date"),
-            F.date_format(F.timestamp_seconds(F.lit(end)), "EEE MMM yyyy HH:mm").alias(
-                "readable_date"
-            ),
-            duration_hmm(F.lit((t.neo_end or 0) - (t.neo_start or 0))).alias(
-                "neo_job_duration"
-            ),
-            duration_hmm(F.lit((t.elastic_end or 0) - (t.elastic_start or 0))).alias(
-                "elastic_job_duration"
-            ),
-            # total = graph-store start → ingest end (src/ingestor.js:334)
-            duration_hmm(F.lit(end - (t.neo_start or end))).alias(
-                "total_job_duration"
-            ),
-            F.lit(t.neo_rows).cast("bigint").alias("neo_rows"),
-            F.lit(t.elastic_rows).cast("bigint").alias("elastic_rows"),
+        # The per-commit values travel as DATA (one local row), not as
+        # literals: primitive literals are inlined into the generated
+        # Java, so literal-built values would compile new classes on
+        # every commit, which a never-exiting daemon piles up in the
+        # codegen cache and Metaspace. Over a row the plan is the same
+        # every commit and its classes are cache hits after the first.
+        row = self.spark.createDataFrame(
+            [(
+                params.ingest_name,
+                params.ingest_type,
+                float(end),
+                float((t.neo_end or 0) - (t.neo_start or 0)),
+                float((t.elastic_end or 0) - (t.elastic_start or 0)),
+                # total = graph-store start → ingest end (src/ingestor.js:334)
+                float(end - (t.neo_start or end)),
+                t.neo_rows,
+                t.elastic_rows,
+            )],
+            _METRICS_ROW_DDL,
+        )
+        load_date = F.timestamp_seconds("end")
+        metrics = row.select(
+            "ingest",
+            "type",
+            load_date.alias("load_date"),
+            F.date_format(load_date, "EEE MMM yyyy HH:mm").alias("readable_date"),
+            duration_hmm(F.col("neo_s")).alias("neo_job_duration"),
+            duration_hmm(F.col("elastic_s")).alias("elastic_job_duration"),
+            duration_hmm(F.col("total_s")).alias("total_job_duration"),
+            "neo_rows",
+            "elastic_rows",
         )
         # One SUBDIRECTORY per ingest, overwrite mode (r8 review): a
         # flat mode("append") from concurrent replicas shares the
@@ -829,7 +866,10 @@ class Orchestrator:
         # the pipeline loudly (X7 class) without un-committing anything,
         # and the durable marker makes a relaunch resume exactly here.
         if self.dedup_index is not None:
-            self._maintain_dedup_index(params)
+            with self._job_group(
+                f"index-maintenance-{params.ingest_name}", "index maintenance"
+            ):
+                self._maintain_dedup_index(params)
         self.timer.reset()
 
     def _dedup_index_marker(self, ingest_name: str) -> str:

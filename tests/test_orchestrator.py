@@ -15,7 +15,13 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from poormans_kube_etl_spark.streaming.orchestrator import IngestParams, Orchestrator
+from poormans_kube_etl_spark.session import codegen_compiles, jobs_submitted
+from poormans_kube_etl_spark.streaming.orchestrator import (
+    METRICS_COLUMNS,
+    DedupIndexMaintenance,
+    IngestParams,
+    Orchestrator,
+)
 
 PERSON_ROWS = [
     (1, "ada", "gb", "1815-12-10"),
@@ -64,6 +70,7 @@ def make_ingest_folder(
     manifest_extra_file: bool = False,
     with_jsonl_entity: bool = False,
     corrupt_jsonl_sha: bool = False,
+    doc_rows=None,
 ):
     folder = os.path.join(landing, "pending", ts)
     os.makedirs(os.path.join(folder, "person"), exist_ok=True)
@@ -73,6 +80,10 @@ def make_ingest_folder(
         "person/person_headers.csv.gz": headers,
         "person/person_sample.csv.gz": data,
     }
+    if doc_rows is not None:
+        os.makedirs(os.path.join(folder, "doc"), exist_ok=True)
+        files["doc/doc_headers.csv.gz"] = _gz_csv([["doc_id", "text"]])
+        files["doc/doc_sample.csv.gz"] = _gz_csv(doc_rows)
     if with_jsonl_entity or corrupt_jsonl_sha:
         os.makedirs(os.path.join(folder, "event"), exist_ok=True)
         files["event/event_data.jsonl.gz"] = _gz_jsonl(_event_jsonl_lines())
@@ -1096,3 +1107,130 @@ def test_claim_lost_at_renewal_yields_without_halt(
     assert [r.ingest for r in orch.metrics().collect()] == ["1538055240"]
     assert not os.path.exists(folder)
     assert not os.path.exists(deferred)
+
+
+# Three commits of a daemon that maintains a MinHash and an exact index;
+# every folder carries fresh documents (the first shares one text with
+# the last, a cross-ingest duplicate).
+DAEMON_COMMITS = [
+    ("1538055240", "incremental.txt"),
+    ("1538055300", "bulk.txt"),
+    ("1538055360", "incremental.txt"),
+]
+
+
+def _doc_rows(i: int):
+    return [
+        (100 * i + 1, "the quick brown fox jumps over the lazy dog tonight"),
+        (100 * i + 2, f"folder {i} carries a document nobody has seen before"),
+    ]
+
+
+@pytest.fixture
+def daemon(spark, tmp_path):
+    landing = str(tmp_path / "landing")
+    os.makedirs(os.path.join(landing, "pending"), exist_ok=True)
+    o = Orchestrator(
+        spark,
+        landing,
+        str(tmp_path / "out"),
+        poll_interval_s=0.01,
+        dedup_index=DedupIndexMaintenance(
+            entity="doc", families=("minhash", "exact"), index_name="t_orch_daemon"
+        ),
+    )
+    yield o
+    for t in ("buckets", "shingles", "fp_fps"):
+        spark.sql(f"DROP TABLE IF EXISTS t_orch_daemon_{t}")
+
+
+def _commit(orch, i: int) -> IngestParams:
+    ts, marker = DAEMON_COMMITS[i]
+    make_ingest_folder(orch.landing_dir, ts, marker, doc_rows=_doc_rows(i))
+    params = orch.run_once()
+    assert params is not None and params.ingest_name == ts
+    assert orch.errored is None
+    return params
+
+
+def test_daemon_steady_state_compiles_no_code(daemon, spark):
+    """A daemon loops over the same commit cycle forever, so once the
+    cycle has run its generated classes must be codegen-cache hits: a
+    commit that compiles anything either mints one-off classes (per-
+    commit values inlined as literals) or thrashes the cache (too small
+    for the cycle's working set)."""
+    assert codegen_compiles(spark) >= 0
+    _commit(daemon, 0)
+    _commit(daemon, 1)
+    before = codegen_compiles(spark)
+    _commit(daemon, 2)
+    assert codegen_compiles(spark) - before == 0
+    # the metrics rows are unchanged in shape, types and values
+    metrics = daemon.metrics()
+    assert tuple(metrics.columns) == METRICS_COLUMNS
+    assert dict(metrics.dtypes) == {
+        "ingest": "string",
+        "type": "string",
+        "load_date": "timestamp",
+        "readable_date": "string",
+        "neo_job_duration": "string",
+        "elastic_job_duration": "string",
+        "total_job_duration": "string",
+        "neo_rows": "bigint",
+        "elastic_rows": "bigint",
+    }
+    rows = {r.ingest: r for r in metrics.collect()}
+    assert sorted(rows) == [ts for ts, _ in DAEMON_COMMITS]
+    rows_per_folder = len(PERSON_ROWS) + len(_doc_rows(0))
+    for ts, marker in DAEMON_COMMITS:
+        row = rows[ts]
+        assert row.type == ("bulk" if marker == "bulk.txt" else "incremental")
+        for col in ("neo_job_duration", "elastic_job_duration", "total_job_duration"):
+            assert re.fullmatch(r"\d+h:\d\dmins", getattr(row, col))
+        assert re.fullmatch(r"[A-Z][a-z]{2} [A-Z][a-z]{2} \d{4} \d\d:\d\d", row.readable_date)
+        assert row.neo_rows == rows_per_folder and row.elastic_rows == rows_per_folder
+
+
+def _jobs_since(spark, first_id: int) -> list[tuple[int, str | None, str | None]]:
+    """(job id, description, group) of every job from ``first_id`` on,
+    read back from the status store once the listener bus has drained."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    out = []
+    it = sc.statusStore().jobsList(None).iterator()
+    while it.hasNext():
+        job = it.next()
+        if job.jobId() >= first_id:
+            desc, group = job.description(), job.jobGroup()
+            out.append((
+                int(job.jobId()),
+                desc.get() if desc.isDefined() else None,
+                group.get() if group.isDefined() else None,
+            ))
+    return out
+
+
+def test_job_groups_do_not_leak_past_their_pipeline(daemon, spark):
+    """The delta path runs both store pipelines on the caller's thread.
+    Their job group and description must end with the pipeline: the
+    next cycle's discover, verify, finalize and index-merge jobs used
+    to inherit the index pipeline's "index load" description. The merge
+    jobs carry the maintenance group."""
+    _commit(daemon, 0)  # delta: pipelines on this thread
+    first = jobs_submitted(spark)
+    name = _commit(daemon, 2).ingest_name  # the next cycle, delta again
+    jobs = _jobs_since(spark, first)
+    assert jobs
+    for job_id, desc, group in jobs:
+        store = (group or "").split("-")[0]
+        want = {"neo4j": "graph load", "elastic": "index load"}.get(store)
+        if group == f"index-maintenance-{name}":
+            want = "index maintenance"
+        assert desc == want, (job_id, desc, group)
+    groups = {g for _, _, g in jobs}
+    assert f"index-maintenance-{name}" in groups
+    assert {f"neo4j-delta-{name}", f"elastic-delta-{name}"} <= groups
+    # and nothing is left set on this thread once the cycle returns
+    sc = spark.sparkContext
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    assert sc.getLocalProperty("spark.job.description") is None
