@@ -91,11 +91,6 @@ _JOB_GROUP_PROPS = (
     "spark.job.description",
     "spark.job.interruptOnCancel",
 )
-# finalize's one raw row, from which it derives METRICS_COLUMNS
-_METRICS_ROW_DDL = (
-    "ingest string, type string, end double, neo_s double, elastic_s double, "
-    "total_s double, neo_rows bigint, elastic_rows bigint"
-)
 
 
 @dataclass
@@ -818,25 +813,28 @@ class Orchestrator:
         # callback) — r7 review: max(pipeline ends) excluded the
         # source-cleanup window from load_date and total_job_duration
         end = time.time()
-        # The per-commit values travel as DATA (one local row), not as
-        # literals: primitive literals are inlined into the generated
-        # Java, so literal-built values would compile new classes on
-        # every commit, which a never-exiting daemon piles up in the
-        # codegen cache and Metaspace. Over a row the plan is the same
-        # every commit and its classes are cache hits after the first.
-        row = self.spark.createDataFrame(
-            [(
-                params.ingest_name,
-                params.ingest_type,
-                float(end),
-                float((t.neo_end or 0) - (t.neo_start or 0)),
-                float((t.elastic_end or 0) - (t.elastic_start or 0)),
-                # total = graph-store start → ingest end (src/ingestor.js:334)
-                float(end - (t.neo_start or end)),
-                t.neo_rows,
-                t.elastic_rows,
-            )],
-            _METRICS_ROW_DDL,
+        # The per-commit values travel as DATA (one bound VALUES row),
+        # not as literals in a projection: primitive literals are
+        # inlined into the generated Java, so literal-built values would
+        # compile new classes on every commit, which a never-exiting
+        # daemon piles up in the codegen cache and Metaspace. The
+        # optimizer folds this projection over the VALUES row on the
+        # driver; the write's classes are cache hits after the first.
+        vals = {
+            "ingest": params.ingest_name,
+            "type": params.ingest_type,
+            "end": float(end),
+            "neo_s": float((t.neo_end or 0) - (t.neo_start or 0)),
+            "elastic_s": float((t.elastic_end or 0) - (t.elastic_start or 0)),
+            # total = graph-store start → ingest end (src/ingestor.js:334)
+            "total_s": float(end - (t.neo_start or end)),
+            "neo_rows": t.neo_rows,
+            "elastic_rows": t.elastic_rows,
+        }
+        row = self.spark.sql(
+            f"SELECT * FROM VALUES ({', '.join(':' + k for k in vals)}) "
+            f"AS t({', '.join(vals)})",
+            args=vals,
         )
         load_date = F.timestamp_seconds("end")
         metrics = row.select(
@@ -847,8 +845,8 @@ class Orchestrator:
             duration_hmm(F.col("neo_s")).alias("neo_job_duration"),
             duration_hmm(F.col("elastic_s")).alias("elastic_job_duration"),
             duration_hmm(F.col("total_s")).alias("total_job_duration"),
-            "neo_rows",
-            "elastic_rows",
+            F.col("neo_rows").cast("bigint").alias("neo_rows"),
+            F.col("elastic_rows").cast("bigint").alias("elastic_rows"),
         )
         # One SUBDIRECTORY per ingest, overwrite mode (r8 review): a
         # flat mode("append") from concurrent replicas shares the
