@@ -12,18 +12,18 @@ Generated code stays compiled across passes. Spark keeps at most
 distinct entries, the perfbench ``query_mix`` ~180, one pass over the
 177-query registry at sf0.01 2051. Over a cyclic working set larger
 than its capacity Guava's segmented LRU misses almost every time, so
-each pass evicted what the next one needed and paid Janino, class
-loading and C1/C2 JIT again (the second registry pass recompiled 2802
-entries at 100). ``get_spark`` sets 4096, the next power of two that
-holds the registry; 2048 would still thrash the full sweep. Metaspace
-after two registry passes read 222 MB at 4096 vs 230 MB at 100 (the
-thrashed classes stay loaded until G1 unloads them). It is a STATIC
-conf: it takes effect only when the builder starts the SparkContext,
-so a session handed to ``apply_runtime_confs`` (``__spark_entry__``)
-keeps whatever its owner set. ``bench.py`` times each query back to
-back, so its cache always hits and it cannot see this thrash; only an
-interleaved loop (perfbench, the daemon) does. ``codegen_compiles``
-counts compilations.
+at 100 each pass evicts what the next one needs and pays Janino, class
+loading and C1/C2 JIT again: a second registry pass recompiled 2868
+entries at 100 and 54 at 4096 (local[4], 4-core VM). ``get_spark`` sets
+4096, the next power of two that holds the registry; 2048 would still
+thrash the full sweep. It costs no memory: Metaspace after two registry
+passes read 212 MB at 4096 and 216 MB at 100, because thrashed classes
+stay loaded until G1 unloads them. It is a STATIC conf: it takes
+effect only when the builder starts the SparkContext, so a session
+handed to ``apply_runtime_confs`` (``__spark_entry__``) keeps whatever
+its owner set. ``bench.py`` times each query back to back, so its cache
+always hits and it cannot see this thrash; only an interleaved loop
+(perfbench, the daemon) does. ``codegen_compiles`` counts compilations.
 """
 
 from __future__ import annotations

@@ -820,14 +820,15 @@ class Orchestrator:
         # daemon piles up in the codegen cache and Metaspace. The
         # optimizer folds this projection over the VALUES row on the
         # driver; the write's classes are cache hits after the first.
+        # float() keeps the durations DOUBLE when no pipeline ran (0 - 0)
         vals = {
             "ingest": params.ingest_name,
             "type": params.ingest_type,
-            "end": float(end),
+            "end": end,
             "neo_s": float((t.neo_end or 0) - (t.neo_start or 0)),
             "elastic_s": float((t.elastic_end or 0) - (t.elastic_start or 0)),
             # total = graph-store start → ingest end (src/ingestor.js:334)
-            "total_s": float(end - (t.neo_start or end)),
+            "total_s": end - (t.neo_start or end),
             "neo_rows": t.neo_rows,
             "elastic_rows": t.elastic_rows,
         }
