@@ -74,10 +74,10 @@ spark.stop()
 
 def test_session_sizes_the_codegen_cache(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
-    assert codegen_compiles(spark) >= 0
 
 
 def test_second_pass_over_the_mix_compiles_nothing(spark, sf_dir):
+    assert codegen_compiles(spark) >= 0  # -1 would make every delta 0
     _first, second = _passes(spark, sf_dir)
     assert second == 0
 
