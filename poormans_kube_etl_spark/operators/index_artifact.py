@@ -73,6 +73,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -164,42 +165,69 @@ def load_table_properties(
     return constants
 
 
-def corpus_fingerprint(frame: DataFrame, id_col: str) -> str:
-    """``<row count>:<max id as string>`` — the cheap data-freshness
-    stamp. One column-pruned aggregate action; the max runs in the id's
-    NATURAL type (cast to string only afterwards) so numeric keys
-    compare numerically — a string-side max would call 0..9 and 5..14
-    the same corpus ("9" > "14" lexicographically). Count+max changes
-    whenever rows are appended, truncated, or regenerated with a
-    different key range — the regeneration modes a path-keyed artifact
-    name cannot see."""
+@dataclass(frozen=True)
+class CountMax:
+    """One frame's row count and max id: the operands of the count+max
+    fingerprint. ``mx`` is the max taken in the id's NATURAL type and
+    cast to string only afterwards (None when every id is null)."""
+
+    id_col: str
+    n: int
+    mx: str | None
+    id_type: DataType
+
+
+def count_max(frame: DataFrame, id_col: str) -> CountMax:
+    """One column-pruned aggregate action. The max runs in the id's
+    natural type so numeric keys compare numerically — a string-side
+    max would call 0..9 and 5..14 the same corpus ("9" > "14"
+    lexicographically)."""
     row = frame.agg(
         F.count(F.lit(1)).alias("n"),
         F.max(F.col(id_col)).cast("string").alias("mx"),
     ).collect()[0]
-    return f"{row['n']}:{row['mx']}"
+    return CountMax(id_col, row["n"], row["mx"], frame.schema[id_col].dataType)
 
 
-def composed_fingerprint(stamped: str, delta: DataFrame, id_col: str) -> str:
-    """Fold an append-merged DELTA into a stamped count+max fingerprint
-    without rescanning the corpus: count adds, max composes through
-    ``greatest`` (computed in the id's NATURAL type — same rule as
-    corpus_fingerprint). O(delta), and the fingerprint BASIS stays
+def corpus_fingerprint(frame: DataFrame, id_col: str) -> str:
+    """``<row count>:<max id as string>`` — the cheap data-freshness
+    stamp (see ``count_max``). Count+max changes whenever rows are
+    appended, truncated, or regenerated with a different key range —
+    the regeneration modes a path-keyed artifact name cannot see."""
+    cm = count_max(frame, id_col)
+    return f"{cm.n}:{cm.mx}"
+
+
+def compose_fingerprint(spark: SparkSession, stamped: str, delta: CountMax) -> str:
+    """Fold an append-merged delta's ``CountMax`` into a stamped
+    count+max fingerprint without rescanning the corpus: count adds,
+    max composes through ``greatest`` in the id's natural type.
+    ``greatest(max(id), old)`` equals ``max(greatest(id, old))`` (both
+    skip nulls), so one ``CountMax`` of a delta serves every family
+    stamped over it. The fold is a bound VALUES row the optimizer
+    evaluates on the driver: no Spark job. The fingerprint BASIS stays
     identical at build and at every merge — raw indexed source rows —
     for every family (r10 ADVICE: the minhash merge restamped from the
     shingles table, silently changing semantics after the first merge,
     while gram/fp merges left the stamp stale entirely)."""
     n_old_s, mx_old = stamped.split(":", 1)
-    typ = delta.schema[id_col].dataType
-    old_lit = (
-        F.lit(None).cast(typ) if mx_old == "None" else F.lit(mx_old).cast(typ)
-    )
-    row = delta.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.greatest(F.col(id_col), old_lit)).cast("string").alias("mx"),
+    n = int(n_old_s) + delta.n
+    if delta.n == 0:
+        return f"{n}:{mx_old}"
+    typ = delta.id_type
+    row = spark.sql(
+        "SELECT * FROM VALUES (:d, :o) AS t(d, o)",
+        args={"d": delta.mx, "o": None if mx_old == "None" else mx_old},
+    ).select(
+        F.greatest(F.col("d").cast(typ), F.col("o").cast(typ)).cast("string").alias("mx")
     ).collect()[0]
-    mx = row["mx"] if row["mx"] is not None else mx_old
-    return f"{int(n_old_s) + row['n']}:{mx}"
+    return f"{n}:{row['mx'] if row['mx'] is not None else mx_old}"
+
+
+def composed_fingerprint(stamped: str, delta: DataFrame, id_col: str) -> str:
+    """``compose_fingerprint`` over a delta frame: O(delta), one
+    aggregate."""
+    return compose_fingerprint(delta.sparkSession, stamped, count_max(delta, id_col))
 
 
 def source_files_fingerprint(spark: SparkSession, *paths: str) -> str:

@@ -35,9 +35,9 @@ pure (frame in, tables appended).
 Scale: every merge is linear in the DELTA — signatures/grams are
 computed for delta rows only, appended onto the stored bucket
 distribution (same bucketBy spec, validated against the catalog), and
-the freshness stamps COMPOSE (index_artifact.composed_fingerprint:
+the freshness stamps COMPOSE (index_artifact.compose_fingerprint:
 count adds, max folds through greatest) so no merge ever rescans the
-corpus. One fingerprint basis per family, applied identically at
+corpus, and one delta's count+max serves every family merged from it. One fingerprint basis per family, applied identically at
 build and merge time: raw indexed source rows (r10 ADVICE — the
 minhash merge used to restamp from the shingles table, silently
 changing semantics after the first merge, while gram/fp merges left
@@ -54,8 +54,10 @@ from poormans_kube_etl_spark.operators.exact_index import EXACT_FAMILY
 from poormans_kube_etl_spark.operators.index_artifact import (
     FINGERPRINT_KEY,
     SOURCE_FINGERPRINT_KEY,
+    CountMax,
     IndexFamily,
-    composed_fingerprint,
+    compose_fingerprint,
+    count_max,
     read_index,
     refresh_artifact_manifest,
     stamp_table_properties,
@@ -108,13 +110,19 @@ def merge_delta(
     *,
     max_fragments: int = DEFAULT_MAX_FRAGMENTS,
     source_fingerprint: str | None = None,
+    delta_count_max: CountMax | None = None,
 ) -> dict:
     """Append a committed delta to an ``append``-policy artifact: derive
     its rows with the artifact's recorded constants, append them on the
     catalog's bucket layout, then restamp in ONE property write — the
     composed count+max fingerprint, the source-listing stamp (when the
     caller knows it) and the bumped fragment count. Returns
-    ``{"fragments": n, "needs_compaction": bool}``."""
+    ``{"fragments": n, "needs_compaction": bool}``.
+
+    ``delta_count_max`` is the delta's ``count_max`` when the caller
+    merges one delta into several families: the aggregate then runs
+    once per delta, not once per family. It is recomputed when it was
+    taken over a different id column than the artifact records."""
     if spec.policy != "append":
         raise ValueError(
             f"{spec.label}: merge policy is {spec.policy!r} — rebuild it "
@@ -130,8 +138,10 @@ def merge_delta(
             ).saveAsTable(table)
     props_table = name + spec.tables[0].suffix
     fragments = read_fragments(spark, props_table, spec.prefix) + 1
+    if delta_count_max is None or delta_count_max.id_col != c["id_col"]:
+        delta_count_max = count_max(delta, c["id_col"])
     props = {
-        FINGERPRINT_KEY: composed_fingerprint(c[FINGERPRINT_KEY], delta, c["id_col"]),
+        FINGERPRINT_KEY: compose_fingerprint(spark, c[FINGERPRINT_KEY], delta_count_max),
         "fragments": str(fragments),
     }
     if source_fingerprint is not None:
@@ -141,67 +151,32 @@ def merge_delta(
     return {"fragments": fragments, "needs_compaction": fragments > max_fragments}
 
 
-def merge_delta_into_minhash_index(
-    delta_docs: DataFrame,
-    name: str,
-    *,
-    max_fragments: int = DEFAULT_MAX_FRAGMENTS,
-    source_fingerprint: str | None = None,
-) -> dict:
+def merge_delta_into_minhash_index(delta_docs: DataFrame, name: str, **kwargs) -> dict:
     """Append a committed delta's band buckets + shingle sets to a
-    persisted MinHash index (operators/minhash_index.py)."""
-    return merge_delta(
-        MINHASH_FAMILY, delta_docs, name,
-        max_fragments=max_fragments, source_fingerprint=source_fingerprint,
-    )
+    persisted MinHash index (operators/minhash_index.py). ``kwargs``
+    are ``merge_delta``'s, as for the other families below."""
+    return merge_delta(MINHASH_FAMILY, delta_docs, name, **kwargs)
 
 
-def merge_delta_into_srp_index(
-    delta_embeddings: DataFrame,
-    name: str,
-    *,
-    max_fragments: int = DEFAULT_MAX_FRAGMENTS,
-    source_fingerprint: str | None = None,
-) -> dict:
+def merge_delta_into_srp_index(delta_embeddings: DataFrame, name: str, **kwargs) -> dict:
     """Append a committed delta's SRP band buckets + vectors to a
     persisted embedding index (operators/similarity_index.py).
     Hyperplanes are deterministic in (bands·planes_per_band, dim), so
     delta banding with the artifact's constants collides correctly
     with the stored corpus buckets."""
-    return merge_delta(
-        SRP_FAMILY, delta_embeddings, name,
-        max_fragments=max_fragments, source_fingerprint=source_fingerprint,
-    )
+    return merge_delta(SRP_FAMILY, delta_embeddings, name, **kwargs)
 
 
-def merge_delta_into_gram_index(
-    delta_docs: DataFrame,
-    name: str,
-    *,
-    max_fragments: int = DEFAULT_MAX_FRAGMENTS,
-    source_fingerprint: str | None = None,
-) -> dict:
+def merge_delta_into_gram_index(delta_docs: DataFrame, name: str, **kwargs) -> dict:
     """Append a committed delta's distinct k-grams to a persisted gram
     index (operators/substring.py)."""
-    return merge_delta(
-        GRAM_FAMILY, delta_docs, name,
-        max_fragments=max_fragments, source_fingerprint=source_fingerprint,
-    )
+    return merge_delta(GRAM_FAMILY, delta_docs, name, **kwargs)
 
 
-def merge_delta_into_fp_index(
-    delta_docs: DataFrame,
-    name: str,
-    *,
-    max_fragments: int = DEFAULT_MAX_FRAGMENTS,
-    source_fingerprint: str | None = None,
-) -> dict:
+def merge_delta_into_fp_index(delta_docs: DataFrame, name: str, **kwargs) -> dict:
     """Append a committed delta's (fp, keeper) rows to a persisted
     exact-dedup fingerprint index (operators/exact_index.py)."""
-    return merge_delta(
-        EXACT_FAMILY, delta_docs, name,
-        max_fragments=max_fragments, source_fingerprint=source_fingerprint,
-    )
+    return merge_delta(EXACT_FAMILY, delta_docs, name, **kwargs)
 
 
 def rebuild_corpus_bm25_index(corpus_docs: DataFrame, name: str, **write_kwargs) -> dict:

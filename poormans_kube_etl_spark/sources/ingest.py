@@ -10,7 +10,12 @@ Maps SURVEY.md §2a sources onto Spark readers:
   sha2-256 computed ON EXECUTORS — the driver never touches bytes)
 - S5/D6 CSVs      → ``read_csv_gz_with_header_sidecar`` (gzipped entity
   CSVs whose column names ship in a separate ``*_headers.csv.gz``,
-  reference src/__mocks__/s3-client.js:42-55)
+  reference src/__mocks__/s3-client.js:42-55). The sidecar's first
+  line and the data's first line are read on the driver through the
+  Hadoop codec chain (``read_first_line``, control-plane bytes like
+  the manifest) and split by Spark's own CSV parser folded on the
+  driver; the payload scan gets an explicit all-string schema, so
+  building the reader runs no inference job
 - JSONL corpora   → ``read_jsonl`` + ``split_quarantine`` (extension
   surface: schema-contract reader with corrupt-line quarantine for
   raw training-data interchange files)
@@ -23,6 +28,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 _URI_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
@@ -272,8 +278,6 @@ def read_jsonl_stream(
 def _jsonl_parse(raw: DataFrame, schema, mode: str, corrupt_col: str) -> DataFrame:
     """Shared batch/streaming JSONL parse: ``raw`` is a text scan
     (single ``value`` column); returns the schema-contract DataFrame."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     mode = mode.upper()
@@ -336,16 +340,64 @@ def split_quarantine(
     )
 
 
+def read_first_line(spark: SparkSession, path: str) -> str | None:
+    """First non-blank line of a small control-plane file, decompressed
+    through the same Hadoop codec chain a ``text``/``csv`` scan uses
+    (``*.gz`` included), or None when the file has none. The CSV source
+    skips blank lines the same way (a line of only characters <= U+0020
+    is empty to it), so this is the line its first row comes from."""
+    fs, jpath = hadoop_fs(spark, path)
+    jvm = spark.sparkContext._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    stream = fs.open(jpath)
+    codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+        hconf
+    ).getCodec(jpath)
+    if codec is not None:
+        stream = codec.createInputStream(stream)
+    reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
+    try:
+        while (line := reader.readLine()) is not None:
+            if any(ch > " " for ch in line):
+                return line
+        return None
+    finally:
+        reader.close()
+
+
+def _first_data_line(spark: SparkSession, paths: list[str]) -> str | None:
+    """The line the CSV source infers its width from: the first
+    non-blank line in scan order, which lays files out largest first
+    (a stable sort, so equal sizes keep the given order)."""
+    sized = []
+    for p in paths:
+        fs, jpath = hadoop_fs(spark, p)
+        sized.append((fs.getFileStatus(jpath).getLen(), p))
+    for _, p in sorted(sized, key=lambda s: -s[0]):
+        line = read_first_line(spark, p)
+        if line is not None:
+            return line
+    return None
+
+
 def read_csv_gz_with_header_sidecar(
     spark: SparkSession,
     data_paths: list[str],
     header_path: str | None = None,
 ) -> DataFrame:
     """Gzipped CSVs with column names shipped in a separate headers file
-    (data model D6). Without a sidecar, the first row is the header."""
+    (data model D6). Without a sidecar, the first row is the header.
+
+    With a sidecar, building the reader runs no Spark job: the driver
+    reads the sidecar's first line and the data's first line, and
+    Spark's own CSV parser splits them (``schema_of_csv``/``from_csv``
+    over bound strings fold on the driver), so quoting and escapes
+    match what ``spark.read.csv(sidecar).first()`` returns. The payload
+    is then read with an explicit all-string schema of that width. A
+    sidecar naming more or fewer columns than the data has raises."""
     if header_path:
-        header_cols = spark.read.csv(header_path).first()
-        if header_cols is None:
+        header = read_first_line(spark, header_path)
+        if header is None:
             # a zero-byte/truncated sidecar (partial upload) used to die
             # as an opaque "'NoneType' object is not iterable" (r7
             # review); name the file like the mismatch branch does
@@ -353,9 +405,24 @@ def read_csv_gz_with_header_sidecar(
                 f"header sidecar {header_path!r} is empty — "
                 "the sidecar does not match the data"
             )
+        data = _first_data_line(spark, data_paths)
+        widths = spark.sql(
+            "SELECT schema_of_csv(:h) AS h, schema_of_csv(:d) AS d "
+            "FROM VALUES (1) AS t(x)",
+            args={"h": header, "d": data or ""},
+        ).collect()[0]
+        n_header = len(StructType.fromDDL(widths.h).fields)
+        width = 0 if data is None else len(StructType.fromDDL(widths.d).fields)
+        strings = StructType([StructField(f"_c{i}", StringType()) for i in range(width)])
+        header_cols = spark.sql(
+            "SELECT from_csv(:h, :s) AS r FROM VALUES (1) AS t(x)",
+            args={
+                "h": header,
+                "s": ", ".join(f"_c{i} STRING" for i in range(n_header)),
+            },
+        ).collect()[0].r
         names = [c for c in header_cols if c is not None]
-        df = spark.read.option("header", False).csv(data_paths)
-        if len(names) != len(df.columns):
+        if len(names) != width:
             # a short sidecar used to surface as an opaque toDF arity
             # error deep in the pipeline, and a LONG one was silently
             # truncated (self-review r4, both directions) — either way
@@ -363,8 +430,13 @@ def read_csv_gz_with_header_sidecar(
             # where it came from
             raise ValueError(
                 f"header sidecar {header_path!r} names {len(names)} "
-                f"column(s) but the data files have {len(df.columns)}; "
+                f"column(s) but the data files have {width}; "
                 "the sidecar does not match the data"
             )
-        return df.toDF(*names)
+        return (
+            spark.read.schema(strings)
+            .option("header", False)
+            .csv(data_paths)
+            .toDF(*names)
+        )
     return spark.read.option("header", True).csv(data_paths)

@@ -318,6 +318,8 @@ class Orchestrator:
         self.claim_settle_s = claim_settle_s
         self.dedup_index = dedup_index
         self.timer = Times()
+        # (ingest name, _read_entities result) of the current ingest
+        self._entities: tuple[str, dict] | None = None
         self.errored: str | None = None  # X7 error state
         # consecutive transient scan failures (listing/gating); reset on
         # any successful scan — never escalates to the X7 halt
@@ -416,12 +418,21 @@ class Orchestrator:
         3 segments), so driver memory for the poll cycle is O(folders)
         even when the folders hold a million payload objects (r8,
         VERDICT r7 #4 — payload keys were retained and immediately
-        discarded by the marker filter)."""
+        discarded by the marker filter).
+
+        The key inventory is a local relation: the listing travels as
+        one bound array parameter, exploded in the plan, so a poll runs
+        one JVM-only job. ``createDataFrame`` over Python tuples
+        parallelized pickled rows instead, a PythonRDD job whose Python
+        worker tasks cost more CPU than the selection itself."""
         keys = self.list_keys(max_segments=3)
         if not keys:
             return None
         active = self._actively_claimed(keys)
-        inv = self.spark.createDataFrame([(k,) for k in keys], "key string")
+        inv = self.spark.sql(
+            "SELECT explode(:keys) AS key FROM VALUES (1) AS t(x)",
+            args={"keys": keys},
+        )
         seg = F.split("key", "/")
         # F.get / try_cast: noise keys ('pending/.DS_Store', non-numeric
         # folders) must yield NULL, not ANSI errors (F9 null guard)
@@ -508,8 +519,11 @@ class Orchestrator:
 
     # ---- the two store pipelines (stand-ins for the external Jobs) ----
 
-    def _read_entities(self, params: IngestParams) -> dict[str, DataFrame]:
-        """Read each entity's payload files into a DataFrame.
+    def _read_entities(
+        self, params: IngestParams
+    ) -> dict[str, tuple[DataFrame, DataFrame | None]]:
+        """Each entity's payload files as ``(valid rows, quarantined raw
+        lines)`` — the second is None for a CSV entity.
 
         Two entity families, dispatched per folder on the payload
         extension (r6 adds the second):
@@ -525,15 +539,24 @@ class Orchestrator:
           ``{output}/quarantine/``. A MISSING sidecar raises — same X7
           halt class as a failed pipeline, because silently inferring a
           schema is exactly what the reader's contract forbids.
+
+        Callers go through ``_entity_sources``, which builds this once
+        per ``run_ingest``: the CSV readers' sidecars are read on the
+        driver and run no Spark job (sources/ingest.py), and each JSONL
+        entity and its schema sidecar are parsed once for the
+        quarantine and both pipelines.
         """
         folder = self._folder_path(params.ingest_name)
         # the VERIFIED listing, not a fresh one (r7 review): re-listing
         # here let files uploaded AFTER manifest verification flow into
         # the stores sha-unchecked, and the graph and index pipelines —
         # each listing at its own time — could ingest DIFFERENT file
-        # sets; it also paid 2 extra object-store listings per ingest
-        # against _quarantine_jsonl's own O(2 per folder) rationale.
-        # Same name-keyed cache discipline as _quarantine_jsonl.
+        # sets; it also paid extra object-store listings per ingest,
+        # where the hundred-folder fan-out gate pins listings at O(2 per
+        # folder). The cache is keyed to the ingest name (ADVICE r06): a
+        # direct run_ingest after a prior ingest failed un-finalized
+        # must not pair the stale folder's keys with this params'
+        # sidecars, so a name mismatch falls back to a fresh listing.
         if self.timer.ingest_files_name == params.ingest_name:
             files = self.timer.ingest_files
         else:
@@ -557,21 +580,34 @@ class Orchestrator:
                         "csv.gz and jsonl.gz payloads — one family per "
                         "entity folder"
                     )
-                valid, _ = ingest_sources.split_quarantine(
+                out[entity] = ingest_sources.split_quarantine(
                     self._parse_jsonl_entity(folder, entity, jsonl)
                 )
-                out[entity] = valid
                 continue
             headers = [k for k in keys if k.endswith("_headers.csv.gz")]
             data = [k for k in keys if not k.endswith("_headers.csv.gz")]
             if not data:
                 continue
-            out[entity] = ingest_sources.read_csv_gz_with_header_sidecar(
-                self.spark,
-                [f"{self.landing_dir}/{k}" for k in data],
-                f"{self.landing_dir}/{headers[0]}" if headers else None,
+            out[entity] = (
+                ingest_sources.read_csv_gz_with_header_sidecar(
+                    self.spark,
+                    [f"{self.landing_dir}/{k}" for k in data],
+                    f"{self.landing_dir}/{headers[0]}" if headers else None,
+                ),
+                None,
             )
         return out
+
+    def _entity_sources(
+        self, params: IngestParams
+    ) -> dict[str, tuple[DataFrame, DataFrame | None]]:
+        """``_read_entities`` for ``params``, built once and shared by
+        the quarantine and both store pipelines. ``run_ingest`` resets
+        it on entry, so an X5 relaunch re-reads the folder; a pipeline
+        called for another ingest builds its own."""
+        if self._entities is None or self._entities[0] != params.ingest_name:
+            self._entities = (params.ingest_name, self._read_entities(params))
+        return self._entities[1]
 
     def _parse_jsonl_entity(
         self, folder: str, entity: str, keys: list[str]
@@ -592,32 +628,14 @@ class Orchestrator:
         pipelines so a quarantine-sink failure halts the ingest rather
         than stranding bad lines after the stores already loaded.
 
-        Reuses the caller's F7 listing (``timer.ingest_files``, set by
-        both lifecycles right before ``run_ingest``) instead of
-        re-listing the folder — the hundred-folder fan-out gate pins
-        listings at O(2 per folder), and a third per-folder scan of an
-        object store is real money at fleet scale. The cache is keyed to
-        the ingest name (ADVICE r06): a direct ``run_ingest`` call after
-        a prior ingest failed un-finalized must not pair the stale
-        folder's keys with this params' schema sidecars, so a name
-        mismatch falls back to a fresh listing."""
-        folder = self._folder_path(params.ingest_name)
-        if self.timer.ingest_files_name == params.ingest_name:
-            files = self.timer.ingest_files
-        else:
-            files = self.ingest_files(params)
-        entities: dict[str, list[str]] = {}
-        for key in files:
-            parts = key.split("/")
-            if len(parts) >= 4 and key.endswith(".jsonl.gz"):
-                entities.setdefault(parts[2], []).append(key)
-        for entity, keys in entities.items():
-            _, quarantined = ingest_sources.split_quarantine(
-                self._parse_jsonl_entity(folder, entity, keys)
-            )
-            quarantined.write.mode("overwrite").parquet(
-                f"{self.output_dir}/quarantine/{params.ingest_name}/{entity}"
-            )
+        The quarantine side comes from the same parse the pipelines
+        read their valid side from (``_entity_sources``), which reuses
+        the caller's F7 listing — see ``_read_entities``."""
+        for entity, (_, quarantined) in self._entity_sources(params).items():
+            if quarantined is not None:
+                quarantined.write.mode("overwrite").parquet(
+                    f"{self.output_dir}/quarantine/{params.ingest_name}/{entity}"
+                )
 
     @staticmethod
     def _table_ident(*parts: str) -> str:
@@ -694,7 +712,7 @@ class Orchestrator:
         with self._job_group(
             f"neo4j-{params.job_type}-{params.ingest_name}", "graph load"
         ):
-            for entity, df in self._read_entities(params).items():
+            for entity, (df, _) in self._entity_sources(params).items():
                 id_cols = [c for c in df.columns if c == f"{entity}_id" or c == "id"]
                 nodes = df.withColumn("_entity", F.lit(entity)).withColumn(
                     "_ingest", F.lit(params.ingest_name)
@@ -726,7 +744,7 @@ class Orchestrator:
         with self._job_group(
             f"elastic-{params.job_type}-{params.ingest_name}", "index load"
         ):
-            for entity, df in self._read_entities(params).items():
+            for entity, (df, _) in self._entity_sources(params).items():
                 docs = df.select(
                     *[F.col(c).cast("string").alias(c) for c in df.columns],
                     F.lower(
@@ -754,9 +772,13 @@ class Orchestrator:
 
     def run_ingest(self, params: IngestParams) -> None:
         """X3/X4: bulk → parallel, delta → serial (graph first). JSONL
-        quarantine persistence runs first either way (r6)."""
+        quarantine persistence runs first either way (r6). The entity
+        sources are resolved afresh here, before the bulk threads
+        start, and shared by the quarantine and both pipelines."""
         self.preempt_stale(params)
         self.timer.reset_pipeline_state()
+        self._entities = None
+        self._entity_sources(params)
         self._quarantine_jsonl(params)
 
         def neo():
@@ -870,6 +892,7 @@ class Orchestrator:
             ):
                 self._maintain_dedup_index(params)
         self.timer.reset()
+        self._entities = None
 
     def _dedup_index_marker(self, ingest_name: str) -> str:
         return f"{self.output_dir}/dedup_index/_merged/{ingest_name}"
@@ -1244,6 +1267,7 @@ class Orchestrator:
         from poormans_kube_etl_spark.operators import index_maintenance
         from poormans_kube_etl_spark.operators.index_artifact import (
             attach_artifact,
+            count_max,
             read_index,
             read_or_attach,
         )
@@ -1285,6 +1309,12 @@ class Orchestrator:
             delta = functools.cache(
                 lambda source: self._committed_for(source, [params.ingest_name])
             )
+            # one count+max per delta, composed into every family's stamp
+            delta_count_max = functools.cache(
+                lambda source: count_max(
+                    delta(source), getattr(cfg, _CORPUS_SOURCES[source][2])
+                )
+            )
             for spec in families:
                 if ingest_sources.path_exists(
                     self.spark, self._family_marker(params.ingest_name, spec.name)
@@ -1314,6 +1344,7 @@ class Orchestrator:
                         self._index_name(spec),
                         max_fragments=cfg.max_fragments,
                         source_fingerprint=token,
+                        delta_count_max=delta_count_max(spec.source),
                     )["needs_compaction"]:
                         if cfg.compaction == "defer":
                             # finalize stays O(delta) (r13, VERDICT r12

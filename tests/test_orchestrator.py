@@ -11,8 +11,10 @@ import io
 import json
 import os
 import re
+from typing import NamedTuple
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.session import codegen_compiles, jobs_submitted
@@ -1191,23 +1193,81 @@ def test_daemon_steady_state_compiles_no_code(daemon, spark):
         assert row.neo_rows == rows_per_folder and row.elastic_rows == rows_per_folder
 
 
-def _jobs_since(spark, first_id: int) -> list[tuple[int, str | None, str | None]]:
-    """(job id, description, group) of every job from ``first_id`` on,
-    read back from the status store once the listener bus has drained."""
+class _Job(NamedTuple):
+    id: int
+    call_site: str  # e.g. "first at .../sources/ingest.py:347"
+    description: str | None
+    group: str | None
+    rdds: frozenset[str]  # RDD names across the job's stages
+
+
+def _rdd_names(spark, cluster) -> set[str]:
+    conv = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
+    names = {n.name() for n in conv.asJava(cluster.childNodes())}
+    for child in conv.asJava(cluster.childClusters()):
+        names |= _rdd_names(spark, child)
+    return names
+
+
+def _jobs_since(spark, first_id: int) -> list[_Job]:
+    """Every job from ``first_id`` on, oldest first, read back from the
+    status store once the listener bus has drained."""
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
     out = []
-    it = sc.statusStore().jobsList(None).iterator()
+    it = store.jobsList(None).iterator()
     while it.hasNext():
         job = it.next()
-        if job.jobId() >= first_id:
-            desc, group = job.description(), job.jobGroup()
-            out.append((
-                int(job.jobId()),
-                desc.get() if desc.isDefined() else None,
-                group.get() if group.isDefined() else None,
-            ))
-    return out
+        if job.jobId() < first_id:
+            continue
+        rdds: set[str] = set()
+        stages = job.stageIds().iterator()
+        while stages.hasNext():
+            try:
+                graph = store.operationGraphForStage(stages.next())
+            except Py4JJavaError:
+                # a skipped stage (shuffle output reused) ran no task;
+                # past spark.ui.retainedStages its graph goes first
+                continue
+            rdds |= _rdd_names(spark, graph.rootCluster())
+        desc, group = job.description(), job.jobGroup()
+        out.append(_Job(
+            int(job.jobId()),
+            job.name(),
+            desc.get() if desc.isDefined() else None,
+            group.get() if group.isDefined() else None,
+            frozenset(rdds),
+        ))
+    return sorted(out)
+
+
+def _listing(jobs: list[_Job]) -> str:
+    return "\n".join(f"{j.id} {j.call_site} [{j.group}]" for j in jobs)
+
+
+# Spark jobs one steady commit of the ``daemon`` fixture runs (a delta
+# folder with two csv.gz entities, MinHash + exact index merges). The
+# header sidecars are read on the driver, discover's inventory is a
+# local relation and the two merges share one delta count+max; before
+# that the same commit ran 35 jobs.
+STEADY_COMMIT_JOBS = 21
+
+
+def test_daemon_steady_commit_job_budget(daemon, spark):
+    """Every job the commit path runs without moving payload costs
+    scheduling, planning and JIT on every cycle of a daemon that never
+    exits, so a steady commit is pinned to its measured job count, and
+    none of its jobs may start Python workers (a ``PythonRDD`` stage)."""
+    _commit(daemon, 0)
+    _commit(daemon, 1)
+    first = jobs_submitted(spark)
+    assert first >= 0  # -1 would make the job list empty
+    _commit(daemon, 2)
+    jobs = _jobs_since(spark, first)
+    assert len(jobs) <= STEADY_COMMIT_JOBS, _listing(jobs)
+    python = [j for j in jobs if "PythonRDD" in j.rdds]
+    assert not python, _listing(python)
 
 
 def test_job_groups_do_not_leak_past_their_pipeline(daemon, spark):
@@ -1221,13 +1281,13 @@ def test_job_groups_do_not_leak_past_their_pipeline(daemon, spark):
     name = _commit(daemon, 2).ingest_name  # the next cycle, delta again
     jobs = _jobs_since(spark, first)
     assert jobs
-    for job_id, desc, group in jobs:
-        store = (group or "").split("-")[0]
+    for job in jobs:
+        store = (job.group or "").split("-")[0]
         want = {"neo4j": "graph load", "elastic": "index load"}.get(store)
-        if group == f"index-maintenance-{name}":
+        if job.group == f"index-maintenance-{name}":
             want = "index maintenance"
-        assert desc == want, (job_id, desc, group)
-    groups = {g for _, _, g in jobs}
+        assert job.description == want, job
+    groups = {j.group for j in jobs}
     assert f"index-maintenance-{name}" in groups
     assert {f"neo4j-delta-{name}", f"elastic-delta-{name}"} <= groups
     # and nothing is left set on this thread once the cycle returns

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.operators.upsert import merge_into
@@ -265,6 +266,64 @@ def test_short_header_sidecar_fails_with_named_mismatch(spark, tmp_path):
     open(headers, "w").write("a,b,c\n")
     with pytest.raises(ValueError, match="names 3 column\\(s\\) but the data files have 5"):
         read_csv_gz_with_header_sidecar(spark, [data], headers)
+
+
+def test_long_header_sidecar_fails_with_named_mismatch(spark, tmp_path):
+    """The other direction: a sidecar naming MORE columns than the data
+    has must raise the same named mismatch, not truncate the names."""
+    import gzip
+
+    import pytest
+
+    from poormans_kube_etl_spark.sources.ingest import (
+        read_csv_gz_with_header_sidecar,
+    )
+
+    data = str(tmp_path / "d.csv.gz")
+    with gzip.open(data, "wt") as f:
+        f.write("1,2\n3,4\n")
+    headers = str(tmp_path / "h.csv.gz")
+    with gzip.open(headers, "wt") as f:
+        f.write("a,b,c,d\n")
+    with pytest.raises(ValueError, match="names 4 column\\(s\\) but the data files have 2"):
+        read_csv_gz_with_header_sidecar(spark, [data], headers)
+
+
+@pytest.mark.parametrize(
+    "header_line",
+    [
+        'id,"name, full",city',  # quoted comma
+        'id,"q""uote",city',  # doubled quote
+        'id,"x\\"y",city',  # backslash-escaped quote
+        "id,,city",  # empty field
+        "id, name ,city",  # surrounding whitespace
+    ],
+)
+def test_header_sidecar_names_match_spark_csv(spark, tmp_path, header_line):
+    """The sidecar is split on the driver by Spark's own CSV parser, so
+    its names are exactly what ``spark.read.csv(sidecar).first()``
+    yields (Python's csv module would turn ``"q""uote"`` into
+    ``q"uote``), and building the reader runs no Spark job."""
+    import gzip
+
+    from poormans_kube_etl_spark.session import jobs_submitted
+    from poormans_kube_etl_spark.sources.ingest import (
+        read_csv_gz_with_header_sidecar,
+    )
+
+    headers = str(tmp_path / "h_headers.csv.gz")
+    with gzip.open(headers, "wt") as f:
+        f.write(header_line + "\n")
+    want = [c for c in spark.read.csv(headers).first() if c is not None]
+    data = str(tmp_path / "h_sample.csv.gz")
+    with gzip.open(data, "wt") as f:
+        f.write(",".join(str(i) for i in range(len(want))) + "\n")
+    before = jobs_submitted(spark)
+    assert before >= 0
+    df = read_csv_gz_with_header_sidecar(spark, [data], headers)
+    assert jobs_submitted(spark) - before == 0
+    assert df.columns == want
+    assert [tuple(r) for r in df.collect()] == [tuple(str(i) for i in range(len(want)))]
 
 
 def test_expr_cache_scoped_to_context(spark):
