@@ -35,7 +35,7 @@ What the shared layer owns:
     exist to avoid).
   * The count+max DATA fingerprint (``corpus_fingerprint``) remains
     stamped by every writer and kept exact across append-merges via
-    ``composed_fingerprint`` (O(delta) — count and max compose), but
+    ``compose_fingerprint`` (O(delta) — count and max compose), but
     on the probe path it is now an OPT-IN deep check
     (``PKE_INDEX_DEEP_VERIFY=1``) for out-of-band regeneration modes
     a listing cannot see (e.g. a byte-identical-layout rewrite).
@@ -222,12 +222,6 @@ def compose_fingerprint(spark: SparkSession, stamped: str, delta: CountMax) -> s
         F.greatest(F.col("d").cast(typ), F.col("o").cast(typ)).cast("string").alias("mx")
     ).collect()[0]
     return f"{n}:{row['mx'] if row['mx'] is not None else mx_old}"
-
-
-def composed_fingerprint(stamped: str, delta: DataFrame, id_col: str) -> str:
-    """``compose_fingerprint`` over a delta frame: O(delta), one
-    aggregate."""
-    return compose_fingerprint(delta.sparkSession, stamped, count_max(delta, id_col))
 
 
 def source_files_fingerprint(spark: SparkSession, *paths: str) -> str:

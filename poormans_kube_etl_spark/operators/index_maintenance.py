@@ -37,8 +37,9 @@ computed for delta rows only, appended onto the stored bucket
 distribution (same bucketBy spec, validated against the catalog), and
 the freshness stamps COMPOSE (index_artifact.compose_fingerprint:
 count adds, max folds through greatest) so no merge ever rescans the
-corpus, and one delta's count+max serves every family merged from it. One fingerprint basis per family, applied identically at
-build and merge time: raw indexed source rows (r10 ADVICE — the
+corpus, and one delta's count+max serves every family merged from it.
+One fingerprint basis per family, applied identically at build and
+merge time: raw indexed source rows (r10 ADVICE — the
 minhash merge used to restamp from the shingles table, silently
 changing semantics after the first merge, while gram/fp merges left
 the stamp stale entirely). Callers that know the source listing pass

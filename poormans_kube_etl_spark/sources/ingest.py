@@ -11,11 +11,11 @@ Maps SURVEY.md §2a sources onto Spark readers:
 - S5/D6 CSVs      → ``read_csv_gz_with_header_sidecar`` (gzipped entity
   CSVs whose column names ship in a separate ``*_headers.csv.gz``,
   reference src/__mocks__/s3-client.js:42-55). The sidecar's first
-  line and the data's first line are read on the driver through the
-  Hadoop codec chain (``read_first_line``, control-plane bytes like
-  the manifest) and split by Spark's own CSV parser folded on the
-  driver; the payload scan gets an explicit all-string schema, so
-  building the reader runs no inference job
+  line and the data's first line (the one line the CSV source's own
+  width inference would read) come to the driver through the Hadoop
+  codec chain (``read_first_line``) and are split by Spark's own CSV
+  parser folded on the driver; the payload scan gets an explicit
+  all-string schema, so building the reader runs no inference job
 - JSONL corpora   → ``read_jsonl`` + ``split_quarantine`` (extension
   surface: schema-contract reader with corrupt-line quarantine for
   raw training-data interchange files)
@@ -413,7 +413,6 @@ def read_csv_gz_with_header_sidecar(
         ).collect()[0]
         n_header = len(StructType.fromDDL(widths.h).fields)
         width = 0 if data is None else len(StructType.fromDDL(widths.d).fields)
-        strings = StructType([StructField(f"_c{i}", StringType()) for i in range(width)])
         header_cols = spark.sql(
             "SELECT from_csv(:h, :s) AS r FROM VALUES (1) AS t(x)",
             args={
@@ -433,6 +432,7 @@ def read_csv_gz_with_header_sidecar(
                 f"column(s) but the data files have {width}; "
                 "the sidecar does not match the data"
             )
+        strings = StructType([StructField(f"_c{i}", StringType()) for i in range(width)])
         return (
             spark.read.schema(strings)
             .option("header", False)

@@ -32,8 +32,9 @@ Upgrades over the reference (SURVEY.md §2a "not present", §7 M2):
 Paths go through the Hadoop FileSystem API, so the same code runs on
 ``file://`` in tests and ``s3a://``/``hdfs://`` on a cluster; listing a
 prefix is the control-plane metadata operation the reference's
-listObjectsV2 was (S1) — payload bytes only ever move through executor
-scans, never the driver.
+listObjectsV2 was (S1) — payload bytes move through executor scans;
+the driver reads only control files and, per CSV entity, the first
+data line that sizes its schema.
 """
 
 from __future__ import annotations
@@ -422,9 +423,9 @@ class Orchestrator:
 
         The key inventory is a local relation: the listing travels as
         one bound array parameter, exploded in the plan, so a poll runs
-        one JVM-only job. ``createDataFrame`` over Python tuples
-        parallelized pickled rows instead, a PythonRDD job whose Python
-        worker tasks cost more CPU than the selection itself."""
+        one JVM-only job. ``createDataFrame`` over Python tuples would
+        ship pickled rows through Python worker tasks that cost more CPU
+        than the selection itself."""
         keys = self.list_keys(max_segments=3)
         if not keys:
             return None

@@ -217,31 +217,49 @@ def test_index_face_warm_open_pays_no_fs_listing(spark, sf_dir, monkeypatch):
 def test_composed_fingerprint_matches_full_recompute(spark):
     """Append-merge freshness: composing the stamped count+max with a
     delta-only aggregate must equal recomputing over the union — the
-    basis (raw indexed source rows) never drifts across merges."""
+    basis (raw indexed source rows) never drifts across merges. The
+    composition itself folds on the driver (no Spark job)."""
     from poormans_kube_etl_spark.operators.index_artifact import (
-        composed_fingerprint,
+        compose_fingerprint,
+        count_max,
     )
+    from poormans_kube_etl_spark.session import jobs_submitted
+
+    def composed(stamped, delta):
+        cm = count_max(delta, "doc_id")
+        before = jobs_submitted(spark)
+        out = compose_fingerprint(spark, stamped, cm)
+        assert jobs_submitted(spark) == before
+        return out
 
     a = spark.range(10).select(F.col("id").alias("doc_id"))
     delta = spark.range(20, 25).select(F.col("id").alias("doc_id"))
     stamped = corpus_fingerprint(a, "doc_id")
-    assert composed_fingerprint(stamped, delta, "doc_id") == corpus_fingerprint(
+    assert composed(stamped, delta) == corpus_fingerprint(
         a.unionByName(delta), "doc_id"
     )
     # delta below the stamped max: max must NOT regress
     low = spark.range(2).select(F.col("id").alias("doc_id"))
-    assert composed_fingerprint(stamped, low, "doc_id") == corpus_fingerprint(
+    assert composed(stamped, low) == corpus_fingerprint(
         a.unionByName(low), "doc_id"
     )
     # empty delta: unchanged
     empty = a.where(F.lit(False))
-    assert composed_fingerprint(stamped, empty, "doc_id") == stamped
+    assert composed(stamped, empty) == stamped
+    # null ids count but never move the max; a "None" stamp takes the delta's
+    nulls = spark.range(3).select(F.lit(None).cast("bigint").alias("doc_id"))
+    assert composed(stamped, nulls) == corpus_fingerprint(
+        a.unionByName(nulls), "doc_id"
+    )
+    assert composed(corpus_fingerprint(nulls, "doc_id"), delta) == corpus_fingerprint(
+        nulls.unionByName(delta), "doc_id"
+    )
     # string ids compose lexicographically, same as corpus_fingerprint
     s = spark.createDataFrame([("a",), ("c",)], "doc_id string")
     sd = spark.createDataFrame([("b",)], "doc_id string")
-    assert composed_fingerprint(
-        corpus_fingerprint(s, "doc_id"), sd, "doc_id"
-    ) == corpus_fingerprint(s.unionByName(sd), "doc_id")
+    assert composed(corpus_fingerprint(s, "doc_id"), sd) == corpus_fingerprint(
+        s.unionByName(sd), "doc_id"
+    )
 
 
 def test_get_or_build_deep_verify_is_opt_in(monkeypatch):

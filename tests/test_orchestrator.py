@@ -1249,8 +1249,7 @@ def _listing(jobs: list[_Job]) -> str:
 # Spark jobs one steady commit of the ``daemon`` fixture runs (a delta
 # folder with two csv.gz entities, MinHash + exact index merges). The
 # header sidecars are read on the driver, discover's inventory is a
-# local relation and the two merges share one delta count+max; before
-# that the same commit ran 35 jobs.
+# local relation and the two merges share one delta count+max.
 STEADY_COMMIT_JOBS = 21
 
 

@@ -292,11 +292,18 @@ def test_long_header_sidecar_fails_with_named_mismatch(spark, tmp_path):
 @pytest.mark.parametrize(
     "header_line",
     [
-        'id,"name, full",city',  # quoted comma
-        'id,"q""uote",city',  # doubled quote
-        'id,"x\\"y",city',  # backslash-escaped quote
-        "id,,city",  # empty field
-        "id, name ,city",  # surrounding whitespace
+        'id,"name, full",city',
+        'id,"q""uote",city',
+        'id,"x\\"y",city',
+        "id,,city",
+        "id, name ,city",
+    ],
+    ids=[
+        "quoted-comma",
+        "doubled-quote",
+        "backslash-escaped-quote",
+        "empty-field",
+        "surrounding-whitespace",
     ],
 )
 def test_header_sidecar_names_match_spark_csv(spark, tmp_path, header_line):
