@@ -88,7 +88,7 @@ def _build_parser() -> argparse.ArgumentParser:
     cp.add_argument(
         "--families",
         default="minhash",
-        help="comma-separated: minhash,gram,exact,srp (bm25 never compacts)",
+        help="comma-separated: minhash,gram,exact (bm25 never compacts)",
     )
     cp.add_argument("--id-col", default="doc_id")
     cp.add_argument("--text-col", default="text")

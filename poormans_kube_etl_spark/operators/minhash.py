@@ -31,19 +31,6 @@ from poormans_kube_etl_spark.operators.text import normalize_text, tokens, word_
 from poormans_kube_etl_spark.sources import spread_small_scan
 
 
-def shingle_docs(docs: DataFrame, id_col: str, text_col: str, shingle_len: int) -> DataFrame:
-    # Tokens are materialized in their own projection: inlined into
-    # word_shingles, the normalize+split subtree sits inside the
-    # per-shingle slice lambda and gets re-evaluated once per shingle
-    # (measured 6x slower). Catalyst keeps the boundary because the
-    # expression is non-cheap and multiply referenced.
-    docs = spread_small_scan(docs, heavy=True)  # shingling amplifies ~50x per row
-    toked = docs.select(id_col, tokens(normalize_text(text_col)).alias("toks"))
-    return toked.select(
-        id_col, word_shingles(F.col("toks"), shingle_len).alias("shingles")
-    )
-
-
 def exploded_shingles(
     docs: DataFrame, id_col: str, text_col: str, shingle_len: int
 ) -> DataFrame:
@@ -57,6 +44,10 @@ def exploded_shingles(
     never yield an empty/null array, so that filter is pure waste.
     """
     docs = spread_small_scan(docs, heavy=True)  # shingling amplifies ~50x per row
+    # Tokens are materialized in their own projection: inlined into
+    # word_shingles, the normalize+split subtree sits inside the
+    # per-shingle slice lambda and gets re-evaluated once per shingle
+    # (measured 6x slower).
     toked = docs.select(id_col, tokens(normalize_text(text_col)).alias("toks"))
     return toked.select(
         id_col, F.explode(word_shingles(F.col("toks"), shingle_len)).alias("shingle")

@@ -38,30 +38,3 @@ def shingle5_cte(cols: str = "doc_id", where: str = "") -> str:
       FROM toks
     )
 """
-
-
-# Planted exact twins over ``documents`` (r10): every 25th doc
-# re-appears under doc_id + 1,000,000. Two flavors:
-# - MANGLED (leading spaces + uppercase): byte-DIFFERENT but
-#   normalization-IDENTICAL — exercises the normalize-then-fingerprint
-#   path (norm(upper(t)) == norm(t) since the normalizer lowercases).
-# - VERBATIM: byte-identical — for checksum-level dedup faces.
-# The synthetic corpus has zero natural exact duplicates, so without
-# planting, an exact-dedup face's oracle passes vacuously on an empty
-# result (the same reason the embedding faces plant md5-perturbed
-# twins). Both engines reconstruct the twins deterministically.
-PLANT_MOD = 25
-PLANT_OFFSET = 1_000_000
-
-
-def planted_exact_twins_sql(mangled: bool = True, extra_where: str = "") -> str:
-    """A FROM-able subquery: documents plus the planted twin rows.
-    ``extra_where`` further restricts which docs spawn twins."""
-    text_expr = "'  ' || upper(text)" if mangled else "text"
-    more = f"AND ({extra_where})" if extra_where else ""
-    return f"""(
-      SELECT doc_id, text, lang, source, n_chars FROM documents
-      UNION ALL
-      SELECT doc_id + {PLANT_OFFSET}, {text_expr}, lang, source, n_chars
-      FROM documents WHERE doc_id % {PLANT_MOD} = 0 {more}
-    )"""

@@ -154,22 +154,24 @@ class DedupIndexMaintenance:
     before treating the pass as failed (X7 class — the markers let a
     relaunch resume).
 
-    ``compaction`` (r13, VERDICT r12 #7) picks what happens when a
-    family's fragment trail exceeds ``max_fragments``:
+    Compaction has one path. A merge that leaves a family's fragment
+    trail past ``max_fragments`` raises a durable
+    ``_needs_compaction/<family>`` flag; the compaction step rebuilds
+    the family from the full settled corpus, and every full build
+    (bootstrap, compaction, bm25's rebuild) clears the flag.
+    ``compaction`` (r13, VERDICT r12 #7) only picks WHEN the step runs:
 
-    - ``"inline"``: rebuild from the full settled corpus inside the
-      finalize path, under the same lease — fine at test scale, but at
+    - ``"inline"``: at the end of the same finalize's lease hold, for
+      the families that pass flagged — fine at test scale, but at
       100 TB that rebuild is hours during which every replica's
       maintenance blocks on the lease and then halts via
       ``lease_timeout_s``.
-    - ``"defer"``: finalize stays O(delta) — the merge lands, a durable
-      ``_needs_compaction/<family>`` flag is raised, and the rebuild
-      waits for an explicit maintenance window:
-      ``Orchestrator.compact_dedup_indexes()`` (or the ``compact`` CLI
-      verb), which rebuilds exactly the flagged families under its own
-      lease acquisition. Until then queries pay fragment fan-out —
-      bounded, monotone, and priced by the ``fragments`` count the
-      maintainer reports — never wrong answers (append invariant)."""
+    - ``"defer"``: finalize stays O(delta); the step waits for an
+      explicit maintenance window, ``Orchestrator.compact_dedup_indexes()``
+      (or the ``compact`` CLI verb), under its own lease acquisition.
+      Until then queries pay fragment fan-out — bounded, monotone, and
+      priced by the ``fragments`` count the maintainer reports — never
+      wrong answers (append invariant)."""
 
     entity: str
     id_col: str = "doc_id"
@@ -229,9 +231,6 @@ class Times:
     # after a prior un-finalized failure would otherwise pair the stale
     # folder's keys with the new params)
     ingest_files_name: str | None = None
-
-    def is_complete(self) -> bool:  # A5 completion conjunction
-        return self.neo_end is not None and self.elastic_end is not None
 
     def reset_pipeline_state(self) -> None:
         """Clear the per-run counters and stamps but KEEP the cached
@@ -1098,10 +1097,8 @@ class Orchestrator:
         """The FULL-CORPUS builder for one index family — one callable
         taking the corpus DataFrame and writing the family's artifact
         with this deployment's parameters (the spec's config mapping).
-        Shared by the bootstrap / inline-compaction path
-        (``_maintain_dedup_index``) and the explicit maintenance-window
-        rebuild (``compact_dedup_indexes``, r13) so the two can never
-        drift in banding/bucketing/stamping parameters."""
+        Called only from ``_full_build``, so bootstrap and compaction
+        can never drift in banding/bucketing/stamping parameters."""
         from poormans_kube_etl_spark.operators.index_artifact import write_index
         from poormans_kube_etl_spark.operators.index_maintenance import (
             INDEX_FAMILIES,
@@ -1120,7 +1117,7 @@ class Orchestrator:
             source_fingerprint=source_fingerprint,
         )
 
-    # ---- deferred compaction (r13, VERDICT r12 #7) ----
+    # ---- compaction (r13, VERDICT r12 #7) ----
 
     def _compaction_flag(self, family: str) -> str:
         return f"{self.output_dir}/dedup_index/_needs_compaction/{family}"
@@ -1128,11 +1125,12 @@ class Orchestrator:
     def _flag_compaction(self, family: str) -> None:
         """Durably record that ``family``'s fragment trail exceeded the
         budget — written UNDER the maintenance lease, read by
-        ``compact_dedup_indexes``. Idempotent overwrite."""
+        ``compact_dedup_indexes``, cleared by ``_full_build``.
+        Idempotent overwrite."""
         self._write_dedup_index_marker(self._compaction_flag(family))
 
     def compaction_pending(self) -> list[str]:
-        """Families whose deferred compaction is still outstanding."""
+        """Families whose compaction flag is raised."""
         return [
             f
             for f in self.dedup_index.families
@@ -1142,90 +1140,95 @@ class Orchestrator:
     def compact_dedup_indexes(
         self, force: bool = False, allow_param_change: bool = False
     ) -> dict[str, bool]:
-        """Explicit maintenance-window compaction (r13, VERDICT r12 #7):
-        rebuild every family whose ``_needs_compaction`` flag is raised
-        (all families when ``force``) from the FULL settled corpus,
-        under this pass's own lease acquisition — the finalize path with
-        ``compaction="defer"`` never rebuilds inline, so a 100 TB
-        deployment schedules this off the ingest critical path (a
-        nightly Job, the ``compact`` CLI verb) instead of blocking every
-        replica's maintenance behind an hours-long rebuild and halting
-        them via ``lease_timeout_s``.
+        """The maintenance-window compaction (the ``compact`` CLI verb):
+        runs the compaction step (``_compact_families``) under this
+        call's own lease acquisition, over every family whose
+        ``_needs_compaction`` flag is raised, or every family when
+        ``force``. Returns ``{family: rebuilt?}``; ``rebuild``-policy
+        families (bm25) are skipped, they have no fragment trail.
 
-        Same guarantees as a bootstrap build: reads the settled ingest
-        set pinned by explicit paths, stamps every covered ingest's
-        per-family marker (so a waiting peer never re-appends what the
-        rebuild covered), renews the lease after each family and aborts
-        (X7 class) if the lease is lost. Returns
-        ``{family: rebuilt?}``; ``rebuild``-policy families (bm25) are
-        skipped — they rebuild on every commit, there is no fragment
-        trail to compact.
-
-        Param guard (r13): when the family's artifact is readable, its
-        recorded build constants are compared against this
-        orchestrator's config BEFORE rebuilding — a compaction is a
-        rebuild, so config drift (a CLI invocation whose flags don't
-        match the deployment's maintenance config) would silently
-        re-plan banding/shingling under every consumer. Mismatch
-        raises ValueError naming the drifted keys; pass
-        ``allow_param_change=True`` to re-plan deliberately."""
-        from poormans_kube_etl_spark.operators.index_artifact import read_index
-
+        Param guard (r13): a compaction is a rebuild with THIS config,
+        so a CLI invocation whose flags drifted from the deployment's
+        maintenance config would silently re-plan banding/shingling
+        under every consumer. When the family's artifact is readable,
+        its recorded build constants are compared against the config
+        first; a mismatch raises ValueError naming the drifted keys,
+        unless ``allow_param_change=True`` re-plans deliberately. A
+        due family whose corpus source has no configured entity (srp
+        without ``vec_entity``) raises ValueError naming the field:
+        there is no corpus to rebuild from."""
         cfg = self.dedup_index
-        root = f"{self.output_dir}/dedup_index"
+        specs = [s for s in self._index_families() if s.policy != "rebuild"]
         lease = self._maint_lease()
         lease.acquire(timeout_s=cfg.lease_timeout_s)
-        compacted: dict[str, bool] = {}
         try:
-            corpus = functools.cache(self._settled_corpus)
-            for spec in self._index_families():
-                family = spec.name
-                if spec.policy == "rebuild":
-                    continue
-                if not (
-                    force
-                    or ingest_sources.path_exists(
-                        self.spark, self._compaction_flag(family)
+            due = [
+                s
+                for s in specs
+                if force
+                or ingest_sources.path_exists(self.spark, self._compaction_flag(s.name))
+            ]
+            for s in due:
+                attr = _CORPUS_SOURCES[s.source][1]
+                if getattr(cfg, attr) is None:
+                    raise ValueError(
+                        f"compact {s.name}: {attr} is unset, so there is no "
+                        f"{s.source} corpus to rebuild from"
                     )
-                ):
-                    compacted[family] = False
-                    continue
-                settled, fp = corpus(spec.source)
-                if not settled:
-                    compacted[family] = False
-                    continue  # nothing committed: nothing to rebuild
-                if not allow_param_change:
-                    try:
-                        constants = read_index(
-                            spec, self.spark, self._index_name(spec)
-                        ).constants
-                    except ValueError:
-                        constants = None  # unreadable: rebuild = bootstrap
-                    drift = (
-                        self._param_drift(spec, constants)
-                        if constants is not None
-                        else {}
-                    )
-                    if drift:
-                        raise ValueError(
-                            f"compact {family}: config disagrees with the "
-                            f"artifact's build constants "
-                            f"{{{', '.join(f'{k}: configured {c!r} vs built {b!r}' for k, (c, b) in sorted(drift.items()))}}} "
-                            f"— a rebuild would silently re-plan the index; "
-                            f"fix the config or pass allow_param_change=True "
-                            f"to re-plan deliberately"
-                        )
-                self._family_writer(family, root, fp)(
-                    self._committed_for(spec.source, settled)
-                )
-                for n in settled:
-                    self._write_dedup_index_marker(self._family_marker(n, family))
-                ingest_sources.delete_path(self.spark, self._compaction_flag(family))
-                compacted[family] = True
-                self._renew_or_abort(lease, family)
-            return compacted
+            return dict.fromkeys((s.name for s in specs), False) | (
+                self._compact_families(lease, due, guard=not allow_param_change)
+            )
         finally:
             lease.release()
+
+    def _compact_families(self, lease, specs, guard: bool) -> dict[str, bool]:
+        """The compaction step, shared by both callers: per family, read
+        the settled set, run the param guard (when ``guard``), rebuild
+        through ``_full_build`` and renew the lease (``_renew_or_abort``).
+        The caller holds ``lease``. Returns ``{family: rebuilt?}``; a
+        family with no settled ingest has nothing to rebuild."""
+        from poormans_kube_etl_spark.operators.index_artifact import read_index
+
+        corpus = functools.cache(self._settled_corpus)
+        compacted: dict[str, bool] = {}
+        for spec in specs:
+            settled, token = corpus(spec.source)
+            compacted[spec.name] = bool(settled)
+            if not settled:
+                continue
+            if guard:
+                try:
+                    constants = read_index(spec, self.spark, self._index_name(spec)).constants
+                except ValueError:
+                    constants = {}  # unreadable: the rebuild is a bootstrap
+                drift = self._param_drift(spec, constants)
+                if drift:
+                    raise ValueError(
+                        f"compact {spec.name}: config disagrees with the "
+                        f"artifact's build constants "
+                        f"{{{', '.join(f'{k}: configured {c!r} vs built {b!r}' for k, (c, b) in sorted(drift.items()))}}} "
+                        f"— a rebuild would silently re-plan the index; "
+                        f"fix the config or pass allow_param_change=True "
+                        f"to re-plan deliberately"
+                    )
+            self._full_build(spec, settled, token)
+            self._renew_or_abort(lease, spec.name)
+        return compacted
+
+    def _full_build(self, spec, settled: list[str], token: str) -> None:
+        """The one full build: write ``spec``'s artifact from the settled
+        corpus (pinned by explicit paths), stamp every covered ingest's
+        marker, so a peer waiting on the lease never re-appends what the
+        build covered, then clear the family's compaction flag, since
+        the new artifact has no fragment trail. Bootstrap, unreadable
+        artifact, bm25's per-commit rebuild and compaction all land
+        here."""
+        self._family_writer(spec.name, f"{self.output_dir}/dedup_index", token)(
+            self._committed_for(spec.source, settled)
+        )
+        for n in settled:
+            self._write_dedup_index_marker(self._family_marker(n, spec.name))
+        ingest_sources.delete_path(self.spark, self._compaction_flag(spec.name))
 
     def _maintain_dedup_index(self, params: IngestParams) -> None:
         """Fold the committed ingest's documents into the configured
@@ -1235,14 +1238,17 @@ class Orchestrator:
         committed is the correct semantics anyway.
 
         Every family runs the same cycle, driven by its spec: bootstrap
-        on first commit, append-merge after, compact-by-rebuild past
-        the budget; a ``rebuild``-policy family (bm25) rebuilds from
-        every settled ingest on each commit. A full build always reads
-        the FULL settled corpus, never the delta alone (r10 ADVICE
-        high: a delta-only build with mode=overwrite silently replaced
-        the whole corpus index while the durable markers prevented the
-        lost ingests from ever re-merging). On a true first commit the
-        settled set IS the delta, so the two are equivalent there.
+        on first commit, append-merge after; a ``rebuild``-policy
+        family (bm25) rebuilds from every settled ingest on each
+        commit. A merge past the budget raises the family's compaction
+        flag; with ``compaction="inline"`` the compaction step runs for
+        the families this pass flagged, at the end of the same lease
+        hold. A full build always reads the FULL settled corpus, never
+        the delta alone (r10 ADVICE high: a delta-only build with
+        mode=overwrite silently replaced the whole corpus index while
+        the durable markers prevented the lost ingests from ever
+        re-merging). On a true first commit the settled set IS the
+        delta, so the two are equivalent there.
 
         Concurrency (r12, VERDICT r11 #1): replicas finalizing
         DIFFERENT ingests share the family tables, so everything from
@@ -1261,10 +1267,9 @@ class Orchestrator:
         composed fingerprint until compaction). The residual window is
         now a crash between ONE family's append and ITS marker — one
         family's duplicate fragment, fan-out-only by the append
-        invariant. A full build (bootstrap/compaction) reads the
-        SETTLED ingest set pinned by explicit paths and stamps every
-        covered ingest's marker, so a peer waiting on the lease never
-        re-appends what the build already covered."""
+        invariant. A crash after a merge but before its inline
+        compaction leaves the flag raised: fan-out until the next
+        compaction, never wrong answers."""
         from poormans_kube_etl_spark.operators import index_maintenance
         from poormans_kube_etl_spark.operators.index_artifact import (
             attach_artifact,
@@ -1316,6 +1321,7 @@ class Orchestrator:
                     delta(source), getattr(cfg, _CORPUS_SOURCES[source][2])
                 )
             )
+            flagged = []
             for spec in families:
                 if ingest_sources.path_exists(
                     self.spark, self._family_marker(params.ingest_name, spec.name)
@@ -1336,7 +1342,9 @@ class Orchestrator:
                         )
                     except ValueError:
                         full_build = True
-                if not full_build:
+                if full_build:
+                    self._full_build(spec, settled, token)
+                else:
                     # looked up at call time, so wrappers installed on
                     # the module (tracing, fault injection) see it
                     merge = getattr(index_maintenance, spec.merge_entry)
@@ -1347,24 +1355,15 @@ class Orchestrator:
                         source_fingerprint=token,
                         delta_count_max=delta_count_max(spec.source),
                     )["needs_compaction"]:
-                        if cfg.compaction == "defer":
-                            # finalize stays O(delta) (r13, VERDICT r12
-                            # #7): raise the durable flag and leave the
-                            # rebuild to the explicit maintenance window
-                            # (compact_dedup_indexes) — fragment fan-out
-                            # until then, never a blocked lease
-                            self._flag_compaction(spec.name)
-                        else:
-                            full_build = True
-                if full_build:
-                    self._family_writer(spec.name, root, token)(
-                        self._committed_for(spec.source, settled)
+                        self._flag_compaction(spec.name)
+                        flagged.append(spec)
+                    # stamp AFTER the append lands
+                    self._write_dedup_index_marker(
+                        self._family_marker(params.ingest_name, spec.name)
                     )
-                # stamp AFTER the work lands: a merge covers this
-                # ingest; a full build covers every settled ingest
-                for n in settled if full_build else [params.ingest_name]:
-                    self._write_dedup_index_marker(self._family_marker(n, spec.name))
                 self._renew_or_abort(lease, spec.name)
+            if cfg.compaction == "inline":
+                self._compact_families(lease, flagged, guard=False)
         finally:
             lease.release()
 

@@ -148,3 +148,24 @@ def test_cli_compact(spark, tmp_path, capsys):
         assert read_corpus_minhash_index(spark, "t_cli_mhidx").constants["bands"] == "2"
     finally:
         _drop(spark, "t_cli_mhidx")
+
+
+def test_cli_compact_refuses_a_family_without_its_entity(spark, tmp_path, capsys):
+    """The compact verb has no vector-entity flag, so a raised srp flag
+    has no corpus to rebuild from: the verb must say so, naming the
+    unset field, instead of reporting "no compaction pending"."""
+    import pytest
+
+    from tests.test_maintenance_lease import _cfg
+    from poormans_kube_etl_spark.streaming.orchestrator import Orchestrator
+
+    landing = str(tmp_path / "landing")
+    out_dir = str(tmp_path / "out")
+    os.makedirs(os.path.join(landing, "pending"), exist_ok=True)
+    o = Orchestrator(spark, landing, out_dir, dedup_index=_cfg("t_cli_srp"))
+    o._flag_compaction("srp")
+    args = ["compact", "--landing", landing, "--output", out_dir]
+    with pytest.raises(ValueError, match="vec_entity"):
+        main(args + ["--families", "srp"])
+    assert main(args) == 0  # minhash: no flag, nothing to rebuild
+    assert "minhash: no compaction pending" in capsys.readouterr().out

@@ -282,6 +282,93 @@ def test_deferred_compaction_lifecycle(spark, tmp_path):
         _drop(spark, "t_dfr_mhidx")
 
 
+def test_inline_compaction_rebuilds_inside_the_commit(spark, tmp_path):
+    """With ``compaction="inline"`` a budget-exceeded merge is compacted
+    before the commit's maintenance pass releases its lease: no
+    fragment trail and no raised flag survive the commit, every
+    settled ingest's marker is stamped, and the rebuilt artifact's
+    fingerprint is the full corpus's."""
+    import dataclasses
+
+    from poormans_kube_etl_spark.operators.exact_index import (
+        _PROP_PREFIX as _FP_PREFIX,
+    )
+    from poormans_kube_etl_spark.operators.index_artifact import corpus_fingerprint
+    from poormans_kube_etl_spark.operators.index_maintenance import read_fragments
+    from poormans_kube_etl_spark.operators.minhash_index import _PROP_PREFIX
+    from poormans_kube_etl_spark.sources import ingest as ingest_sources
+
+    o = _orch(spark, tmp_path, "inline", "t_inl_mhidx")
+    o.dedup_index = dataclasses.replace(
+        o.dedup_index, max_fragments=0, compaction="inline"
+    )
+    try:
+        make_doc_folder(o.landing_dir, "1538055240", DOCS_0)
+        assert o.run_once() is not None
+        make_doc_folder(o.landing_dir, "1538055300", DOCS_1)
+        assert o.run_once() is not None  # merge past the budget
+        assert o.errored is None
+        assert read_fragments(spark, "t_inl_mhidx_buckets", _PROP_PREFIX) == 0
+        assert read_fragments(spark, "t_inl_mhidx_fp_fps", _FP_PREFIX) == 0
+        assert o.compaction_pending() == []
+        for ingest in ("1538055240", "1538055300"):
+            for family in ("minhash", "exact"):
+                assert ingest_sources.path_exists(
+                    spark, o._family_marker(ingest, family)
+                )
+        settled = o._settled_names("docs")
+        assert settled == ["1538055240", "1538055300"]
+        full = corpus_fingerprint(o._committed_for("docs", settled), "doc_id")
+        assert full == "4:202"
+        assert read_corpus_minhash_index(spark, "t_inl_mhidx").constants[
+            "fingerprint"
+        ] == full
+        assert read_corpus_fp_index(spark, "t_inl_mhidx_fp").constants[
+            "fingerprint"
+        ] == full
+        assert _shingle_docs(spark, "t_inl_mhidx") == {"101", "102", "201", "202"}
+        assert not ingest_sources.path_exists(
+            spark, f"{o.output_dir}/dedup_index/_MAINT_LEASE"
+        )
+    finally:
+        _drop(spark, "t_inl_mhidx")
+
+
+def test_full_build_clears_a_raised_compaction_flag(spark, tmp_path):
+    """A flag raised under ``compaction="defer"`` does not outlive the
+    next full build: after the deployment switches to inline, the next
+    commit's compaction rebuilds the family and the flag is gone, so
+    ``compaction_pending`` never reports a family whose artifact has
+    no fragment trail."""
+    import dataclasses
+
+    from poormans_kube_etl_spark.operators.index_maintenance import read_fragments
+    from poormans_kube_etl_spark.operators.minhash_index import _PROP_PREFIX
+
+    o = _orch(spark, tmp_path, "clear", "t_clr_mhidx", families=("minhash",))
+    o.dedup_index = dataclasses.replace(
+        o.dedup_index, max_fragments=0, compaction="defer"
+    )
+    try:
+        make_doc_folder(o.landing_dir, "1538055240", DOCS_0)
+        assert o.run_once() is not None
+        make_doc_folder(o.landing_dir, "1538055300", DOCS_1)
+        assert o.run_once() is not None
+        assert o.compaction_pending() == ["minhash"]
+
+        o.dedup_index = dataclasses.replace(o.dedup_index, compaction="inline")
+        make_doc_folder(o.landing_dir, "1538055360", DOCS_2)
+        assert o.run_once() is not None
+        assert o.errored is None
+        assert read_fragments(spark, "t_clr_mhidx_buckets", _PROP_PREFIX) == 0
+        assert o.compaction_pending() == []
+        assert _shingle_docs(spark, "t_clr_mhidx") == {
+            "101", "102", "201", "202", "301", "302",
+        }
+    finally:
+        _drop(spark, "t_clr_mhidx")
+
+
 def make_vec_folder(landing: str, ts: str, rows) -> str:
     """A JSONL VECTOR entity folder (``emb``): the srp family's input.
     The graph sink preserves the array<float> column; the schema
