@@ -46,6 +46,7 @@ import re
 import threading
 import time
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +55,9 @@ from poormans_kube_etl_spark.functions import duration_hmm
 from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import ingest as ingest_sources
 from poormans_kube_etl_spark.streaming.lease import FsLease
+
+if TYPE_CHECKING:
+    from poormans_kube_etl_spark.operators.index_artifact import IndexFamily
 
 MARKER_FILES = ("bulk.txt", "incremental.txt")
 PENDING_PREFIX = "pending"
@@ -66,14 +70,11 @@ PENDING_PREFIX = "pending"
 # *.gz verify glob.
 CLAIM_FILE = "_CLAIMED"
 
-# index-family corpus source → (sink dir under the output dir, entity
-# field, id field, payload field). Text families read the doc entity's
-# INDEX sink; vector families read the GRAPH sink, which preserves
-# source column types (the index sink casts everything to string).
-_CORPUS_SOURCES = {
-    "docs": ("index", "entity", "id_col", "text_col"),
-    "vectors": ("graph/nodes", "vec_entity", "vec_id_col", "vec_col"),
-}
+# index-family corpus source → its sink dir under the output dir. Text
+# families read the doc entity's INDEX sink; vector families read the
+# GRAPH sink, which preserves source column types (the index sink casts
+# everything to string).
+_SINK_DIRS = {"docs": "index", "vectors": "graph/nodes"}
 
 METRICS_COLUMNS = (
     "ingest",
@@ -108,6 +109,35 @@ class IngestParams:
 
 
 @dataclass(frozen=True)
+class CorpusSource:
+    """A committed corpus the index families read: ``entity``'s rows,
+    keyed by ``id_col``, with the indexed payload in ``col``. ``name``
+    is the families' ``source`` (``docs`` or ``vectors``)."""
+
+    name: str
+    entity: str
+    id_col: str
+    col: str
+
+
+@dataclass(frozen=True)
+class FamilyBinding:
+    """One configured index family, resolved against its config: the
+    registry spec, the catalog name (``index_name`` + the spec's
+    catalog suffix), the build parameters the config pins (the spec's
+    config mapping) and the corpus the family is built from."""
+
+    spec: IndexFamily
+    index_name: str
+    params: dict[str, Any]
+    corpus: CorpusSource
+
+    @property
+    def build_params(self) -> dict[str, Any]:
+        return {**self.spec.defaults, **self.params}
+
+
+@dataclass(frozen=True)
 class DedupIndexMaintenance:
     """Opt-in dedup-index lifecycle wiring (r10, VERDICT r09 #3): when
     set, ``finalize()`` folds each committed ingest's documents into a
@@ -136,10 +166,14 @@ class DedupIndexMaintenance:
       address its GRAPH-sink columns (the graph sink preserves source
       types; the index sink casts everything to string, so it cannot
       feed a vector family). Banding is auto-planned at
-      ``srp_threshold`` from the settled corpus size.
+      ``srp_threshold`` from the settled corpus size. Listing srp
+      requires ``vec_entity``: construction rejects a configured family
+      whose corpus has no entity, so ``families`` is the only switch.
 
-    An ingest that carries nothing for a family's source stamps the
-    family's marker as a no-op.
+    ``bindings`` holds one ``FamilyBinding`` per configured family, in
+    registry order (the maintenance order, whatever order ``families``
+    lists them in). An ingest that carries nothing for a family's
+    source stamps the family's marker as a no-op.
 
     Durable PER-FAMILY per-ingest markers (r12, ADVICE r11 — stamped
     immediately after each family's merge) make maintenance idempotent
@@ -187,11 +221,16 @@ class DedupIndexMaintenance:
     max_fragments: int = 16
     lease_timeout_s: float = 1800.0
     compaction: str = "inline"  # or "defer" — see class docstring
-    # the vector entity feeding the "srp" family (None = family off)
+    # the vector entity feeding the "srp" family; required when srp is
+    # listed in ``families``
     vec_entity: str | None = None
     vec_id_col: str = "vec_id"
     vec_col: str = "embedding"
     srp_threshold: float = 0.9
+    # resolved by __post_init__, so dataclasses.replace re-resolves them
+    bindings: tuple[FamilyBinding, ...] = field(
+        init=False, repr=False, compare=False
+    )
 
     def __post_init__(self) -> None:
         # a misspelled family never stamps its marker (the pass re-runs
@@ -210,6 +249,31 @@ class DedupIndexMaintenance:
             raise ValueError(
                 f"compaction={self.compaction!r}; expected 'inline' or 'defer'"
             )
+        bindings = tuple(
+            FamilyBinding(
+                spec,
+                self.index_name + spec.catalog_suffix,
+                spec.configured(self),
+                self.corpus(spec.source),
+            )
+            for spec in INDEX_FAMILIES.values()
+            if spec.name in self.families
+        )
+        object.__setattr__(self, "bindings", bindings)
+
+    def corpus(self, source: str) -> CorpusSource:
+        """The committed corpus a family ``source`` names, from this
+        config's entity and column fields; ValueError naming the entity
+        field when it is unset."""
+        if source == "vectors":
+            entity_field = "vec_entity"
+            corpus = CorpusSource(source, self.vec_entity, self.vec_id_col, self.vec_col)
+        else:
+            entity_field = "entity"
+            corpus = CorpusSource(source, self.entity, self.id_col, self.text_col)
+        if corpus.entity is None:
+            raise ValueError(f"{entity_field} is unset, so there is no {source!r} corpus")
+        return corpus
 
 
 @dataclass
@@ -917,67 +981,42 @@ class Orchestrator:
             return None
         return {st.getPath().getName() for st in fs.listStatus(jp)}
 
-    def _sink_path(self, source: str, ingest_name: str) -> str:
+    def _sink_path(self, corpus: CorpusSource, ingest_name: str) -> str:
         """One ingest's committed sink for a family corpus source."""
-        sub, entity_attr, _, _ = _CORPUS_SOURCES[source]
-        entity = getattr(self.dedup_index, entity_attr)
-        return f"{self.output_dir}/{sub}/{ingest_name}/{entity}"
+        return f"{self.output_dir}/{_SINK_DIRS[corpus.name]}/{ingest_name}/{corpus.entity}"
 
-    def _carries(self, source: str, ingest_name: str) -> bool:
-        entity = getattr(self.dedup_index, _CORPUS_SOURCES[source][1])
-        return entity is not None and ingest_sources.path_exists(
-            self.spark, self._sink_path(source, ingest_name)
-        )
-
-    def _committed_for(self, source: str, names: list[str]) -> DataFrame:
+    def _committed_for(self, corpus: CorpusSource, names: list[str]) -> DataFrame:
         """The committed corpus pinned to an EXPLICIT ingest list — full
         builds read exactly the set whose markers they will stamp; a
         glob would race with a peer's in-flight sink commit (half a
         peer's files in the build, its marker stamped, the other half
         never indexed until compaction)."""
-        _, _, id_attr, col_attr = _CORPUS_SOURCES[source]
-        cfg = self.dedup_index
-        paths = [self._sink_path(source, n) for n in names]
-        return self.spark.read.parquet(*paths).select(
-            getattr(cfg, id_attr), getattr(cfg, col_attr)
-        )
+        paths = [self._sink_path(corpus, n) for n in names]
+        return self.spark.read.parquet(*paths).select(corpus.id_col, corpus.col)
 
-    def _settled_names(self, source: str) -> list[str]:
-        """Ingests whose ``source`` sink AND metrics row both exist —
+    def _settled_names(self, corpus: CorpusSource) -> list[str]:
+        """Ingests whose ``corpus`` sink AND metrics row both exist —
         the metrics row lands after the sink commits (finalize order),
         so its presence proves the sink is fully committed, never a
         peer's mid-write _temporary state. Full index builds cover
         exactly this set; a peer mid-pipeline is excluded and merges its
         own delta under the lease later."""
-        root = f"{self.output_dir}/{_CORPUS_SOURCES[source][0]}"
-        fs, jp = ingest_sources.hadoop_fs(self.spark, root)
+        fs, jp = ingest_sources.hadoop_fs(self.spark, f"{self.output_dir}/{_SINK_DIRS[corpus.name]}")
         if not fs.exists(jp):
             return []
-        names = []
-        for st in fs.listStatus(jp):
-            n = st.getPath().getName()
-            if n.startswith("_") or n.startswith("."):
-                continue
-            if not ingest_sources.path_exists(self.spark, self._sink_path(source, n)):
-                continue
-            if not ingest_sources.path_exists(
-                self.spark, f"{self.output_dir}/ingest_metrics/{n}"
-            ):
-                continue
-            names.append(n)
-        return sorted(names)
-
-    @staticmethod
-    def _corpus_token_for(settled: list[str]) -> str:
-        return (
-            "ingests-v1:"
-            + hashlib.md5("\n".join(settled).encode()).hexdigest()
+        names = (st.getPath().getName() for st in fs.listStatus(jp))
+        return sorted(
+            n
+            for n in names
+            if not n.startswith(("_", "."))
+            and ingest_sources.path_exists(self.spark, self._sink_path(corpus, n))
+            and ingest_sources.path_exists(self.spark, f"{self.output_dir}/ingest_metrics/{n}")
         )
 
-    def _settled_corpus(self, source: str) -> tuple[list[str], str]:
+    def _settled_corpus(self, corpus: CorpusSource) -> tuple[list[str], str]:
         """(settled ingest names, their version token) for one source."""
-        settled = self._settled_names(source)
-        return settled, self._corpus_token_for(settled)
+        settled = self._settled_names(corpus)
+        return settled, "ingests-v1:" + hashlib.md5("\n".join(settled).encode()).hexdigest()
 
     def corpus_version_token(self) -> str:
         """The committed corpus's freshness stamp (r12, VERDICT r11
@@ -996,41 +1035,13 @@ class Orchestrator:
         committed sink (nothing in the lifecycle does one) — is the
         deep-verify fallback's job, the same trade the r11 listing
         stamp made against byte-identical rewrites."""
-        return self._settled_corpus("docs")[1]
+        return self._settled_corpus(self.dedup_index.corpus("docs"))[1]
 
     def vec_corpus_version_token(self) -> str:
         """The vector source's twin of corpus_version_token — over the
-        settled VECTOR ingest set (r12)."""
-        return self._settled_corpus("vectors")[1]
-
-    def _index_families(self) -> list:
-        """The configured families' specs, in registry order (the
-        maintenance order, whatever order the config lists them in)."""
-        from poormans_kube_etl_spark.operators.index_maintenance import (
-            INDEX_FAMILIES,
-        )
-
-        return [
-            f for f in INDEX_FAMILIES.values() if f.name in self.dedup_index.families
-        ]
-
-    def _index_name(self, spec) -> str:
-        return self.dedup_index.index_name + spec.catalog_suffix
-
-    def _param_drift(self, spec, constants: dict) -> dict[str, tuple]:
-        """Build parameters where this deployment's config disagrees
-        with what the persisted artifact was BUILT with —
-        ``{key: (configured, recorded)}``, over the spec's config
-        mapping (the one the writer uses). Guards the compaction entry
-        point (r13): a rebuild silently re-plans the index with
-        whatever the caller's flags say, so a CLI invocation whose
-        flags drifted from the deployment's maintenance config would
-        change banding/shingling under every consumer's feet."""
-        return {
-            k: (v, constants[k])
-            for k, v in spec.configured(self.dedup_index).items()
-            if k in constants and str(v) != str(constants[k])
-        }
+        settled VECTOR ingest set (r12). ValueError naming
+        ``vec_entity`` when the config has no vector entity."""
+        return self._settled_corpus(self.dedup_index.corpus("vectors"))[1]
 
     def index_freshness_report(self, deep: bool = False) -> dict[str, dict]:
         """Operator-facing freshness probe for the maintained index
@@ -1058,33 +1069,31 @@ class Orchestrator:
             read_index,
         )
 
-        cfg = self.dedup_index
         corpus = functools.cache(self._settled_corpus)
 
         @functools.cache
-        def deep_fingerprint(source: str) -> str | None:
+        def deep_fingerprint(source: CorpusSource) -> str | None:
             settled, _ = corpus(source)
             if not settled:
                 return None
-            id_col = getattr(cfg, _CORPUS_SOURCES[source][2])
-            return corpus_fingerprint(self._committed_for(source, settled), id_col)
+            return corpus_fingerprint(self._committed_for(source, settled), source.id_col)
 
         report: dict[str, dict] = {}
-        for spec in self._index_families():
+        for b in self.dedup_index.bindings:
             try:
-                constants = read_index(spec, self.spark, self._index_name(spec)).constants
+                constants = read_index(b.spec, self.spark, b.index_name).constants
             except ValueError:
-                report[spec.name] = {
+                report[b.spec.name] = {
                     "readable": False,
                     "token_fresh": False,
                     "deep_fresh": None,
                 }
                 continue
-            deep_now = deep_fingerprint(spec.source) if deep else None
-            report[spec.name] = {
+            deep_now = deep_fingerprint(b.corpus) if deep else None
+            report[b.spec.name] = {
                 "readable": True,
                 "token_fresh": constants.get("source_fingerprint")
-                == corpus(spec.source)[1],
+                == corpus(b.corpus)[1],
                 "deep_fresh": (
                     constants.get("fingerprint") == deep_now
                     if deep_now is not None
@@ -1093,26 +1102,21 @@ class Orchestrator:
             }
         return report
 
-    def _family_writer(self, family: str, root: str, source_fingerprint: str):
+    def _family_writer(self, b: FamilyBinding, root: str, source_fingerprint: str):
         """The FULL-CORPUS builder for one index family — one callable
         taking the corpus DataFrame and writing the family's artifact
-        with this deployment's parameters (the spec's config mapping).
-        Called only from ``_full_build``, so bootstrap and compaction
-        can never drift in banding/bucketing/stamping parameters."""
+        with the binding's build parameters. Called only from
+        ``_full_build``, so bootstrap and compaction can never drift in
+        banding/bucketing/stamping parameters."""
         from poormans_kube_etl_spark.operators.index_artifact import write_index
-        from poormans_kube_etl_spark.operators.index_maintenance import (
-            INDEX_FAMILIES,
-        )
 
-        cfg = self.dedup_index
-        spec = INDEX_FAMILIES[family]
         return lambda corpus: write_index(
-            spec,
+            b.spec,
             corpus,
-            self._index_name(spec),
-            {**spec.defaults, **spec.configured(cfg)},
-            n_buckets=cfg.n_buckets,
-            path=f"{root}/{family}",
+            b.index_name,
+            b.build_params,
+            n_buckets=self.dedup_index.n_buckets,
+            path=f"{root}/{b.spec.name}",
             mode="overwrite",
             source_fingerprint=source_fingerprint,
         )
@@ -1153,82 +1157,93 @@ class Orchestrator:
         under every consumer. When the family's artifact is readable,
         its recorded build constants are compared against the config
         first; a mismatch raises ValueError naming the drifted keys,
-        unless ``allow_param_change=True`` re-plans deliberately. A
-        due family whose corpus source has no configured entity (srp
-        without ``vec_entity``) raises ValueError naming the field:
-        there is no corpus to rebuild from."""
-        cfg = self.dedup_index
-        specs = [s for s in self._index_families() if s.policy != "rebuild"]
+        unless ``allow_param_change=True`` re-plans deliberately."""
+        bindings = [b for b in self.dedup_index.bindings if b.spec.policy != "rebuild"]
         lease = self._maint_lease()
-        lease.acquire(timeout_s=cfg.lease_timeout_s)
+        lease.acquire(timeout_s=self.dedup_index.lease_timeout_s)
         try:
             due = [
-                s
-                for s in specs
+                b
+                for b in bindings
                 if force
-                or ingest_sources.path_exists(self.spark, self._compaction_flag(s.name))
+                or ingest_sources.path_exists(self.spark, self._compaction_flag(b.spec.name))
             ]
-            for s in due:
-                attr = _CORPUS_SOURCES[s.source][1]
-                if getattr(cfg, attr) is None:
-                    raise ValueError(
-                        f"compact {s.name}: {attr} is unset, so there is no "
-                        f"{s.source} corpus to rebuild from"
-                    )
-            return dict.fromkeys((s.name for s in specs), False) | (
-                self._compact_families(lease, due, guard=not allow_param_change)
+            return dict.fromkeys((b.spec.name for b in bindings), False) | (
+                self._compact_families(
+                    lease,
+                    due,
+                    functools.cache(self._settled_corpus),
+                    guard=not allow_param_change,
+                )
             )
         finally:
             lease.release()
 
-    def _compact_families(self, lease, specs, guard: bool) -> dict[str, bool]:
-        """The compaction step, shared by both callers: per family, read
-        the settled set, run the param guard (when ``guard``), rebuild
+    def _compact_families(self, lease, bindings, corpus, guard: bool) -> dict[str, bool]:
+        """The compaction step, shared by both callers: per family, take
+        the settled set from ``corpus`` (the caller's per-source
+        ``_settled_corpus`` cache — the commit pass hands in the listing
+        its merges used), run the param guard (when ``guard``), rebuild
         through ``_full_build`` and renew the lease (``_renew_or_abort``).
         The caller holds ``lease``. Returns ``{family: rebuilt?}``; a
-        family with no settled ingest has nothing to rebuild."""
+        family with no settled ingest has nothing to rebuild.
+
+        The param guard compares the binding's config-mapped build
+        parameters against the artifact's recorded constants: a rebuild
+        silently re-plans the index with whatever the caller's flags
+        say, so a CLI invocation whose flags drifted from the
+        deployment's maintenance config would change banding/shingling
+        under every consumer's feet."""
         from poormans_kube_etl_spark.operators.index_artifact import read_index
 
-        corpus = functools.cache(self._settled_corpus)
         compacted: dict[str, bool] = {}
-        for spec in specs:
-            settled, token = corpus(spec.source)
-            compacted[spec.name] = bool(settled)
+        for b in bindings:
+            settled, token = corpus(b.corpus)
+            compacted[b.spec.name] = bool(settled)
             if not settled:
                 continue
             if guard:
                 try:
-                    constants = read_index(spec, self.spark, self._index_name(spec)).constants
+                    constants = read_index(b.spec, self.spark, b.index_name).constants
                 except ValueError:
                     constants = {}  # unreadable: the rebuild is a bootstrap
-                drift = self._param_drift(spec, constants)
+                drift = {
+                    k: (v, constants[k])
+                    for k, v in b.params.items()
+                    if k in constants and str(v) != str(constants[k])
+                }
                 if drift:
                     raise ValueError(
-                        f"compact {spec.name}: config disagrees with the "
+                        f"compact {b.spec.name}: config disagrees with the "
                         f"artifact's build constants "
-                        f"{{{', '.join(f'{k}: configured {c!r} vs built {b!r}' for k, (c, b) in sorted(drift.items()))}}} "
+                        f"{{{', '.join(f'{k}: configured {c!r} vs built {built!r}' for k, (c, built) in sorted(drift.items()))}}} "
                         f"— a rebuild would silently re-plan the index; "
                         f"fix the config or pass allow_param_change=True "
                         f"to re-plan deliberately"
                     )
-            self._full_build(spec, settled, token)
-            self._renew_or_abort(lease, spec.name)
+            self._full_build(b, settled, token)
+            self._renew_or_abort(lease, b.spec.name)
         return compacted
 
-    def _full_build(self, spec, settled: list[str], token: str) -> None:
-        """The one full build: write ``spec``'s artifact from the settled
-        corpus (pinned by explicit paths), stamp every covered ingest's
-        marker, so a peer waiting on the lease never re-appends what the
-        build covered, then clear the family's compaction flag, since
-        the new artifact has no fragment trail. Bootstrap, unreadable
-        artifact, bm25's per-commit rebuild and compaction all land
-        here."""
-        self._family_writer(spec.name, f"{self.output_dir}/dedup_index", token)(
-            self._committed_for(spec.source, settled)
+    def _full_build(self, b: FamilyBinding, settled: list[str], token: str) -> None:
+        """The one full build: write the family's artifact from the
+        settled corpus (pinned by explicit paths), stamp every covered
+        ingest's marker, so a peer waiting on the lease never re-appends
+        what the build covered, then clear the family's compaction flag,
+        since the new artifact has no fragment trail; the last flag
+        takes its directory along (flags are only written under the
+        lease this runs under). Bootstrap, unreadable artifact, bm25's
+        per-commit rebuild and compaction all land here."""
+        self._family_writer(b, f"{self.output_dir}/dedup_index", token)(
+            self._committed_for(b.corpus, settled)
         )
         for n in settled:
-            self._write_dedup_index_marker(self._family_marker(n, spec.name))
-        ingest_sources.delete_path(self.spark, self._compaction_flag(spec.name))
+            self._write_dedup_index_marker(self._family_marker(n, b.spec.name))
+        flag = self._compaction_flag(b.spec.name)
+        if ingest_sources.delete_path(self.spark, flag):
+            fs, flags = ingest_sources.hadoop_fs(self.spark, flag.rsplit("/", 1)[0])
+            if not fs.listStatus(flags):
+                fs.delete(flags, False)
 
     def _maintain_dedup_index(self, params: IngestParams) -> None:
         """Fold the committed ingest's documents into the configured
@@ -1282,8 +1297,7 @@ class Orchestrator:
         merged = self._merged_families(params.ingest_name)
         if merged is None:
             return  # pre-r12 all-merged FILE marker (relaunch path)
-        families = self._index_families()
-        if all(f.name in merged for f in families):
+        if all(b.spec.name in merged for b in cfg.bindings):
             return  # every family already folded this ingest in
         # Families this ingest carries NOTHING for are stamped as no-op
         # merges, outside the lease (per-ingest markers are
@@ -1292,17 +1306,18 @@ class Orchestrator:
         # normal shape (entity sets derive from the files present, r10
         # ADVICE medium); reading its absent sink would raise and set
         # X7. The stamp keeps relaunches from retrying forever.
-        carried = {
-            source: self._carries(source, params.ingest_name)
-            for source in _CORPUS_SOURCES
-        }
-        for f in families:
-            if f.name not in merged and not carried[f.source]:
+        carried = functools.cache(
+            lambda corpus: ingest_sources.path_exists(
+                self.spark, self._sink_path(corpus, params.ingest_name)
+            )
+        )
+        for b in cfg.bindings:
+            if b.spec.name not in merged and not carried(b.corpus):
                 self._write_dedup_index_marker(
-                    self._family_marker(params.ingest_name, f.name)
+                    self._family_marker(params.ingest_name, b.spec.name)
                 )
-                merged.add(f.name)
-        if all(f.name in merged for f in families):
+                merged.add(b.spec.name)
+        if all(b.spec.name in merged for b in cfg.bindings):
             return
         root = f"{self.output_dir}/dedup_index"
         lease = self._maint_lease()
@@ -1317,17 +1332,16 @@ class Orchestrator:
             )
             # one count+max per delta, composed into every family's stamp
             delta_count_max = functools.cache(
-                lambda source: count_max(
-                    delta(source), getattr(cfg, _CORPUS_SOURCES[source][2])
-                )
+                lambda source: count_max(delta(source), source.id_col)
             )
             flagged = []
-            for spec in families:
+            for b in cfg.bindings:
+                spec = b.spec
                 if ingest_sources.path_exists(
                     self.spark, self._family_marker(params.ingest_name, spec.name)
                 ):
                     continue  # merged already, or a peer's full build covered us
-                settled, token = corpus(spec.source)
+                settled, token = corpus(b.corpus)
                 # an append needs the artifact readable — from the
                 # catalog, or re-attached from its manifest after a
                 # relaunch forgot the tables (O(metadata), r11); a
@@ -1337,33 +1351,33 @@ class Orchestrator:
                 if not full_build:
                     try:
                         read_or_attach(
-                            lambda: read_index(spec, self.spark, self._index_name(spec)),
+                            lambda: read_index(spec, self.spark, b.index_name),
                             lambda: attach_artifact(self.spark, f"{root}/{spec.name}"),
                         )
                     except ValueError:
                         full_build = True
                 if full_build:
-                    self._full_build(spec, settled, token)
+                    self._full_build(b, settled, token)
                 else:
                     # looked up at call time, so wrappers installed on
                     # the module (tracing, fault injection) see it
                     merge = getattr(index_maintenance, spec.merge_entry)
                     if merge(
-                        delta(spec.source),
-                        self._index_name(spec),
+                        delta(b.corpus),
+                        b.index_name,
                         max_fragments=cfg.max_fragments,
                         source_fingerprint=token,
-                        delta_count_max=delta_count_max(spec.source),
+                        delta_count_max=delta_count_max(b.corpus),
                     )["needs_compaction"]:
                         self._flag_compaction(spec.name)
-                        flagged.append(spec)
+                        flagged.append(b)
                     # stamp AFTER the append lands
                     self._write_dedup_index_marker(
                         self._family_marker(params.ingest_name, spec.name)
                     )
                 self._renew_or_abort(lease, spec.name)
             if cfg.compaction == "inline":
-                self._compact_families(lease, flagged, guard=False)
+                self._compact_families(lease, flagged, corpus, guard=False)
         finally:
             lease.release()
 

@@ -18,6 +18,7 @@ than one, the total. Default PATH: ``poormans_kube_etl_spark``.
 
 from __future__ import annotations
 
+import argparse
 import ast
 import io
 import os
@@ -64,7 +65,9 @@ def code_lines(source: str) -> set[int]:
 def _find(tree: ast.AST, qualname: str) -> ast.AST:
     node = tree
     for part in qualname.split("."):
-        node = next(n for n in node.body if isinstance(n, _DEFS) and n.name == part)
+        node = next((n for n in node.body if isinstance(n, _DEFS) and n.name == part), None)
+        if node is None:
+            raise LookupError(f"no definition {qualname!r}")
     return node
 
 
@@ -93,10 +96,23 @@ def _targets(paths: list[str]) -> list[str]:
 
 
 def main(argv: list[str]) -> int:
-    targets = _targets(argv or ["poormans_kube_etl_spark"])
+    parser = argparse.ArgumentParser(
+        prog="code_lines.py",
+        description=__doc__,
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+    )
+    parser.add_argument("paths", nargs="*", metavar="PATH", default=["poormans_kube_etl_spark"])
+    args = parser.parse_args(argv)
+    missing = [p for p in args.paths if not os.path.exists(p.partition("::")[0])]
+    if missing:
+        parser.error(f"no such path: {', '.join(missing)}")
+    targets = _targets(args.paths)
     total = 0
     for t in targets:
-        n = count(t)
+        try:
+            n = count(t)
+        except LookupError as e:
+            parser.error(f"{t}: {e}")
         total += n
         print(f"{n:7d}  {t}")
     if len(targets) > 1:

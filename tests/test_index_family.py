@@ -75,7 +75,9 @@ VECS_A = [(i, _vec(i)) for i in range(1, 7)]
 VECS_B = [(7, _vec(2, 0.01)), (8, _vec(8)), (9, _vec(9)), (10, _vec(5, 0.02))]
 VECS_PROBE = [(100, _vec(1, 0.01)), (101, _vec(8, 0.01)), (102, _vec(42))]
 
-CFG = DedupIndexMaintenance(entity="doc", families=tuple(INDEX_FAMILIES), gram_k=3)
+CFG = DedupIndexMaintenance(
+    entity="doc", families=tuple(INDEX_FAMILIES), gram_k=3, vec_entity="emb"
+)
 
 
 def _frames(spark, source: str):
@@ -211,7 +213,9 @@ def test_rebuild_family_equals_fresh_write(spark, family):
 
 
 def test_maintenance_config_rejects_unknown_families_and_compaction():
-    DedupIndexMaintenance(entity="doc", families=tuple(INDEX_FAMILIES))
+    DedupIndexMaintenance(entity="doc", families=tuple(INDEX_FAMILIES), vec_entity="emb")
+    with pytest.raises(ValueError, match="vec_entity"):
+        DedupIndexMaintenance(entity="doc", families=("srp",))
     with pytest.raises(ValueError, match="unknown index families"):
         DedupIndexMaintenance(entity="doc", families=("minhsh",))
     with pytest.raises(ValueError, match="compaction"):
@@ -240,13 +244,14 @@ def test_relaunch_reattaches_every_append_family(spark, tmp_path, monkeypatch):
         ),
     )
     specs = [INDEX_FAMILIES[f] for f in docs_families]
+    names = {b.spec.name: b.index_name for b in o.dedup_index.bindings}
     try:
         make_doc_folder(landing, "1538055240", INGEST_A)
         assert o.run_once() is not None  # bootstrap
         make_doc_folder(landing, "1538055999", INGEST_B)
         assert o.run_once() is not None  # first merge
         for spec in specs:
-            _drop(spark, spec, o._index_name(spec))
+            _drop(spark, spec, names[spec.name])
 
         written = []
         real_write = index_artifact.write_index
@@ -262,12 +267,12 @@ def test_relaunch_reattaches_every_append_family(spark, tmp_path, monkeypatch):
         assert written == [f for f in docs_families if INDEX_FAMILIES[f].policy == "rebuild"]
         for spec in specs:
             if spec.policy == "append":
-                table = o._index_name(spec) + spec.tables[0].suffix
+                table = names[spec.name] + spec.tables[0].suffix
                 assert read_fragments(spark, table, spec.prefix) == 2, spec.name
         assert all(r["token_fresh"] for r in o.index_freshness_report().values())
     finally:
         for spec in specs:
-            _drop(spark, spec, o._index_name(spec))
+            _drop(spark, spec, names[spec.name])
 
 
 # the query face that opens each family's artifact, and its artifact stem

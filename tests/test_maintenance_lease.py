@@ -70,7 +70,9 @@ def make_doc_folder(landing: str, ts: str, rows) -> str:
     return folder
 
 
-def _cfg(index_name: str, families=("minhash", "exact")) -> DedupIndexMaintenance:
+def _cfg(
+    index_name: str, families=("minhash", "exact"), vec_entity=None
+) -> DedupIndexMaintenance:
     return DedupIndexMaintenance(
         entity="doc",
         id_col="doc_id",
@@ -82,10 +84,13 @@ def _cfg(index_name: str, families=("minhash", "exact")) -> DedupIndexMaintenanc
         gram_k=8,
         n_buckets=2,
         lease_timeout_s=120.0,
+        vec_entity=vec_entity,
     )
 
 
-def _orch(spark, tmp_path, sub: str, index_name: str, families=("minhash", "exact")):
+def _orch(
+    spark, tmp_path, sub: str, index_name: str, families=("minhash", "exact"), vec_entity=None
+):
     landing = str(tmp_path / sub / "landing")
     output = str(tmp_path / sub / "out")
     os.makedirs(os.path.join(landing, "pending"), exist_ok=True)
@@ -94,7 +99,7 @@ def _orch(spark, tmp_path, sub: str, index_name: str, families=("minhash", "exac
         landing,
         output,
         poll_interval_s=0.01,
-        dedup_index=_cfg(index_name, families),
+        dedup_index=_cfg(index_name, families, vec_entity),
     )
 
 
@@ -246,6 +251,8 @@ def test_deferred_compaction_lifecycle(spark, tmp_path):
         make_doc_folder(o.landing_dir, "1538055240", DOCS_0)
         assert o.run_once() is not None  # bootstrap: fragments=0, no flag
         assert o.compaction_pending() == []
+        with pytest.raises(ValueError, match="vec_entity"):
+            o.vec_corpus_version_token()  # no vector entity: no vector corpus
 
         # budget-exceeded merge DEFERS: delta lands, flag raised, no rebuild
         make_doc_folder(o.landing_dir, "1538055300", DOCS_1)
@@ -316,9 +323,10 @@ def test_inline_compaction_rebuilds_inside_the_commit(spark, tmp_path):
                 assert ingest_sources.path_exists(
                     spark, o._family_marker(ingest, family)
                 )
-        settled = o._settled_names("docs")
+        docs = o.dedup_index.corpus("docs")
+        settled = o._settled_names(docs)
         assert settled == ["1538055240", "1538055300"]
-        full = corpus_fingerprint(o._committed_for("docs", settled), "doc_id")
+        full = corpus_fingerprint(o._committed_for(docs, settled), "doc_id")
         assert full == "4:202"
         assert read_corpus_minhash_index(spark, "t_inl_mhidx").constants[
             "fingerprint"
@@ -329,6 +337,10 @@ def test_inline_compaction_rebuilds_inside_the_commit(spark, tmp_path):
         assert _shingle_docs(spark, "t_inl_mhidx") == {"101", "102", "201", "202"}
         assert not ingest_sources.path_exists(
             spark, f"{o.output_dir}/dedup_index/_MAINT_LEASE"
+        )
+        # the last cleared flag takes its directory along
+        assert not ingest_sources.path_exists(
+            spark, f"{o.output_dir}/dedup_index/_needs_compaction"
         )
     finally:
         _drop(spark, "t_inl_mhidx")
@@ -402,16 +414,15 @@ def test_srp_family_rides_the_ingest_lifecycle(spark, tmp_path):
     families — bootstrap on first commit, delta append after, per-family
     marker idempotence — with the delta read from the GRAPH sink (type-
     preserving), and doc-only ingests stamping the family as a no-op."""
-    import dataclasses
-
     from poormans_kube_etl_spark.operators.similarity_index import (
         embedding_incremental_near_pairs_indexed,
         read_corpus_srp_index,
     )
     from poormans_kube_etl_spark.sources import ingest as ingest_sources
 
-    o = _orch(spark, tmp_path, "srp", "t_srp_mhidx", families=("minhash", "srp"))
-    o.dedup_index = dataclasses.replace(o.dedup_index, vec_entity="emb")
+    o = _orch(
+        spark, tmp_path, "srp", "t_srp_mhidx", families=("minhash", "srp"), vec_entity="emb"
+    )
     base = [1.0, 0.0, 0.5, -0.25, 0.75, -1.0, 0.1, 0.9]
     try:
         # ingest A: three vectors -> srp bootstrap (doc families no-op)
@@ -486,10 +497,9 @@ def test_deep_check_flags_out_of_band_vector_rewrite(spark, tmp_path):
     count:max aggregate recompute the doc sink has had via the query
     faces' deep_fingerprint gate — must cover the vector sink the same
     way: token still fresh, deep stale."""
-    import dataclasses
-
-    o = _orch(spark, tmp_path, "deepv", "t_dpv_mhidx", families=("minhash", "srp"))
-    o.dedup_index = dataclasses.replace(o.dedup_index, vec_entity="emb")
+    o = _orch(
+        spark, tmp_path, "deepv", "t_dpv_mhidx", families=("minhash", "srp"), vec_entity="emb"
+    )
     base = [1.0, 0.0, 0.5, -0.25, 0.75, -1.0, 0.1, 0.9]
     try:
         make_vec_folder(
