@@ -35,7 +35,7 @@ def cached_expr(sql: str) -> Column:
     ``id()`` key without a reference lets CPython hand a new context
     the dead one's address, which would serve stale handles on exactly
     the restart path this cache exists to survive (same discipline as
-    ``sources/tables._TABLE_CACHE``)."""
+    the session memo, ``sources/tables.memo_get``)."""
     global _EXPR_CACHE_CTX
     from pyspark import SparkContext
 

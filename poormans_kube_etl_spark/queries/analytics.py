@@ -11,12 +11,10 @@ from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.operators.text import normalize_text, tokens
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table, spread_small_scan
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
     df = load_table(spark, sf_dir, name)
     # the analytics queries explode tokens/bigrams (~200x per doc row):
     # spread single-row-group document scans first (inert otherwise)

@@ -9,21 +9,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table, spread_small_scan
 
 # ASCII character classes only: Java util.regex and RE2 agree on these
-# one persisted funnel boundary per session (see
-# train_corpus_build_funnel): sf_dir -> the persisted per-doc frame
-_FUNNEL_CACHE: dict[str, "DataFrame"] = {}
-
 _EMAIL = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 _PHONE = "\\+?[0-9][0-9()\\- ]{7,}[0-9]"
 _IPV4 = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # consumers explode tokens/sentences/shingles (high per-row
     # amplification): spread single-row-group scans first (inert for
     # tiny and at-scale inputs — see sources.spread_small_scan)
@@ -178,7 +172,6 @@ def clean_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     [0,255] (floor — unambiguous across engines, unlike ROUND at the
     half-boundary). Cuts embedding storage 4× for ANN candidate
     generation; rerank still uses the float vectors."""
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 100)
     v = F.transform("embedding", lambda x: x.cast("double"))
     lo, hi = F.array_min(v), F.array_max(v)
@@ -388,9 +381,9 @@ def train_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality+exact-dedup subtree for each of 4 stage aggregates plus the
     near-dup verify (~6 scans of documents). Now ONE pass computes
     per-doc stage flags (quality bool + min-id-per-fingerprint keeper
-    bool via a window), the frame is persisted (MEMORY_AND_DISK;
-    Spark's CacheManager dedupes re-persists of the same canonical
-    plan, so repeated builds don't accumulate storage), the a/b/c stage
+    bool via a window), the frame is persisted (MEMORY_AND_DISK) in a
+    session-memo slot versioned by the documents files, so repeated
+    builds reuse it instead of accumulating storage, the a/b/c stage
     rows come from ONE conditional aggregate over it, and only the
     near-dup stage pays its own pair/closure work — all of it reading
     the cache, never documents again. At 100 TB the same boundary would
@@ -405,34 +398,38 @@ def train_corpus_build_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_text,
         tokens,
     )
+    from poormans_kube_etl_spark.sources.tables import memo_persisted, table_version
 
-    docs = _docs(spark, sf_dir)
-    n_toks = F.size(tokens(normalize_text("text")))
-    w = Window.partitionBy("__fp")
-    per_doc = (
-        docs.select("doc_id", "text", "n_chars", n_toks.alias("n_toks"))
-        .withColumn("q_ok", (F.col("n_chars") >= 200) & (F.col("n_toks") >= 30))
-        .withColumn("__fp", fingerprint_md5("text"))
-        .withColumn(
-            "ed_ok",
-            F.col("q_ok")
-            & (
-                F.col("doc_id")
-                == F.min(F.when(F.col("q_ok"), F.col("doc_id"))).over(w)
-            ),
+    def stage_flags() -> DataFrame:
+        n_toks = F.size(tokens(normalize_text("text")))
+        w = Window.partitionBy("__fp")
+        return (
+            _docs(spark, sf_dir)
+            .select("doc_id", "text", "n_chars", n_toks.alias("n_toks"))
+            .withColumn("q_ok", (F.col("n_chars") >= 200) & (F.col("n_toks") >= 30))
+            .withColumn("__fp", fingerprint_md5("text"))
+            .withColumn(
+                "ed_ok",
+                F.col("q_ok")
+                & (
+                    F.col("doc_id")
+                    == F.min(F.when(F.col("q_ok"), F.col("doc_id"))).over(w)
+                ),
+            )
+            .select("doc_id", "text", "n_toks", "q_ok", "ed_ok")
         )
-        .select("doc_id", "text", "n_toks", "q_ok", "ed_ok")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+
+    # one persisted funnel boundary per session, in one session-memo
+    # slot (r9 review): a session sweeping several SFs would otherwise
+    # pin a documents-wide cache per sf_dir until shutdown, competing
+    # with later queries' execution memory
+    per_doc = memo_persisted(
+        spark,
+        ("funnel_per_doc",),
+        table_version(sf_dir, "documents"),
+        stage_flags,
+        StorageLevel.MEMORY_AND_DISK,
     )
-    # bound the cache to ONE funnel frame per session (r9 review): a
-    # session sweeping several SFs would otherwise pin a documents-wide
-    # cache per sf_dir until shutdown, competing with later queries'
-    # execution memory. Same-sf_dir rebuilds keep their entry (the
-    # CacheManager dedupe that makes bench reps reuse the cache).
-    stale = [k for k in _FUNNEL_CACHE if k != sf_dir]
-    for k in stale:
-        _FUNNEL_CACHE.pop(k).unpersist()
-    _FUNNEL_CACHE[sf_dir] = per_doc
     ed = per_doc.where("ed_ok")
     pairs = minhash_near_duplicates(
         ed.select("doc_id", "text"),

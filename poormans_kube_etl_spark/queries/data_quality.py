@@ -9,13 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -33,7 +27,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def dq_null_and_blank_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null/blank audit + primary-key uniqueness in one aggregation
     pass — count(col) vs count(*) is the null counter, no extra scans."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.agg(
         F.count(F.lit(1)).alias("n_rows"),
         (F.count(F.lit(1)) - F.count("text")).alias("null_text"),
@@ -63,11 +57,11 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Foreign-key orphan counts via left-anti joins — each check is one
     shuffle (or broadcast for dim parents); at scale run them per
     ingest partition, not per table."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     # one lazy plan: each check is a single-row aggregate over a
     # left-anti join, assembled by trivial 1×1 cross joins — no eager
     # driver-side .count() actions inside the builder
@@ -114,9 +108,9 @@ def dq_value_range_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range-constraint audit as a union of per-table single-pass
     conditional counts (each branch is scan+agg with the predicate
     inside the aggregate — never a separate filtered scan per rule)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    events = _t(spark, sf_dir, "events")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    events = load_table(spark, sf_dir, "events")
 
     def audit(df, tbl, col, pred):
         return df.agg(
@@ -172,7 +166,7 @@ def dq_mad_doc_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized joins (one row per source each); the wide scan is
     touched twice — at 100 TB you'd persist the (source, n_chars)
     projection, ~16 bytes/row, before the second pass."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     med = docs.groupBy("source").agg(
         F.percentile("n_chars", F.lit(0.5)).alias("med")
     )
@@ -234,7 +228,7 @@ def dq_encoding_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     two exact integers, so the 6-dp round can never flip cross-engine.
     Scale shape: one map pass over text + one source-keyed aggregation
     — no joins, no windows, partial aggregation absorbs everything."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     n_chars = F.length("text")
     # what REMAINS after stripping printable ASCII is the non-ASCII
     # count (r10 property test caught the inverted n_chars-minus form —

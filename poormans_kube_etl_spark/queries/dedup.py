@@ -34,7 +34,6 @@ from poormans_kube_etl_spark.operators.text import (
 )
 from poormans_kube_etl_spark.queries import register
 from poormans_kube_etl_spark.queries._fragments import shingle5_cte
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table, spread_small_scan
 
 # Caps keep the O(pairs) oracle affordable at sf0.1; Spark side uses the
@@ -47,7 +46,6 @@ _NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # NO spread here (r5 review): every amplified consumer in this
     # module routes through minhash/simhash/shingle OPERATORS, which
     # spread their own input — spreading at both altitudes paid a
@@ -433,7 +431,6 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures, banding, bucket join, exact Jaccard — from scratch,
     upgrading this family from rows-only to full value-hash parity.
     The xxhash64 default remains for throughput-first callers."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return minhash_near_duplicates(
         docs,
@@ -481,7 +478,6 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     only as the second engine's independent recomputation."""
     from poormans_kube_etl_spark.operators.graph import dedup_clusters
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_near_duplicates(
         docs,
@@ -518,7 +514,6 @@ def dedup_minhash_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFra
         minhash_incremental_near_duplicates,
     )
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     new = docs.where(F.col("doc_id") % 10 == 0)
     corpus = docs.where(F.col("doc_id") % 10 != 0)
@@ -563,7 +558,6 @@ def dedup_minhash_index_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFra
         minhash_incremental_near_duplicates_indexed,
     )
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     new = docs.where(F.col("doc_id") % 10 == 0)
     corpus = docs.where(F.col("doc_id") % 10 != 0)
@@ -631,7 +625,6 @@ def dedup_embedding_index_delta_pairs(spark: SparkSession, sf_dir: str) -> DataF
         embedding_incremental_near_pairs_indexed,
     )
 
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     delta = _planted_twins(emb).select("vec_id", "embedding")
     idx = open_index(
@@ -719,7 +712,6 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     — so the DuckDB oracle recomputes the entire pipeline exactly,
     upgrading this family from rows-only to full value-hash parity.
     The xxhash64 default remains for throughput-first callers."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     # blocking planned from the session count-statistic cache (r14):
     # plan_blocking(docs.count(), 3) re-ran a corpus count job on every
@@ -755,7 +747,6 @@ def dedup_embedding_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale path is similarity.lsh_topk / random-hyperplane buckets)."""
     from poormans_kube_etl_spark.operators.similarity import _dot_expr, _norm_expr
 
-    apply_runtime_confs(spark)
     emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < _EMB_PAIR_CAP)
     # per-side norms + one codegen'd pair dot — bit-identical to
     # cosine() (same elementwise order), so the oracle hash holds.
@@ -925,7 +916,6 @@ def dedup_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from poormans_kube_etl_spark.sources.tables import cached_table_count
 
-    apply_runtime_confs(spark)
     emb = _with_planted_near_dups(load_table(spark, sf_dir, "embeddings"))
     # banding planned from the session count-statistic cache (r14): the
     # auto path re-counted the augmented corpus on every build. The
@@ -986,7 +976,6 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash."""
     from poormans_kube_etl_spark.operators.text import rolling_window_hashes, token_hash
 
-    apply_runtime_confs(spark)
     # rolling hashes amplify per row and no operator spreads upstream;
     # per-token md5 rolls are hash-grade map work: the heavy spread tier
     docs = spread_small_scan(load_table(spark, sf_dir, "documents"), heavy=True)
@@ -1047,7 +1036,6 @@ def dedup_minhash_apply_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus-side scan never shuffles."""
     from poormans_kube_etl_spark.operators.graph import dedup_clusters
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_near_duplicates(
         docs,
@@ -1161,7 +1149,6 @@ def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         exploded_shingle_h0_md5,
     )
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < _JACCARD_DOC_CAP
     )
@@ -1264,7 +1251,6 @@ def dedup_exact_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from poormans_kube_etl_spark.operators.index_artifact import open_index
 
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 10 != 0)
     new = docs.where(F.col("doc_id") % 10 == 0).select("doc_id", "text").unionByName(

@@ -14,13 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -44,7 +38,7 @@ def fn_json_construct_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON construct (to_json of struct/array) + path extraction; the
     JSON strings themselves never surface (formatting differs across
     engines), only extracted typed values."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     j = F.to_json(F.struct(F.col("event_type").alias("etype"), F.col("user_id").alias("uid")))
     arr = F.to_json(F.array(F.col("user_id"), F.col("user_id") + 1, F.col("user_id") + 2))
     return ev.select(
@@ -71,7 +65,7 @@ def fn_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary variant encoding, then typed path extraction — the
     schema-on-read path for props columns whose shape drifts, without
     re-parsing JSON text per access."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v = F.parse_json("props")
     return ev.select(
         "event_id",
@@ -100,7 +94,7 @@ def fn_map_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map construction + element_at + sorted key listing. DuckDB's
     element_at returns a list (empty when missing) — indexed [1] there,
     plain element_at here; both NULL-safe."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("user_id").alias("nu"),
@@ -138,7 +132,7 @@ def fn_map_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_string_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String scalar family: case, reverse, length, pad, replace,
     split_part, edit distance, substring, first-occurrence position."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.upper("lang").alias("lang_up"),
@@ -171,7 +165,7 @@ def fn_string_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_conditional_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE chains, NULLIF/COALESCE, LEAST/GREATEST, null-safe division
     (divide-by-zero → NULL on both engines via NULLIF)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         F.when(F.col("value") > 50, "high")
@@ -215,7 +209,7 @@ def fn_datetime_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datetime scalar family: extraction (with the Sunday-origin
     difference normalized), truncation, month boundaries, day diffs,
     formatting."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         F.year("o_orderdate").alias("y"),
@@ -252,7 +246,7 @@ def fn_array_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array higher-order family: size, fold (strict left-to-right sum —
     order-deterministic, hash-stable), min/max, indexing, slice +
     transform + sort, filter + count."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     v = F.transform("embedding", lambda x: x.cast("double"))
     return emb.select(
         "vec_id",
@@ -309,7 +303,7 @@ def fn_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 6 dp against representation noise, and interval arithmetic on
     timestamps compared as formatted strings (pandas timestamp-unit
     promotion differs between engines). One row per event, one scan."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     fmt = "yyyy-MM-dd HH:mm:ss"
     return ev.select(
         "event_id",
@@ -352,7 +346,7 @@ def agg_boolean_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean aggregate family (every/any/count_if) — predicate
     summaries in one partial-aggregated pass, the A1/A5 conjunction
     shapes as first-class aggregates."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(
@@ -386,7 +380,7 @@ def fn_array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array set-operation family: intersect/union/except/overlap on
     per-row arrays (E1/E2 at array granularity), sorted for hash
     stability."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     a = F.array(F.col("vec_id") % 7, F.col("vec_id") % 5, F.col("vec_id") % 3)
     b = F.array(F.col("vec_id") % 5, F.col("vec_id") % 4)
     base = emb.select("vec_id", a.alias("a"), b.alias("b"))

@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 
 _SCHEMA = "id bigint, lang string, text string"
 _LANGS = ("en", "de", "fr", None)
@@ -171,7 +170,6 @@ def jsonl_quarantine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     every SF by construction."""
     from poormans_kube_etl_spark.sources.ingest import read_jsonl, split_quarantine
 
-    apply_runtime_confs(spark)
     # both engines glob the LITERAL part-*.jsonl pattern (r7 review:
     # the oracle previously globbed *.jsonl, so a stray non-part file
     # in the world-shared fixture dir would be visible to DuckDB only

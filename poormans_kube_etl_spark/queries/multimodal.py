@@ -16,7 +16,6 @@ from poormans_kube_etl_spark.operators.multimodal import (
     resize_images,
 )
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table
 
 
@@ -34,7 +33,6 @@ from poormans_kube_etl_spark.sources import load_table
 def mm_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column basics: byte length + content hashes — the manifest
     SHA256 integrity check (reference README.md:18-33) as a columnar op."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -57,7 +55,6 @@ def mm_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_props_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata extraction: parse the props JSON into a struct with
     an explicit schema (from_json — no schema inference at scale)."""
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     parsed = F.from_json("props", "k INT")
     return ev.select(
@@ -92,7 +89,6 @@ def mm_resize_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     see operators/multimodal.py:resize_images). The oracle replays the
     geometry from octet_length alone; the resized payload itself is
     pinned by pytest (exact byte prefix)."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     binary = docs.select("doc_id", F.encode("text", "UTF-8").alias("content"))
     return (
@@ -134,7 +130,6 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``test_corpus_is_printable_ascii``), so bytes == characters and the
     per-doc byte sum is ``ord()`` folded over the characters; the
     mean divides two exact integers identically on both sides."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     binary = docs.select("doc_id", F.encode("text", "UTF-8").alias("content"))
     return decode_image_features(binary, "content", "doc_id").orderBy("doc_id")
@@ -176,7 +171,6 @@ def mm_binary_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     25th doc is planted VERBATIM under doc_id+1e6 on both engines
     (queries/_fragments.py planted-twins convention) — the result is
     exactly the planted groups, not an empty vacuous pass."""
-    apply_runtime_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.select("doc_id", "text").unionByName(
         docs.where(F.col("doc_id") % 25 == 0).select(

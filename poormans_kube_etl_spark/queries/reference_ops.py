@@ -25,13 +25,7 @@ from poormans_kube_etl_spark.operators.inventory import (
     jobs_df,
 )
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table
-
-
-def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return load_table(spark, sf_dir, "events")
 
 
 # ---------------------------------------------------------------------------
@@ -52,7 +46,6 @@ def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ref_p1_p2_path_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key → segments; folder = segment 2, leaf = last segment
     (reference src/helpers.js:18 ``R.split('/')``, :27 ``R.take(3)``)."""
-    apply_runtime_confs(spark)
     inv = inventory_df(spark, sf_dir)
     seg = path_segments("key")
     return inv.select(
@@ -79,7 +72,6 @@ def ref_p1_p2_path_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ref_f1_timestamp_folders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Folder label parses as a Unix epoch (``moment.unix(label).isValid()``,
     src/helpers.js:14) → try_cast keeps it null-tolerant under ANSI mode."""
-    apply_runtime_confs(spark)
     inv = inventory_df(spark, sf_dir)
     folder_ts = path_segments("key").getItem(1).try_cast("bigint")
     return (
@@ -106,7 +98,6 @@ def ref_f2_any_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``R.any(isTimestamp)`` over the listing (src/helpers.js:16-20) as a
     bool_or aggregate; listing_cnt covers A2's length check
     (src/ingestor.js:82,114)."""
-    apply_runtime_confs(spark)
     inv = inventory_df(spark, sf_dir)
     is_ts = path_segments("key").getItem(1).try_cast("bigint").isNotNull()
     return inv.agg(
@@ -132,7 +123,6 @@ def ref_f2_any_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ref_f3_marker_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leaf ∈ {bulk.txt, incremental.txt} (src/helpers.js:26)."""
-    apply_runtime_confs(spark)
     inv = inventory_df(spark, sf_dir)
     seg = path_segments("key")
     leaf = F.element_at(seg, -1)
@@ -171,7 +161,6 @@ def ref_o1_oldest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """getIngestJobParams: oldest timestamped folder with a marker file →
     {ingestName, ingestType} with ``.txt`` stripped (src/helpers.js:22-39,
     sort+head O1 at :24-25, evolve P4 at :35)."""
-    apply_runtime_confs(spark)
     inv = inventory_df(spark, sf_dir)
     seg = path_segments("key")
     leaf = F.element_at(seg, -1)
@@ -215,7 +204,6 @@ def ref_f7_ingest_file_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     (array_contains ≡ the reference's ``R.contains`` membership filter F7,
     src/helpers.js:60) plus the folder-stub row prepended by E2
     (src/helpers.js:59)."""
-    apply_runtime_confs(spark)
     inv = inventory_df(spark, sf_dir)
     seg = path_segments("key")
     leaf = F.element_at(seg, -1)
@@ -259,7 +247,6 @@ def ref_s2_manifest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A folder is not a batch until its manifest exists (manifest-presence
     probe, src/ingestor.js:109-118); readiness is the A5-style boolean
     conjunction (src/helpers.js:111)."""
-    apply_runtime_confs(spark)
     inv = inventory_df(spark, sf_dir)
     seg = path_segments("key")
     leaf = F.element_at(seg, -1)
@@ -299,7 +286,6 @@ def ref_f4_f5_f6_job_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 regex on job name (src/helpers.js:42), F5 token-set overlap with
     {neo4j, elastic} (src/helpers.js:48-54), F6 prefix match
     (src/ingestor.js:139-140)."""
-    apply_runtime_confs(spark)
     jobs = jobs_df(spark, sf_dir)
     tokens = F.split(F.col("name"), "-")
     return jobs.select(
@@ -331,7 +317,6 @@ def ref_f4_f5_f6_job_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ref_e1_token_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``R.intersection(['neo4j','elastic'])`` over name tokens
     (src/helpers.js:51) + the A2 cardinality check (:50)."""
-    apply_runtime_confs(spark)
     jobs = jobs_df(spark, sf_dir)
     inter = F.array_intersect(
         F.split(F.col("name"), "-"), F.array(*[F.lit(s) for s in STORES])
@@ -365,7 +350,7 @@ def ref_e1_token_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ref_a3_duration_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """getJobDuration parity incl. the mod-24 hour wrap
     (src/helpers.js:65-73): ``floor(s/3600)%24`` h, zero-padded minutes."""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     start_s = F.unix_timestamp(F.min("ts")).alias("start_s")
     end_s = F.unix_timestamp(F.max("ts")).alias("end_s")
     agg = ev.groupBy("user_id").agg(start_s, end_s)
@@ -404,7 +389,7 @@ def ref_a4_run_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The D5 run-metrics document (src/ingestor.js:328-336, golden shape
     src/ingestor.spec.js:351-359): ingest id, type, formatted dates (Dt2),
     formatted total duration (A3) — one row per synthetic ingest folder."""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     folder_ts = (F.lit(1538050000) + (F.col("user_id") % 20) * 1000).cast("bigint")
     agg = (
         ev.withColumn("folder_ts", folder_ts)
@@ -447,7 +432,7 @@ def ref_p6_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``R.pathOr(default, path)`` semantics (src/helpers.js:53,56):
     null-tolerant nested access with a fallback — every 10th row's props
     is blanked to exercise the default path."""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     props = F.when(F.col("event_id") % 10 == 0, F.lit("{}")).otherwise(F.col("props"))
     k = F.get_json_object(props, "$.k").cast("int")
     return ev.select(
@@ -481,7 +466,7 @@ def ref_p7_array_struct_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """getPodStatus/getPodStartedAt shape (src/helpers.js:75-87): filter an
     array of structs by name, take the head element's field, default when
     absent — here over per-user event structs ordered by event_id."""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     evs = F.array_sort(
         F.collect_list(F.struct("event_id", "event_type", "value"))
     )
@@ -520,7 +505,7 @@ def ref_p7_array_struct_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ref_f8_temporal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``moment(startedAt).isAfter(jobStartTime)`` (src/ingestor.js:187) as a
     pushed-down timestamp range predicate."""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.where(
             (F.col("ts") > F.lit("2024-01-03 00:00:00"))
@@ -553,7 +538,6 @@ def ref_f8_temporal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ref_dt1_epoch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``moment.unix(label)`` (src/helpers.js:14): epoch seconds →
     timestamp → formatted string → epoch again, in UTC on both engines."""
-    apply_runtime_confs(spark)
     from poormans_kube_etl_spark.operators.inventory import folders_df
 
     folders = folders_df(spark, sf_dir)

@@ -31,13 +31,7 @@ from poormans_kube_etl_spark.functions import (
     oracle_money_units,
 )
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -85,7 +79,7 @@ _Q1_UNITS = """
     """,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     price_u = money_units("l_extendedprice")
     disc_u = price_u * (F.lit(100) - money_units("l_discount"))
     charge_u = disc_u * (F.lit(100) + money_units("l_tax"))
@@ -126,10 +120,10 @@ def join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈dims star join. nation/region are broadcast (tiny at any SF);
     orders⋈customer shuffles on the key — at 100 TB customer is also
     broadcast-able per-region or bucketed on c_custkey."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return (
         orders.join(customer, orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
@@ -155,8 +149,8 @@ def join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join — reference F7's "ingest-membership" semantics as a
     relational op (SURVEY.md §2a F7)."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         customer.join(orders, customer.c_custkey == orders.o_custkey, "left_semi")
         .select("c_custkey", "c_name")
@@ -174,8 +168,8 @@ def join_semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def join_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         customer.join(orders, customer.c_custkey == orders.o_custkey, "left_anti")
         .select("c_custkey", "c_name")
@@ -204,9 +198,9 @@ def join_lineitem_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts them while they fit (it does at every test SF) and
     falls back to shuffle joins when they don't, instead of a forced
     hint OOMing the executors."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supplier = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    supplier = load_table(spark, sf_dir, "supplier")
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .join(supplier, li.l_suppkey == supplier.s_suppkey)
@@ -235,7 +229,7 @@ def join_lineitem_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def top10_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: Spark executes as TakeOrderedAndProject — per-partition
     heap + driver merge, no full sort, no shuffle of the full table."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .select(
@@ -265,7 +259,7 @@ def top10_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
     return (
         orders.withColumn("rn", F.row_number().over(w))
@@ -296,7 +290,7 @@ def window_top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFra
 def window_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -325,7 +319,7 @@ def window_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_lag_order_gap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     prev = F.lag("o_orderdate").over(w)
     return orders.select(
@@ -354,9 +348,9 @@ def window_lag_order_gap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def rollup_acctbal_by_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return (
         customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
@@ -379,7 +373,7 @@ def rollup_acctbal_by_region_nation(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def cube_orders_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -403,8 +397,8 @@ def cube_orders_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def set_intersect_active_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     return (
         orders.select(F.col("o_custkey").alias("custkey"))
         .intersect(
@@ -424,8 +418,8 @@ def set_intersect_active_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def set_except_inactive_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     return (
         customer.select(F.col("c_custkey").alias("custkey"))
         .exceptAll(orders.select(F.col("o_custkey").alias("custkey")).distinct())
@@ -446,8 +440,8 @@ def set_except_inactive_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_union_all_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unionByName — reference E2's concat (SURVEY.md §2a E2)."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     a = orders.select(F.col("o_custkey").alias("custkey")).distinct().withColumn(
         "src", F.lit("orders")
     )
@@ -466,7 +460,7 @@ def set_union_all_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def distinct_order_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select("o_orderstatus", "o_orderpriority")
         .distinct()
@@ -498,7 +492,7 @@ def distinct_order_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scalar_string_date_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         F.upper("o_orderpriority").alias("prio_upper"),

@@ -10,13 +10,7 @@ from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.functions import money
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -35,7 +29,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def reshape_unpivot_part_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long melt (UNPIVOT): one (metric, value) row per measure —
     a map-side transform, no shuffle, output 2× the input rows."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     wide = part.select(
         "p_partkey",
         F.col("p_retailprice").cast("double").alias("retailprice"),
@@ -75,7 +69,7 @@ def reshape_month_spine_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     order date (sequence on the aggregated bounds — one row exploded,
     not a driver loop), left-join monthly revenue, zero-fill gaps. The
     spine side is tiny → broadcast."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     bounds = orders.agg(
         F.date_trunc("month", F.min("o_orderdate")).alias("lo"),
         F.date_trunc("month", F.max("o_orderdate")).alias("hi"),
@@ -121,7 +115,7 @@ def reshape_explode_outer_shingles(spark: SparkSession, sf_dir: str) -> DataFram
     """explode_outer: rows with empty arrays survive with a NULL element
     (plain explode silently drops them — a row-loss bug at corpus scale
     when some docs have no qualifying tokens)."""
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
+    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
     toks = F.filter(F.split("text", " "), lambda t: F.length(t) > 8)
     return (
         docs.select("doc_id", F.explode_outer(toks).alias("tok"))

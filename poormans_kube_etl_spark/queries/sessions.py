@@ -20,7 +20,6 @@ from poormans_kube_etl_spark.functions import (
 
 from poormans_kube_etl_spark.operators.asof import asof_join_backward
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table
 
 # events.value sums in integer cents (r5): exact_long_sum is
@@ -28,11 +27,6 @@ from poormans_kube_etl_spark.sources import load_table
 # and skips the decimal(38) accumulation tax on the 1-event-per-row
 # fact table; negatives are safe (arithmetic-shift split identity).
 _VAL_SUM_SQL = oracle_exact_long_sum(oracle_money_units("value"), 2)
-
-
-def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return load_table(spark, sf_dir, "events")
 
 
 @register(
@@ -50,7 +44,7 @@ def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sess_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows (streaming-equivalent groupBy
     window; batch uses date_trunc — same bucketing, cheaper plan)."""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.date_trunc("hour", "ts").alias("win_start"), "event_type")
         .agg(
@@ -80,7 +74,7 @@ def sess_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sess_hopping_2h_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding (hopping) windows: 2-hour size, 1-hour slide, via Spark's
     native window() — each event lands in exactly two windows."""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     win = F.window("ts", "2 hours", "1 hour")
     return (
         ev.groupBy(win.alias("win"))
@@ -129,7 +123,7 @@ def sess_session_window_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session_window (30-min gap) per user. The SQL oracle
     replicates the gap-merge with lag + running session counter —
     session_end is last event + gap, exactly Spark's semantics."""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -162,7 +156,7 @@ def sess_asof_last_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
     before it for the same user. Implemented with the union+window
     operator (operators/asof.py) — one shuffle, no range explosion —
     while the oracle uses the O(n·m) correlated form."""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     signups = ev.where(F.col("event_type") == "signup").select(
         "user_id", F.col("ts").alias("signup_ts")
@@ -208,7 +202,7 @@ def sess_range_self_join_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ bin distance <= 1, and each b-row has one bin) — no double count,
     and the exact timestamp predicate keeps results identical to the
     naive form."""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     radius_s = 300
     a_bin = F.floor(F.unix_timestamp("ts") / radius_s)
     a = (
@@ -266,7 +260,7 @@ def sess_debounce_10s(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the PREVIOUS event, not against the last KEPT event — the
     latter is inherently sequential and lives in
     streaming.stateful_user_counts-style state logic.)"""
-    ev = _ev(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     return (

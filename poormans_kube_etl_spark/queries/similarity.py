@@ -19,7 +19,6 @@ from poormans_kube_etl_spark.operators.similarity import (
     to_double_vec,
 )
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table
 
 _N_QUERIES = 3  # query vectors: vec_id < 3
@@ -33,11 +32,6 @@ _DIM = 64  # testdata embedding width; explicit so builds skip the infer job
 # full-registry sweeps run. Production callers scale k with n instead
 # (see _guard_cell_pair_budget).
 _SEMDEDUP_CAP = 2000
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return load_table(spark, sf_dir, "embeddings")
 
 
 @register(
@@ -70,7 +64,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k cosine ANN baseline: broadcast the query set against
     the corpus; per-query window top-k. One pass, no corpus shuffle."""
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -90,7 +84,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     return emb.select("vec_id", "label", l2_norm(to_double_vec("embedding")).alias("l2")).orderBy(
         "vec_id"
     )
@@ -115,7 +109,7 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     nano-units BEFORE the cross-row sum so the aggregation is order-
     independent (double sums are not) — divide sum_scaled/vec_cnt/1e9
     downstream for the centroid."""
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     return (
         emb.select(
             "label",
@@ -192,7 +186,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     list_dot_product could flip a sign within ~1e-13 of zero — is ruled
     out empirically: the minimum |projection| on this corpus is ~1e-5
     (8 orders of magnitude of headroom, measured at sf0.001/sf0.01)."""
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -345,8 +339,7 @@ def sim_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from poormans_kube_etl_spark.operators.kmeans import kmeans_fit
 
-    apply_runtime_confs(spark)
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids, assigned = kmeans_fit(emb, k=8, max_iter=3)
     sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_vectors"))
     # Replicate DuckDB's ROUND(x, 6) EXACTLY (advice r4, tightened r5
@@ -461,9 +454,8 @@ def dedup_semantic_kmeans_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from poormans_kube_etl_spark.queries.dedup import _with_planted_near_dups
 
-    apply_runtime_confs(spark)
     emb = _with_planted_near_dups(
-        _emb(spark, sf_dir).where(F.col("vec_id") < _SEMDEDUP_CAP)
+        load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < _SEMDEDUP_CAP)
     )
     # one documented plan-time action (the same license as simhash's
     # plan_blocking / srp_banding corpus counts): refuse the quadratic
@@ -583,7 +575,6 @@ def dedup_semantic_apply_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from poormans_kube_etl_spark.operators.graph import dedup_clusters
     from poormans_kube_etl_spark.queries.dedup import _with_planted_near_dups
 
-    apply_runtime_confs(spark)
     pairs = dedup_semantic_kmeans_pairs(spark, sf_dir).select("a", "b")
     clusters = dedup_clusters(pairs)
     non_keepers = clusters.where(F.col("doc") != F.col("keeper")).select("doc")
@@ -591,7 +582,7 @@ def dedup_semantic_apply_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
         clusters.where(F.col("doc") == F.col("keeper")).select("doc").distinct()
     )
     emb = _with_planted_near_dups(
-        _emb(spark, sf_dir).where(F.col("vec_id") < _SEMDEDUP_CAP)
+        load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < _SEMDEDUP_CAP)
     ).select("vec_id")
     return (
         emb.join(non_keepers, emb.vec_id == non_keepers.doc, "left_anti")
@@ -650,7 +641,7 @@ def sim_pairwise_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFra
         checked_double_vec,
     )
 
-    e = _emb(spark, sf_dir).select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", checked_double_vec("embedding", _DIM).alias("v")
     )
     ranked = with_global_order(

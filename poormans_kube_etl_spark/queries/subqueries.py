@@ -13,12 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table, register_views
 
 
 def _sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    apply_runtime_confs(spark)
     register_views(spark, sf_dir)
     return spark.sql(sql)
 
@@ -172,7 +170,6 @@ def approx_distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame
     the deduped frame — HLL over the distinct set is the same sketch
     (multiplicity never changes HLL), one buffer per group, and the
     row count rides along as sum(cnt). 1.9 s at sf10."""
-    apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     rsd = 0.01
     per_user = ev.groupBy("event_type", "user_id").agg(
@@ -232,7 +229,6 @@ def approx_percentile_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge order, so no determinism pinning is needed (the raw sketch
     values — merge-order-dependent — stay OUT of the hashed columns).
     One broadcast join back to lineitem computes the rank counts."""
-    apply_runtime_confs(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
     accuracy = 10000
     eps = 1.0 / accuracy

@@ -49,7 +49,6 @@ from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.operators.text import normalize_text, tokens
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table, spread_small_scan
 
 # Minimum duplicated run, in whitespace tokens. Lee et al. use 50 BPE
@@ -59,7 +58,6 @@ _K = 8
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # k-gram explode amplifies ~n_tokens x per row AND every gram is a
     # per-token-hash roll: hash-grade map work, the heavy spread tier
     # (inert for at-scale inputs — sources.spread_small_scan)

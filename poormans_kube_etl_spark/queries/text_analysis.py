@@ -22,14 +22,12 @@ from poormans_kube_etl_spark.operators.text import (
     tokens,
 )
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table, spread_small_scan
 
 _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS_EN) + "]"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # every consumer explodes tokens/chars (~200x per row): spread a
     # single-row-group scan across slots first (inert for tiny/at-scale
     # inputs — see sources.spread_small_scan)

@@ -23,7 +23,6 @@ from poormans_kube_etl_spark.operators.text import (
 )
 from poormans_kube_etl_spark.queries import register
 from poormans_kube_etl_spark.queries._fragments import shingle5_cte
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table, spread_small_scan
 
 # words | numbers | any single non-space symbol — a GPT-2-style
@@ -33,7 +32,6 @@ _BPE_ISH = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 
 
 def _docs(spark: SparkSession, sf_dir: str, heavy: bool = False) -> DataFrame:
-    apply_runtime_confs(spark)
     # consumers explode tokens/sentences/shingles (high per-row
     # amplification): spread single-row-group scans first (inert for
     # tiny and at-scale inputs — see sources.spread_small_scan).
@@ -628,7 +626,6 @@ def train_cdc_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_hash,
     )
 
-    apply_runtime_confs(spark)
     # per-token md5 hashes + 4-token Karp-Rabin rolls are hash-grade
     # map work: the heavy spread tier (the shared _docs default floor
     # is sized for light explode+aggregate faces)

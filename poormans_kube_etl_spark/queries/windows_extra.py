@@ -15,13 +15,7 @@ from pyspark.sql import functions as F
 
 from poormans_kube_etl_spark.functions import hash_safe, money
 from poormans_kube_etl_spark.queries import register
-from poormans_kube_etl_spark.session import apply_runtime_confs
 from poormans_kube_etl_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return load_table(spark, sf_dir, name)
 
 
 @register(
@@ -38,7 +32,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def window_sliding_3row_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded ROWS frame: 3-row trailing average per customer."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -65,7 +59,7 @@ def window_sliding_3row_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_range_frame_value_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame: peers within a ±5 VALUE band (value-based, not
     row-based — the frame width varies per row)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("value").rangeBetween(-5, 5)
     return ev.select(
         "event_id",
@@ -91,7 +85,7 @@ def window_range_frame_value_band(spark: SparkSession, sf_dir: str) -> DataFrame
 def window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dense_rank / ntile / percent_rank / cume_dist sharing ONE window
     spec → single sort pass."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_totalprice", "o_orderkey")
     return orders.select(
         "o_orderkey",
@@ -122,7 +116,7 @@ def window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_first_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first/last value with the full-partition frame spelled out —
     LAST_VALUE under the default frame is a classic wrong-answer trap."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -152,7 +146,7 @@ def agg_string_concat_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered string aggregation (LISTAGG/string_agg): collect sorted
     by a key, then join — collect_list order is partition-dependent, so
     the sort key rides in a struct and is stripped after array_sort."""
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_custkey") < 200)
+    orders = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 200)
     return (
         orders.groupBy("o_custkey")
         .agg(
@@ -185,7 +179,7 @@ def window_trailing_1h_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rate-limit / burst-detection window. Ordered on epoch seconds so
     the frame is a true time interval, not a row count; one shuffle on
     user_id."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_timestamp("ts"))
@@ -232,7 +226,7 @@ def window_gaps_islands_user_streaks(spark: SparkSession, sf_dir: str) -> DataFr
     earns its exchange; the window adds one user_id shuffle, and both
     downstream groupBys reuse it (user_id partitioning already clusters
     (user_id, island) — Catalyst adds no further exchange)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     days = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
     w = Window.partitionBy("user_id").orderBy("d")
     num = days.select(

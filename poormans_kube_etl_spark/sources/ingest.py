@@ -18,7 +18,8 @@ Maps SURVEY.md §2a sources onto Spark readers:
   all-string schema, so building the reader runs no inference job
 - JSONL corpora   → ``read_jsonl`` + ``split_quarantine`` (extension
   surface: schema-contract reader with corrupt-line quarantine for
-  raw training-data interchange files)
+  raw training-data interchange files); ``stream_jsonl_corpus`` runs
+  the streaming twin into valid/quarantine parquet sinks
 """
 
 from __future__ import annotations
@@ -273,6 +274,74 @@ def read_jsonl_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return _jsonl_parse(reader.text(path), schema, mode, corrupt_col)
+
+
+def stream_jsonl_corpus(
+    spark: SparkSession,
+    corpus_dir: str,
+    schema: str,
+    checkpoint_dir: str,
+    output_dir: str,
+    poll_interval_s: float = 60.0,
+    available_now: bool = False,
+    max_files_per_trigger: int | None = None,
+):
+    """Continuous JSONL corpus ingest (r6, VERDICT r05 #6): the
+    ``read_jsonl_stream`` twin as a running stream — a landing
+    directory of ``*.jsonl[.gz]`` shards flows through the SAME
+    schema-contract parser as the batch entity path into two parquet
+    sinks under ``output_dir``:
+    ``corpus/valid`` (contract columns) and ``corpus/quarantine``
+    (raw malformed lines).
+
+    foreachBatch + ``split_quarantine`` because a streaming split
+    has exactly one correct shape: two separate ``writeStream``s
+    would each keep their own file-source progress and scan every
+    shard twice, so the batch function persists each micro-batch
+    once and feeds both sinks from it (see read_jsonl_stream's
+    docstring). Checkpointed file-source progress makes each shard
+    parse exactly once across restarts; the parquet appends are
+    at-least-once on a mid-batch crash — dedup downstream by
+    ``input_file`` if the sink must be exact (the batch entity path
+    stays the exactly-once surface)."""
+    parsed = read_jsonl_stream(
+        spark, corpus_dir, schema, max_files_per_trigger=max_files_per_trigger
+    ).withColumn("input_file", F.input_file_name())
+    valid_path = f"{output_dir}/corpus/valid"
+    quarantine_path = f"{output_dir}/corpus/quarantine"
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            valid, _ = split_quarantine(batch_df)
+            valid.write.mode("append").parquet(valid_path)
+            # keep input_file on the quarantine side (r7 review):
+            # split_quarantine projects down to the raw line only,
+            # which made the documented dedup-by-input_file recovery
+            # impossible for exactly the sink that needs auditing —
+            # replayed duplicates were indistinguishable from
+            # genuinely repeated corpus lines. Migration note: a
+            # quarantine dir written before this column existed
+            # holds one-column files — read mixed dirs with
+            # .option("mergeSchema", True) (old rows surface
+            # input_file=NULL)
+            quarantined = batch_df.where(
+                F.col("_corrupt_record").isNotNull()
+            ).select("_corrupt_record", "input_file")
+            quarantined.write.mode("append").parquet(quarantine_path)
+        finally:
+            batch_df.unpersist()
+
+    writer = (
+        parsed.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .queryName("jsonl-corpus")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=f"{int(poll_interval_s)} seconds")
+    return writer.start()
 
 
 def _jsonl_parse(raw: DataFrame, schema, mode: str, corrupt_col: str) -> DataFrame:

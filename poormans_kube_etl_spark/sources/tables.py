@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -27,25 +28,80 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# (session id, sf_dir, table) -> DataFrame. A DataFrame is an immutable
-# logical-plan handle, so reusing one across query builds is safe — the
-# SCAN still runs per action with current pushdown/pruning. What the
-# cache removes is the per-build driver cost of spark.read.parquet
-# (footer/schema round trips: ~0.1 s and dozens of py4j calls per table
-# per build — measured while attributing sim_ivf_topk's bench build
-# overhead). Keyed on the session instance so a restarted session can't
-# be served plan handles bound to a dead JVM gateway.
-# values hold the session strongly, so an id() can never be recycled
-# into a false hit while its entry lives.
-#
-# Staleness (self-review r4): the handle's FILE LISTING is frozen at
-# first read (InMemoryFileIndex) — pushdown re-runs per action, the
-# directory listing does not. A table dir rewritten mid-session would
-# serve deleted-file errors or silently miss new files, so each entry
-# carries the dir's (mtime, inode) version and a changed dir is a cache
-# miss. Non-local paths (s3a:// etc.) have no cheap version probe and
-# are NOT cached — correctness over build speed there.
-_TABLE_CACHE: dict[tuple[int, str, str], tuple[SparkSession, DataFrame, tuple]] = {}
+# One session memo for plan-time state: table handles, planning row
+# counts, query plans (queries._memoized) and two persisted plan-time
+# frames (the IVF coarse quantizer, the training funnel's per-doc
+# stage flags). Each entry is key -> (session, version, value):
+# - the session is held strongly and compared with ``is``, so a
+#   restarted session is never served handles bound to a dead JVM
+#   gateway (an id() key alone could be recycled into a false hit);
+# - the version is the caller's file-version token (``_dir_version``);
+#   a rewritten input is a miss, and a None version never hits, so
+#   unversionable inputs (remote, partitioned, missing) are rebuilt
+#   per call.
+# A DataFrame handle is an immutable logical plan: every action still
+# scans its inputs, so a hit saves driver-side plan construction (the
+# spark.read footer/schema round trips, ~0.1 s and dozens of py4j calls
+# per table), never computation. What a handle DOES freeze is its file
+# listing (InMemoryFileIndex), which is why every entry carries the
+# version of the files it was built from.
+_SESSION_MEMO: dict[tuple, tuple[SparkSession, object, object]] = {}
+_SESSION_MEMO_MAX = 512  # many sessions/sf_dirs per process
+
+
+def memo_get(spark: SparkSession, key: tuple, version: object) -> object | None:
+    """The value ``memo_put`` stored under ``key`` for this session and
+    version, else None."""
+    hit = _SESSION_MEMO.get(key)
+    if hit is None or hit[0] is not spark or version is None or hit[1] != version:
+        return None
+    return hit[2]
+
+
+def memo_put(spark: SparkSession, key: tuple, version: object, value: object) -> object:
+    """Store ``value`` under ``key`` and return it. The entry it replaces
+    is released (unpersisted when it is a persisted DataFrame); overflow
+    clears the whole memo under the same rule."""
+    old = _SESSION_MEMO.pop(key, None)
+    if old is not None and old[2] is not value:
+        _release(old[2])
+    if len(_SESSION_MEMO) >= _SESSION_MEMO_MAX:
+        memo_drop(lambda k: True)
+    _SESSION_MEMO[key] = (spark, version, value)
+    return value
+
+
+def memo_persisted(
+    spark: SparkSession,
+    key: tuple,
+    version: object,
+    build,
+    level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER,
+) -> DataFrame:
+    """The persisted frame memoized under ``key``; on a miss, ``build()``
+    is stored and persisted. It is persisted AFTER the put has released
+    the frame it replaces: Spark's CacheManager matches cached plans by
+    result, and a file index compares by its root paths, so a stale
+    cached frame still registered would serve a rewritten table's plan
+    its old rows."""
+    df = memo_get(spark, key, version)
+    if df is None:
+        df = memo_put(spark, key, version, build()).persist(level)
+    return df
+
+
+def memo_drop(match) -> None:
+    """Release and drop every entry whose key satisfies ``match``."""
+    for key in [k for k in _SESSION_MEMO if match(k)]:
+        _release(_SESSION_MEMO.pop(key)[2])
+
+
+def _release(value: object) -> None:
+    if isinstance(value, DataFrame) and value.is_cached:
+        try:
+            value.unpersist()
+        except Exception:
+            pass  # its SparkContext is already stopped: nothing to free
 
 
 def _dir_version(path: str) -> tuple | None:
@@ -85,6 +141,13 @@ def _dir_version(path: str) -> tuple | None:
     return (st.st_mtime_ns, st.st_ino)
 
 
+def table_version(sf_dir: str, name: str) -> tuple | None:
+    """Memo version of one driver table: (sf_dir, its ``_dir_version``),
+    or None when the table is unversionable."""
+    v = _dir_version(table_path(sf_dir, name))
+    return None if v is None else (sf_dir, v)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from poormans_kube_etl_spark.session import apply_runtime_confs
     from poormans_kube_etl_spark.sources.ingest import _resolve_relative
@@ -97,11 +160,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # than the one Spark read — the cache could serve a frozen file
     # listing for a table that had been rewritten
     sf_dir = _resolve_relative(sf_dir)
-    key = (id(spark), sf_dir, name)
-    version = _dir_version(table_path(sf_dir, name))
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None and cached[0] is spark and version and cached[2] == version:
-        return cached[1]
+    key = ("table", sf_dir, name)
+    version = table_version(sf_dir, name)
+    df = memo_get(spark, key, version)
+    if df is not None:
+        return df
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS): unsupported by Spark's
@@ -112,11 +175,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         field = dict((f.name, f.dataType) for f in df.schema.fields).get("ts")
         if isinstance(field, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if version is not None:
-        if len(_TABLE_CACHE) > 256:  # bound: many sessions/sf_dirs per process
-            _TABLE_CACHE.clear()
-        _TABLE_CACHE[key] = (spark, df, version)
-    return df
+    return memo_put(spark, key, version, df)
 
 
 _SPREAD_MIN_BYTES = 2 << 20  # below: serial map is cheaper than a barrier
@@ -256,38 +315,23 @@ def spread_small_scan(
     return df.repartition(width)
 
 
-# (session id, sf_dir, table, predicate) -> (session, count, version).
-# A PLANNING STATISTIC cache (r14): LSH banding and simhash blocking are
-# planned from a corpus row count — a deterministic scalar that every
-# query build re-ran as its own Spark job (the simhash face's whole
-# eager-build cost; ~0.1 s/build). Same class as the session-scoped IVF
-# centroid cache (r10): a plan-time input derived deterministically
-# from the table, never a query result; the same version token as
-# _TABLE_CACHE invalidates it when the files change, and unversionable
-# paths are never cached.
-_COUNT_CACHE: dict[tuple[int, str, str, str], tuple[SparkSession, int, tuple]] = {}
-
-
+# Planning row counts (r14): LSH banding and simhash blocking are
+# planned from a corpus row count, a deterministic scalar that every
+# query build re-ran as its own Spark job (~0.1 s/build). It is a
+# plan-time input, never a query result, and its memo entry carries the
+# table's file version, so it never outlives the files it counted.
 def cached_table_count(
     spark: SparkSession, sf_dir: str, name: str, where: str | None = None
 ) -> int:
     """Session-scoped row count of a driver table (optionally under a
     SQL predicate), keyed on the table's file version — for PLANNING
     inputs (banding/blocking geometry), not for results."""
-    version = _dir_version(table_path(sf_dir, name))
-    key = (id(spark), sf_dir, name, where or "")
-    if version is not None:
-        cached = _COUNT_CACHE.get(key)
-        if cached is not None and cached[0] is spark and cached[2] == version:
-            return cached[1]
-    df = load_table(spark, sf_dir, name)
-    if where:
-        df = df.where(where)
-    n = df.count()
-    if version is not None:
-        if len(_COUNT_CACHE) > 256:
-            _COUNT_CACHE.clear()
-        _COUNT_CACHE[key] = (spark, n, version)
+    key = ("count", sf_dir, name, where or "")
+    version = table_version(sf_dir, name)
+    n = memo_get(spark, key, version)
+    if n is None:
+        df = load_table(spark, sf_dir, name)
+        n = memo_put(spark, key, version, (df.where(where) if where else df).count())
     return n
 
 

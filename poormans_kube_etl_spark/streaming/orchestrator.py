@@ -333,7 +333,6 @@ class Orchestrator:
         bucket_buckets: int = 0,
         replica_id: str | None = None,
         claim_ttl_s: float = 1800.0,
-        claim_settle_s: float = 0.05,
         dedup_index: DedupIndexMaintenance | None = None,
     ):
         self.spark = apply_runtime_confs(spark)
@@ -379,7 +378,6 @@ class Orchestrator:
             replica_id = f"{socket.gethostname()}-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         self.replica_id = replica_id
         self.claim_ttl_s = claim_ttl_s
-        self.claim_settle_s = claim_settle_s
         self.dedup_index = dedup_index
         self.timer = Times()
         # (ingest name, _read_entities result) of the current ingest
@@ -412,14 +410,8 @@ class Orchestrator:
 
     def _lease(self, path: str) -> FsLease:
         """This replica's lease on ``path``: claims and the maintenance
-        lease share the identity, ``claim_ttl_s`` and ``claim_settle_s``."""
-        return FsLease(
-            self.spark,
-            path,
-            self.replica_id,
-            ttl_s=self.claim_ttl_s,
-            settle_s=self.claim_settle_s,
-        )
+        lease share the identity and ``claim_ttl_s``."""
+        return FsLease(self.spark, path, self.replica_id, ttl_s=self.claim_ttl_s)
 
     def _claim_lease(self, folder: str) -> FsLease:
         return self._lease(f"{self._folder_path(folder)}/{CLAIM_FILE}")
@@ -1752,74 +1744,6 @@ class Orchestrator:
             manifests.writeStream.foreachBatch(process)
             .option("checkpointLocation", checkpoint_dir)
             .queryName("ingest-orchestrator")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime=f"{int(self.poll_interval_s)} seconds")
-        return writer.start()
-
-    def stream_jsonl_corpus(
-        self,
-        corpus_dir: str,
-        schema: str,
-        checkpoint_dir: str,
-        available_now: bool = False,
-        max_files_per_trigger: int | None = None,
-    ):
-        """Continuous JSONL corpus ingest (r6, VERDICT r05 #6): the
-        ``read_jsonl_stream`` twin running inside the orchestrator's
-        lifecycle — a landing directory of ``*.jsonl[.gz]`` shards flows
-        through the SAME schema-contract parser as the batch entity path
-        into two parquet sinks under ``output_dir``:
-        ``corpus/valid`` (contract columns) and ``corpus/quarantine``
-        (raw malformed lines).
-
-        foreachBatch + ``split_quarantine`` because a streaming split
-        has exactly one correct shape: two separate ``writeStream``s
-        would each keep their own file-source progress and scan every
-        shard twice, so the batch function persists each micro-batch
-        once and feeds both sinks from it (see read_jsonl_stream's
-        docstring). Checkpointed file-source progress makes each shard
-        parse exactly once across restarts; the parquet appends are
-        at-least-once on a mid-batch crash — dedup downstream by
-        ``input_file`` if the sink must be exact (the batch entity path
-        stays the exactly-once surface)."""
-        parsed = ingest_sources.read_jsonl_stream(
-            self.spark,
-            corpus_dir,
-            schema,
-            max_files_per_trigger=max_files_per_trigger,
-        ).withColumn("input_file", F.input_file_name())
-        valid_path = f"{self.output_dir}/corpus/valid"
-        quarantine_path = f"{self.output_dir}/corpus/quarantine"
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.persist()
-            try:
-                valid, _ = ingest_sources.split_quarantine(batch_df)
-                valid.write.mode("append").parquet(valid_path)
-                # keep input_file on the quarantine side (r7 review):
-                # split_quarantine projects down to the raw line only,
-                # which made the documented dedup-by-input_file recovery
-                # impossible for exactly the sink that needs auditing —
-                # replayed duplicates were indistinguishable from
-                # genuinely repeated corpus lines. Migration note: a
-                # quarantine dir written before this column existed
-                # holds one-column files — read mixed dirs with
-                # .option("mergeSchema", True) (old rows surface
-                # input_file=NULL)
-                quarantined = batch_df.where(
-                    F.col("_corrupt_record").isNotNull()
-                ).select("_corrupt_record", "input_file")
-                quarantined.write.mode("append").parquet(quarantine_path)
-            finally:
-                batch_df.unpersist()
-
-        writer = (
-            parsed.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName("jsonl-corpus")
         )
         if available_now:
             writer = writer.trigger(availableNow=True)

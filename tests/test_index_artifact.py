@@ -195,11 +195,10 @@ def test_index_face_warm_open_pays_no_fs_listing(spark, sf_dir, monkeypatch):
     from poormans_kube_etl_spark.queries import QUERIES, load_all
 
     # the plan memo would satisfy this gate trivially (a memo hit never
-    # re-enters the builder) — disable it so the warm-open LISTING path
-    # itself stays pinned (r14)
-    monkeypatch.setenv("PKE_PLAN_MEMO", "0")
+    # re-enters the builder) — call the raw builder so the warm-open
+    # LISTING path itself stays pinned (r14)
     load_all()
-    face = QUERIES["dedup_exact_index_delta"]
+    face = QUERIES["dedup_exact_index_delta"].__wrapped__
     face(spark, sf_dir).collect()  # artifact built + listing memoized
 
     def boom(*a, **k):
@@ -386,9 +385,8 @@ def test_index_face_open_pays_no_corpus_aggregate(spark, sf_dir, monkeypatch):
 
     # plan-memo hits never re-enter the builder; pin the BUILDER's probe
     # path, not the memo (r14)
-    monkeypatch.setenv("PKE_PLAN_MEMO", "0")
     load_all()
-    face = QUERIES["dedup_exact_index_delta"]
+    face = QUERIES["dedup_exact_index_delta"].__wrapped__
     face(spark, sf_dir).collect()  # ensures the artifact exists + is stamped
 
     def boom(*a, **k):

@@ -56,10 +56,9 @@ spark.stop()
 
 
 def test_jobs_submitted_counts_past_retained_jobs(sf_dir):
-    env = {**os.environ, "PKE_PLAN_MEMO": "1"}
     proc = subprocess.run(
         [sys.executable, "-c", _PROBE.format(repo=REPO_ROOT, sf=sf_dir)],
-        capture_output=True, text=True, timeout=600, env=env,
+        capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])

@@ -48,14 +48,6 @@ def test_eager_builder_is_never_memoized(spark, sf_dir):
     assert f(spark, sf_dir) is not f(spark, sf_dir)
 
 
-def test_memo_kill_switch(spark, sf_dir, monkeypatch):
-    from poormans_kube_etl_spark.queries import all_queries
-
-    monkeypatch.setenv("PKE_PLAN_MEMO", "0")
-    q = all_queries()["q1_pricing_summary"]
-    assert q(spark, sf_dir) is not q(spark, sf_dir)
-
-
 def test_artifact_stamp_invalidates_memo(spark, sf_dir, tmp_path):
     """stamp_table_properties is the chokepoint every artifact
     (re)build/attach/compaction ends in — it must drop memoized plans,
