@@ -202,16 +202,16 @@ def main(argv: list[str] | None = None) -> int:
         # fragments it carries — all O(metadata), no table scan
         from poormans_kube_etl_spark.operators.index_artifact import (
             MANIFEST_NAME,
-            _fs_for,
             attach_artifact,
             read_artifact_manifest,
         )
+        from poormans_kube_etl_spark.sources.ingest import hadoop_fs
 
         manifest = read_artifact_manifest(spark, args.path)
         if manifest is None:
             print(f"no {MANIFEST_NAME} under {args.path}", file=sys.stderr)
             return 1
-        fs, _ = _fs_for(spark, args.path)
+        fs, _ = hadoop_fs(spark, args.path)
         jvm = spark.sparkContext._jvm
         if args.attach:
             attach_artifact(spark, args.path)

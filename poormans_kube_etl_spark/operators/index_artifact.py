@@ -355,17 +355,6 @@ MANIFEST_NAME = "_pke_artifact.json"
 _MANIFEST_FORMAT = 1
 
 
-def _fs_for(spark: SparkSession, path: str):
-    # same Python-cwd anchoring as source_files_fingerprint (ADVICE r11
-    # medium): a relative artifact root must address the directory the
-    # Python-side writers used, not the JVM's launch-frozen cwd
-    from poormans_kube_etl_spark.sources.ingest import _resolve_relative
-
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(_resolve_relative(path))
-    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
-
-
 def _describe_table(spark: SparkSession, table: str) -> dict:
     """Catalog facts an attach needs: location, bucket spec, schema,
     and every pke.* property."""
@@ -394,6 +383,23 @@ def _describe_table(spark: SparkSession, table: str) -> dict:
     }
 
 
+def _put_artifact_manifest(spark: SparkSession, root: str, manifest: dict) -> None:
+    """Write ``manifest`` to ``<root>/_pke_artifact.json`` through a
+    tmp file: delete the old manifest, then rename the tmp over it."""
+    import json
+
+    from poormans_kube_etl_spark.sources.ingest import hadoop_fs, write_small_text
+
+    fs, jroot = hadoop_fs(spark, root)
+    jvm = spark.sparkContext._jvm
+    tmp = jvm.org.apache.hadoop.fs.Path(jroot, MANIFEST_NAME + ".tmp")
+    final = jvm.org.apache.hadoop.fs.Path(jroot, MANIFEST_NAME)
+    write_small_text(spark, tmp.toString(), json.dumps(manifest, indent=1))
+    fs.delete(final, False)
+    if not fs.rename(tmp, final):
+        raise OSError(f"manifest rename failed under {root}")
+
+
 def write_artifact_manifest(
     spark: SparkSession, path: str, tables: tuple[str, ...]
 ) -> None:
@@ -403,22 +409,14 @@ def write_artifact_manifest(
     merge that restamps properties must refresh it
     (refresh_artifact_manifest) or a later attach resurrects stale
     stamps."""
-    import json
-
-    from poormans_kube_etl_spark.sources.ingest import write_small_text
-
-    manifest = {
-        "format": _MANIFEST_FORMAT,
-        "tables": [_describe_table(spark, t) for t in tables],
-    }
-    fs, root = _fs_for(spark, path)
-    jvm = spark.sparkContext._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME + ".tmp")
-    write_small_text(spark, tmp.toString(), json.dumps(manifest, indent=1))
-    final = jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME)
-    fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise OSError(f"manifest rename failed under {path}")
+    _put_artifact_manifest(
+        spark,
+        path,
+        {
+            "format": _MANIFEST_FORMAT,
+            "tables": [_describe_table(spark, t) for t in tables],
+        },
+    )
 
 
 def read_artifact_manifest(spark: SparkSession, path: str) -> dict | None:
@@ -426,9 +424,9 @@ def read_artifact_manifest(spark: SparkSession, path: str) -> dict | None:
     none. A torn manifest raises ValueError (JSONDecodeError)."""
     import json
 
-    from poormans_kube_etl_spark.sources.ingest import read_small_text
+    from poormans_kube_etl_spark.sources.ingest import hadoop_fs, read_small_text
 
-    fs, root = _fs_for(spark, path)
+    fs, root = hadoop_fs(spark, path)
     mpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME)
     if not fs.exists(mpath):
         return None
@@ -441,27 +439,17 @@ def refresh_artifact_manifest(spark: SparkSession, table: str) -> None:
     location; if no manifest exists there (warehouse-managed tables,
     pre-r11 artifacts), this is a silent no-op — those artifacts keep
     their rebuild-on-fresh-session behavior."""
-    import json
     import posixpath
-
-    from poormans_kube_etl_spark.sources.ingest import write_small_text
 
     info = _describe_table(spark, table)
     root = posixpath.dirname(info["location"].rstrip("/"))
     manifest = read_artifact_manifest(spark, root)
     if manifest is None:
         return
-    fs, _ = _fs_for(spark, root)
-    jvm = spark.sparkContext._jvm
-    mpath = jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME)
     manifest["tables"] = [
         info if t["name"] == table else t for t in manifest["tables"]
     ]
-    tmp = jvm.org.apache.hadoop.fs.Path(root, MANIFEST_NAME + ".tmp")
-    write_small_text(spark, tmp.toString(), json.dumps(manifest, indent=1))
-    fs.delete(mpath, False)
-    if not fs.rename(tmp, mpath):
-        raise OSError(f"manifest rename failed under {root}")
+    _put_artifact_manifest(spark, root, manifest)
 
 
 def attach_artifact(spark: SparkSession, path: str) -> bool:

@@ -43,8 +43,8 @@ import contextlib
 import functools
 import hashlib
 import re
-import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Any
 
@@ -277,41 +277,23 @@ class DedupIndexMaintenance:
 
 
 @dataclass
-class Times:
-    """Per-ingest timing accumulator (reference Times class,
-    src/helpers.js:89-120): start/end per store + the ingest file list.
-    Row counts come from query-execution Observations — measured during
+class IngestRun:
+    """One ingest, from its verified listing to its metrics row: the
+    params, the listing ``files``, each entity's ``(valid rows,
+    quarantined raw lines)`` readers (read once, shared by the
+    quarantine and both store pipelines), and per store (``neo``,
+    ``elastic``) its ``(start, end)`` stamps and the rows its sinks
+    observed. ``run_ingest`` builds it and ``finalize`` writes the
+    metrics row from it (the reference's Times, src/helpers.js:89-120),
+    so nothing outlives the ingest and a retry starts from zero.
+    Row counts come from query-execution Observations, measured during
     the pipeline writes, never by a second scan."""
 
-    neo_start: float | None = None
-    neo_end: float | None = None
-    elastic_start: float | None = None
-    elastic_end: float | None = None
-    neo_rows: int = 0
-    elastic_rows: int = 0
-    ingest_files: list[str] = field(default_factory=list)
-    # which ingest the cached listing belongs to — consumers must check
-    # this before trusting ingest_files (ADVICE r06: a direct run_ingest
-    # after a prior un-finalized failure would otherwise pair the stale
-    # folder's keys with the new params)
-    ingest_files_name: str | None = None
-
-    def reset_pipeline_state(self) -> None:
-        """Clear the per-run counters and stamps but KEEP the cached
-        listing (validated separately by ingest_files_name). run_ingest
-        calls this on entry (r7 review): a retry after a partial
-        failure in the same process — clear_halt + checkpoint
-        redelivery, or a direct run_ingest — used to ADD the rerun's
-        Observation rows onto the crashed attempt's, doubling
-        neo_rows/elastic_rows in the metrics sink."""
-        self.neo_start = self.neo_end = None
-        self.elastic_start = self.elastic_end = None
-        self.neo_rows = self.elastic_rows = 0
-
-    def reset(self) -> None:
-        self.reset_pipeline_state()
-        self.ingest_files = []
-        self.ingest_files_name = None
+    params: IngestParams
+    files: list[str]
+    entities: dict[str, tuple[DataFrame, DataFrame | None]]
+    spans: dict[str, tuple[float, float]] = field(default_factory=dict)
+    rows: dict[str, int] = field(default_factory=lambda: {"neo": 0, "elastic": 0})
 
 
 class Orchestrator:
@@ -329,7 +311,6 @@ class Orchestrator:
         output_dir: str,
         poll_interval_s: float = 60.0,
         strict_manifest: bool = True,
-        settle_delay_s: float = 0.0,
         bucket_buckets: int = 0,
         replica_id: str | None = None,
         claim_ttl_s: float = 1800.0,
@@ -348,13 +329,6 @@ class Orchestrator:
         self.output_dir = ingest_sources._resolve_relative(output_dir).rstrip("/")
         self.poll_interval_s = poll_interval_s
         self.strict_manifest = strict_manifest
-        # X6 tail (reference src/ingestor.js:259 sleeps one poll cycle
-        # after job success before declaring the store settled). Spark
-        # actions are synchronous so the barrier itself is free; this
-        # knob exists for sinks with eventual-consistency semantics
-        # (e.g. an external index refreshing). Default 0: no analogue
-        # needed for parquet sinks (SURVEY §2a X6 decision).
-        self.settle_delay_s = settle_delay_s
         # r7 (VERDICT r06 #5): >0 makes the graph store land BUCKETED on
         # its stable workload keys — nodes by the entity id, edges by
         # src, same bucket count — so every downstream nodes⋈edges /
@@ -379,9 +353,6 @@ class Orchestrator:
         self.replica_id = replica_id
         self.claim_ttl_s = claim_ttl_s
         self.dedup_index = dedup_index
-        self.timer = Times()
-        # (ingest name, _read_entities result) of the current ingest
-        self._entities: tuple[str, dict] | None = None
         self.errored: str | None = None  # X7 error state
         # consecutive transient scan failures (listing/gating); reset on
         # any successful scan — never escalates to the X7 halt
@@ -576,10 +547,10 @@ class Orchestrator:
     # ---- the two store pipelines (stand-ins for the external Jobs) ----
 
     def _read_entities(
-        self, params: IngestParams
+        self, params: IngestParams, files: list[str]
     ) -> dict[str, tuple[DataFrame, DataFrame | None]]:
-        """Each entity's payload files as ``(valid rows, quarantined raw
-        lines)`` — the second is None for a CSV entity.
+        """Each entity's payload files among ``files`` as ``(valid rows,
+        quarantined raw lines)`` — the second is None for a CSV entity.
 
         Two entity families, dispatched per folder on the payload
         extension (r6 adds the second):
@@ -596,27 +567,16 @@ class Orchestrator:
           halt class as a failed pipeline, because silently inferring a
           schema is exactly what the reader's contract forbids.
 
-        Callers go through ``_entity_sources``, which builds this once
-        per ``run_ingest``: the CSV readers' sidecars are read on the
-        driver and run no Spark job (sources/ingest.py), and each JSONL
-        entity and its schema sidecar are parsed once for the
-        quarantine and both pipelines.
+        ``run_ingest`` calls this once per ingest, over the VERIFIED
+        listing, not a fresh one (r7 review): a fresh listing would let
+        files uploaded AFTER manifest verification flow into the stores
+        sha-unchecked, and pay an extra object-store listing per
+        ingest. The CSV readers'
+        sidecars are read on the driver and run no Spark job
+        (sources/ingest.py), and each JSONL entity and its schema
+        sidecar are parsed once for the quarantine and both pipelines.
         """
         folder = self._folder_path(params.ingest_name)
-        # the VERIFIED listing, not a fresh one (r7 review): re-listing
-        # here let files uploaded AFTER manifest verification flow into
-        # the stores sha-unchecked, and the graph and index pipelines —
-        # each listing at its own time — could ingest DIFFERENT file
-        # sets; it also paid extra object-store listings per ingest,
-        # where the hundred-folder fan-out gate pins listings at O(2 per
-        # folder). The cache is keyed to the ingest name (ADVICE r06): a
-        # direct run_ingest after a prior ingest failed un-finalized
-        # must not pair the stale folder's keys with this params'
-        # sidecars, so a name mismatch falls back to a fresh listing.
-        if self.timer.ingest_files_name == params.ingest_name:
-            files = self.timer.ingest_files
-        else:
-            files = self.ingest_files(params)
         entities: dict[str, list[str]] = {}
         for key in files:
             parts = key.split("/")
@@ -654,17 +614,6 @@ class Orchestrator:
             )
         return out
 
-    def _entity_sources(
-        self, params: IngestParams
-    ) -> dict[str, tuple[DataFrame, DataFrame | None]]:
-        """``_read_entities`` for ``params``, built once and shared by
-        the quarantine and both store pipelines. ``run_ingest`` resets
-        it on entry, so an X5 relaunch re-reads the folder; a pipeline
-        called for another ingest builds its own."""
-        if self._entities is None or self._entities[0] != params.ingest_name:
-            self._entities = (params.ingest_name, self._read_entities(params))
-        return self._entities[1]
-
     def _parse_jsonl_entity(
         self, folder: str, entity: str, keys: list[str]
     ) -> DataFrame:
@@ -677,7 +626,7 @@ class Orchestrator:
             self.spark, [f"{self.landing_dir}/{k}" for k in keys], ddl
         )
 
-    def _quarantine_jsonl(self, params: IngestParams) -> None:
+    def _quarantine_jsonl(self, run: IngestRun) -> None:
         """Persist every JSONL entity's malformed raw lines to
         ``{output}/quarantine/{ingest}/{entity}`` (overwrite — idempotent
         under X5 relaunch, like the store sinks). Runs BEFORE the store
@@ -685,12 +634,11 @@ class Orchestrator:
         than stranding bad lines after the stores already loaded.
 
         The quarantine side comes from the same parse the pipelines
-        read their valid side from (``_entity_sources``), which reuses
-        the caller's F7 listing — see ``_read_entities``."""
-        for entity, (_, quarantined) in self._entity_sources(params).items():
+        read their valid side from (``run.entities``)."""
+        for entity, (_, quarantined) in run.entities.items():
             if quarantined is not None:
                 quarantined.write.mode("overwrite").parquet(
-                    f"{self.output_dir}/quarantine/{params.ingest_name}/{entity}"
+                    f"{self.output_dir}/quarantine/{run.params.ingest_name}/{entity}"
                 )
 
     @staticmethod
@@ -759,16 +707,17 @@ class Orchestrator:
             for k, v in zip(_JOB_GROUP_PROPS, saved):
                 sc.setLocalProperty(k, v)
 
-    def _graph_pipeline(self, params: IngestParams) -> None:
+    def _graph_pipeline(self, run: IngestRun) -> None:
         """neo4j stand-in: nodes + foreign-key edges, parquet sinks
         (bucketed on the stable keys when ``bucket_buckets`` > 0).
 
         Overwrite by ingest folder = idempotent re-run (X5 preemption
         becomes safe relaunch)."""
+        params = run.params
         with self._job_group(
             f"neo4j-{params.job_type}-{params.ingest_name}", "graph load"
         ):
-            for entity, (df, _) in self._entity_sources(params).items():
+            for entity, (df, _) in run.entities.items():
                 id_cols = [c for c in df.columns if c == f"{entity}_id" or c == "id"]
                 nodes = df.withColumn("_entity", F.lit(entity)).withColumn(
                     "_ingest", F.lit(params.ingest_name)
@@ -782,7 +731,7 @@ class Orchestrator:
                     entity,
                     id_cols[0] if id_cols else None,
                 )
-                self.timer.neo_rows += int(obs.get["n"])
+                run.rows["neo"] += int(obs.get["n"])
                 fk_cols = [
                     c for c in df.columns if c.endswith("_id") and c not in id_cols
                 ]
@@ -794,13 +743,14 @@ class Orchestrator:
                     )
                     self._write_graph_sink(edges, "edges", params, entity, "src")
 
-    def _index_pipeline(self, params: IngestParams) -> None:
+    def _index_pipeline(self, run: IngestRun) -> None:
         """elasticsearch stand-in: flattened all-string documents with a
         concatenated search body, parquet sink."""
+        params = run.params
         with self._job_group(
             f"elastic-{params.job_type}-{params.ingest_name}", "index load"
         ):
-            for entity, (df, _) in self._entity_sources(params).items():
+            for entity, (df, _) in run.entities.items():
                 docs = df.select(
                     *[F.col(c).cast("string").alias(c) for c in df.columns],
                     F.lower(
@@ -815,7 +765,7 @@ class Orchestrator:
                 ).parquet(
                     f"{self.output_dir}/index/{params.ingest_name}/{entity}"
                 )
-                self.timer.elastic_rows += int(obs.get["n"])
+                run.rows["elastic"] += int(obs.get["n"])
 
     def preempt_stale(self, params: IngestParams) -> None:
         """X5: cancel any running same-kind job groups before relaunch."""
@@ -826,66 +776,45 @@ class Orchestrator:
 
     # ---- lifecycle ----
 
-    def run_ingest(self, params: IngestParams) -> None:
-        """X3/X4: bulk → parallel, delta → serial (graph first). JSONL
-        quarantine persistence runs first either way (r6). The entity
-        sources are resolved afresh here, before the bulk threads
-        start, and shared by the quarantine and both pipelines."""
+    def run_ingest(self, params: IngestParams, files: list[str]) -> IngestRun:
+        """X3/X4 over the verified listing ``files``: bulk → parallel,
+        delta → serial (graph first). JSONL quarantine persistence runs
+        first either way (r6). Returns the run, which ``finalize``
+        writes the metrics row from.
+
+        A store is settled when its write returns: the reference's X6
+        tail (src/ingestor.js:259 sleeps one poll cycle after job
+        success) has no analogue for parquet sinks (SURVEY §2a X6)."""
         self.preempt_stale(params)
-        self.timer.reset_pipeline_state()
-        self._entities = None
-        self._entity_sources(params)
-        self._quarantine_jsonl(params)
+        run = IngestRun(params, files, self._read_entities(params, files))
+        self._quarantine_jsonl(run)
+        pipelines = {"neo": self._graph_pipeline, "elastic": self._index_pipeline}
 
-        def neo():
-            self.timer.neo_start = time.time()
-            self._graph_pipeline(params)
-            if self.settle_delay_s:
-                time.sleep(self.settle_delay_s)  # X6 settle tail
-            self.timer.neo_end = time.time()
-
-        def elastic():
-            self.timer.elastic_start = time.time()
-            self._index_pipeline(params)
-            if self.settle_delay_s:
-                time.sleep(self.settle_delay_s)
-            self.timer.elastic_end = time.time()
+        def timed(store: str) -> None:
+            start = time.time()
+            pipelines[store](run)
+            run.spans[store] = (start, time.time())
 
         if params.ingest_type == "bulk":
-            errs: list[BaseException] = []
-
-            def guard(fn):
-                def run():
-                    try:
-                        fn()
-                    except BaseException as e:  # noqa: BLE001 - reraised below
-                        errs.append(e)
-
-                return run
-
-            threads = [
-                threading.Thread(target=guard(neo)),
-                threading.Thread(target=guard(elastic)),
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-            if errs:
-                raise errs[0]
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                done = [pool.submit(timed, store) for store in pipelines]
+            # both stores have finished; the graph store's error wins
+            for future in done:
+                future.result()
         else:
-            neo()
-            elastic()
+            for store in pipelines:
+                timed(store)
+        return run
 
-    def finalize(self, params: IngestParams) -> None:
+    def finalize(self, run: IngestRun) -> None:
         """EP3: delete the ingested folder FIRST, then append metrics —
         the reference writes metrics only after source cleanup succeeds
         (src/ingestor.js:312-342)."""
+        params = run.params
         if not ingest_sources.delete_path(  # K2 delete-after-commit
             self.spark, self._folder_path(params.ingest_name)
         ):
             raise RuntimeError(f"failed to delete ingest folder {params.ingest_name}")
-        t = self.timer
         # ingestEndTime is stamped AFTER the delete completes
         # (src/ingestor.js:321-334 measures it inside the deleteObjects
         # callback) — r7 review: max(pipeline ends) excluded the
@@ -898,17 +827,18 @@ class Orchestrator:
         # daemon piles up in the codegen cache and Metaspace. The
         # optimizer folds this projection over the VALUES row on the
         # driver; the write's classes are cache hits after the first.
-        # float() keeps the durations DOUBLE when no pipeline ran (0 - 0)
+        neo_start, neo_end = run.spans["neo"]
+        elastic_start, elastic_end = run.spans["elastic"]
         vals = {
             "ingest": params.ingest_name,
             "type": params.ingest_type,
             "end": end,
-            "neo_s": float((t.neo_end or 0) - (t.neo_start or 0)),
-            "elastic_s": float((t.elastic_end or 0) - (t.elastic_start or 0)),
+            "neo_s": neo_end - neo_start,
+            "elastic_s": elastic_end - elastic_start,
             # total = graph-store start → ingest end (src/ingestor.js:334)
-            "total_s": end - (t.neo_start or end),
-            "neo_rows": t.neo_rows,
-            "elastic_rows": t.elastic_rows,
+            "total_s": end - neo_start,
+            "neo_rows": run.rows["neo"],
+            "elastic_rows": run.rows["elastic"],
         }
         row = self.spark.sql(
             f"SELECT * FROM VALUES ({', '.join(':' + k for k in vals)}) "
@@ -947,8 +877,6 @@ class Orchestrator:
                 f"index-maintenance-{params.ingest_name}", "index maintenance"
             ):
                 self._maintain_dedup_index(params)
-        self.timer.reset()
-        self._entities = None
 
     def _dedup_index_marker(self, ingest_name: str) -> str:
         return f"{self.output_dir}/dedup_index/_merged/{ingest_name}"
@@ -1546,8 +1474,6 @@ class Orchestrator:
         ``"lost"`` (a peer broke our claim during the verify) or
         ``"vanished"`` (a peer finalized the folder mid-run). A verify,
         pipeline or finalize failure is X7: ``_halt`` and re-raise."""
-        self.timer.ingest_files = files
-        self.timer.ingest_files_name = params.ingest_name
         try:
             self._verify_or_raise(params)
             # renew the claim after the verify (r8 review): sha-hashing
@@ -1560,9 +1486,8 @@ class Orchestrator:
                     f"orchestrator: lost claim on {params.ingest_name} "
                     "during verify (lease expired?); yielding to peer"
                 )
-                self.timer.reset()
                 return "lost"
-            self.run_ingest(params)
+            run = self.run_ingest(params, files)
         except Exception as e:
             if self._folder_vanished(params):
                 # a peer replica won a claim race this cycle (possible
@@ -1577,12 +1502,11 @@ class Orchestrator:
                     f"orchestrator: {params.ingest_name} vanished "
                     f"mid-cycle ({e}); a peer finalized it"
                 )
-                self.timer.reset()
                 return "vanished"
             self._halt(params, e)
             raise
         try:
-            self.finalize(params)
+            self.finalize(run)
         except Exception as e:  # X7, no vanished escape (see above)
             self._halt(params, e)
             raise

@@ -429,22 +429,55 @@ def test_bucketed_sink_accepts_hyphenated_entity(spark, tmp_path):
 
 def test_quarantine_ignores_stale_listing_from_other_ingest(orch):
     """ADVICE r06: a direct run_ingest after a prior ingest died
-    un-finalized must not pair the STALE folder's cached listing with
-    the new params — the cache is keyed by ingest name and a mismatch
-    falls back to a fresh listing."""
+    un-finalized must not pair the STALE folder's listing with the new
+    params — each run_ingest reads only the listing it is given. The
+    stale folder carries no JSONL entity, so its listing would leave
+    the new ingest without a quarantine."""
+    make_ingest_folder(orch.landing_dir, "1111111111", "bulk.txt")
     make_ingest_folder(
         orch.landing_dir, "1538055240", "bulk.txt", with_jsonl_entity=True
     )
-    # simulate the leftover state of a prior ingest that never finalized
-    orch.timer.ingest_files = ["pending/1111111111/event/event_data.jsonl.gz"]
-    orch.timer.ingest_files_name = "1111111111"
-    orch.run_ingest(IngestParams("1538055240", "bulk"))
+    stale = IngestParams("1111111111", "bulk")
+    real = orch._graph_pipeline
+
+    def boom(run):
+        raise RuntimeError("graph store down")
+
+    orch._graph_pipeline = boom
+    with pytest.raises(RuntimeError, match="graph store down"):
+        orch.run_ingest(stale, orch.ingest_files(stale))
+    orch._graph_pipeline = real
+    params = IngestParams("1538055240", "bulk")
+    orch.run_ingest(params, orch.ingest_files(params))
     quarantined = orch.spark.read.parquet(
         f"{orch.output_dir}/quarantine/1538055240/event"
     )
     assert sorted(r._corrupt_record for r in quarantined.collect()) == sorted(
         EVENT_BAD_LINES
     )
+
+
+def test_failed_bulk_cycle_leaves_no_state_on_the_orchestrator(orch):
+    """Everything one ingest learns (its listing, its entity readers,
+    its stores' stamps and row counts) lives in that ingest's run, so a
+    bulk cycle that fails in its graph pipeline, while the index store
+    completes, changes no orchestrator attribute but the X7 error."""
+    make_ingest_folder(
+        orch.landing_dir, "1538055240", "bulk.txt", with_jsonl_entity=True
+    )
+
+    def boom(run):
+        raise RuntimeError("graph store down")
+
+    def state():
+        return {k: repr(v) for k, v in vars(orch).items() if k != "errored"}
+
+    orch._graph_pipeline = boom
+    before = state()
+    with pytest.raises(RuntimeError, match="graph store down"):
+        orch.run_once()
+    assert orch.errored is not None
+    assert state() == before
 
 
 def test_corrupt_jsonl_sha_halts_ingest(orch):
@@ -649,8 +682,8 @@ def test_run_stream_hundred_folder_fanout(orch, tmp_path):
 
     orch.strict_manifest = False  # sha verification exercised elsewhere
     processed: list[str] = []
-    orch._graph_pipeline = lambda params: processed.append(params.ingest_name)
-    orch._index_pipeline = lambda params: None
+    orch._graph_pipeline = lambda run: processed.append(run.params.ingest_name)
+    orch._index_pipeline = lambda run: None
 
     listing_args: list[str | None] = []
     real_list = orch.list_keys
@@ -1049,7 +1082,7 @@ def test_folder_vanishing_mid_cycle_is_transient_not_halt(
     make_ingest_folder(orch.landing_dir, "1538055240", "bulk.txt")
     real = type(orch).run_ingest
 
-    def peer_finalizes_then_we_die(self, params):
+    def peer_finalizes_then_we_die(self, params, files):
         shutil.rmtree(os.path.join(self.landing_dir, "pending", params.ingest_name))
         raise RuntimeError("FileNotFoundException: payload gone mid-scan")
 

@@ -89,27 +89,6 @@ def test_mongo_sink_fails_actionably_without_connector(spark):
         write_metrics_mongo(df, "mongodb://localhost:27017", "etl")
 
 
-def test_orchestrator_settle_delay_applies(spark, tmp_path):
-    # X6 settle tail: durations include the configured settle window
-    import os
-    import time
-
-    from poormans_kube_etl_spark.streaming.orchestrator import Orchestrator
-    from tests.test_orchestrator import make_ingest_folder
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(os.path.join(landing, "pending"), exist_ok=True)
-    make_ingest_folder(landing, "1538055240", "incremental.txt")
-    orch = Orchestrator(
-        spark, landing, str(tmp_path / "out"), poll_interval_s=0.01, settle_delay_s=0.3
-    )
-    t0 = time.time()
-    assert orch.run_once() is not None
-    assert time.time() - t0 >= 0.6  # serial delta: two settle windows
-    t = orch.metrics().collect()[0]
-    assert t.ingest == "1538055240"
-
-
 def test_load_table_cache_sees_directory_rewrites(spark, tmp_path):
     """Self-review r4: the memoized DataFrame freezes its parquet file
     listing at first read, so a table dir rewritten mid-session used to
