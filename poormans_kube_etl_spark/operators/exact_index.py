@@ -67,21 +67,6 @@ def _derive(docs: DataFrame, c: dict[str, str]):
     yield {"_fps": corpus_fps(docs, c["id_col"], c["text_col"])}, {}
 
 
-EXACT_FAMILY = IndexFamily(
-    name="exact",
-    label="exact-dedup fingerprint index",
-    builder="write_corpus_fp_index",
-    prefix=_PROP_PREFIX,
-    format_version=INDEX_FORMAT_VERSION,
-    constant_keys=("id_col", "text_col"),
-    tables=(IndexTable("_fps", ("fp",)),),
-    catalog_suffix="_fp",
-    derive=_derive,
-    handle=CorpusFpIndex,
-    merge_entry="merge_delta_into_fp_index",
-)
-
-
 def write_corpus_fp_index(
     corpus_docs: DataFrame,
     name: str,
@@ -111,21 +96,34 @@ def read_corpus_fp_index(spark: SparkSession, name: str) -> CorpusFpIndex:
     return read_index(EXACT_FAMILY, spark, name)
 
 
-def exact_duplicates_indexed(
-    new_docs: DataFrame, index: CorpusFpIndex, text_col: str | None = None
-) -> DataFrame:
+def exact_duplicates_indexed(new_docs: DataFrame, index: CorpusFpIndex) -> DataFrame:
     """(doc, keeper) for every NEW document whose normalized text
     already exists in the indexed corpus. The delta pays its own hash
     plus one fp-keyed join onto the stored bucket distribution; the
     MIN collapses multi-fragment keeper candidates (module docstring).
-    The id/text column names come FROM the artifact unless overridden."""
+    The id/text column names come FROM the artifact."""
     c = index.constants
-    tcol = text_col if text_col is not None else c["text_col"]
     probe = new_docs.select(
-        F.col(c["id_col"]).alias("doc"), fingerprint_md5(tcol).alias("fp")
+        F.col(c["id_col"]).alias("doc"), fingerprint_md5(c["text_col"]).alias("fp")
     )
     return (
         probe.join(index.fps, "fp")
         .groupBy("doc")
         .agg(F.min("keeper").alias("keeper"))
     )
+
+
+EXACT_FAMILY = IndexFamily(
+    name="exact",
+    label="exact-dedup fingerprint index",
+    builder="write_corpus_fp_index",
+    prefix=_PROP_PREFIX,
+    format_version=INDEX_FORMAT_VERSION,
+    constant_keys=("id_col", "text_col"),
+    tables=(IndexTable("_fps", ("fp",)),),
+    catalog_suffix="_fp",
+    derive=_derive,
+    handle=CorpusFpIndex,
+    probe=exact_duplicates_indexed,
+    merge_entry="merge_delta_into_fp_index",
+)

@@ -542,7 +542,13 @@ class IndexFamily:
     ``"vectors"``); ``config`` maps recorded constant keys to
     ``DedupIndexMaintenance`` fields, and ``defaults`` fills build
     parameters that config does not carry. ``merge_entry`` names the
-    public merge function in ``index_maintenance``."""
+    public merge function in ``index_maintenance``.
+
+    ``probe(batch, handle, **query_params)`` is the family's
+    delta-vs-artifact operator: ``batch`` carries the recorded
+    ``id_col`` and ``text_col`` (``vec_col`` for srp) under those
+    names, and its keyword parameters are query-time knobs only —
+    build constants come from the artifact."""
 
     name: str
     label: str
@@ -554,6 +560,7 @@ class IndexFamily:
     catalog_suffix: str
     derive: Derive
     handle: type
+    probe: Callable[..., DataFrame]
     policy: str = "append"
     source: str = "docs"
     config: tuple[tuple[str, str], ...] = (
@@ -618,14 +625,24 @@ def write_index(
 def read_index(spec: IndexFamily, spark: SparkSession, name: str) -> Any:
     """Open a persisted artifact as the family's handle, restoring its
     constants — ValueError (the get_or_build rebuild class) for missing
-    tables, foreign properties and format-version skew."""
-    try:
-        frames = {t.suffix[1:]: spark.table(name + t.suffix) for t in spec.tables}
-    except Exception as e:  # missing table: say what to do, not just AnalysisException
+    tables, foreign properties and format-version skew.
+
+    Missing tables are found through the catalog, not by a failed
+    ``spark.table``: once any ``Observation`` has run in the session,
+    a failed analysis makes Spark's execution listener log an error
+    with a full stack trace, so every bootstrap would log one per
+    family."""
+    missing = [
+        name + t.suffix
+        for t in spec.tables
+        if not spark.catalog.tableExists(name + t.suffix)
+    ]
+    if missing:
         raise ValueError(
-            f"{name}: index tables not found ({e.__class__.__name__}) — "
+            f"{name}: index tables not found ({', '.join(missing)}) — "
             f"not a {spec.label}, or an older layout; build with {spec.builder}"
-        ) from e
+        )
+    frames = {t.suffix[1:]: spark.table(name + t.suffix) for t in spec.tables}
     constants = load_table_properties(
         spark,
         name + spec.tables[0].suffix,

@@ -99,42 +99,6 @@ def _derive(docs: DataFrame, c: dict[str, str]):
         signed.unpersist()
 
 
-MINHASH_FAMILY = IndexFamily(
-    name="minhash",
-    label="corpus minhash index",
-    builder="write_corpus_minhash_index",
-    prefix=_PROP_PREFIX,
-    format_version=INDEX_FORMAT_VERSION,
-    constant_keys=(
-        "id_col",
-        "text_col",
-        "shingle_len",
-        "num_hashes",
-        "bands",
-        "hash_family",
-        "max_bucket",
-    ),
-    tables=(
-        IndexTable("_buckets", ("band_id", "band_hash")),
-        IndexTable("_shingles", ("doc",)),
-    ),
-    catalog_suffix="",
-    derive=_derive,
-    handle=CorpusMinhashIndex,
-    config=(
-        ("id_col", "id_col"),
-        ("text_col", "text_col"),
-        ("shingle_len", "shingle_len"),
-        ("num_hashes", "num_hashes"),
-        ("bands", "bands"),
-        ("hash_family", "hash_family"),
-    ),
-    defaults={"max_bucket": 256},
-    merge_entry="merge_delta_into_minhash_index",
-    legacy_tables=("_bands",),  # v1 raw band rows
-)
-
-
 def write_corpus_minhash_index(
     corpus_docs: DataFrame,
     name: str,
@@ -241,3 +205,40 @@ def minhash_incremental_near_duplicates_indexed(
         ),
         F.col("jaccard") >= threshold,
     )
+
+
+MINHASH_FAMILY = IndexFamily(
+    name="minhash",
+    label="corpus minhash index",
+    builder="write_corpus_minhash_index",
+    prefix=_PROP_PREFIX,
+    format_version=INDEX_FORMAT_VERSION,
+    constant_keys=(
+        "id_col",
+        "text_col",
+        "shingle_len",
+        "num_hashes",
+        "bands",
+        "hash_family",
+        "max_bucket",
+    ),
+    tables=(
+        IndexTable("_buckets", ("band_id", "band_hash")),
+        IndexTable("_shingles", ("doc",)),
+    ),
+    catalog_suffix="",
+    derive=_derive,
+    handle=CorpusMinhashIndex,
+    probe=minhash_incremental_near_duplicates_indexed,
+    config=(
+        ("id_col", "id_col"),
+        ("text_col", "text_col"),
+        ("shingle_len", "shingle_len"),
+        ("num_hashes", "num_hashes"),
+        ("bands", "bands"),
+        ("hash_family", "hash_family"),
+    ),
+    defaults={"max_bucket": 256},
+    merge_entry="merge_delta_into_minhash_index",
+    legacy_tables=("_bands",),  # v1 raw band rows
+)

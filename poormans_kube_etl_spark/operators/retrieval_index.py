@@ -107,28 +107,6 @@ def _derive(docs: DataFrame, c: dict[str, str]):
         dl.unpersist()
 
 
-BM25_FAMILY = IndexFamily(
-    name="bm25",
-    label="BM25 index",
-    builder="write_corpus_bm25_index",
-    prefix=_PROP_PREFIX,
-    format_version=INDEX_FORMAT_VERSION,
-    constant_keys=(
-        "id_col",
-        "text_col",
-        "n_docs",
-        "avgdl",
-    ),
-    tables=(IndexTable("_postings", ("tok",)),),
-    catalog_suffix="_bm25",
-    derive=_derive,
-    handle=CorpusBM25Index,
-    # df / n_docs / avgdl are global facts on every posting row: a
-    # delta changes existing rows, so there is no append-shaped merge
-    policy="rebuild",
-)
-
-
 def write_corpus_bm25_index(
     corpus_docs: DataFrame,
     name: str,
@@ -184,7 +162,7 @@ def bm25_topk_indexed(
 
     # the SAME normalize+tokenize as the postings build: for catalog
     # query strings this is a no-op, but when a full document plays the
-    # query role (stream_bm25_screen) the two sides must tokenize
+    # query role (bm25_matches_indexed) the two sides must tokenize
     # identically or postings never match
     qt = queries.select(
         "query_id",
@@ -202,3 +180,54 @@ def bm25_topk_indexed(
     return _topk_per_query(
         scored.select("query_id", F.col("doc_id").alias("nn_id"), "sim"), k
     )
+
+
+def bm25_matches_indexed(
+    docs: DataFrame,
+    index: CorpusBM25Index,
+    threshold: float = 5.0,
+    *,
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> DataFrame:
+    """(<id_col>, matched_id, score) for every doc of ``docs`` whose
+    best match in the indexed reference corpus (an eval benchmark, a
+    blocklist, yesterday's shard) scores >= ``threshold``: each doc
+    plays the QUERY role of ``bm25_topk_indexed`` at k=1. It catches
+    high-overlap text that shares vocabulary without sharing the
+    verbatim k-gram runs ``substring_spans_indexed`` catches. ``docs``
+    carries the artifact's recorded id/text columns; k1/b are
+    query-time, not artifact constants."""
+    c = index.constants
+    q = docs.select(
+        F.col(c["id_col"]).alias("query_id"), F.col(c["text_col"]).alias("qtext")
+    )
+    top = bm25_topk_indexed(q, index, 1, k1=k1, b=b)
+    return top.where(F.col("sim") >= threshold).select(
+        F.col("query_id").alias(c["id_col"]),
+        F.col("nn_id").alias("matched_id"),
+        F.col("sim").alias("score"),
+    )
+
+
+BM25_FAMILY = IndexFamily(
+    name="bm25",
+    label="BM25 index",
+    builder="write_corpus_bm25_index",
+    prefix=_PROP_PREFIX,
+    format_version=INDEX_FORMAT_VERSION,
+    constant_keys=(
+        "id_col",
+        "text_col",
+        "n_docs",
+        "avgdl",
+    ),
+    tables=(IndexTable("_postings", ("tok",)),),
+    catalog_suffix="_bm25",
+    derive=_derive,
+    handle=CorpusBM25Index,
+    probe=bm25_matches_indexed,
+    # df / n_docs / avgdl are global facts on every posting row: a
+    # delta changes existing rows, so there is no append-shaped merge
+    policy="rebuild",
+)

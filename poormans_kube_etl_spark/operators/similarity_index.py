@@ -114,40 +114,6 @@ def _derive(vecs: DataFrame, c: dict[str, str]):
     }, {"dim": str(dim), "bands": str(bands), "planes_per_band": str(planes_per_band)}
 
 
-SRP_FAMILY = IndexFamily(
-    name="srp",
-    label="corpus SRP index",
-    builder="write_corpus_srp_index",
-    prefix=_PROP_PREFIX,
-    format_version=INDEX_FORMAT_VERSION,
-    constant_keys=(
-        "id_col",
-        "vec_col",
-        "dim",
-        "bands",
-        "planes_per_band",
-        "planned_threshold",
-        "max_bucket",
-    ),
-    tables=(
-        IndexTable("_buckets", ("band_id", "band_hash")),
-        IndexTable("_vectors", ("id_col",)),
-    ),
-    catalog_suffix="_srp",
-    derive=_derive,
-    handle=CorpusSrpIndex,
-    source="vectors",
-    config=(
-        ("id_col", "vec_id_col"),
-        ("vec_col", "vec_col"),
-        ("planned_threshold", "srp_threshold"),
-    ),
-    defaults={"max_bucket": 256},
-    merge_entry="merge_delta_into_srp_index",
-    legacy_tables=("_bands",),  # short-lived v1 layout
-)
-
-
 def write_corpus_srp_index(
     corpus_embeddings: DataFrame,
     name: str,
@@ -238,3 +204,38 @@ def embedding_incremental_near_pairs_indexed(
         c["vec_col"],
         dim,
     )
+
+
+SRP_FAMILY = IndexFamily(
+    name="srp",
+    label="corpus SRP index",
+    builder="write_corpus_srp_index",
+    prefix=_PROP_PREFIX,
+    format_version=INDEX_FORMAT_VERSION,
+    constant_keys=(
+        "id_col",
+        "vec_col",
+        "dim",
+        "bands",
+        "planes_per_band",
+        "planned_threshold",
+        "max_bucket",
+    ),
+    tables=(
+        IndexTable("_buckets", ("band_id", "band_hash")),
+        IndexTable("_vectors", ("id_col",)),
+    ),
+    catalog_suffix="_srp",
+    derive=_derive,
+    handle=CorpusSrpIndex,
+    probe=embedding_incremental_near_pairs_indexed,
+    source="vectors",
+    config=(
+        ("id_col", "vec_id_col"),
+        ("vec_col", "vec_col"),
+        ("planned_threshold", "srp_threshold"),
+    ),
+    defaults={"max_bucket": 256},
+    merge_entry="merge_delta_into_srp_index",
+    legacy_tables=("_bands",),  # short-lived v1 layout
+)

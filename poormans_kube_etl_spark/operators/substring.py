@@ -218,22 +218,6 @@ def _derive(docs: DataFrame, c: dict[str, str]):
     }, {}
 
 
-GRAM_FAMILY = IndexFamily(
-    name="gram",
-    label="corpus gram index",
-    builder="write_corpus_gram_index",
-    prefix=_PROP_PREFIX,
-    format_version=INDEX_FORMAT_VERSION,
-    constant_keys=("id_col", "text_col", "k"),
-    tables=(IndexTable("_grams", ("g",)),),
-    catalog_suffix="_gram",
-    derive=_derive,
-    handle=CorpusGramIndex,
-    config=(("id_col", "id_col"), ("text_col", "text_col"), ("k", "gram_k")),
-    merge_entry="merge_delta_into_gram_index",
-)
-
-
 def write_corpus_gram_index(
     corpus_docs: DataFrame,
     name: str,
@@ -287,3 +271,20 @@ def substring_spans_indexed(new_docs: DataFrame, index: CorpusGramIndex) -> Data
         c["id_col"], "s", (F.col("s") + k).alias("e")
     )
     return merge_islands(hits, c["id_col"])
+
+
+GRAM_FAMILY = IndexFamily(
+    name="gram",
+    label="corpus gram index",
+    builder="write_corpus_gram_index",
+    prefix=_PROP_PREFIX,
+    format_version=INDEX_FORMAT_VERSION,
+    constant_keys=("id_col", "text_col", "k"),
+    tables=(IndexTable("_grams", ("g",)),),
+    catalog_suffix="_gram",
+    derive=_derive,
+    handle=CorpusGramIndex,
+    probe=substring_spans_indexed,
+    config=(("id_col", "id_col"), ("text_col", "text_col"), ("k", "gram_k")),
+    merge_entry="merge_delta_into_gram_index",
+)

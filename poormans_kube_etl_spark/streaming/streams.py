@@ -14,6 +14,9 @@ engine exposes on top of that model:
 - session windows (gap-based) on event time
 - ``foreach_batch_pipeline``: run any batch DataFrame transform per
   micro-batch — how the orchestrator's pipelines attach to a stream
+- ``stream_screen``: an ingest screen — each micro-batch probed
+  against a persisted index of any family (exact, MinHash, SRP,
+  k-gram, BM25) through that family's one probe operator
 - a custom stateful operator (running per-key de-dup / counter) via
   ``applyInPandasWithState`` — the extension surface for semantics the
   built-in operators can't express
@@ -27,6 +30,7 @@ state size; without one, a windowed agg's state grows forever at
 
 from __future__ import annotations
 
+import inspect
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -242,264 +246,56 @@ def stateful_user_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_dedup_against_corpus(
-    new_docs_stream: DataFrame,
-    corpus_docs: DataFrame | None,
-    sink_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    query_name: str = "stream-dedup",
-    index=None,
-    **minhash_kwargs,
-):
-    """Continuous delta-vs-corpus near-dup detection: each micro-batch
-    of arriving documents is MinHash-joined against the STANDING corpus
-    and the surviving pairs land under ``sink_dir`` — the streaming
-    face of the r8 incremental-dedup operator, composed through the
-    same foreach_batch_pipeline idempotency discipline (one hive
-    partition dir per batch id, overwrite, so an at-least-once replay
-    rewrites rather than duplicates).
-
-    Two corpus modes (exactly one of ``corpus_docs`` / ``index``):
-
-    - ``corpus_docs`` (raw documents): corpus signatures recomputed per
-      batch via minhash_incremental_near_duplicates — fine for small
-      standing corpora and tests.
-    - ``index`` (a ``CorpusMinhashIndex`` from
-      operators/minhash_index.read_corpus_minhash_index — r9, VERDICT
-      r08 #6): the production shape. Each micro-batch pays only its own
-      signatures plus two joins landing on the persisted tables' bucket
-      distribution; the corpus is never re-shingled, batch after batch.
-      Banding constants come FROM the artifact, so ``minhash_kwargs``
-      banding knobs are rejected to prevent silent disagreement.
-
-    The batch function must re-enter the DataFrame API from a
-    foreachBatch callback, which both operators support (pure batch
-    DataFrames in, DataFrame out)."""
-    if (corpus_docs is None) == (index is None):
-        raise ValueError("pass exactly one of corpus_docs or index")
-    if index is not None:
-        banding_knobs = {
-            "shingle_len",
-            "num_hashes",
-            "bands",
-            "hash_family",
-            "max_bucket",  # baked into the pre-aggregated buckets (r9)
-        }
-        bad = banding_knobs & set(minhash_kwargs)
-        if bad:
-            raise ValueError(
-                f"banding knobs {sorted(bad)} come from the index's table "
-                "properties; rebuild the index to change them"
-            )
-        from poormans_kube_etl_spark.operators.minhash_index import (
-            minhash_incremental_near_duplicates_indexed,
-        )
-
-        if (index.constants["id_col"], index.constants["text_col"]) != (
-            id_col,
-            text_col,
-        ):
-            raise ValueError(
-                f"index was built over ({index.constants['id_col']}, "
-                f"{index.constants['text_col']}), stream is configured for "
-                f"({id_col}, {text_col})"
-            )
-
-        def dedup_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            return minhash_incremental_near_duplicates_indexed(
-                batch_df.select(id_col, text_col),
-                index,
-                threshold=threshold,
-                **minhash_kwargs,
-            )
-
-    else:
-        from poormans_kube_etl_spark.operators.minhash import (
-            minhash_incremental_near_duplicates,
-        )
-
-        def dedup_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            return minhash_incremental_near_duplicates(
-                batch_df.select(id_col, text_col),
-                corpus_docs,
-                id_col,
-                text_col,
-                threshold=threshold,
-                **minhash_kwargs,
-            )
-
-    return foreach_batch_pipeline(
-        new_docs_stream, dedup_batch, sink_dir, checkpoint_dir, query_name
-    )
-
-
-def stream_substring_screen(
-    new_docs_stream: DataFrame,
-    corpus_docs: DataFrame | None,
-    sink_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    query_name: str = "stream-substring-screen",
-    index=None,
-):
-    """Continuous substring decontamination: each micro-batch of
-    arriving documents is screened for token runs >= k that appear
-    verbatim in the STANDING corpus, and the offending spans land under
-    ``sink_dir`` per batch id (idempotent under replay, same
-    foreach_batch_pipeline discipline as the MinHash stream face) — an
-    ingest gate that quarantines lifted passages BEFORE a shard enters
-    the corpus.
-
-    Two corpus modes (exactly one of ``corpus_docs`` / ``index``):
-
-    - ``corpus_docs`` (raw documents): corpus grams recomputed per
-      batch — fine for small standing corpora and tests.
-    - ``index`` (a ``CorpusGramIndex`` from
-      operators/substring.read_corpus_gram_index): the production
-      shape. Each micro-batch pays only its own tokenize+hash plus one
-      membership probe landing on the gram table's bucket distribution;
-      the corpus is never re-tokenized, batch after batch (2.5x the
-      live face at sf1, SCALING.md). The gram width comes FROM the
-      artifact, so a caller-supplied ``k`` that disagrees is rejected
-      instead of silently screening at the wrong granularity.
-    """
-    from poormans_kube_etl_spark.operators.substring import (
-        merge_islands,
-        positional_kgrams,
-        substring_spans_indexed,
-    )
-
-    if (corpus_docs is None) == (index is None):
-        raise ValueError("pass exactly one of corpus_docs or index")
-    if index is not None:
-        c = index.constants
-        if (c["id_col"], c["text_col"]) != (id_col, text_col):
-            raise ValueError(
-                f"index was built over ({c['id_col']}, {c['text_col']}), "
-                f"stream is configured for ({id_col}, {text_col})"
-            )
-        if k != index.k:
-            raise ValueError(
-                f"k={k} disagrees with the artifact's k={index.k}; the gram "
-                "width is baked into the index — rebuild it to change k"
-            )
-
-        def screen_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            return substring_spans_indexed(
-                batch_df.select(id_col, text_col), index
-            )
-
-    else:
-        corpus_grams = (
-            positional_kgrams(corpus_docs, k, id_col, text_col)
-            .select("g")
-            .distinct()
-        )
-
-        def screen_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
-            hits = (
-                positional_kgrams(
-                    batch_df.select(id_col, text_col), k, id_col, text_col
-                )
-                .join(corpus_grams, "g")
-                .select(id_col, "s", (F.col("s") + k).alias("e"))
-            )
-            return merge_islands(hits, id_col)
-
-    return foreach_batch_pipeline(
-        new_docs_stream, screen_batch, sink_dir, checkpoint_dir, query_name
-    )
-
-
-def stream_bm25_screen(
-    new_docs_stream: DataFrame,
+def stream_screen(
+    stream: DataFrame,
     index,
     sink_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 5.0,
-    k1: float = 1.2,
-    b: float = 0.75,
-    query_name: str = "stream-bm25-screen",
+    query_name: str | None = None,
+    **query_params,
 ):
-    """Retrieval-based contamination screen: each micro-batch of
-    arriving documents plays the QUERY role against a persisted BM25
-    postings index of a reference corpus (an eval benchmark, a
-    blocklist, yesterday's shard), and every doc whose best match
-    scores >= threshold lands under ``sink_dir`` with the matched
-    reference id — the lexical-overlap ingest gate that complements
-    the exact-substring screen (stream_substring_screen catches
-    verbatim lifts; this face catches paraphrase-adjacent
-    high-overlap text that shares vocabulary without sharing k-gram
-    runs). Same foreach_batch_pipeline idempotency discipline as the
-    other screens (one hive partition dir per batch id, overwrite).
+    """Ingest screen: each micro-batch of arriving documents (or
+    vectors) is probed against a persisted index of the STANDING corpus
+    and the probe's rows land under ``sink_dir`` per batch id — the
+    foreach_batch_pipeline discipline (one hive partition dir per batch
+    id, overwrite), so an at-least-once replay rewrites rather than
+    duplicates. Each batch pays only its own signatures/grams/hashes
+    plus joins landing on the artifact's bucket distribution; the
+    corpus is never re-derived, batch after batch.
 
-    ``index`` is a ``CorpusBM25Index``
-    (operators/retrieval_index.read_corpus_bm25_index): each batch pays
-    one broadcast probe of the bucketed postings scan — the reference
-    corpus is never re-tokenized, batch after batch. The batch side is
-    broadcast (micro-batches are bounded by the trigger, the documented
-    small-by-construction class). Scoring constants k1/b are query-time
-    here, NOT artifact properties — the same index serves any
-    calibration, so no knob-disagreement guard is needed."""
-    from poormans_kube_etl_spark.operators.retrieval_index import bm25_topk_indexed
+    ``index`` is any index family's handle (``read_corpus_*_index``);
+    its family's ``IndexFamily.probe`` runs on each batch with
+    ``query_params`` (a threshold, BM25's k1/b). Two guards run here,
+    before ``start()``: ``stream`` must carry the columns the index was
+    built over, and ``query_params`` must bind to the probe — a build
+    constant such as MinHash ``bands`` or the gram width ``k`` comes
+    from the artifact, so passing it is rejected instead of silently
+    screening with settings the index was not built with."""
+    from poormans_kube_etl_spark.operators.index_maintenance import INDEX_FAMILIES
+
+    spec = {s.handle: s for s in INDEX_FAMILIES.values()}[type(index)]
+    c = index.constants
+    cols = [c[k] for k in ("id_col", "text_col", "vec_col") if k in c]
+    if not set(cols) <= set(stream.columns):
+        raise ValueError(
+            f"{spec.label} was built over {cols}, stream is configured for "
+            f"{stream.columns}"
+        )
+    try:
+        inspect.signature(spec.probe).bind(None, index, **query_params)
+    except TypeError as e:
+        raise ValueError(
+            f"{spec.probe.__name__} rejects {sorted(query_params)} ({e}); build "
+            "constants come from the index — rebuild it to change them"
+        ) from e
 
     def screen_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
-        q = batch_df.select(
-            F.col(id_col).alias("query_id"), F.col(text_col).alias("qtext")
-        )
-        top = bm25_topk_indexed(q, index, 1, k1=k1, b=b)
-        return top.where(F.col("sim") >= threshold).select(
-            F.col("query_id").alias(id_col),
-            F.col("nn_id").alias("matched_id"),
-            F.col("sim").alias("score"),
-        )
+        return spec.probe(batch_df.select(*cols), index, **query_params)
 
     return foreach_batch_pipeline(
-        new_docs_stream, screen_batch, sink_dir, checkpoint_dir, query_name
-    )
-
-
-def stream_exact_screen(
-    new_docs_stream: DataFrame,
-    index,
-    sink_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_name: str = "stream-exact-screen",
-):
-    """Exact-duplicate ingest gate — the CHEAPEST screen, and the one
-    every pipeline runs first: each micro-batch of arriving documents
-    probes the persisted keeper-resolved fingerprint index
-    (operators/exact_index.read_corpus_fp_index), and every doc whose
-    normalized text already exists in the corpus lands under
-    ``sink_dir`` with its canonical keeper id. Verbatim re-uploads die
-    here for the cost of one md5 per doc and one fp-keyed join landing
-    on the stored bucket distribution; the near-dup screens
-    (stream_dedup_against_corpus, stream_substring_screen,
-    stream_bm25_screen) only ever see what survives. Same
-    foreach_batch_pipeline idempotency discipline as the sibling
-    screens (one hive partition dir per batch id, overwrite)."""
-    from poormans_kube_etl_spark.operators.exact_index import (
-        exact_duplicates_indexed,
-    )
-
-    def screen_batch(batch_df: DataFrame, batch_id: int) -> DataFrame:
-        renamed = batch_df.select(
-            F.col(id_col).alias(index.constants["id_col"]),
-            F.col(text_col).alias(index.constants["text_col"]),
-        )
-        return exact_duplicates_indexed(renamed, index).select(
-            F.col("doc").alias(id_col), "keeper"
-        )
-
-    return foreach_batch_pipeline(
-        new_docs_stream, screen_batch, sink_dir, checkpoint_dir, query_name
+        stream,
+        screen_batch,
+        sink_dir,
+        checkpoint_dir,
+        query_name or f"stream-{spec.name}-screen",
     )

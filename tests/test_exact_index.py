@@ -100,13 +100,13 @@ def test_merge_append_resolves_keeper_by_min(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_fpidx_m_fps")
 
 
-def test_stream_exact_screen_flags_verbatim_reuploads(spark, tmp_path):
+def test_stream_screen_exact_flags_verbatim_reuploads(spark, tmp_path):
     """The fp index composed into the first-line streaming ingest gate:
     a verbatim re-upload (case/whitespace-mangled) is flagged with its
     canonical keeper; novel docs pass."""
     import json
 
-    from poormans_kube_etl_spark.streaming.streams import stream_exact_screen
+    from poormans_kube_etl_spark.streaming.streams import stream_screen
 
     ref = spark.createDataFrame(
         [(1, "the reference document body"), (2, "another corpus text")],
@@ -129,12 +129,12 @@ def test_stream_exact_screen_flags_verbatim_reuploads(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, text string").json(str(src))
         sink = str(tmp_path / "flags")
         q = (
-            stream_exact_screen(stream, idx, sink, str(tmp_path / "ckpt"))
+            stream_screen(stream, idx, sink, str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination(180)
         rows = spark.read.parquet(sink).collect()
-        assert {(r.doc_id, r.keeper) for r in rows} == {(100, 1)}
+        assert {(r.doc, r.keeper) for r in rows} == {(100, 1)}
     finally:
         spark.sql("DROP TABLE IF EXISTS t_fpscreen_fps")

@@ -8,13 +8,13 @@ the moment it is registered."""
 
 from __future__ import annotations
 
+import inspect
 import math
 import os
 
 import pytest
 
 from poormans_kube_etl_spark.operators import index_artifact
-from poormans_kube_etl_spark.operators.exact_index import exact_duplicates_indexed
 from poormans_kube_etl_spark.operators.index_artifact import (
     FINGERPRINT_KEY,
     SOURCE_FINGERPRINT_KEY,
@@ -29,18 +29,11 @@ from poormans_kube_etl_spark.operators.index_maintenance import (
     read_fragments,
     rebuild_corpus_bm25_index,
 )
-from poormans_kube_etl_spark.operators.minhash_index import (
-    minhash_incremental_near_duplicates_indexed,
-)
-from poormans_kube_etl_spark.operators.retrieval_index import bm25_topk_indexed
-from poormans_kube_etl_spark.operators.similarity_index import (
-    embedding_incremental_near_pairs_indexed,
-)
-from poormans_kube_etl_spark.operators.substring import substring_spans_indexed
 from poormans_kube_etl_spark.streaming.orchestrator import (
     DedupIndexMaintenance,
     Orchestrator,
 )
+from poormans_kube_etl_spark.streaming.streams import stream_screen
 from tests.test_index_maintenance import DOCS_A as INGEST_A
 from tests.test_index_maintenance import DOCS_B as INGEST_B
 from tests.test_index_maintenance import make_doc_folder
@@ -105,27 +98,14 @@ def _params(spec) -> dict:
     return params
 
 
-# one probe face per family: what a query sees of the artifact
-PROBES = {
-    "minhash": lambda probe, idx: minhash_incremental_near_duplicates_indexed(
-        probe, idx, threshold=0.5
-    ),
-    "srp": lambda probe, idx: embedding_incremental_near_pairs_indexed(probe, idx),
-    "gram": lambda probe, idx: substring_spans_indexed(probe, idx),
-    "exact": lambda probe, idx: exact_duplicates_indexed(probe, idx),
-    "bm25": lambda probe, idx: bm25_topk_indexed(
-        probe.sparkSession.createDataFrame(
-            [(1, "quick brown fox"), (2, "bucketed index family")],
-            "query_id long, qtext string",
-        ),
-        idx,
-        3,
-    ),
-}
+# query-time knobs per family: bm25's default threshold would drop
+# every row of these short docs
+PROBE_PARAMS = {"bm25": {"threshold": 0.0}}
 
 
 def _answers(spec, probe, idx) -> list[tuple]:
-    return sorted(tuple(r) for r in PROBES[spec.name](probe, idx).collect())
+    rows = spec.probe(probe, idx, **PROBE_PARAMS.get(spec.name, {})).collect()
+    return sorted(tuple(r) for r in rows)
 
 
 def _drop(spark, spec, name: str) -> None:
@@ -133,15 +113,63 @@ def _drop(spark, spec, name: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {name}{t.suffix}")
 
 
-def test_every_family_has_a_probe():
-    assert set(PROBES) == set(INDEX_FAMILIES)
-
-
 def _write(spec, frame, name, path=None):
     write_index(
         spec, frame, name, _params(spec),
         n_buckets=4, path=path, mode="errorifexists", source_fingerprint="tok-0",
     )
+
+
+@pytest.mark.parametrize("family", sorted(INDEX_FAMILIES))
+def test_probe_takes_no_build_constant(family):
+    """A probe's query parameters never shadow a recorded constant:
+    constants come from the artifact, not from the caller."""
+    spec = INDEX_FAMILIES[family]
+    params = list(inspect.signature(spec.probe).parameters)[2:]
+    assert not set(params) & set(spec.constant_keys), params
+
+
+def test_read_index_finds_a_missing_artifact_without_analysing_it(spark, monkeypatch):
+    """A missing table is found through the catalog: a failed
+    ``spark.table`` analysis makes Spark's execution listener log an
+    error with a stack trace once an Observation has run."""
+    analysed = []
+
+    def table(name):
+        analysed.append(name)
+        raise AssertionError(f"spark.table({name!r}) analysed a missing table")
+
+    monkeypatch.setattr(spark, "table", table)
+    spec = INDEX_FAMILIES["minhash"]
+    with pytest.raises(ValueError, match=f"index tables not found.*not a {spec.label}"):
+        read_index(spec, spark, "t_fam_never_written")
+    assert analysed == []
+
+
+@pytest.mark.parametrize("family", sorted(INDEX_FAMILIES))
+def test_stream_screen_lands_the_probe_rows(spark, tmp_path, family):
+    """Every family attaches to a stream through ``stream_screen``: a
+    one-file micro-batch of the probe frame lands exactly the rows
+    ``spec.probe`` gives on the same frame."""
+    spec = INDEX_FAMILIES[family]
+    a, _, probe = _frames(spark, spec.source)
+    name, src, sink = f"t_fam_{family}_screen", tmp_path / "src", tmp_path / "sink"
+    try:
+        _write(spec, a, name)
+        idx = read_index(spec, spark, name)
+        want = _answers(spec, probe, idx)
+        assert want, f"{family}: the probe must hit something to compare"
+        probe.coalesce(1).write.json(str(src))
+        stream = spark.readStream.schema(probe.schema).json(str(src))
+        q = stream_screen(
+            stream, idx, str(sink), str(tmp_path / "ckpt"),
+            **PROBE_PARAMS.get(family, {}),
+        ).trigger(availableNow=True).start()
+        assert q.awaitTermination(180)
+        got = spark.read.parquet(str(sink)).drop("batch_id").collect()
+        assert sorted(tuple(r) for r in got) == want
+    finally:
+        _drop(spark, spec, name)
 
 
 @pytest.mark.parametrize(

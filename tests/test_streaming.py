@@ -239,46 +239,56 @@ def test_stream_respects_watermark_column(spark, tmp_path):
     assert "watermark" in wm._jdf.queryExecution().analyzed().toString().lower()
 
 
-def test_stream_dedup_against_corpus(spark, tmp_path):
+def test_stream_screen_minhash_flags_near_duplicates(spark, tmp_path):
     """r8: the incremental dedup operator composed into a stream — each
     arriving shard's docs are MinHash-joined against the standing
-    corpus, pairs land per-batch-id (idempotent under replay)."""
+    corpus's index, pairs land per-batch-id (idempotent under replay)."""
     import json
     import os
 
-    from poormans_kube_etl_spark.streaming.streams import (
-        stream_dedup_against_corpus,
+    from poormans_kube_etl_spark.operators.minhash_index import (
+        read_corpus_minhash_index,
+        write_corpus_minhash_index,
     )
+    from poormans_kube_etl_spark.streaming.streams import stream_screen
 
     dup = "the quick brown fox jumps over the lazy dog again and again " * 4
     corpus = spark.createDataFrame(
         [(1, dup), (2, "standing corpus content nothing like the rest " * 4)],
         "doc_id long, text string",
     )
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    with open(src / "shard-000.json", "w") as fh:
-        fh.write(json.dumps({"doc_id": 100, "text": dup}) + "\n")
-        fh.write(json.dumps({"doc_id": 101, "text": "fresh novel words " * 8}) + "\n")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .json(str(src))
+    write_corpus_minhash_index(
+        corpus, "t_stream_mh", path=str(tmp_path / "idx"), n_buckets=2
     )
-    sink = str(tmp_path / "pairs")
-    q = stream_dedup_against_corpus(
-        stream,
-        corpus,
-        sink,
-        str(tmp_path / "ckpt"),
-        threshold=0.9,
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(180)
-    got = {
-        (r.a, r.b)
-        for r in spark.read.parquet(sink).select("a", "b").collect()
-    }
-    assert got == {(100, 1)}
-    assert os.path.isdir(os.path.join(sink, "batch_id=0"))
+    try:
+        index = read_corpus_minhash_index(spark, "t_stream_mh")
+        src = tmp_path / "arrivals"
+        src.mkdir()
+        with open(src / "shard-000.json", "w") as fh:
+            fh.write(json.dumps({"doc_id": 100, "text": dup}) + "\n")
+            fh.write(json.dumps({"doc_id": 101, "text": "fresh novel words " * 8}) + "\n")
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .json(str(src))
+        )
+        sink = str(tmp_path / "pairs")
+        q = stream_screen(
+            stream,
+            index,
+            sink,
+            str(tmp_path / "ckpt"),
+            threshold=0.9,
+        ).trigger(availableNow=True).start()
+        q.awaitTermination(180)
+        got = {
+            (r.a, r.b)
+            for r in spark.read.parquet(sink).select("a", "b").collect()
+        }
+        assert got == {(100, 1)}
+        assert os.path.isdir(os.path.join(sink, "batch_id=0"))
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_stream_mh_buckets")
+        spark.sql("DROP TABLE IF EXISTS t_stream_mh_shingles")
 
 
 def test_stream_dedup_against_persisted_index(spark, tmp_path):
@@ -294,9 +304,7 @@ def test_stream_dedup_against_persisted_index(spark, tmp_path):
         read_corpus_minhash_index,
         write_corpus_minhash_index,
     )
-    from poormans_kube_etl_spark.streaming.streams import (
-        stream_dedup_against_corpus,
-    )
+    from poormans_kube_etl_spark.streaming.streams import stream_screen
 
     dup = "the quick brown fox jumps over the lazy dog again and again " * 4
     corpus = spark.createDataFrame(
@@ -315,14 +323,7 @@ def test_stream_dedup_against_persisted_index(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, text string").json(str(src))
         sink = str(tmp_path / "pairs")
         q = (
-            stream_dedup_against_corpus(
-                stream,
-                None,
-                sink,
-                str(tmp_path / "ckpt"),
-                threshold=0.9,
-                index=index,
-            )
+            stream_screen(stream, index, sink, str(tmp_path / "ckpt"), threshold=0.9)
             .trigger(availableNow=True)
             .start()
         )
@@ -332,46 +333,34 @@ def test_stream_dedup_against_persisted_index(spark, tmp_path):
             fh.write(json.dumps({"doc_id": 200, "text": dup}) + "\n")
             fh.write(json.dumps({"doc_id": 201, "text": "novel words " * 10}) + "\n")
         q2 = (
-            stream_dedup_against_corpus(
-                stream,
-                None,
-                sink,
-                str(tmp_path / "ckpt"),
-                threshold=0.9,
-                index=index,
-            )
+            stream_screen(stream, index, sink, str(tmp_path / "ckpt"), threshold=0.9)
             .trigger(availableNow=True)
             .start()
         )
         q2.awaitTermination(180)
         got = {(r.a, r.b) for r in spark.read.parquet(sink).select("a", "b").collect()}
         assert got == {(100, 1), (200, 1)}
-        # misuse guards: both sources / neither / divergent banding knobs
-        with pytest.raises(ValueError, match="exactly one"):
-            stream_dedup_against_corpus(
-                stream, corpus, sink, str(tmp_path / "c2"), index=index
-            )
-        with pytest.raises(ValueError, match="exactly one"):
-            stream_dedup_against_corpus(stream, None, sink, str(tmp_path / "c3"))
+        # misuse guards: divergent banding knobs / a stream missing the id column
         with pytest.raises(ValueError, match="come from the index"):
-            stream_dedup_against_corpus(
-                stream, None, sink, str(tmp_path / "c4"), index=index, bands=4
-            )
+            stream_screen(stream, index, sink, str(tmp_path / "c4"), bands=4)
         with pytest.raises(ValueError, match="stream is configured for"):
-            stream_dedup_against_corpus(
-                stream, None, sink, str(tmp_path / "c5"), index=index, id_col="vid"
+            stream_screen(
+                stream.withColumnRenamed("doc_id", "vid"),
+                index,
+                sink,
+                str(tmp_path / "c5"),
             )
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_stream_idx_bands")
+        spark.sql("DROP TABLE IF EXISTS t_stream_idx_buckets")
         spark.sql("DROP TABLE IF EXISTS t_stream_idx_shingles")
 
 
-def test_stream_substring_screen_live_and_indexed(spark, tmp_path):
+def test_stream_screen_gram_flags_lifted_span(spark, tmp_path):
     """The substring ingest gate as a stream: an arriving shard's
-    lifted passage is flagged with its exact span against the standing
-    corpus — once recomputing corpus grams per batch, once probing the
-    persisted gram index (corpus never re-tokenized); both faces agree,
-    and a width disagreeing with the artifact is rejected."""
+    lifted passage is flagged with its exact span by probing the
+    persisted gram index of the standing corpus (corpus never
+    re-tokenized), and a width disagreeing with the artifact is
+    rejected."""
     import json
 
     import pytest
@@ -380,7 +369,7 @@ def test_stream_substring_screen_live_and_indexed(spark, tmp_path):
         read_corpus_gram_index,
         write_corpus_gram_index,
     )
-    from poormans_kube_etl_spark.streaming.streams import stream_substring_screen
+    from poormans_kube_etl_spark.streaming.streams import stream_screen
 
     lifted = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     corpus = spark.createDataFrame(
@@ -393,51 +382,31 @@ def test_stream_substring_screen_live_and_indexed(spark, tmp_path):
     with open(src / "shard-000.json", "w") as fh:
         fh.write(json.dumps({"doc_id": 100, "text": "intro words " + lifted}) + "\n")
         fh.write(json.dumps({"doc_id": 101, "text": "fresh novel words " * 8}) + "\n")
-
-    def arrivals():
-        return spark.readStream.schema("doc_id long, text string").json(str(src))
-
-    sink_live = str(tmp_path / "spans_live")
-    q = stream_substring_screen(
-        arrivals(), corpus, sink_live, str(tmp_path / "ckpt_live")
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(180)
-    live = {
-        (r.doc_id, r.span_start, r.span_len)
-        for r in spark.read.parquet(sink_live).collect()
-    }
-    # doc 100: "intro words" (2 tokens) then the 10 lifted tokens
-    assert live == {(100, 2, 10)}
+    arrivals = spark.readStream.schema("doc_id long, text string").json(str(src))
 
     write_corpus_gram_index(
         corpus, "t_stream_ssidx", k=8, path=str(tmp_path / "ssidx"), n_buckets=2
     )
     try:
         index = read_corpus_gram_index(spark, "t_stream_ssidx")
-        sink_idx = str(tmp_path / "spans_idx")
-        q = stream_substring_screen(
-            arrivals(), None, sink_idx, str(tmp_path / "ckpt_idx"), index=index
+        sink = str(tmp_path / "spans")
+        q = stream_screen(
+            arrivals, index, sink, str(tmp_path / "ckpt")
         ).trigger(availableNow=True).start()
         q.awaitTermination(180)
-        indexed = {
+        got = {
             (r.doc_id, r.span_start, r.span_len)
-            for r in spark.read.parquet(sink_idx).collect()
+            for r in spark.read.parquet(sink).collect()
         }
-        assert indexed == live
-        with pytest.raises(ValueError, match="baked into the index"):
-            stream_substring_screen(
-                arrivals(), None, sink_idx, str(tmp_path / "ckpt_k"),
-                k=5, index=index,
-            )
-        with pytest.raises(ValueError, match="exactly one"):
-            stream_substring_screen(
-                arrivals(), corpus, sink_idx, str(tmp_path / "ckpt_b"), index=index
-            )
+        # doc 100: "intro words" (2 tokens) then the 10 lifted tokens
+        assert got == {(100, 2, 10)}
+        with pytest.raises(ValueError, match="come from the index"):
+            stream_screen(arrivals, index, sink, str(tmp_path / "ckpt_k"), k=5)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_stream_ssidx_grams")
 
 
-def test_stream_bm25_screen_flags_high_overlap_docs(spark, tmp_path):
+def test_stream_screen_bm25_flags_high_overlap_docs(spark, tmp_path):
     """r9: the persisted BM25 index composed into an ingest gate — an
     arriving doc sharing most of a reference doc's vocabulary (but not
     long verbatim runs, so the substring screen would miss it) is
@@ -449,7 +418,7 @@ def test_stream_bm25_screen_flags_high_overlap_docs(spark, tmp_path):
         read_corpus_bm25_index,
         write_corpus_bm25_index,
     )
-    from poormans_kube_etl_spark.streaming.streams import stream_bm25_screen
+    from poormans_kube_etl_spark.streaming.streams import stream_screen
 
     ref = spark.createDataFrame(
         [
@@ -471,9 +440,7 @@ def test_stream_bm25_screen_flags_high_overlap_docs(spark, tmp_path):
         stream = spark.readStream.schema("doc_id long, text string").json(str(src))
         sink = str(tmp_path / "flags")
         q = (
-            stream_bm25_screen(
-                stream, idx, sink, str(tmp_path / "ckpt"), threshold=1.0
-            )
+            stream_screen(stream, idx, sink, str(tmp_path / "ckpt"), threshold=1.0)
             .trigger(availableNow=True)
             .start()
         )
