@@ -655,6 +655,20 @@ def read_index(spec: IndexFamily, spark: SparkSession, name: str) -> Any:
     return spec.handle(**frames, constants=constants)
 
 
+def live_index(spec: IndexFamily, corpus: DataFrame, params: dict[str, Any]) -> Any:
+    """The family's handle over ``corpus`` without writing anything:
+    ``derive``'s frames stay lazy plans, so ``spec.probe`` over this
+    handle computes the corpus side inside the probe's own plan — the
+    same answers as over the artifact ``write_index`` would land."""
+    constants = {
+        k: str(v) for k, v in {**spec.defaults, **params}.items() if v is not None
+    }
+    with spec.derive(corpus, constants) as (frames, derived):
+        constants.update(derived)
+    tables = {t.suffix[1:]: frames[t.suffix] for t in spec.tables}
+    return spec.handle(**tables, constants=constants)
+
+
 def sf_dir_tag(sf_dir: str) -> str:
     """Artifact-name identity for a data directory: sanitized basename
     + md5 of the FULL normalized path (collision rule shared by all

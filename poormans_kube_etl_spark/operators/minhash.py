@@ -390,6 +390,15 @@ def bounded_buckets(corpus_banded: DataFrame, max_bucket: int = 256) -> DataFram
     ~60% of the indexed delta's cost (4.5 s → 1.9 s once the artifact
     stores buckets instead of raw band rows).
 
+    Hot-band guard (the delta-vs-corpus twin of lsh_candidate_pairs'
+    star guard, r8 review): a boilerplate band value shared by 10^5
+    corpus docs would fan every matching delta doc out across the
+    whole bucket, so buckets larger than ``max_bucket`` are DROPPED —
+    the winnowing 'stop hash' discipline: an over-hot band carries no
+    discriminating signal, and a genuine near-duplicate still surfaces
+    through its rarer bands. Trade-off, documented not hidden: a delta
+    doc whose EVERY shared band is boilerplate loses the pair.
+
     Bounded accumulation (ADVICE r08): a row_number window caps each
     bucket at max_bucket+1 rows BEFORE collect_set, so an over-hot band
     never materializes its full doc array in one aggregation buffer —
@@ -422,18 +431,6 @@ def bucket_candidate_join(new_banded: DataFrame, buckets: DataFrame) -> DataFram
     )
 
 
-def banded_bucket_join(
-    new_banded: DataFrame, corpus_banded: DataFrame, max_bucket: int = 256
-) -> DataFrame:
-    """Distinct (a=new, b=corpus) candidate pairs from two RAW banded
-    frames — the live (no artifact) path; the persisted indexes store
-    ``bounded_buckets`` output and call ``bucket_candidate_join``
-    directly, skipping the per-delta aggregation."""
-    return bucket_candidate_join(
-        new_banded, bounded_buckets(corpus_banded, max_bucket)
-    )
-
-
 # Auto-materialization crossover for incremental DELTA signatures
 # (r14, VERDICT r13 #3): hashing a delta twice (banding + verify side,
 # lazy) beats an eager checkpoint below this estimated input size, and
@@ -446,12 +443,10 @@ def banded_bucket_join(
 _DELTA_SHARE_MIN_BYTES = 2 << 20
 
 
-def _delta_share_auto(new_docs: DataFrame, share_signatures: bool | None) -> bool:
-    """Resolve the share_signatures tri-state: explicit wins; None
-    gates on the delta input's size estimate (lazy when unavailable —
-    never fail a build over a stats probe)."""
-    if share_signatures is not None:
-        return share_signatures
+def _delta_share_auto(new_docs: DataFrame) -> bool:
+    """Whether to materialize the delta's signatures: gates on the
+    delta input's size estimate (lazy when unavailable — never fail a
+    build over a stats probe)."""
     try:
         size = int(
             str(
@@ -461,119 +456,6 @@ def _delta_share_auto(new_docs: DataFrame, share_signatures: bool | None) -> boo
     except Exception:
         return False
     return size >= _DELTA_SHARE_MIN_BYTES
-
-
-def lsh_incremental_candidate_pairs(
-    new_signed: DataFrame,
-    corpus_signed: DataFrame,
-    id_col: str,
-    bands: int,
-    rows_per_band: int,
-    max_bucket: int = 256,
-) -> DataFrame:
-    """Candidate pairs between a NEW batch and an EXISTING corpus:
-    (new_id AS a, corpus_id AS b), distinct — the incremental-ingest
-    shape (r8). A daily 1 TB delta against a 100 TB corpus must not
-    re-run self-dedup over 101 TB: the corpus side's signatures are
-    computed once (persist them as a table at ingest) and each delta
-    only pays its own signatures plus a band-keyed JOIN — which AQE
-    broadcasts when the banded delta is small, so the usual case is a
-    map-side join against the corpus band table, no corpus shuffle at
-    all. New-vs-new duplicates are NOT emitted (run the self-dedup
-    ``lsh_candidate_pairs`` on the delta for those); pairs are distinct
-    even when the two docs share several bands.
-
-    Hot-band guard (the incremental twin of lsh_candidate_pairs'
-    star guard, r8 review): a boilerplate band value shared by 10^5
-    corpus docs turns the band join into a 10^5-fan-out per matching
-    delta doc. Corpus band buckets larger than ``max_bucket`` are
-    DROPPED — the winnowing 'stop hash' discipline: an over-hot band
-    carries no discriminating signal, and a genuinely near-duplicate
-    pair still surfaces through its rarer bands. Trade-off, documented
-    not hidden: a delta doc whose EVERY shared band is boilerplate
-    loses the pair. The bucket aggregate itself is buffer-bounded —
-    see ``banded_bucket_join``."""
-    new_b = _banded(new_signed, id_col, bands, rows_per_band).withColumnRenamed(
-        "doc", "a"
-    )
-    corpus_b = _banded(corpus_signed, id_col, bands, rows_per_band)
-    return banded_bucket_join(new_b, corpus_b, max_bucket)
-
-
-def minhash_incremental_near_duplicates(
-    new_docs: DataFrame,
-    corpus_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_len: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    hash_family: str = "xxhash64",
-    max_bucket: int = 256,
-    share_signatures: bool | None = None,
-) -> DataFrame:
-    """New-batch-vs-corpus near-dup pairs: (a=new id, b=corpus id,
-    jaccard >= threshold). See ``lsh_incremental_candidate_pairs`` for
-    the scale rationale and the hot-band guard. Both sides must use the
-    SAME hash family and banding, or buckets never collide — callers
-    persisting corpus signatures must record those constants with the
-    table.
-
-    ``share_signatures`` (r14, ADVICE r13 + VERDICT r13 #3): the
-    delta's signatures feed banding AND the verify's a-side. True
-    materializes the delta-sized frame once with an EAGER
-    localCheckpoint instead of hashing the delta twice; False stays
-    fully lazy/composable (Connect-safe, recompute-based fault
-    tolerance). Default None decides from the DELTA INPUT's optimizer
-    size estimate (``_delta_share_auto``): measured at sf0.1 the eager
-    barrier costs more than the duplicated tiny-delta hashing (indexed
-    face 1.03 → 0.69 s lazy) while at sf1 the second hashing pass
-    already dominates (1.68 lazy vs 1.09 eager) — the crossover sits
-    near a ~2 MB input estimate. The CORPUS side always stays
-    recomputed — its two consumers would otherwise need a corpus-scale
-    checkpoint, which is exactly what the persisted index family is
-    for (callers probing repeatedly should use the indexed face)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes={num_hashes} must be divisible by bands={bands}"
-        )
-    new_signed = signed_for(
-        new_docs, id_col, text_col, shingle_len, num_hashes, hash_family
-    )
-    if _delta_share_auto(new_docs, share_signatures):
-        new_signed = new_signed.localCheckpoint()
-    corpus_signed = signed_for(
-        corpus_docs, id_col, text_col, shingle_len, num_hashes, hash_family
-    )
-    cands = lsh_incremental_candidate_pairs(
-        new_signed, corpus_signed, id_col, bands, num_hashes // bands, max_bucket
-    )
-    # exact verify: a's shingle sets come from the new batch, b's from
-    # the corpus — same join shape as exact_jaccard but two-sided
-    sa = new_signed.select(F.col(id_col).alias("a"), F.col("shingles").alias("sh_a"))
-    sb = corpus_signed.select(
-        F.col(id_col).alias("b"), F.col("shingles").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    from poormans_kube_etl_spark.operators.exprcache import where_materialized
-
-    # where_materialized (r14): a plain where() pushes the threshold
-    # into the b-side join condition, re-inlining array_intersect into
-    # a single no-CSE condition expression — the set intersection ran
-    # twice per candidate row (numerator + union) before the surviving
-    # rows paid the projection again. Blocked, it runs once per row.
-    return where_materialized(
-        cands.join(sa, "a")
-        .join(sb, "b")
-        .select(
-            "a",
-            "b",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        ),
-        F.col("jaccard") >= threshold,
-    )
 
 
 def lsh_bucket_stats(
@@ -623,21 +505,14 @@ def minhash_near_duplicates(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    cache: bool = False,
     max_bucket: int = 256,
-    return_signatures: bool = False,
     hash_family: str = "xxhash64",
-    share_signatures: bool = True,
-):
+) -> DataFrame:
     """End-to-end near-dup pairs: (a, b, jaccard) with jaccard >= threshold.
 
-    NOTE — EAGER BY DEFAULT since r13 (called out per ADVICE r13):
-    ``share_signatures=True`` runs a Spark job at DataFrame-BUILD time
-    (a localCheckpoint of the signature aggregate; measured -40% end to
-    end at sf0.1 — see below). Callers needing a fully lazy build —
-    plan inspection, composition with later pushdown-expecting filters,
-    Spark Connect, recompute-based fault tolerance — pass
-    ``share_signatures=False``.
+    NOTE — EAGER since r13 (called out per ADVICE r13): the build runs
+    a Spark job (a localCheckpoint of the signature aggregate; measured
+    -40% end to end at sf0.1 — see the inline comment).
 
     ``hash_family`` picks the fingerprint arithmetic:
 
@@ -646,30 +521,7 @@ def minhash_near_duplicates(
     - ``"md5"``: Karp-Rabin rolls over md5-derived token hashes (see
       the md5-family block above) — every value is replayable in DuckDB,
       so the WHOLE pipeline is independently oracle-checkable, the same
-      cross-engine discipline as simhash's ``token_hash="md5"``.
-
-    ``cache`` persists the signature aggregate, which feeds three
-    consumers (banding + both verify-join sides) whose different column
-    prunings defeat exchange reuse. Default OFF: measured (r7, on the
-    string-shingle pipeline of that era) the columnar materialization
-    of the shingle sets cost MORE than the duplicated signature compute
-    (6.8s vs 5.6s). Since r13 ``share_signatures`` (default ON) solves
-    the same triple-execution with a localCheckpoint instead — on
-    today's long-typed h0 sets the materialization is cheap and the
-    measured win is -40% at sf0.1 (see the inline comment); ``cache``
-    remains for callers who want a caller-managed persist handle
-    (pair it with ``return_signatures`` to unpersist).
-
-    ``return_signatures=True`` returns ``(pairs, signatures)`` so a
-    long-lived session can ``signatures.unpersist()`` after consuming
-    the pairs (r7 review: the persist otherwise pins executor storage
-    for the application lifetime with no release handle). This explicit
-    form replaces the old ``result._persisted_signatures`` attribute
-    (ADVICE r7): any transformation of the result (`.where`, `.select`,
-    even `.orderBy`) returns a NEW DataFrame without the attribute, so
-    the handle was silently lost in the most common usage shapes. The
-    attribute is still set for back-compat but must be read BEFORE any
-    further transformation."""
+      cross-engine discipline as simhash's ``token_hash="md5"``."""
     if num_hashes % bands != 0:
         # a real raise, not assert: asserts vanish under python -O, and
         # the band slice guard downstream would only catch the OVERRUN
@@ -679,38 +531,28 @@ def minhash_near_duplicates(
         )
     from poormans_kube_etl_spark.operators.exprcache import where_materialized
 
-    signed = signed_for(docs, id_col, text_col, shingle_len, num_hashes, hash_family)
-    if cache:
-        from pyspark import StorageLevel
-
-        signed = signed.persist(StorageLevel.MEMORY_AND_DISK)
-    elif share_signatures:
-        # The signature frame feeds THREE consumers — banding and both
-        # exact-Jaccard verify sides — whose differing column prunings
-        # defeat exchange reuse, so without a materialization boundary
-        # the full scan → tokenize → per-shingle hash → signature
-        # aggregate pipeline executes three times: two extra full-corpus
-        # passes AND two extra corpus-wide exchanges at any scale
-        # (guide §2.4 — remove duplicated shuffles). localCheckpoint
-        # materializes it once, eagerly, to executor-local storage;
-        # unlike the ``cache`` path it needs no caller-managed
-        # unpersist (the ContextCleaner reaps it with the DataFrame).
-        # Trade, documented not hidden: checkpointing truncates lineage,
-        # so an executor loss fails the job instead of recomputing —
-        # the same discipline the iterative closure
-        # (operators/graph.connected_components) already accepts, and
-        # the standard one for batch dedup jobs. Measured r13 at sf0.1:
-        # the full md5-family query drops 2.37 s → 1.42 s (-40%).
-        signed = signed.localCheckpoint()
+    # The signature frame feeds THREE consumers — banding and both
+    # exact-Jaccard verify sides — whose differing column prunings
+    # defeat exchange reuse, so without a materialization boundary the
+    # full scan → tokenize → per-shingle hash → signature aggregate
+    # pipeline executes three times: two extra full-corpus passes AND
+    # two extra corpus-wide exchanges at any scale (guide §2.4 — remove
+    # duplicated shuffles). localCheckpoint materializes it once,
+    # eagerly, to executor-local storage, and needs no caller-managed
+    # unpersist (the ContextCleaner reaps it with the DataFrame).
+    # Trade, documented not hidden: checkpointing truncates lineage, so
+    # an executor loss fails the job instead of recomputing — the same
+    # discipline the iterative closure (operators/graph.
+    # connected_components) already accepts, and the standard one for
+    # batch dedup jobs. Measured r13 at sf0.1: the full md5-family
+    # query drops 2.37 s → 1.42 s (-40%).
+    signed = signed_for(
+        docs, id_col, text_col, shingle_len, num_hashes, hash_family
+    ).localCheckpoint()
     cands = lsh_candidate_pairs(signed, id_col, bands, num_hashes // bands, max_bucket)
     # threshold via where_materialized (r14): a plain where() re-inlines
     # the Jaccard chain (array_intersect twice) into the verify join's
     # no-CSE condition — one evaluation per candidate row instead
-    result = where_materialized(
+    return where_materialized(
         exact_jaccard(cands, signed, id_col), F.col("jaccard") >= threshold
     )
-    if cache:
-        result._persisted_signatures = signed  # back-compat; see docstring
-    if return_signatures:
-        return result, signed
-    return result

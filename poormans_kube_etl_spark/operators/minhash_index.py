@@ -1,9 +1,11 @@
 """Persisted corpus MinHash index — the ingest-time artifact the
 incremental dedup path was designed around (VERDICT r08 #6).
 
-``minhash_incremental_near_duplicates`` documents that at 100 TB the
-corpus side's signatures are computed ONCE and persisted; this module
-is that writer/reader pair. Two catalog tables per index:
+At 100 TB the corpus side's signatures are computed ONCE and
+persisted; this module is that writer/reader pair plus the delta probe.
+Without an artifact, the same probe runs over
+``index_artifact.live_index`` — the corpus tables as lazy plans. Two
+catalog tables per index:
 
 - ``<name>_buckets`` (band_id, band_hash, bs), bucketed by
   (band_id, band_hash): the candidate join's corpus side,
@@ -77,7 +79,8 @@ class CorpusMinhashIndex:
 @contextmanager
 def _derive(docs: DataFrame, c: dict[str, str]):
     """One signature pass, persisted, feeds BOTH tables (unpersisted on
-    exit — the writes are the cache's only consumers)."""
+    exit — the writes are the cache's only consumers; ``live_index``
+    runs no action inside, so nothing is ever cached there)."""
     num_hashes, bands = int(c["num_hashes"]), int(c["bands"])
     if num_hashes % bands != 0:
         raise ValueError(f"num_hashes={num_hashes} must be divisible by bands={bands}")
@@ -151,25 +154,24 @@ def minhash_incremental_near_duplicates_indexed(
     new_docs: DataFrame,
     index: CorpusMinhashIndex,
     threshold: float = 0.5,
-    share_signatures: bool | None = None,
 ) -> DataFrame:
     """New-batch-vs-corpus near-dup pairs (a=new id, b=corpus id,
-    jaccard >= threshold) against a PERSISTED index: the delta pays its
-    own signature pass plus two joins that both land on the index
-    tables' bucket distribution — the corpus is never re-shingled (the
-    plan gate ``test_indexed_incremental_reuses_persisted_bands`` pins
-    exactly that). Same semantics as
-    ``minhash_incremental_near_duplicates`` with the corpus side read
-    from the artifact; banding constants come FROM the artifact.
+    jaccard >= threshold); banding constants come FROM the index.
+    Against a PERSISTED index the delta pays its own signature pass
+    plus two joins that both land on the index tables' bucket
+    distribution — the corpus is never re-shingled (the plan gate
+    ``test_indexed_incremental_reuses_persisted_bands`` pins exactly
+    that), and AQE broadcasts the banded delta when it is small.
+    New-vs-new pairs are NOT emitted (run ``minhash_near_duplicates``
+    on the delta for those); pairs are distinct even when the two docs
+    share several bands. The corpus buckets carry
+    ``bounded_buckets``' hot-band guard.
 
-    ``share_signatures`` (r14, ADVICE r13: was an unconditional eager
-    localCheckpoint with no opt-out): True materializes the delta
-    signatures once for their two consumers (banding + verify a-side);
-    False keeps the build lazy — composable, Connect-safe, recomputable
-    on executor loss. Default None auto-gates on the delta input's
-    size estimate (minhash._delta_share_auto — measured crossover
-    ~2 MB: at sf0.1 lazy wins 1.03 → 0.69 s, at sf1 eager wins
-    1.68 → 1.09 s)."""
+    The delta's signatures feed banding AND the verify's a-side: a
+    delta input estimated at ``_DELTA_SHARE_MIN_BYTES`` or more
+    materializes them once (localCheckpoint, eager), a smaller one
+    stays lazy and hashes twice (measured crossover ~2 MB: at sf0.1
+    lazy wins 1.03 → 0.69 s, at sf1 eager wins 1.68 → 1.09 s)."""
     c = index.constants
     shingle_len, num_hashes = int(c["shingle_len"]), int(c["num_hashes"])
     bands = int(c["bands"])
@@ -178,7 +180,7 @@ def minhash_incremental_near_duplicates_indexed(
     )
     from poormans_kube_etl_spark.operators.minhash import _delta_share_auto
 
-    if _delta_share_auto(new_docs, share_signatures):
+    if _delta_share_auto(new_docs):
         new_signed = new_signed.localCheckpoint()
     new_b = _banded(
         new_signed, c["id_col"], bands, num_hashes // bands
@@ -192,9 +194,11 @@ def minhash_incremental_near_duplicates_indexed(
     union = F.size("sh_a") + F.size("sh_b") - inter
     from poormans_kube_etl_spark.operators.exprcache import where_materialized
 
-    # where_materialized (r14): keeps the Jaccard chain out of the
-    # verify join's no-CSE condition — see minhash.exact_jaccard's
-    # caller for the duplication mode
+    # where_materialized (r14): a plain where() pushes the threshold
+    # into the b-side join condition, re-inlining array_intersect into
+    # a single no-CSE condition expression — the set intersection ran
+    # twice per candidate row (numerator + union) before the surviving
+    # rows paid the projection again. Blocked, it runs once per row.
     return where_materialized(
         cands.join(sa, "a")
         .join(sb, "b")

@@ -789,8 +789,8 @@ def _verify_cross_pairs(
 ) -> DataFrame:
     """Exact-cosine verify of cross-side (a=new, b=corpus) candidate id
     pairs — per-side norms, codegen'd pair dot, bit-identical to
-    ``cosine()``. ``corpus_vectors`` may be the raw corpus or a
-    persisted index's vectors table (same columns)."""
+    ``cosine()``. ``corpus_vectors`` is an SRP index handle's vectors
+    table, persisted or live (``index_artifact.live_index``)."""
     va = new_embeddings.select(
         F.col(id_col).alias("a"), checked_double_vec(vec_col, dim).alias("_va")
     ).withColumn("_na", _norm_expr("_va", dim))
@@ -806,53 +806,6 @@ def _verify_cross_pairs(
     return where_materialized(
         cands.join(va, "a").join(vb, "b").select("a", "b", sim.alias("cos_sim")),
         F.col("cos_sim") >= threshold,
-    )
-
-
-def embedding_incremental_near_pairs(
-    new_embeddings: DataFrame,
-    corpus_embeddings: DataFrame,
-    threshold: float = 0.8,
-    bands: int | None = None,
-    planes_per_band: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    max_bucket: int = 256,
-) -> DataFrame:
-    """Delta-vs-corpus embedding near-dup pairs (a=new id, b=corpus id,
-    cos_sim >= threshold) — the r9 embedding twin of
-    ``minhash.minhash_incremental_near_duplicates``: a daily embedding
-    delta must not re-run self-dedup over the whole corpus. Both sides
-    are banded with the SAME deterministic hyperplanes (planned from
-    the CORPUS size when auto — the corpus sets the background
-    collision budget), candidates come from the bounded bucket join
-    (minhash.banded_bucket_join: the corpus side aggregates once,
-    buffer-capped, hot bands dropped), and only surviving unique pairs
-    pay the exact-cosine verify. New-vs-new pairs are NOT emitted —
-    run embedding_near_pairs_lsh on the delta for those. The persisted
-    face is operators/similarity_index.py."""
-    from poormans_kube_etl_spark.operators.minhash import banded_bucket_join
-
-    dim = resolve_dim(corpus_embeddings, vec_col, dim)
-    if (bands is None) != (planes_per_band is None):
-        raise ValueError(
-            "pass BOTH bands and planes_per_band or NEITHER; the pair "
-            "is planned jointly from the threshold (srp_banding)"
-        )
-    if bands is None:
-        planes_per_band, bands = srp_banding(
-            threshold, n_vectors=corpus_embeddings.count(), max_planes=1024
-        )
-    new_b = srp_band_signatures(
-        new_embeddings, bands, planes_per_band, id_col, vec_col, dim
-    ).select(F.col("vid").alias("a"), "band_id", F.col("bucket").alias("band_hash"))
-    corpus_b = srp_band_signatures(
-        corpus_embeddings, bands, planes_per_band, id_col, vec_col, dim
-    ).select(F.col("vid").alias("doc"), "band_id", F.col("bucket").alias("band_hash"))
-    cands = banded_bucket_join(new_b, corpus_b, max_bucket)
-    return _verify_cross_pairs(
-        cands, new_embeddings, corpus_embeddings, threshold, id_col, vec_col, dim
     )
 
 

@@ -260,8 +260,9 @@ def substring_spans_indexed(new_docs: DataFrame, index: CorpusGramIndex) -> Data
     indexed corpus: the delta pays its own tokenize+hash plus one
     membership semi-join landing on the gram table's bucket
     distribution — the corpus is never re-tokenized (plan-gated). The
-    k-gram width comes FROM the artifact. Same semantics as the live
-    incremental face with the corpus side read from the index."""
+    k-gram width comes FROM the artifact. Over
+    ``index_artifact.live_index`` the gram set is a lazy distinct
+    aggregate of the corpus instead (the live incremental face)."""
     c = index.constants
     k = int(c["k"])
     delta = positional_kgrams(new_docs, k, c["id_col"], c["text_col"])

@@ -307,7 +307,7 @@ def _minhash_md5_pair_ctes(
     INCREMENTAL shape (dedup_minhash_incremental_pairs): docs with
     doc_id % K == 0 form the "new batch", the rest the "corpus", and
     candidates are cross-side only (a=new, b=corpus) — mirroring
-    operators/minhash.lsh_incremental_candidate_pairs.
+    operators/minhash_index.minhash_incremental_near_duplicates_indexed.
     """
     from poormans_kube_etl_spark.operators.minhash import (
         MD5_ROLL_BASE_A,
@@ -357,8 +357,8 @@ def _minhash_md5_pair_ctes(
     ),"""
     else:
         # corpus-side hot-band cap mirrored from
-        # lsh_incremental_candidate_pairs (max_bucket=256): corpus band
-        # buckets above the cap are dropped before pairing
+        # minhash.bounded_buckets (max_bucket=256): corpus band buckets
+        # above the cap are dropped before pairing
         cand = f"""
     oldb AS (
       SELECT b.doc_id, b.band_id, b.bk
@@ -492,6 +492,18 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(pairs).orderBy("doc")
 
 
+# the md5-family build constants both delta faces probe with (the
+# oracle's _minhash_md5_pair_ctes defaults)
+_MINHASH_MD5_PARAMS = {
+    "id_col": "doc_id",
+    "text_col": "text",
+    "shingle_len": 3,
+    "num_hashes": 32,
+    "bands": 8,
+    "hash_family": "md5",
+}
+
+
 @register(
     "dedup_minhash_incremental_pairs",
     oracle=f"""
@@ -509,25 +521,23 @@ def dedup_minhash_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     delta is small. Full oracle via the md5 hash family (the corpus
     side's banding recomputed in DuckDB, cross-side candidates only).
     New-vs-new pairs are deliberately absent — that is the self-dedup
-    query's job on the delta alone."""
-    from poormans_kube_etl_spark.operators.minhash import (
-        minhash_incremental_near_duplicates,
+    query's job on the delta alone. The corpus side is
+    ``index_artifact.live_index``: the index family's own probe over
+    lazy corpus tables, so this face and
+    dedup_minhash_index_delta_pairs run one operator."""
+    from poormans_kube_etl_spark.operators.index_artifact import live_index
+    from poormans_kube_etl_spark.operators.minhash_index import (
+        MINHASH_FAMILY,
+        minhash_incremental_near_duplicates_indexed,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     new = docs.where(F.col("doc_id") % 10 == 0)
     corpus = docs.where(F.col("doc_id") % 10 != 0)
-    return minhash_incremental_near_duplicates(
-        new,
-        corpus,
-        "doc_id",
-        "text",
-        shingle_len=3,
-        num_hashes=32,
-        bands=8,
-        threshold=0.5,
-        hash_family="md5",
-    ).orderBy("a", "b")
+    idx = live_index(MINHASH_FAMILY, corpus, _MINHASH_MD5_PARAMS)
+    return minhash_incremental_near_duplicates_indexed(new, idx, threshold=0.5).orderBy(
+        "a", "b"
+    )
 
 
 # artifact stem of dedup_minhash_index_delta_pairs (bench.py's attach
@@ -549,9 +559,10 @@ def dedup_minhash_index_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     constants in table properties), then the delta (every 10th doc)
     joins the artifact — the corpus is never re-shingled on the delta
     path (plan-gated by test_indexed_incremental_reuses_persisted_bands).
-    Same oracle as dedup_minhash_incremental_pairs: the artifact path
-    is a pure optimization, so the pair set must be identical. Opening
-    the artifact is index_artifact.open_index."""
+    Same probe and oracle as dedup_minhash_incremental_pairs: the two
+    faces differ only in where the corpus tables come from, so the pair
+    set must be identical. Opening the artifact is
+    index_artifact.open_index."""
     from poormans_kube_etl_spark.operators.index_artifact import open_index
     from poormans_kube_etl_spark.operators.minhash_index import (
         MINHASH_FAMILY,
@@ -567,14 +578,7 @@ def dedup_minhash_index_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFra
         sf_dir=sf_dir,
         table="documents",
         stem=MINHASH_INDEX_STEM,
-        params={
-            "id_col": "doc_id",
-            "text_col": "text",
-            "shingle_len": 3,
-            "num_hashes": 32,
-            "bands": 8,
-            "hash_family": "md5",
-        },
+        params=_MINHASH_MD5_PARAMS,
         n_buckets=8,
     )
     return minhash_incremental_near_duplicates_indexed(new, idx, threshold=0.5).orderBy(

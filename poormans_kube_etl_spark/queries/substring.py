@@ -66,26 +66,14 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The machinery moved to operators/substring.py when the persisted
 # gram index joined the family (it needs the same gram generation the
-# queries use, and operators must not import from queries). These
-# _K-defaulted faces keep the query-module call shape.
-
-
-def positional_kgrams(docs: DataFrame, k: int = _K) -> DataFrame:
-    from poormans_kube_etl_spark.operators.substring import positional_kgrams as op
-
-    return op(docs, k)
+# queries use, and operators must not import from queries). This
+# _K-defaulted face keeps the query-module call shape.
 
 
 def duplicate_spans(docs: DataFrame, k: int = _K) -> DataFrame:
     from poormans_kube_etl_spark.operators.substring import duplicate_spans as op
 
     return op(docs, k)
-
-
-def merge_islands(hits: DataFrame) -> DataFrame:
-    from poormans_kube_etl_spark.operators.substring import merge_islands as op
-
-    return op(hits)
 
 
 # Shared oracle CTE pieces: positional k-grams (prefix), merged islands
@@ -256,9 +244,10 @@ def train_scrub_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@register(
-    "dedup_substring_incremental_spans",
-    oracle=f"""
+# The delta faces (live and persisted corpus side): every 10th doc is the
+# delta; a hit is a delta position whose gram occurs anywhere in the
+# rest of the corpus.
+_DELTA_SPANS_ORACLE = f"""
     WITH {_GRAM_CTES},
     corpus_grams AS (SELECT DISTINCT g FROM keyed WHERE doc_id % 10 <> 0),
     hits AS (
@@ -269,7 +258,15 @@ def train_scrub_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_ISLAND_CTES}
     SELECT doc_id, span_start, span_len, n_dup_grams
     FROM spans ORDER BY doc_id, span_start
-    """,
+    """
+
+# the gram-index build constants both delta faces probe with
+_GRAM_PARAMS = {"id_col": "doc_id", "text_col": "text", "k": _K}
+
+
+@register(
+    "dedup_substring_incremental_spans",
+    oracle=_DELTA_SPANS_ORACLE,
 )
 def dedup_substring_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring decontamination of a NEW batch against the EXISTING
@@ -290,36 +287,27 @@ def dedup_substring_incremental_spans(spark: SparkSession, sf_dir: str) -> DataF
     bucket-local membership probe. Delta-vs-delta duplication is
     deliberately out of scope — that is the self-dedup face run on the
     delta alone (same contract as the MinHash incremental query).
+
+    The corpus side is ``index_artifact.live_index``: the gram family's
+    own probe over the lazy distinct gram set, so this face and
+    dedup_substring_index_delta_spans run one operator.
     """
+    from poormans_kube_etl_spark.operators.index_artifact import live_index
+    from poormans_kube_etl_spark.operators.substring import (
+        GRAM_FAMILY,
+        substring_spans_indexed,
+    )
+
     docs = _docs(spark, sf_dir)
-    delta_grams = positional_kgrams(docs.where(F.col("doc_id") % 10 == 0))
-    corpus_grams = (
-        positional_kgrams(docs.where(F.col("doc_id") % 10 != 0))
-        .select("g")
-        .distinct()
-    )
-    hits = delta_grams.join(corpus_grams, "g").select(
-        "doc_id", "s", (F.col("s") + _K).alias("e")
-    )
-    return merge_islands(hits).orderBy("doc_id", "span_start")
+    new = docs.where(F.col("doc_id") % 10 == 0)
+    corpus = docs.where(F.col("doc_id") % 10 != 0)
+    idx = live_index(GRAM_FAMILY, corpus, _GRAM_PARAMS)
+    return substring_spans_indexed(new, idx).orderBy("doc_id", "span_start")
 
 
 @register(
     "dedup_substring_index_delta_spans",
-    # the artifact is a pure optimization of the live incremental face,
-    # so the span set must be identical: SAME oracle
-    oracle=f"""
-    WITH {_GRAM_CTES},
-    corpus_grams AS (SELECT DISTINCT g FROM keyed WHERE doc_id % 10 <> 0),
-    hits AS (
-      SELECT k.doc_id, k.s, k.s + {_K} AS e
-      FROM keyed k JOIN corpus_grams USING (g)
-      WHERE k.doc_id % 10 = 0
-    ),
-    {_ISLAND_CTES}
-    SELECT doc_id, span_start, span_len, n_dup_grams
-    FROM spans ORDER BY doc_id, span_start
-    """,
+    oracle=_DELTA_SPANS_ORACLE,
 )
 def dedup_substring_index_delta_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED-index face of substring decontamination: the
@@ -327,10 +315,10 @@ def dedup_substring_index_delta_spans(spark: SparkSession, sf_dir: str) -> DataF
     (operators/substring.write_corpus_gram_index — distinct grams
     bucketed by g, width k in table properties), then the delta (every
     10th doc) probes the artifact — the corpus is never re-tokenized on
-    the delta path (plan-gated). Same oracle as
-    dedup_substring_incremental_spans: the artifact is a pure
-    optimization, so the span set must be identical. Opening the
-    artifact is index_artifact.open_index."""
+    the delta path (plan-gated). Same probe and oracle as
+    dedup_substring_incremental_spans: the two faces differ only in
+    where the gram set comes from, so the span set must be identical.
+    Opening the artifact is index_artifact.open_index."""
     from poormans_kube_etl_spark.operators.index_artifact import open_index
     from poormans_kube_etl_spark.operators.substring import (
         GRAM_FAMILY,
@@ -346,7 +334,7 @@ def dedup_substring_index_delta_spans(spark: SparkSession, sf_dir: str) -> DataF
         sf_dir=sf_dir,
         table="documents",
         stem="pke_ssidx_v1",
-        params={"id_col": "doc_id", "text_col": "text", "k": _K},
+        params=_GRAM_PARAMS,
         n_buckets=8,
     )
     return substring_spans_indexed(new, idx).orderBy("doc_id", "span_start")

@@ -20,6 +20,7 @@ from poormans_kube_etl_spark.operators.index_artifact import (
     SOURCE_FINGERPRINT_KEY,
     attach_artifact,
     corpus_fingerprint,
+    live_index,
     read_index,
     write_index,
 )
@@ -170,6 +171,41 @@ def test_stream_screen_lands_the_probe_rows(spark, tmp_path, family):
         assert sorted(tuple(r) for r in got) == want
     finally:
         _drop(spark, spec, name)
+
+
+def _cached(spark) -> tuple[int, int]:
+    """(persistent RDDs, cache-manager entries) of the session. Local
+    checkpoints are not counted: they are the probe's own delta
+    materialization (minhash's size gate), the same over an artifact."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    entries = cm.getClass().getDeclaredField("cachedData")
+    entries.setAccessible(True)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+    return (
+        sum(1 for r in rdds if not r.rdd().isLocallyCheckpointed()),
+        entries.get(cm).size(),
+    )
+
+
+@pytest.mark.parametrize("family", sorted(INDEX_FAMILIES))
+def test_live_index_probes_like_the_artifact(spark, family):
+    """A live delta probe is the family's probe over an unwritten
+    index: the same rows as over the written artifact, and nothing of
+    the corpus side left cached in the session."""
+    spec = INDEX_FAMILIES[family]
+    a, _, probe = _frames(spark, spec.source)
+    before = _cached(spark)
+    got = _answers(spec, probe, live_index(spec, a, _params(spec)))
+    after = _cached(spark)
+    name = f"t_fam_{family}_live"
+    try:
+        _write(spec, a, name)
+        want = _answers(spec, probe, read_index(spec, spark, name))
+    finally:
+        _drop(spark, spec, name)
+    assert want, f"{family}: the probe must hit something to compare"
+    assert got == want
+    assert all(x <= y for x, y in zip(after, before)), (after, before)
 
 
 @pytest.mark.parametrize(

@@ -7,10 +7,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from poormans_kube_etl_spark.operators.minhash import (
-    minhash_incremental_near_duplicates,
-)
+from poormans_kube_etl_spark.operators.index_artifact import live_index
 from poormans_kube_etl_spark.operators.minhash_index import (
+    MINHASH_FAMILY,
     CorpusMinhashIndex,
     minhash_incremental_near_duplicates_indexed,
     read_corpus_minhash_index,
@@ -47,17 +46,23 @@ def test_index_roundtrip_restores_constants(corpus_index):
 
 
 def test_indexed_incremental_matches_live_path(spark, sf_dir, corpus_index):
-    """The artifact path must produce EXACTLY the pairs the live
-    two-sided computation does — the consistency law that makes
-    'persist at ingest' a pure optimization."""
+    """The artifact path must produce EXACTLY the pairs the same probe
+    gives over a live (unwritten) index — the consistency law that
+    makes 'persist at ingest' a pure optimization."""
     docs = load_table(spark, sf_dir, "documents")
     new = docs.where(F.col("doc_id") % 10 == 0)
     corpus = docs.where(F.col("doc_id") % 10 != 0)
     live = sorted(
         map(
             tuple,
-            minhash_incremental_near_duplicates(
-                new, corpus, "doc_id", "text", threshold=0.5, **_CONSTS
+            minhash_incremental_near_duplicates_indexed(
+                new,
+                live_index(
+                    MINHASH_FAMILY,
+                    corpus,
+                    {"id_col": "doc_id", "text_col": "text", **_CONSTS},
+                ),
+                threshold=0.5,
             ).collect(),
         )
     )
@@ -124,13 +129,10 @@ def test_constants_come_from_artifact_not_caller(spark, corpus_index):
     sig = inspect.signature(minhash_incremental_near_duplicates_indexed)
     # max_bucket moved INTO the artifact in r9 (buckets pre-aggregated
     # at write time) — no caller knob can disagree with it either.
-    # share_signatures (r14) is an EXECUTION knob (lazy vs eager delta
-    # materialization, identical pair set), not a banding constant.
     assert set(sig.parameters) == {
         "new_docs",
         "index",
         "threshold",
-        "share_signatures",
     }
     assert isinstance(corpus_index, CorpusMinhashIndex)
 
@@ -156,12 +158,11 @@ def srp_index(spark, sf_dir, tmp_path_factory):
 
 
 def test_srp_indexed_incremental_matches_live_path(spark, sf_dir, srp_index):
-    """Artifact path == live two-sided computation, pair for pair, with
-    the banding constants restored from table properties."""
-    from poormans_kube_etl_spark.operators.similarity import (
-        embedding_incremental_near_pairs,
-    )
+    """Artifact path == the same probe over a live (unwritten) index,
+    pair for pair, with the banding constants restored from table
+    properties."""
     from poormans_kube_etl_spark.operators.similarity_index import (
+        SRP_FAMILY,
         embedding_incremental_near_pairs_indexed,
     )
     from poormans_kube_etl_spark.queries.dedup import _planted_twins
@@ -172,12 +173,20 @@ def test_srp_indexed_incremental_matches_live_path(spark, sf_dir, srp_index):
     live = sorted(
         map(
             tuple,
-            embedding_incremental_near_pairs(
+            embedding_incremental_near_pairs_indexed(
                 delta,
-                emb,
+                live_index(
+                    SRP_FAMILY,
+                    emb,
+                    {
+                        "id_col": "vec_id",
+                        "vec_col": "embedding",
+                        "planned_threshold": 0.9,
+                        "bands": int(c["bands"]),
+                        "planes_per_band": int(c["planes_per_band"]),
+                    },
+                ),
                 threshold=0.9,
-                bands=int(c["bands"]),
-                planes_per_band=int(c["planes_per_band"]),
             ).collect(),
         )
     )
@@ -240,7 +249,7 @@ def test_delta_share_auto_gates_on_input_size(spark):
     materialization is auto-gated on the delta INPUT's optimizer size
     estimate — tiny deltas stay lazy (the eager barrier costs more than
     hashing the delta twice), big deltas checkpoint (the second hashing
-    pass dominates). Explicit True/False always wins."""
+    pass dominates)."""
     from poormans_kube_etl_spark.operators.minhash import (
         _DELTA_SHARE_MIN_BYTES,
         _delta_share_auto,
@@ -249,7 +258,5 @@ def test_delta_share_auto_gates_on_input_size(spark):
     small = spark.range(0, 1_000)  # ~8 KB estimate
     big = spark.range(0, 1_000_000)  # ~8 MB estimate
     assert _DELTA_SHARE_MIN_BYTES == 2 << 20
-    assert _delta_share_auto(small, None) is False
-    assert _delta_share_auto(big, None) is True
-    assert _delta_share_auto(big, False) is False
-    assert _delta_share_auto(small, True) is True
+    assert _delta_share_auto(small) is False
+    assert _delta_share_auto(big) is True

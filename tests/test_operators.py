@@ -1658,14 +1658,35 @@ def test_real_decode_requested_without_pillow_fails_at_plan_time(spark):
         )
 
 
+def _live_minhash_delta(new, corpus, threshold, max_bucket=256):
+    """The MinHash probe over a live (unwritten) index of ``corpus``,
+    with the xxhash64 banding the self-dedup operator defaults to."""
+    from poormans_kube_etl_spark.operators.index_artifact import live_index
+    from poormans_kube_etl_spark.operators.minhash_index import (
+        MINHASH_FAMILY,
+        minhash_incremental_near_duplicates_indexed,
+    )
+
+    idx = live_index(
+        MINHASH_FAMILY,
+        corpus,
+        {
+            "id_col": "doc_id",
+            "text_col": "text",
+            "shingle_len": 3,
+            "num_hashes": 32,
+            "bands": 8,
+            "hash_family": "xxhash64",
+            "max_bucket": max_bucket,
+        },
+    )
+    return minhash_incremental_near_duplicates_indexed(new, idx, threshold=threshold)
+
+
 def test_minhash_incremental_pairs_cross_side_only(spark):
     """r8 incremental dedup law: new-vs-corpus near-dups surface; a
     near-dup pair WITHIN the new batch must not (self-dedup on the
     delta owns those), and disjoint docs never pair."""
-    from poormans_kube_etl_spark.operators.minhash import (
-        minhash_incremental_near_duplicates,
-    )
-
     dup_a = "the quick brown fox jumps over the lazy dog again and again " * 4
     dup_b = "entirely different content about spark shuffle partitions " * 4
     corpus = spark.createDataFrame(
@@ -1678,9 +1699,7 @@ def test_minhash_incremental_pairs_cross_side_only(spark):
     )
     pairs = {
         (r.a, r.b)
-        for r in minhash_incremental_near_duplicates(
-            new, corpus, threshold=0.9
-        ).collect()
+        for r in _live_minhash_delta(new, corpus, threshold=0.9).collect()
     }
     # both new copies of dup_a pair with corpus doc 1; the new-vs-new
     # (10, 11) duplicate and the never-duplicated docs are absent
@@ -1694,22 +1713,14 @@ def test_minhash_incremental_hot_band_guard(spark):
     matching delta doc out across the whole bucket. Identical docs
     share EVERY band, so with a sub-bucket cap no pair survives; a
     roomier cap restores them."""
-    from poormans_kube_etl_spark.operators.minhash import (
-        minhash_incremental_near_duplicates,
-    )
-
     text = "shared boilerplate header repeated across the whole corpus " * 3
     corpus = spark.createDataFrame(
         [(i, text) for i in range(1, 9)], "doc_id long, text string"
     )
     new = spark.createDataFrame([(100, text)], "doc_id long, text string")
-    capped = minhash_incremental_near_duplicates(
-        new, corpus, threshold=0.9, max_bucket=4
-    ).count()
+    capped = _live_minhash_delta(new, corpus, threshold=0.9, max_bucket=4).count()
     assert capped == 0  # every band bucket holds 8 > 4 corpus docs
-    roomy = minhash_incremental_near_duplicates(
-        new, corpus, threshold=0.9, max_bucket=256
-    ).count()
+    roomy = _live_minhash_delta(new, corpus, threshold=0.9, max_bucket=256).count()
     assert roomy == 8  # the cap was the only thing suppressing them
 
 
@@ -1718,10 +1729,7 @@ def test_incremental_equals_cross_side_of_self_dedup(spark):
     banding and hash family (and no star/hot-band guard engaged),
     incremental(new, corpus) must emit exactly the cross-side subset of
     self-dedup(new ∪ corpus) — same pairs, same jaccard values."""
-    from poormans_kube_etl_spark.operators.minhash import (
-        minhash_incremental_near_duplicates,
-        minhash_near_duplicates,
-    )
+    from poormans_kube_etl_spark.operators.minhash import minhash_near_duplicates
 
     texts = {
         1: "alpha beta gamma delta epsilon zeta eta theta " * 3,
@@ -1748,9 +1756,7 @@ def test_incremental_equals_cross_side_of_self_dedup(spark):
     }
     inc = {
         frozenset((r.a, r.b)): r.jaccard
-        for r in minhash_incremental_near_duplicates(
-            new, corpus, threshold=0.3
-        ).collect()
+        for r in _live_minhash_delta(new, corpus, threshold=0.3).collect()
     }
     assert inc == cross and len(inc) > 0
 

@@ -391,9 +391,17 @@ def test_cdc_chunking_is_map_only(q):
 
 def test_incremental_minhash_shuffles_bounded(q):
     # two signature aggregates (delta + corpus) + the banded bucket
-    # aggregate + verify joins + the output sort — a small constant
-    # number of exchanges, independent of corpus size (currently 6)
+    # aggregate + the two verify sides' shingle sets + the output sort
+    # — a small constant number of exchanges, independent of corpus
+    # size (measured 6)
     assert shuffle_count(q("dedup_minhash_incremental_pairs")) <= 8
+
+
+def test_incremental_substring_shuffles_bounded(q):
+    # the corpus's distinct gram set + the island merge's doc_id
+    # partitioning + the output sort (measured 3; the semi join
+    # broadcasts the gram set at the test scale)
+    assert shuffle_count(q("dedup_substring_incremental_spans")) <= 3
 
 
 def test_funnel_documents_scan_feeds_cache_once(q):

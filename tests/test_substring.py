@@ -216,10 +216,10 @@ def test_incremental_spans_contained_in_self_dedup_spans(spark, sf_dir):
 
 
 def test_incremental_spans_ignore_delta_vs_delta(spark):
-    from poormans_kube_etl_spark.queries.substring import (
-        _K,
-        merge_islands,
-        positional_kgrams,
+    from poormans_kube_etl_spark.operators.index_artifact import live_index
+    from poormans_kube_etl_spark.operators.substring import (
+        GRAM_FAMILY,
+        substring_spans_indexed,
     )
 
     shared = "x1 x2 x3 x4 x5 x6 x7 x8"
@@ -231,10 +231,12 @@ def test_incremental_spans_ignore_delta_vs_delta(spark):
         ],
         "doc_id long, text string",
     )
-    delta = positional_kgrams(docs.where("doc_id % 10 = 0"))
-    corpus = positional_kgrams(docs.where("doc_id % 10 <> 0")).select("g").distinct()
-    hits = delta.join(corpus, "g").selectExpr("doc_id", "s", f"s + {_K} as e")
-    assert merge_islands(hits).count() == 0
+    idx = live_index(
+        GRAM_FAMILY,
+        docs.where("doc_id % 10 <> 0"),
+        {"id_col": "doc_id", "text_col": "text", "k": _K},
+    )
+    assert substring_spans_indexed(docs.where("doc_id % 10 = 0"), idx).count() == 0
 
 
 def test_semdedup_apply_keepers_closes_the_pipeline(spark, sf_dir):
